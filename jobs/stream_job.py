@@ -23,10 +23,17 @@ pairs the moment the later member arrives
 (streaming.dedup_stream.streaming_hamming_dedup, RocksDB-backed state,
 exact pigeonhole recall for radius ≤ bands−1).  Pairs append to
 ``--output`` parquet via foreachBatch (a pair colliding in several
-band buckets appears once per bucket — read with dropDuplicates); the
-summary reports distinct pairs + state rows/bytes from the final
-StreamingQueryProgress.  ``--bands`` must be explicit in this mode (a
-stream has no countable size for auto_bands).
+band buckets appears once per bucket — read with dropDuplicates).
+``--bands`` must be explicit in this mode (a stream has no countable
+size for auto_bands).
+
+Every mode starts through ``streaming.drain.run_stream``: a new
+checkpoint gets one task wave of state partitions
+(``defaultParallelism``), a resumed one keeps the count it was created
+with, and ``--once`` returns once the input present at start is
+committed, state TTL or not.  The JSON summary line adds
+``state_partitions``, ``state_rows`` and ``state_bytes`` from the last
+StreamingQueryProgress (no extra Spark job).
 """
 
 from __future__ import annotations
@@ -55,8 +62,9 @@ def build_parser() -> argparse.ArgumentParser:
                    help="micro-batch trigger interval in continuous mode "
                         "(ignored with --once)")
     p.add_argument("--timeout-sec", type=float, default=None,
-                   help="stop after N seconds (continuous mode; omit to run "
-                        "until killed)")
+                   help="continuous mode: stop after N seconds (omit to run "
+                        "until killed); --once: fail if the drain is still "
+                        "running after N seconds (omit to wait)")
     p.add_argument("--mode", choices=["counts", "dedup", "geofence"],
                    default="counts",
                    help="counts: watermarked per-tile modification counts "
@@ -82,17 +90,14 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def run_geofence_stream(spark, args):
+def geofence_mode(spark, args):
     """--mode geofence: landing (user, ts, id, lon, lat) parquet →
     zone enter/exit transition stream → append-only parquet rows."""
     from mapsplit_spark.operators.clip import load_rings
-    from mapsplit_spark.streaming.dedup_stream import rocksdb_state_conf
     from mapsplit_spark.streaming.geofence_stream import (
         streaming_zone_transitions,
     )
 
-    for k, v in rocksdb_state_conf().items():
-        spark.conf.set(k, v)
     outers, inners = load_rings(spark.read.parquet(args.poly), args.poly_id)
     schema = spark.read.parquet(args.input).schema
     stream = spark.readStream.schema(schema).parquet(args.input)
@@ -104,36 +109,21 @@ def run_geofence_stream(spark, args):
     def sink(df, batch_id):
         df.write.mode("append").parquet(args.output)
 
-    writer = (trans.writeStream.foreachBatch(sink)
-              .outputMode("update")
-              .option("checkpointLocation", args.checkpoint))
-    if args.once:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        q = writer.trigger(processingTime=args.interval).start()
-        q.awaitTermination(args.timeout_sec)
-        q.stop()
-        q.awaitTermination()
-    try:
-        n = spark.read.parquet(args.output).count()
-    except Exception:  # noqa: BLE001 — no transitions → path absent
-        n = 0
-    print(json.dumps({"mode": "geofence", "transitions": n}))
+    def summary():
+        try:
+            n = spark.read.parquet(args.output).count()
+        except Exception:  # noqa: BLE001 — no transitions → path absent
+            n = 0
+        return {"mode": "geofence", "transitions": n}
+
+    return trans, sink, summary
 
 
-def run_dedup_stream(spark, args):
+def dedup_mode(spark, args):
     """--mode dedup: landing (id, phash) parquet → near-dup pair stream
-    → append-only parquet pairs + state metrics summary."""
-    import json as _json
+    → append-only parquet pairs."""
+    from mapsplit_spark.streaming.dedup_stream import streaming_hamming_dedup
 
-    from mapsplit_spark.streaming.dedup_stream import (
-        rocksdb_state_conf,
-        streaming_hamming_dedup,
-    )
-
-    for k, v in rocksdb_state_conf().items():
-        spark.conf.set(k, v)
     schema = spark.read.parquet(args.input).schema
     stream = spark.readStream.schema(schema).parquet(args.input)
     pairs = streaming_hamming_dedup(
@@ -146,31 +136,39 @@ def run_dedup_stream(spark, args):
         df.dropDuplicates(["id_a", "id_b"]).write.mode("append") \
             .parquet(args.output)
 
-    writer = (pairs.writeStream.foreachBatch(sink)
-              .outputMode("update")
-              .option("checkpointLocation", args.checkpoint))
-    if args.once:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        q = writer.trigger(processingTime=args.interval).start()
-        q.awaitTermination(args.timeout_sec)
-        q.stop()
-        q.awaitTermination()
-    state = {}
-    for p in reversed(q.recentProgress):
-        ops = _json.loads(p.json).get("stateOperators", [])
-        if ops:
-            state = {"state_rows": ops[0].get("numRowsTotal"),
-                     "state_bytes": ops[0].get("stateMemory",
-                                               ops[0].get("memoryUsedBytes"))}
-            break
-    try:  # zero emitted pairs → the sink dir may never have been created
-        n_pairs = spark.read.parquet(args.output) \
-            .dropDuplicates(["id_a", "id_b"]).count()
-    except Exception:  # noqa: BLE001 — AnalysisException: path not found
-        n_pairs = 0
-    print(json.dumps({"mode": "dedup", "pairs": n_pairs, **state}))
+    def summary():
+        try:  # zero emitted pairs → the sink dir may never have been created
+            n_pairs = spark.read.parquet(args.output) \
+                .dropDuplicates(["id_a", "id_b"]).count()
+        except Exception:  # noqa: BLE001 — AnalysisException: path not found
+            n_pairs = 0
+        return {"mode": "dedup", "pairs": n_pairs}
+
+    return pairs, sink, summary
+
+
+def counts_mode(spark, args):
+    """--mode counts: landing image parquet → watermarked per-tile
+    modification counts, upserted per micro-batch."""
+    from mapsplit_spark.streaming.incremental import tile_count_stream
+
+    # file streams need an explicit schema: take it from the existing data
+    counts, sink = tile_count_stream(
+        spark, args.input, args.output, args.id_col, args.lon_col,
+        args.lat_col, args.zoom, args.border,
+        schema=spark.read.parquet(args.input).schema,
+    )
+
+    def summary():
+        out = spark.read.parquet(args.output)
+        return {"rows": out.count(),
+                "tiles": out.select("tile_x", "tile_y").distinct().count()}
+
+    return counts, sink, summary
+
+
+# each mode returns (stateful stream, foreachBatch sink, summary dict maker)
+MODES = {"counts": counts_mode, "dedup": dedup_mode, "geofence": geofence_mode}
 
 
 def main(argv=None) -> None:
@@ -178,43 +176,27 @@ def main(argv=None) -> None:
     from pyspark.sql import SparkSession
 
     from mapsplit_spark.session import get_spark
-    from mapsplit_spark.streaming.incremental import start_incremental_job
+    from mapsplit_spark.streaming.dedup_stream import rocksdb_state_conf
+    from mapsplit_spark.streaming.drain import run_stream, state_metrics
 
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark("stream-job")
-    if args.mode in ("dedup", "geofence"):
-        try:
-            if args.mode == "dedup":
-                run_dedup_stream(spark, args)
-            else:
-                run_geofence_stream(spark, args)
-        finally:
-            if owns_session:
-                spark.stop()
-        return
-    # file streams need an explicit schema: take it from the existing data
-    schema = spark.read.parquet(args.input).schema
-    q = start_incremental_job(
-        spark, args.input, args.checkpoint, args.output,
-        args.id_col, args.lon_col, args.lat_col, args.zoom, args.border,
-        schema=schema,
-        processing_interval=None if args.once else args.interval,
-    )
-    if args.once:
-        q.awaitTermination()  # availableNow: drains existing files, stops
-    else:
-        # processingTime trigger: keeps tailing — files arriving after
-        # start ARE processed until timeout (or forever without one)
-        q.awaitTermination(args.timeout_sec)
-        q.stop()
-        q.awaitTermination()  # join the stopped query before reading output
-    out = spark.read.parquet(args.output)
-    print(json.dumps({
-        "rows": out.count(),
-        "tiles": out.select("tile_x", "tile_y").distinct().count(),
-    }))
-    if owns_session:
-        spark.stop()
+    try:
+        frame, sink, summary = MODES[args.mode](spark, args)
+        # --once: availableNow drains the files present, then stops;
+        # otherwise a processingTime trigger keeps tailing — files
+        # arriving after start ARE processed until the timeout (or
+        # forever without one)
+        q = run_stream(
+            spark, frame, sink, args.checkpoint,
+            interval=None if args.once else args.interval,
+            timeout_sec=args.timeout_sec,
+            conf=None if args.mode == "counts" else rocksdb_state_conf(),
+        )
+        print(json.dumps({**summary(), **state_metrics(q)}))
+    finally:
+        if owns_session:
+            spark.stop()
 
 
 if __name__ == "__main__":

@@ -33,8 +33,16 @@ twin of the batch shuffle; at 100 TB the band count knob
 (``dedup.auto_bands``) and the cap bound it the same way.
 
 State lifecycle at scale (r5): the state is the banded corpus and —
-by design — grows with every distinct image ingested.  Three knobs
-bound it for unbounded streams:
+by design — grows with every distinct image ingested.  Its partition
+count is fixed when the checkpoint is created: Spark records
+``spark.sql.shuffle.partitions`` in the offset metadata of the first
+batch and every restart reuses it.  ``stream_job`` (through
+``streaming.drain.start_stream``) sizes a new stream to one task wave,
+``defaultParallelism`` partitions — each state partition is a task
+with a fixed per-batch cost, so the batch default of 32 made a small
+drain run eight waves.  Checkpoints created earlier keep their count;
+to re-size one, start a fresh checkpoint (see time-partitioning
+below).  Three knobs bound the state for unbounded streams:
 
 * **RocksDB state store** (``rocksdb_state_conf``): moves state off
   the executor heap onto local disk with incremental checkpointing —
@@ -101,8 +109,8 @@ def _verify_arrivals(s_ids: np.ndarray, s_hashes: np.ndarray,
     """One bucket, one arrival batch: vectorized verify + state merge
     (VERDICT r4 #3 — replaces the per-member Python loop).  Appends
     (id_a, id_b, hamming) array triples to ``outs``; returns updated
-    (ids, hashes) state arrays.  Module-level so the kernel is
-    microbenchmarkable outside a stream (tools/bench_stream_dedup.py)."""
+    (ids, hashes) state arrays.  A pure numpy kernel, callable without
+    a stream or a Spark session."""
     n = len(a_ids)
     if n > 1:
         # deterministic arrival order within a batch: by id — makes the
@@ -155,8 +163,8 @@ def rocksdb_state_conf() -> dict[str, str]:
     """Session conf for disk-backed streaming state (set before the
     query starts): RocksDB provider + changelog checkpointing, so the
     banded-corpus state scales with local SSD instead of executor heap.
-    Returned as a dict so jobs/tests can ``spark.conf.set`` each pair
-    and restore afterwards."""
+    Returned as a dict to pass as ``conf`` to ``drain.run_stream``,
+    which sets it for the query's start only."""
     return {
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
@@ -181,7 +189,9 @@ def streaming_hamming_dedup(stream: DataFrame, id_col: str = "image_id",
     the online recall window for a working-set-sized state store — see
     the module docstring's lifecycle section.  Timeouts fire at micro-
     batch boundaries, so eviction needs a subsequent trigger; a bucket
-    receiving data in the expiring batch is refreshed, not evicted."""
+    receiving data in the expiring batch is refreshed, not evicted.  A
+    drain started by ``streaming.drain`` runs no empty batches, so
+    there eviction waits for the next drain that brings data."""
     if radius > n_bands - 1:
         raise ValueError(
             f"radius={radius} needs n_bands ≥ {radius + 1} for exact recall "

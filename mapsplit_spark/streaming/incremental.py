@@ -17,9 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.assign import assign_tiles, expand_tiles
+from .drain import Sink
 
 
 def stream_assign(stream_df: DataFrame, id_col: str, lon_col: str, lat_col: str,
@@ -47,26 +47,19 @@ def modified_tile_counts(pairs: DataFrame, watermark: str = "10 minutes",
     )
 
 
-def start_incremental_job(spark, src_dir: str, checkpoint_dir: str, out_dir: str,
-                          id_col: str, lon_col: str, lat_col: str, zoom: int,
-                          border: float = 0.1, schema=None,
-                          processing_interval: str | None = None) -> StreamingQuery:
-    """File-source streaming pipeline: tail ``src_dir`` for new parquet,
-    maintain per-tile windowed counts, upsert each micro-batch into
-    ``out_dir`` via foreachBatch (checkpoint-recoverable — kill and
-    restart resumes from the last committed offsets; on a real cluster
-    the sink is an Iceberg MERGE).
-
-    ``processing_interval=None`` (default) runs drain-and-stop
-    (``availableNow`` — process everything present, then terminate);
-    pass a micro-batch interval (e.g. ``"2 seconds"``) for CONTINUOUS
-    tailing, where files landing after start are picked up until the
-    caller stops the query.
-    """
+def tile_count_stream(spark, src_dir: str, out_dir: str, id_col: str,
+                      lon_col: str, lat_col: str, zoom: int,
+                      border: float = 0.1, schema=None) -> tuple[DataFrame, Sink]:
+    """File-source streaming pipeline: tail ``src_dir`` for new parquet
+    and maintain per-tile windowed counts.  Returns the count stream and
+    the ``foreachBatch`` sink that upserts each micro-batch into
+    ``out_dir`` (on a real cluster the sink is an Iceberg MERGE).  Start
+    both with ``drain.run_stream`` (or ``drain.start_stream``) and a
+    checkpoint: kill and restart resumes from the last committed
+    offsets."""
     reader = spark.readStream.schema(schema) if schema is not None else spark.readStream
     stream = reader.parquet(src_dir)
     pairs = stream_assign(stream, id_col, lon_col, lat_col, zoom, border)
-    counts = modified_tile_counts(pairs)
 
     def sink(batch_df, batch_id: int) -> None:
         (
@@ -74,13 +67,4 @@ def start_incremental_job(spark, src_dir: str, checkpoint_dir: str, out_dir: str
             .write.mode("append").parquet(out_dir)
         )
 
-    writer = (
-        counts.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if processing_interval is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_interval)
-    return writer.start()
+    return modified_tile_counts(pairs), sink

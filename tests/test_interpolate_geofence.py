@@ -157,6 +157,7 @@ def test_streaming_zone_transitions_matches_batch(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from mapsplit_spark.operators.geofence import zone_transitions
+    from mapsplit_spark.streaming.drain import run_stream
     from mapsplit_spark.streaming.geofence_stream import (
         streaming_zone_transitions,
     )
@@ -187,14 +188,12 @@ def test_streaming_zone_transitions_matches_batch(spark, tmp_path):
               .option("maxFilesPerTrigger", 1).parquet(src))
     out = streaming_zone_transitions(
         stream, "user_id", "ts", "event_id", "lon", "lat", [z0, z1])
-    q = (out.writeStream.format("memory").queryName("geo_trans")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
+    rows = []
+    run_stream(spark, out, lambda df, _: rows.extend(
+        df.select("user_id", "event_id", "prev_zone", "zone").collect()),
+        str(tmp_path / "ckpt"), timeout_sec=180)
 
-    got = {tuple(r) for r in spark.sql(
-        "SELECT user_id, event_id, prev_zone, zone FROM geo_trans").collect()}
+    got = {tuple(r) for r in rows}
     batch = spark.read.parquet(src)
     want = {tuple(r) for r in zone_transitions(
         batch, "user_id", "ts", "event_id", "lon", "lat",
@@ -238,7 +237,7 @@ def test_stream_job_geofence_mode_e2e(spark, tmp_path, capsys):
     out = str(tmp_path / "out")
     stream_main([
         "--input", src, "--checkpoint", str(tmp_path / "ckpt"),
-        "--output", out, "--mode", "geofence", "--once",
+        "--output", out, "--mode", "geofence", "--once", "--timeout-sec", "120",
         "--poly", str(tmp_path / "zones.parquet"),
         "--user-col", "user_id", "--ts-col", "ts", "--id-col", "event_id",
     ])
@@ -249,6 +248,7 @@ def test_stream_job_geofence_mode_e2e(spark, tmp_path, capsys):
         spark.read.parquet(src), "user_id", "ts", "event_id", "lon", "lat",
         *_load(spark, str(tmp_path / "zones.parquet"))).collect()}
     assert got == want and summary["transitions"] == len(got) > 0
+    assert summary["state_partitions"] == spark.sparkContext.defaultParallelism
 
 
 def _load(spark, path):

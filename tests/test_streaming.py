@@ -12,9 +12,11 @@ import pyarrow.parquet as pq
 import pytest
 
 from mapsplit_spark import geo
-from mapsplit_spark.streaming.incremental import start_incremental_job
+from mapsplit_spark.streaming.drain import run_stream, start_stream
+from mapsplit_spark.streaming.incremental import tile_count_stream
 
 WORK = "/tmp/stream_test"
+DRAIN_TIMEOUT_S = 120  # a drain still running after this fails its test
 
 
 def _write_batch(path: str, start: int, n: int, day: int):
@@ -27,6 +29,23 @@ def _write_batch(path: str, start: int, n: int, day: int):
         "ts": pa.array([np.datetime64(f"2024-01-{day:02d}T12:00:00")] * n),
     })
     pq.write_table(t, path)
+
+
+def _drain_rows(spark, frame, ckpt, conf=None):
+    """Drain ``frame`` through the shared drain path; returns the rows
+    it emitted and the stopped query."""
+    rows = []
+    q = run_stream(spark, frame, lambda df, _: rows.extend(df.collect()),
+                   ckpt, timeout_sec=DRAIN_TIMEOUT_S, conf=conf)
+    return rows, q
+
+
+def _summary(capsys) -> dict:
+    """The JSON summary line a job printed last."""
+    import json
+
+    return json.loads([ln for ln in capsys.readouterr().out.splitlines()
+                       if ln.startswith("{")][-1])
 
 
 @pytest.fixture()
@@ -44,9 +63,12 @@ def test_incremental_counts_accumulate(spark, dirs):
     schema = "event_id long, lon double, lat double, ts timestamp"
     _write_batch(os.path.join(src, "b1.parquet"), 0, 300, day=5)
 
-    q = start_incremental_job(spark, src, ckpt, out, "event_id", "lon", "lat",
-                              zoom=13, schema=schema)
-    q.awaitTermination(120)
+    def drain():
+        run_stream(spark, *tile_count_stream(spark, src, out, "event_id", "lon",
+                                             "lat", zoom=13, schema=schema),
+                   ckpt, timeout_sec=DRAIN_TIMEOUT_S)
+
+    drain()
     o1 = spark.read.parquet(out)
     n1 = o1.count()
     batches1 = {r.batch_id for r in o1.select("batch_id").distinct().collect()}
@@ -54,9 +76,7 @@ def test_incremental_counts_accumulate(spark, dirs):
     # second batch arrives later; a fresh query resumes from the
     # checkpoint and processes ONLY the new file
     _write_batch(os.path.join(src, "b2.parquet"), 300, 200, day=6)
-    q2 = start_incremental_job(spark, src, ckpt, out, "event_id", "lon", "lat",
-                               zoom=13, schema=schema)
-    q2.awaitTermination(120)
+    drain()
     o2 = spark.read.parquet(out)
     n2 = o2.count()
     batches2 = {r.batch_id for r in o2.select("batch_id").distinct().collect()}
@@ -100,7 +120,8 @@ def test_stream_job_cli_drains_and_resumes(spark, images_dir, tmp_path):
 
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
     argv = ["--input", str(landing), "--checkpoint", ckpt, "--output", out,
-            "--zoom", "13", "--border", "0.1", "--once"]
+            "--zoom", "13", "--border", "0.1", "--once",
+            "--timeout-sec", str(DRAIN_TIMEOUT_S)]
     stream_main(argv)
 
     def latest_total():
@@ -143,9 +164,9 @@ def test_continuous_trigger_picks_up_late_files(spark, dirs):
     schema = "event_id long, lon double, lat double, ts timestamp"
     _write_batch(os.path.join(src, "c1.parquet"), 0, 100, day=5)
 
-    q = start_incremental_job(spark, src, ckpt, out, "event_id", "lon", "lat",
-                              zoom=13, schema=schema,
-                              processing_interval="1 seconds")
+    q = start_stream(spark, *tile_count_stream(spark, src, out, "event_id", "lon",
+                                               "lat", zoom=13, schema=schema),
+                     ckpt, interval="1 seconds")
     try:
         deadline = time.time() + 120
         while time.time() < deadline:
@@ -210,13 +231,8 @@ def test_streaming_hamming_dedup_matches_batch_across_batches(spark, tmp_path):
               .option("maxFilesPerTrigger", "1")
               .parquet(f"{in_dir}/*"))
     pairs = streaming_hamming_dedup(stream, radius=3, n_bands=4)
-    q = (pairs.writeStream.format("memory").queryName("sdedup")
-         .outputMode("update").trigger(availableNow=True)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .start())
-    q.awaitTermination(120)
-    got = {(r.id_a, r.id_b, r.hamming)
-           for r in spark.table("sdedup").distinct().collect()}
+    rows, _ = _drain_rows(spark, pairs, str(tmp_path / "ck"))
+    got = {(r.id_a, r.id_b, r.hamming) for r in rows}
 
     batch = hamming_near_dups(
         spark.createDataFrame(b1 + b2, schema), radius=3, n_bands=4,
@@ -263,32 +279,16 @@ def test_streaming_dedup_matches_duckdb_oracle_rocksdb_state(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     docs.repartition(4).write.parquet(in_dir)
 
-    conf = rocksdb_state_conf()
-    old = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    try:
-        stream = (spark.readStream.schema("doc_id long, phash long")
-                  .option("maxFilesPerTrigger", "1").parquet(in_dir))
-        pairs = streaming_hamming_dedup(
-            stream, id_col="doc_id", hash_col="phash",
-            radius=3, n_bands=4, bits=60,
-        )
-        q = (pairs.writeStream.format("memory").queryName("sgate")
-             .outputMode("update").trigger(availableNow=True)
-             .option("checkpointLocation", str(tmp_path / "ck"))
-             .start())
-        q.awaitTermination(180)
-        progress = [_json.loads(p.json) for p in q.recentProgress]
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-    got = {(r.id_a, r.id_b, r.hamming)
-           for r in spark.table("sgate").distinct().collect()}
+    stream = (spark.readStream.schema("doc_id long, phash long")
+              .option("maxFilesPerTrigger", "1").parquet(in_dir))
+    pairs = streaming_hamming_dedup(
+        stream, id_col="doc_id", hash_col="phash",
+        radius=3, n_bands=4, bits=60,
+    )
+    rows, q = _drain_rows(spark, pairs, str(tmp_path / "ck"),
+                          conf=rocksdb_state_conf())
+    progress = [_json.loads(p.json) for p in q.recentProgress]
+    got = {(r.id_a, r.id_b, r.hamming) for r in rows}
 
     con = duckdb.connect()
     con.execute(
@@ -329,12 +329,8 @@ def test_streaming_hamming_dedup_cap_keeps_flood_connected(spark, tmp_path):
     stream = (spark.readStream.schema("image_id long, phash long")
               .parquet(f"{in_dir}/*"))
     pairs = streaming_hamming_dedup(stream, radius=3, n_bands=4, max_bucket=2)
-    q = (pairs.writeStream.format("memory").queryName("sflood")
-         .outputMode("update").trigger(availableNow=True)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .start())
-    q.awaitTermination(120)
-    got = {(r.id_a, r.id_b) for r in spark.table("sflood").distinct().collect()}
+    rows, _ = _drain_rows(spark, pairs, str(tmp_path / "ck"))
+    got = {(r.id_a, r.id_b) for r in rows}
     # every member reachable from hub 0 (union-find over emitted pairs)
     parent = {v: v for p in got for v in p}
 
@@ -352,13 +348,17 @@ def test_streaming_hamming_dedup_cap_keeps_flood_connected(spark, tmp_path):
     assert len(got) < 30
 
 
-def test_stream_job_dedup_mode_drains_and_resumes(spark, tmp_path):
+def test_stream_job_dedup_mode_drains_and_resumes(spark, tmp_path, capsys):
     """r5: stream_job --mode dedup CLI — drains a landing dir of
     (image_id, phash) rows into an append-only pair parquet under
     RocksDB state; a second --once invocation after new files arrive
     finds the CROSS-batch pairs (checkpointed state persisted across
-    process-level restarts of the query)."""
+    process-level restarts of the query).  A new stream runs one task
+    wave of state partitions (``defaultParallelism``), reported in the
+    summary line, and the session's own setting is left as it was."""
     from jobs.stream_job import main as stream_main
+
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
 
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -377,20 +377,77 @@ def test_stream_job_dedup_mode_drains_and_resumes(spark, tmp_path):
     drop(b1, "b1.parquet")
 
     ckpt, out = str(tmp_path / "ck"), str(tmp_path / "pairs")
+    # a state TTL far longer than the test: nothing is evicted, but the
+    # --once drains must still end
     argv = ["--input", str(landing), "--checkpoint", ckpt, "--output", out,
-            "--mode", "dedup", "--bands", "4", "--once"]
+            "--mode", "dedup", "--bands", "4", "--once",
+            "--state-ttl-ms", "600000", "--timeout-sec", str(DRAIN_TIMEOUT_S)]
     stream_main(argv)
+    s1 = _summary(capsys)
     got1 = {(r.id_a, r.id_b) for r in spark.read.parquet(out)
             .dropDuplicates(["id_a", "id_b"]).collect()}
     assert got1 == {(1, 2)}
+    assert s1["pairs"] == 1
+    assert s1["state_partitions"] == spark.sparkContext.defaultParallelism
+    assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_partitions
 
     drop(b2, "b2.parquet")
     stream_main(argv)
+    s2 = _summary(capsys)
     got2 = {(r.id_a, r.id_b) for r in spark.read.parquet(out)
             .dropDuplicates(["id_a", "id_b"]).collect()}
     # the second drain processed ONLY the new file, but its arrivals
     # verified against the checkpointed bucket state from drain 1
     assert got2 == {(1, 2), (1, 4), (2, 4)}
+    assert s2["state_partitions"] == spark.sparkContext.defaultParallelism
+
+
+def test_stream_job_resumes_checkpoint_at_its_own_partition_count(
+        spark, tmp_path, capsys):
+    """A dedup checkpoint created by starting ``streaming_hamming_dedup``
+    directly, under the session's shuffle-partition setting, keeps that
+    state-partition count when ``stream_job`` resumes it; the pair set
+    across the three drains is still exact."""
+    from jobs.stream_job import main as stream_main
+    from mapsplit_spark.streaming.dedup_stream import streaming_hamming_dedup
+
+    created_at = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert created_at != spark.sparkContext.defaultParallelism
+    landing, ckpt, out = (str(tmp_path / d) for d in ("landing", "ck", "pairs"))
+    os.makedirs(landing)
+    drops = [[(1, 0x1234_5678_9ABC_DEF0), (2, 0x0F0F_0F0F_0F0F_0F0F)],
+             [(3, 0x1234_5678_9ABC_DEF1),    # d=1 vs id 1: across drains
+              (4, 0x5555_0000_AAAA_FFFF)],
+             [(5, 0x0F0F_0F0F_0F0F_0F0E),    # d=1 vs id 2: across two drains
+              (6, 0x1234_5678_9ABC_DEF3)]]   # d≤2 vs ids 1 and 3
+
+    def drop(k):
+        ids, hashes = zip(*drops[k])
+        pq.write_table(pa.table({"image_id": pa.array(ids, type=pa.int64()),
+                                 "phash": pa.array(hashes, type=pa.int64())}),
+                       os.path.join(landing, f"b{k}.parquet"))
+
+    def sink(df, _bid):  # stream_job's dedup sink
+        df.dropDuplicates(["id_a", "id_b"]).write.mode("append").parquet(out)
+
+    drop(0)
+    stream = spark.readStream.schema("image_id long, phash long").parquet(landing)
+    q = (streaming_hamming_dedup(stream, radius=3, n_bands=4)
+         .writeStream.foreachBatch(sink).outputMode("update")
+         .option("checkpointLocation", ckpt).trigger(availableNow=True).start())
+    assert q.awaitTermination(DRAIN_TIMEOUT_S), "drain did not end"
+
+    argv = ["--input", landing, "--checkpoint", ckpt, "--output", out,
+            "--mode", "dedup", "--bands", "4", "--once",
+            "--timeout-sec", str(DRAIN_TIMEOUT_S)]
+    for k in (1, 2):
+        drop(k)
+        stream_main(argv)
+        assert _summary(capsys)["state_partitions"] == created_at
+
+    got = {(r.id_a, r.id_b) for r in spark.read.parquet(out)
+           .dropDuplicates(["id_a", "id_b"]).collect()}
+    assert got == {(1, 3), (1, 6), (3, 6), (2, 5)}
 
 
 def test_streaming_dedup_state_ttl_evicts_idle_buckets(spark, tmp_path):
@@ -404,7 +461,9 @@ def test_streaming_dedup_state_ttl_evicts_idle_buckets(spark, tmp_path):
     at hamming 1 from id 1 arrives → NO (1,4) pair.  A control run
     WITHOUT TTL on a separate checkpoint emits (1,4) from the identical
     drain sequence, so the eviction (not banding or restarts) is what
-    the assertion isolates."""
+    the assertion isolates.  Each drain goes through the shared drain
+    path, which must END with a TTL set (a processing-time timeout
+    asks for empty batches forever under a plain availableNow trigger)."""
     import json as _json
     import time
 
@@ -434,10 +493,7 @@ def test_streaming_dedup_state_ttl_evicts_idle_buckets(spark, tmp_path):
                 df.dropDuplicates(["id_a", "id_b"]).write.mode("append") \
                     .parquet(out)
 
-            q = (pairs.writeStream.foreachBatch(sink).outputMode("update")
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
+            q = run_stream(spark, pairs, sink, ckpt, timeout_sec=DRAIN_TIMEOUT_S)
             for p in q.recentProgress:
                 for op in _json.loads(p.json).get("stateOperators", []):
                     removed += op.get("numRowsRemoved", 0) or 0
