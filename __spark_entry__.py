@@ -307,18 +307,12 @@ def q_clip_ring(spark, sf_dir):
     join — the reference's clipPoly path (MapSplit.java:999-1065,
     1128-1145) with a concave outer ring and a hole, run through the
     real numpy clip operators (operators/clip.py)."""
-    import numpy as np
-
-    from mapsplit_spark.operators.clip import clip_assignments, clip_tiles
-
-    def ring_np(vs):
-        r = np.array(vs, dtype=np.float64)
-        return (r, (r[:, 0].min(), r[:, 0].max(), r[:, 1].min(), r[:, 1].max()))
+    from mapsplit_spark.operators.clip import clip_assignments, clip_tiles, make_ring
 
     pairs = _event_pairs(spark, sf_dir)
     kept = clip_tiles(
         pairs.select("tile_x", "tile_y").distinct(),
-        [ring_np(CLIP_RING)], [ring_np(CLIP_HOLE)], ZOOM,
+        [make_ring(CLIP_RING)], [make_ring(CLIP_HOLE)], ZOOM,
     )
     return clip_assignments(pairs, kept)
 
@@ -993,19 +987,13 @@ def q_clip_strtree(spark, sf_dir):
     the tree even at this ring count; results are bit-equal to the
     linear scan (tests/test_strtree.py) and to the oracle's 48 unrolled
     ring_pip_sql predicates."""
-    import numpy as np
-
-    from mapsplit_spark.operators.clip import clip_points
-
-    def ring_np(vs):
-        r = np.array(vs, dtype=np.float64)
-        return (r, (r[:, 0].min(), r[:, 0].max(), r[:, 1].min(), r[:, 1].max()))
+    from mapsplit_spark.operators.clip import clip_points, make_ring
 
     pts = _event_points(spark, sf_dir)
     kept = clip_points(
         pts,
-        [ring_np(v) for v in CLIP_MULTI_OUTERS],
-        [ring_np(v) for v in CLIP_MULTI_HOLES],
+        [make_ring(v) for v in CLIP_MULTI_OUTERS],
+        [make_ring(v) for v in CLIP_MULTI_HOLES],
         use_index=True,
     )
     return kept.select("event_id")
@@ -1269,18 +1257,12 @@ def q_ring_zonal(spark, sf_dir):
     aggregation is a plain partial-agg groupBy.  Oracle: 40 unrolled
     per-ring ring_pip_sql aggregates UNION ALL'd (same even-odd
     formula text as the clip gates)."""
-    import numpy as np
-
-    from mapsplit_spark.operators.clip import zone_assign
-
-    def ring_np(vs):
-        r = np.array(vs, dtype=np.float64)
-        return (r, (r[:, 0].min(), r[:, 0].max(), r[:, 1].min(), r[:, 1].max()))
+    from mapsplit_spark.operators.clip import make_ring, zone_assign
 
     za = zone_assign(
         _event_points(spark, sf_dir),
-        [ring_np(v) for v in CLIP_MULTI_OUTERS],
-        [ring_np(v) for v in CLIP_MULTI_HOLES],
+        [make_ring(v) for v in CLIP_MULTI_OUTERS],
+        [make_ring(v) for v in CLIP_MULTI_HOLES],
         id_col="event_id", use_index=True,
     )
     return za.groupBy("zone").agg(
@@ -1448,16 +1430,10 @@ def q_ring_raster(spark, sf_dir):
     Oracle: 40 unrolled ring_pip_sql predicates over a generate_series
     grid — an INDEPENDENT even-odd formulation (the ring_zonal
     pattern), sharing only the tile-center arithmetic text."""
-    import numpy as np
-
-    from mapsplit_spark.operators.clip import zone_assign
+    from mapsplit_spark.operators.clip import make_ring, zone_assign
 
     n = 1 << RASTER_ZOOM
     d = ZOOM - RASTER_ZOOM
-
-    def ring_np(vs):
-        r = np.array(vs, dtype=np.float64)
-        return (r, (r[:, 0].min(), r[:, 0].max(), r[:, 1].min(), r[:, 1].max()))
 
     # coalesce the generated grid to a few fat partitions BEFORE the
     # Arrow PIP kernel: spark.range defaults to one partition per core
@@ -1471,7 +1447,7 @@ def q_ring_raster(spark, sf_dir):
         F.expr(sqlgen.tile2lon_sql("x + 0.5", RASTER_ZOOM)).alias("lon"),
         F.expr(sqlgen.tile2lat_sql("y + 0.5", RASTER_ZOOM)).alias("lat"),
     )
-    za = zone_assign(centers, [ring_np(v) for v in CLIP_MULTI_OUTERS], [],
+    za = zone_assign(centers, [make_ring(v) for v in CLIP_MULTI_OUTERS], [],
                      id_col="cell_id", use_index=True)
     raster = za.select(
         F.col("zone").cast("int").alias("zone"),
@@ -1540,20 +1516,15 @@ def q_zone_transitions(spark, sf_dir):
     production STR-tree Arrow kernel (independent of the oracle's 40
     unrolled ring_pip_sql predicates folded with LEAST), transitions
     via the per-user lag window.  Zone −1 = outside all rings."""
-    import numpy as np
-
+    from mapsplit_spark.operators.clip import make_ring
     from mapsplit_spark.operators.geofence import zone_transitions
-
-    def ring_np(vs):
-        r = np.array(vs, dtype=np.float64)
-        return (r, (r[:, 0].min(), r[:, 0].max(), r[:, 1].min(), r[:, 1].max()))
 
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id",
         F.expr(EV_LON).alias("lon"), F.expr(EV_LAT).alias("lat"),
     )
     return zone_transitions(ev, "user_id", "ts", "event_id", "lon", "lat",
-                            [ring_np(v) for v in CLIP_MULTI_OUTERS])
+                            [make_ring(v) for v in CLIP_MULTI_OUTERS])
 
 
 def q_user_heading(spark, sf_dir):

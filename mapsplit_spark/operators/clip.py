@@ -44,16 +44,23 @@ from ..strtree import build_strtree, query_strtree
 STRTREE_MIN_RINGS = 768
 
 
+def make_ring(vertices) -> tuple[np.ndarray, tuple]:
+    """(lon, lat) vertex sequence → (ring, bbox): the (n,2) float64 ring
+    and its (x0, x1, y0, y1) bounding box — the ring form every polygon
+    operator here takes."""
+    ring = np.array(vertices, dtype=np.float64)
+    return ring, (ring[:, 0].min(), ring[:, 0].max(), ring[:, 1].min(), ring[:, 1].max())
+
+
 def load_rings(polys_df: DataFrame, poly_id: str | None = None):
-    """clip_polygons table → (outers, inners): lists of (n,2) numpy rings
-    with precomputed bboxes.  Driver-side — the table is tiny (S4)."""
+    """clip_polygons table → (outers, inners): lists of ``make_ring``
+    rings.  Driver-side — the table is tiny (S4)."""
     rows = polys_df.filter(F.col("poly_id") == poly_id).collect() if poly_id \
         else polys_df.collect()
     outers, inners = [], []
     for r in rows:
-        ring = np.array([(c["lon"], c["lat"]) for c in r.coords], dtype=np.float64)
-        bbox = (ring[:, 0].min(), ring[:, 0].max(), ring[:, 1].min(), ring[:, 1].max())
-        (inners if r.is_hole else outers).append((ring, bbox))
+        ring = make_ring([(c["lon"], c["lat"]) for c in r.coords])
+        (inners if r.is_hole else outers).append(ring)
     return outers, inners
 
 

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .assign import assign_tiles
 from .components import connected_components
+from .iterate import checkpoint_count
 
 # cluster_points broadcast guard: dense-cell relations above this row
 # count join by shuffle instead of broadcast (3 longs/row ⇒ the default
@@ -135,10 +136,9 @@ def cluster_points(points: DataFrame, id_col: str, lon_col: str,
     # data-dependent (urban planet at fine zoom can reach 10⁷-10⁸ rows);
     # materialize the label relation once, broadcast only when it is
     # provably small, otherwise fall back to a plain shuffled join on
-    # the tile key.
-    labels = labelled.select("tile_x", "tile_y", "cluster") \
-        .localCheckpoint(eager=True)
-    if labels.count() <= CLUSTER_BROADCAST_MAX_CELLS:
+    # the tile key.  The size is observed on the checkpoint job.
+    labels, n_cells = checkpoint_count(labelled.select("tile_x", "tile_y", "cluster"))
+    if n_cells <= CLUSTER_BROADCAST_MAX_CELLS:
         labels = F.broadcast(labels)
     return cells.join(
         labels, ["tile_x", "tile_y"], "left",

@@ -19,25 +19,27 @@ rather than silently emitting split components.
 
 Scale shape: per round, one shuffle join edges⋈labels + one aggregate
 + one labels⋈labels self-join — all equi-joins on the id key, no
-driver-side state; lineage truncated per round via localCheckpoint
-(same pattern as the semi-naive relation fixed point).
+driver-side state; lineage truncated per round via localCheckpoint,
+and the round's changed-label count is observed on its last checkpoint
+(``iterate.fixed_point``, shared with the semi-naive relation fixed
+point), so convergence costs no probe job.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .iterate import checkpoint_count, fixed_point
+
 # driver fast path cap: pair relations at or below this many edges are
 # collected and resolved with a single union-find instead of the
-# distributed fixpoint (each distributed round costs 3 checkpoint jobs
-# + an isEmpty probe — seconds of pure scheduling latency on small
-# graphs).  2M edges ≈ 32 MB via Arrow — the same bounded-collect class
-# as the IVF probe-cell ids; larger graphs take the distributed path
-# unchanged, so the operator stays 100 TB-safe.
-CC_DRIVER_MAX_EDGES = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX", "2000000"))
+# distributed fixpoint (each distributed round costs two eager
+# checkpoints, the second counting the changed labels — seconds of pure
+# scheduling latency on small graphs).  2M edges ≈ 32 MB via Arrow — the same
+# bounded-collect class as the IVF probe-cell ids; larger graphs take
+# the distributed path, so the operator stays 100 TB-safe.
+CC_DRIVER_MAX_EDGES = 2_000_000
 
 
 def _driver_components(spark, pdf, id_fields) -> DataFrame:
@@ -79,28 +81,25 @@ def _driver_components(spark, pdf, id_fields) -> DataFrame:
 
 
 def connected_components(pairs: DataFrame, max_iters: int = 20,
-                         driver_max_edges: int | None = None) -> DataFrame:
+                         driver_max_edges: int = CC_DRIVER_MAX_EDGES) -> DataFrame:
     """→ (v, component) for every vertex appearing in ``pairs``
     (columns id_a/id_b), component = MIN vertex id reachable.
 
-    Size-adaptive (r6): the pair relation is materialized once; at or
-    below ``driver_max_edges`` (default ``CC_DRIVER_MAX_EDGES``) the
-    graph resolves in one driver union-find — dedup-pair graphs after
-    banding are tiny relative to the corpus, and the distributed
-    fixpoint's per-round job latency dominated three gates.  Above the
-    cap the distributed min-label/pointer-jumping fixpoint runs
-    unchanged.
+    Size-adaptive (r6): the pair relation is materialized once, its edge
+    count observed on that checkpoint job; at or below
+    ``driver_max_edges`` the graph resolves in one driver union-find —
+    dedup-pair graphs after banding are tiny relative to the corpus, and
+    the distributed fixpoint's per-round job latency dominated three
+    gates.  Above the cap (or with ``driver_max_edges=0``) the
+    distributed min-label/pointer-jumping fixpoint runs.
 
     Raises RuntimeError if not converged within ``max_iters`` rounds
     (pointer jumping makes that ~2^max_iters of effective diameter —
     unreachable for any real dedup graph; a silent cap could split
     groups, so like the relation fixed point the failure is loud)."""
-    cap = CC_DRIVER_MAX_EDGES if driver_max_edges is None else driver_max_edges
-    if cap > 0:
-        pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
-        # count is cheap on the materialized blocks; limit(cap+1) would
-        # also work but count doubles as telemetry
-        if pairs.count() <= cap:
+    if driver_max_edges > 0:
+        pairs, n_edges = checkpoint_count(pairs.select("id_a", "id_b"))
+        if n_edges <= driver_max_edges:
             id_type = pairs.schema["id_a"].dataType
             return _driver_components(
                 pairs.sparkSession, pairs.toPandas(), id_type)
@@ -118,15 +117,18 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
         )
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iters):
-        # min over neighbours' current labels
+
+    def step(_, labels):
+        # min over neighbours' current labels; the round's input label
+        # rides along as ``old`` so the jumped checkpoint counts changes
         nb = (
             edges.join(labels, edges["dst"] == labels["v"])
             .groupBy("src").agg(F.min("lab").alias("nlab"))
         )
         stepped = (
             labels.join(nb, labels["v"] == nb["src"], "left")
-            .select(labels["v"], F.least("lab", "nlab").alias("lab"))
+            .select(labels["v"], labels["lab"].alias("old"),
+                    F.least("lab", "nlab").alias("lab"))
             # materialize before the x/y self-join below: an uncheckpointed
             # plan aliased as both sides would recompute the edges⋈labels
             # join + aggregate twice per round (2× every iteration)
@@ -134,26 +136,15 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
         )
         # pointer jumping: follow the label's own label (path doubling)
         x, y = stepped.alias("x"), stepped.alias("y")
-        jumped = (
-            x.join(y, F.col("x.lab") == F.col("y.v"), "left")
-            .select(
-                F.col("x.v").alias("v"),
-                F.least(F.col("x.lab"), F.col("y.lab")).alias("lab"),
-            )
-            .localCheckpoint(eager=True)
+        jumped = x.join(y, F.col("x.lab") == F.col("y.v"), "left").select(
+            F.col("x.v").alias("v"),
+            F.least(F.col("x.lab"), F.col("y.lab")).alias("lab"),
+            F.col("x.old").alias("old"),
         )
-        changed = (
-            jumped.join(labels.withColumnRenamed("lab", "old"), "v")
-            .filter(F.col("lab") != F.col("old"))
-        )
-        done = changed.isEmpty()
-        labels = jumped
-        if done:
-            return labels.select("v", F.col("lab").alias("component"))
-    raise RuntimeError(
-        f"connected_components: not converged after {max_iters} rounds — "
-        "pathological chain graph; raise max_iters"
-    )
+        return checkpoint_count(jumped, F.col("lab") != F.col("old"))
+
+    labels = fixed_point("connected_components", step, labels, max_iters)
+    return labels.select("v", F.col("lab").alias("component"))
 
 
 def dedup_keep(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",

@@ -33,12 +33,15 @@ Scale-correctness details of the tiled path:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import sqlgen
 from .assign import assign_tiles
+from .iterate import checkpoint_count, fixed_point
 
 EARTH_R_KM = 6371.0088  # matches sqlgen.haversine_sql
 _FAR_KM = 1.0e9  # "side fully covered" sentinel (wraps / poles)
@@ -175,6 +178,34 @@ def _proven(ranked: DataFrame, coverage: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _coverage_ladder(queries: DataFrame, levels: list, probe, fallback,
+                     k: int, escalate: bool) -> DataFrame:
+    """The exact-top-k escalation shared by the kNN scale paths.
+    ``probe(pending, level)`` → (candidate pairs, per-query ``cov_km``);
+    level by level, queries whose top-k is provably inside their coverage
+    (``_proven``) are accepted and the rest re-probe at the next level;
+    ``fallback(pending)`` answers what the last level leaves.  Eager with
+    ``escalate``: per level, ranked candidates and the pending set are
+    checkpointed, the pending count observed on its checkpoint."""
+    pending = queries.select("query_id", "q_lon", "q_lat")
+    if not escalate and levels:
+        return _ranked(probe(pending, levels[0])[0], k)
+
+    def level(i, state):
+        pending, results = state
+        if i == len(levels):  # exact tail for what no level could prove
+            return (pending, results + [fallback(pending)]), 0
+        cands, coverage = probe(pending, levels[i])
+        ranked = _ranked(cands, k).localCheckpoint(eager=True)  # read twice below
+        proven = F.broadcast(_proven(ranked, coverage, k))
+        pending, n = checkpoint_count(pending.join(proven, "query_id", "left_anti"))
+        return (pending, results + [ranked.join(proven, "query_id", "left_semi")]), n
+
+    _, results = fixed_point("knn coverage ladder", level, (pending, []),
+                             len(levels) + 1)
+    return reduce(DataFrame.unionByName, results)
+
+
 def knn_tiled(queries: DataFrame, points: DataFrame, zoom: int, ring: int = 1,
               k: int = 5, escalate: bool = True, min_zoom: int = 0) -> DataFrame:
     """Tile-ring candidate generation + exact haversine re-rank.
@@ -194,41 +225,27 @@ def knn_tiled(queries: DataFrame, points: DataFrame, zoom: int, ring: int = 1,
 
     NOTE: ``escalate=True`` executes Spark jobs EAGERLY at call time
     (the per-level accept/retry decision needs each level's coverage
-    proof — eager localCheckpoint + isEmpty per zoom), unlike the lazy
+    proof — two eager localCheckpoints per zoom), unlike the lazy
     single-probe path.  The checkpointed intermediates backing the
     returned DataFrame are context-cleaned once the caller drops its
     reference (localCheckpoint blocks are GC-managed, not pinned).
     """
-    pending = queries.select("query_id", "q_lon", "q_lat")
-    results: list[DataFrame] = []
     # assign the big points side ONCE at the base zoom; coarser levels
     # derive by bit-shift (quadtree nesting: floor(v·2^(z−d)) ==
     # floor(v·2^z) >> d, clamping included) — escalation never rescans
     # or re-projects the points table
     pt_base = _tiled_points(points, zoom)
-    z = zoom
-    while z >= min_zoom:
-        pt_z = _coarsen_tiles(pt_base, zoom - z)
-        qt = _query_tiles(pending, z)
-        cands = _ring_candidates(qt, pt_z, z, ring)
-        ranked = _ranked(cands.dropDuplicates(["query_id", "point_id"]), k)
-        if not escalate:
-            return ranked
-        ranked = ranked.localCheckpoint(eager=True)  # reused 3× below
-        proven = _proven(ranked, _coverage_radius_km(qt, z, ring), k)
-        results.append(ranked.join(F.broadcast(proven), "query_id", "left_semi"))
-        pending = pending.join(F.broadcast(proven), "query_id", "left_anti") \
-            .localCheckpoint(eager=True)
-        if pending.isEmpty():
-            break
-        z -= 1
-    else:
-        results.append(knn_bruteforce(pending, points, k))
 
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
+    def probe(pending, z):
+        qt = _query_tiles(pending, z)
+        cands = _ring_candidates(qt, _coarsen_tiles(pt_base, zoom - z), z, ring)
+        return (cands.dropDuplicates(["query_id", "point_id"]),
+                _coverage_radius_km(qt, z, ring))
+
+    return _coverage_ladder(
+        queries, list(range(zoom, min_zoom - 1, -1)), probe,
+        lambda pending: knn_bruteforce(pending, points, k), k, escalate,
+    )
 
 
 def _probe_buckets(spark, ringed: DataFrame, d: int, n_buckets: int) -> list[int] | None:
@@ -292,14 +309,12 @@ def knn_tiled_bucketed(queries: DataFrame, points_path: str, zoom: int,
     (quadtree nesting), never re-projecting the stored rows.
     """
     spark = queries.sparkSession
-    pending = queries.select("query_id", "q_lon", "q_lat")
-    results: list[DataFrame] = []
-    z = zoom
-    while z >= min_zoom:
+
+    def probe(pending, z):
         d = zoom - z
         qt = _query_tiles(pending, z)
-        ringed = _ring_tiles(qt, z, ring, ["query_id"])
-        buckets = _probe_buckets(spark, ringed, d, n_buckets)
+        buckets = _probe_buckets(spark, _ring_tiles(qt, z, ring, ["query_id"]),
+                                 d, n_buckets)
         pts = spark.read.parquet(points_path)
         if buckets is not None:
             pts = pts.filter(F.col("bucket").isin(buckets))
@@ -307,28 +322,15 @@ def knn_tiled_bucketed(queries: DataFrame, points_path: str, zoom: int,
             pts.select("point_id", "p_lon", "p_lat", "tile_x", "tile_y"), d
         )
         cands = _ring_candidates(qt, pt_z, z, ring)
-        ranked = _ranked(cands.dropDuplicates(["query_id", "point_id"]), k)
-        if not escalate:
-            return ranked
-        ranked = ranked.localCheckpoint(eager=True)
-        proven = _proven(ranked, _coverage_radius_km(qt, z, ring), k)
-        results.append(ranked.join(F.broadcast(proven), "query_id", "left_semi"))
-        pending = pending.join(F.broadcast(proven), "query_id", "left_anti") \
-            .localCheckpoint(eager=True)
-        if pending.isEmpty():
-            break
-        z -= 1
-    else:
-        results.append(knn_bruteforce(
-            pending,
-            spark.read.parquet(points_path).select("point_id", "p_lon", "p_lat"),
-            k,
-        ))
+        return (cands.dropDuplicates(["query_id", "point_id"]),
+                _coverage_radius_km(qt, z, ring))
 
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
+    def fallback(pending):
+        points = spark.read.parquet(points_path).select("point_id", "p_lon", "p_lat")
+        return knn_bruteforce(pending, points, k)
+
+    return _coverage_ladder(queries, list(range(zoom, min_zoom - 1, -1)),
+                            probe, fallback, k, escalate)
 
 
 # ---------------------------------------------------------------------------
@@ -434,32 +436,18 @@ def knn_hex(queries: DataFrame, points: DataFrame, s_deg: float,
     """
     if k0 < 1:
         raise ValueError("k0 must be >= 1 (a 0-disk has no coverage proof)")
-    pending = queries.select("query_id", "q_lon", "q_lat")
     pt = _hex_assigned(points.select("point_id", "p_lon", "p_lat"),
                        "point_id", "p_lon", "p_lat", s_deg)
-    results: list[DataFrame] = []
-    kk = k0
-    while kk <= k_max:
+
+    def probe(pending, kk):
         qt = _hex_assigned(pending, "query_id", "q_lon", "q_lat", s_deg)
         cells = _hex_disk_cells(qt, kk, ["query_id", "q_lon", "q_lat"])
         cands = F.broadcast(cells).join(pt, ["hq", "hr"]).select(
             "query_id", "q_lon", "q_lat", "point_id", "p_lon", "p_lat"
         )
-        ranked = _ranked(cands, k)
-        if not escalate:
-            return ranked
-        ranked = ranked.localCheckpoint(eager=True)
-        proven = _proven(ranked, _hex_coverage_km(qt, kk, s_deg), k)
-        results.append(ranked.join(F.broadcast(proven), "query_id", "left_semi"))
-        pending = pending.join(F.broadcast(proven), "query_id", "left_anti") \
-            .localCheckpoint(eager=True)
-        if pending.isEmpty():
-            break
-        kk *= 2
-    else:
-        results.append(knn_bruteforce(pending, points, k))
+        return cands, _hex_coverage_km(qt, kk, s_deg)
 
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
+    levels = [k0 << i for i in range(max(k_max // k0, 0).bit_length())]  # k0·2^i ≤ k_max
+    return _coverage_ladder(queries, levels, probe,
+                            lambda pending: knn_bruteforce(pending, points, k),
+                            k, escalate)

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .iterate import checkpoint_count, fixed_point
+
 
 def drop_incomplete_groups(members: DataFrame, node_ids: DataFrame,
                            group_col: str = "way_id",
@@ -106,18 +108,36 @@ def complete_relation_propagation(rel_members: DataFrame, rel_tiles: DataFrame,
     )
 
 
-def _semi_naive_step(rel_edges: DataFrame, delta: DataFrame,
+def _semi_naive_step(edges: DataFrame, delta: DataFrame,
                      resolved: DataFrame) -> DataFrame:
     """One semi-naive iteration: derive the next frontier from the DELTA
     only (classic datalog TC optimization — joining the accumulated
     relation instead would grow the join input every iteration), then
-    anti-join away rows already resolved.  ``rel_edges``: (dst, src)."""
+    anti-join away rows already resolved.  ``edges``: (dst, src);
+    ``delta``/``resolved``: (element_id, *payload)."""
+    payload = [c for c in delta.columns if c != "element_id"]
     derived = (
-        rel_edges.join(delta, rel_edges["src"] == delta["element_id"])
-        .select(F.col("dst").alias("element_id"), "tile_x", "tile_y")
+        edges.join(delta, edges["src"] == delta["element_id"])
+        .select(F.col("dst").alias("element_id"), *payload)
         .distinct()
     )
-    return derived.join(resolved, ["element_id", "tile_x", "tile_y"], "left_anti")
+    return derived.join(resolved, delta.columns, "left_anti")
+
+
+def _closure(name: str, edges: DataFrame, base: DataFrame,
+             max_iters: int) -> DataFrame:
+    """Semi-naive closure of ``base`` (element_id, *payload) up ``edges``
+    (dst, src): every dst inherits its srcs' payload rows, transitively.
+    A round's delta count rides the delta checkpoint."""
+    def step(_, state):
+        resolved, delta = state
+        delta, n = checkpoint_count(_semi_naive_step(edges, delta, resolved))
+        if n:
+            resolved = resolved.union(delta).localCheckpoint(eager=True)
+        return (resolved, delta), n
+
+    resolved = base.localCheckpoint(eager=True)
+    return fixed_point(name, step, (resolved, resolved), max_iters)[0]
 
 
 def relation_tiles_fixed_point(rel_members: DataFrame, base_tiles: DataFrame,
@@ -152,31 +172,19 @@ def relation_tiles_fixed_point(rel_members: DataFrame, base_tiles: DataFrame,
     rel_edges = rel_members.select(
         F.col(group_col).alias("dst"), F.col(member_col).alias("src")
     )
-    resolved = (
+    base = (
         rel_edges.join(base_tiles, rel_edges["src"] == base_tiles["element_id"])
         .select(F.col("dst").alias("element_id"), "tile_x", "tile_y")
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    # r6 note: a checkpoint-deltas-only variant (anti-join against the
-    # lazy union of materialized parts, avoiding the per-round
-    # re-checkpoint of the accumulated relation) was A/B'd same-session
-    # and measured SLOWER (6.1 vs 5.5 s warm, 11.3 vs 6.5 s cold at
-    # sf0.1) — the accumulated checkpoint is what keeps the per-round
-    # anti-join and every downstream consumer reading one compact
-    # materialized relation.  Kept the r5 shape.
-    delta = resolved
-    for _ in range(max_iters):
-        delta = _semi_naive_step(rel_edges, delta, resolved).localCheckpoint(eager=True)
-        if delta.isEmpty():
-            return resolved
-        resolved = resolved.union(delta).localCheckpoint(eager=True)
-    raise RuntimeError(
-        f"relation fixed point did not converge within max_iters={max_iters} "
-        f"(relation nesting deeper than the cap — the reference iterates to "
-        f"no-progress, MapSplit.java:772-790; raise max_iters rather than "
-        f"accept a silently truncated tile set)"
-    )
+    # r6 note: ``_closure`` re-checkpoints the accumulated relation every
+    # round.  A checkpoint-deltas-only variant (anti-join against the
+    # lazy union of materialized parts) was A/B'd same-session and
+    # measured SLOWER (6.1 vs 5.5 s warm, 11.3 vs 6.5 s cold at sf0.1):
+    # the accumulated checkpoint is what keeps the per-round anti-join
+    # and every downstream consumer reading one compact materialized
+    # relation.
+    return _closure("relation fixed point", rel_edges, base, max_iters)
 
 
 def propagate_newer(edges: DataFrame, newer_ids: DataFrame,
@@ -190,19 +198,11 @@ def propagate_newer(edges: DataFrame, newer_ids: DataFrame,
 
     ``edges``: (group_id, member_id) across all kinds; ``newer_ids``:
     single-column ``element_id``.  → distinct element_id superset.
+    Raises RuntimeError past ``max_iters`` rounds.
     """
-    newer = newer_ids.select("element_id").distinct().localCheckpoint(eager=True)
-    delta = newer
-    for _ in range(max_iters):
-        derived = (
-            edges.join(delta, edges["member_id"] == delta["element_id"])
-            .select(F.col("group_id").alias("element_id")).distinct()
-        )
-        delta = derived.join(newer, "element_id", "left_anti") \
-            .localCheckpoint(eager=True)
-        if delta.isEmpty():
-            return newer
-        newer = newer.union(delta).localCheckpoint(eager=True)
-    raise RuntimeError(
-        f"newer-propagation did not converge within max_iters={max_iters}"
+    return _closure(
+        "newer-propagation",
+        edges.select(F.col("group_id").alias("dst"), F.col("member_id").alias("src")),
+        newer_ids.select("element_id").distinct(),
+        max_iters,
     )

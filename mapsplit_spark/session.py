@@ -25,25 +25,6 @@ def get_spark(app: str = "mapsplit-spark", cores: int | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE coalescing sizes partitions by BYTES; operators that put
-        # expensive per-row compute above a small shuffle instead carry a
-        # targeted explicit repartition (measured r6: a global 64k floor
-        # halved point_snap/tile_cellid but regressed the fragmentation-
-        # sensitive queries 15-30% — per-operator beats global here).
-        # Env knob kept for experiments only; default = Spark default.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_MIN_PARTITION", "1m"))
-        # preferSortMergeJoin=false (shuffled-hash where it fits, guide
-        # §3.1/§9) was A/B'd in r6 and NOT adopted: isolated 6-round
-        # medians on the five SMJ-bearing queries improved −4..−11%, but
-        # 12 position-counterbalanced FULL-suite runs of the frozen bench
-        # showed no effect distinguishable from this VM's window drift
-        # (min-of-6 totals +2.9% against, first/second-position splits
-        # +15.6%/−5.1% — the window, not the config).  SMJ also spills
-        # gracefully where SHJ risks a build-side OOM at 100 TB, so the
-        # default stays; env knob for cluster re-measurement.
-        .config("spark.sql.join.preferSortMergeJoin",
-                os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # NOTE on spark.sql.codegen.hugeMethodLimit: we measured (r4,
         # BASELINE.md "codegen vs JIT") that lowering it to HotSpot's

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -17,6 +18,29 @@ def spark():
     s = get_spark("mapsplit-tests", cores=8, shuffle_partitions=16)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def job_count(spark):
+    """→ fn(action) returning the number of Spark jobs ``action()`` ran,
+    counted under a job group of its own."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def count(action) -> int:
+        group = f"job-count-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        # job starts reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -1,9 +1,8 @@
 """Connected-components dup-group resolution — differential vs a python
-union-find on random graphs, loud non-convergence, plan shape."""
+union-find on random graphs, driver-path job count, plan shape (the loud
+cap is tested with the other fixed points in test_operators.py)."""
 
 from __future__ import annotations
-
-import pytest
 
 
 def _pairs_df(spark, edges):
@@ -72,15 +71,13 @@ def test_cc_pointer_jumping_handles_long_chain_fast(spark):
     assert set(got.values()) == {0} and len(got) == 41
 
 
-def test_cc_non_convergence_is_loud(spark):
+def test_cc_driver_path_runs_no_count_job(spark, job_count):
+    """The driver path's edge count is observed on the pairs checkpoint:
+    the call runs that checkpoint and the collect, with no count job."""
     from mapsplit_spark.operators.components import connected_components
 
-    chain = [(i, i + 1) for i in range(30)]
-    # driver_max_edges=0 forces the distributed fixpoint (r6: small
-    # graphs otherwise resolve on the driver and never iterate)
-    with pytest.raises(RuntimeError, match="not converged"):
-        connected_components(_pairs_df(spark, chain), max_iters=1,
-                             driver_max_edges=0)
+    pairs = _pairs_df(spark, [(0, 1), (1, 2), (5, 6)])
+    assert job_count(lambda: connected_components(pairs)) == 2
 
 
 def test_cc_driver_path_matches_distributed(spark):

@@ -9,6 +9,7 @@ import numpy as np
 import pandas as pd
 
 from mapsplit_spark import tilemath
+from mapsplit_spark.operators.clip import make_ring
 from mapsplit_spark.operators.interpolate import idw_grid
 
 EARTH_R_KM = 6371.0088
@@ -78,19 +79,14 @@ def test_idw_single_shuffle(spark):
     assert plan.count("Exchange") == 1
 
 
-def _ring(vs):
-    r = np.array(vs, dtype=np.float64)
-    return (r, (r[:, 0].min(), r[:, 0].max(), r[:, 1].min(), r[:, 1].max()))
-
-
 def test_zone_transitions_hand_traced(spark):
     """One user walks outside → zone0 → zone0 → overlap(z0∩z1) → z1 →
     outside; expected transitions at each boundary, overlap resolves to
     the min zone, no row for the unchanged step."""
     from mapsplit_spark.operators.geofence import zone_transitions
 
-    z0 = _ring([(0.0, -10.0), (10.0, -9.5), (10.0, 10.0), (0.0, 9.5)])
-    z1 = _ring([(5.0, -10.2), (15.0, -9.7), (15.0, 10.2), (5.0, 9.7)])
+    z0 = make_ring([(0.0, -10.0), (10.0, -9.5), (10.0, 10.0), (0.0, 9.5)])
+    z1 = make_ring([(5.0, -10.2), (15.0, -9.7), (15.0, 10.2), (5.0, 9.7)])
     path = [(-5.0, 0.0), (2.0, 0.0), (3.0, 1.0), (7.0, 0.0),
             (12.0, 0.0), (20.0, 0.0)]
     ev = spark.createDataFrame(pd.DataFrame({
@@ -116,8 +112,8 @@ def test_zone_transitions_hole_drops_membership(spark):
     """A point inside a hole counts as outside (zone −1)."""
     from mapsplit_spark.operators.geofence import zone_transitions
 
-    outer = _ring([(0.0, -10.0), (10.0, -9.5), (10.0, 10.0), (0.0, 9.5)])
-    hole = _ring([(4.0, -2.0), (6.0, -1.9), (6.0, 2.0), (4.0, 1.9)])
+    outer = make_ring([(0.0, -10.0), (10.0, -9.5), (10.0, 10.0), (0.0, 9.5)])
+    hole = make_ring([(4.0, -2.0), (6.0, -1.9), (6.0, 2.0), (4.0, 1.9)])
     ev = spark.createDataFrame(pd.DataFrame({
         "user_id": [1, 1, 1],
         "ts": pd.to_datetime("2024-01-01") + pd.to_timedelta(range(3), "min"),
@@ -162,8 +158,8 @@ def test_streaming_zone_transitions_matches_batch(spark, tmp_path):
         streaming_zone_transitions,
     )
 
-    z0 = _ring([(0.0, -10.0), (10.0, -9.5), (10.0, 10.0), (0.0, 9.5)])
-    z1 = _ring([(5.0, -10.2), (15.0, -9.7), (15.0, 10.2), (5.0, 9.7)])
+    z0 = make_ring([(0.0, -10.0), (10.0, -9.5), (10.0, 10.0), (0.0, 9.5)])
+    z1 = make_ring([(5.0, -10.2), (15.0, -9.7), (15.0, 10.2), (5.0, 9.7)])
     rng = np.random.default_rng(21)
     n, n_users = 600, 7
     ids = np.arange(n, dtype=np.int64)
@@ -181,6 +177,9 @@ def test_streaming_zone_transitions_matches_batch(spark, tmp_path):
             "event_id": pa.array(ids[sl]), "lon": pa.array(lon[sl]),
             "lat": pa.array(lat[sl]),
         }), os.path.join(src, f"b{i}.parquet"))
+        # the file source reads files in modification-time order; files
+        # written within one clock tick tie and come in listing order
+        os.utime(os.path.join(src, f"b{i}.parquet"), (1e9 + i, 1e9 + i))
 
     schema = ("user_id long, ts timestamp, event_id long, "
               "lon double, lat double")

@@ -269,13 +269,59 @@ def test_relation_fixed_point_deep_chain_converges(spark, node_tiles):
     assert by_rel["r12"] == n0_tiles  # the top of the chain fully resolved
 
 
-def test_relation_fixed_point_truncation_is_loud(spark, node_tiles):
-    """Hitting max_iters with a nonempty delta RAISES instead of
-    silently returning a truncated tile set (the reference iterates to
-    no-progress uncapped, MapSplit.java:772-790)."""
+@pytest.mark.parametrize("loop", ["relation", "newer", "components"])
+def test_fixed_point_cap_is_loud(spark, node_tiles, loop):
+    """Hitting max_iters with work left RAISES, naming the loop and each
+    round's delta size, instead of silently returning a truncated result
+    (the reference iterates to no-progress uncapped,
+    MapSplit.java:772-790)."""
+    from mapsplit_spark.operators.components import connected_components
+    from mapsplit_spark.operators.propagate import propagate_newer
+
     tiles_df, _ = node_tiles
-    with pytest.raises(RuntimeError, match="did not converge"):
-        relation_tiles_fixed_point(_chain_edges(spark, 8), tiles_df, max_iters=4)
+    if loop == "relation":
+        # every round resolves one more chain level: a copy of n0's tiles
+        n0 = tiles_df.filter("element_id = 'n0'").count()
+        name, deltas = "relation fixed point", [n0] * 4
+        run = lambda: relation_tiles_fixed_point(  # noqa: E731
+            _chain_edges(spark, 8), tiles_df, max_iters=4)
+    elif loop == "newer":
+        edges = spark.createDataFrame(
+            [(f"c{i}", f"c{i - 1}") for i in range(1, 9)],
+            "group_id string, member_id string")
+        newer = spark.createDataFrame([("c0",)], "element_id string")
+        name, deltas = "newer-propagation", [1] * 4
+        run = lambda: propagate_newer(edges, newer, max_iters=4)  # noqa: E731
+    else:
+        # path 0-1-…-30, distributed fixpoint forced (driver_max_edges=0):
+        # round one moves every label v-1 to max(v-4, 0), so v = 2..30 change
+        pairs = spark.createDataFrame([(i, i + 1) for i in range(30)],
+                                      "id_a long, id_b long")
+        name, deltas = "connected_components", [29]
+        run = lambda: connected_components(  # noqa: E731
+            pairs, max_iters=1, driver_max_edges=0)
+    with pytest.raises(RuntimeError, match="did not converge") as err:
+        run()
+    assert str(err.value).startswith(name)
+    assert f"per-round deltas: {deltas}" in str(err.value)
+
+
+def test_relation_fixed_point_round_runs_no_probe_job(spark, node_tiles,
+                                                     job_count):
+    """One more nesting level costs one more round of exactly two Spark
+    jobs, the delta and the accumulated checkpoints: the delta's row
+    count rides its checkpoint, so no isEmpty probe job runs (three jobs
+    with it).  AQE is off here because it submits every shuffle stage as
+    a job of its own, which makes a round's job count depend on plans."""
+    tiles_df, _ = node_tiles
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        jobs = [job_count(lambda d=d: relation_tiles_fixed_point(
+            _chain_edges(spark, d), tiles_df)) for d in (4, 5)]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert jobs[1] - jobs[0] == 2
 
 
 def test_propagate_newer_closes_over_membership(spark):

@@ -29,12 +29,9 @@ def test_clip_ring_python_only_on_distinct_tiles(spark, pairs):
     """P8/P9: the numpy PIP runs on DISTINCT tiles only and the kept set
     broadcast-semi-joins back — the big pair relation never reshuffles
     nor enters Python."""
-    import numpy as np
+    from mapsplit_spark.operators.clip import clip_assignments, clip_tiles, make_ring
 
-    from mapsplit_spark.operators.clip import clip_assignments, clip_tiles
-
-    ring = np.array([(-60.0, -50.0), (20.0, -55.3), (35.0, 55.7), (-55.2, 60.3)])
-    outers = [(ring, (ring[:, 0].min(), ring[:, 0].max(), ring[:, 1].min(), ring[:, 1].max()))]
+    outers = [make_ring([(-60.0, -50.0), (20.0, -55.3), (35.0, 55.7), (-55.2, 60.3)])]
     kept = clip_tiles(pairs.select("tile_x", "tile_y").distinct(), outers, [], 13)
     plan = _plan(clip_assignments(pairs, kept))
     assert plan.count("MapInPandas") == 1

@@ -21,6 +21,7 @@ from mapsplit_spark.operators.clip import (
     clip_points,
     clip_points_bc,
     broadcast_polygon_index,
+    make_ring,
     STRTREE_MIN_RINGS,
 )
 from mapsplit_spark.strtree import build_strtree, query_strtree, QUERY_CHUNK
@@ -29,10 +30,7 @@ from mapsplit_spark.strtree import build_strtree, query_strtree, QUERY_CHUNK
 def _rand_ring(rng, cx, cy, r, k=8):
     ang = np.sort(rng.uniform(0, 2 * np.pi, k))
     rad = rng.uniform(0.3 * r, r, k)
-    ring = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
-    bbox = (ring[:, 0].min(), ring[:, 0].max(),
-            ring[:, 1].min(), ring[:, 1].max())
-    return ring, bbox
+    return make_ring(np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)]))
 
 
 def _ring_set(rng, n, rmin=0.5, rmax=15.0, kmax=24):
@@ -142,18 +140,12 @@ def test_clip_points_indexed_and_bc_match_linear(spark):
 # --------------------------------------------------------- zonal assignment
 
 def _zone_rings():
-    import numpy as np
-
-    def ring_np(vs):
-        r = np.array(vs, dtype=np.float64)
-        return (r, (r[:, 0].min(), r[:, 0].max(), r[:, 1].min(), r[:, 1].max()))
-
     sq = lambda cx, cy, h: [  # noqa: E731
         (cx - h, cy - h), (cx + h, cy - h), (cx + h, cy + h), (cx - h, cy + h)]
-    outers = [ring_np(sq(0.0, 0.0, 2.0)),     # zone 0
-              ring_np(sq(1.0, 0.0, 2.0)),     # zone 1 — overlaps zone 0
-              ring_np(sq(50.0, 50.0, 1.0))]   # zone 2 — disjoint
-    holes = [ring_np(sq(0.5, 0.0, 0.25))]     # hole inside zones 0 and 1
+    outers = [make_ring(sq(0.0, 0.0, 2.0)),     # zone 0
+              make_ring(sq(1.0, 0.0, 2.0)),     # zone 1 — overlaps zone 0
+              make_ring(sq(50.0, 50.0, 1.0))]   # zone 2 — disjoint
+    holes = [make_ring(sq(0.5, 0.0, 0.25))]     # hole inside zones 0 and 1
     return outers, holes
 
 

@@ -27,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from mapsplit_spark.operators.clip import (  # noqa: E402
     _in_any,
     _membership_fn,
+    make_ring,
 )
 
 WORLD_DEG2 = 360.0 * 170.0
@@ -40,9 +41,8 @@ def ring_set(rng, n):
         ang = np.sort(rng.uniform(0, 2 * np.pi, k))
         rad = rng.uniform(0.2 * rmax, rmax, k)
         cx, cy = rng.uniform(-170, 170), rng.uniform(-80, 80)
-        ring = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
-        out.append((ring, (ring[:, 0].min(), ring[:, 0].max(),
-                           ring[:, 1].min(), ring[:, 1].max())))
+        out.append(make_ring(np.column_stack([cx + rad * np.cos(ang),
+                                              cy + rad * np.sin(ang)])))
     return out
 
 
