@@ -16,6 +16,12 @@ P4 fail-fast null check), MBTiles ≡ -M, --sessions + --complete-sessions
 ≡ -c (complete relations), --multipolygon-only ≡ -C, --date-file ≡ the
 appointment-date file (read prior date, write back latestDate —
 MapSplit.java:1506-1547).
+
+Both modes run the same stage chain (``mapsplit_spark.pipeline.
+TilingPipeline``): assign + border → [sessions] → [clip] → [optimize]
+→ manifests.  ``--workdir`` only persists each stage for kill/resume;
+every other output (zones, pyramid, payload, MBTiles, ``--date-file``
+filtering, ...) runs the same way with or without it.
 """
 
 from __future__ import annotations
@@ -30,9 +36,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from mapsplit_spark.operators.assign import assign_and_expand, with_tile_id  # noqa: E402
-from mapsplit_spark.operators.clip import clip_assignments, clip_tiles, load_rings  # noqa: E402
-from mapsplit_spark.operators.optimize import merged_assignments  # noqa: E402
+from mapsplit_spark.operators.assign import with_tile_id  # noqa: E402
+from mapsplit_spark.operators.clip import zone_assign  # noqa: E402
+from mapsplit_spark.pipeline import TilingPipeline  # noqa: E402
 from mapsplit_spark.sinks.manifests import tile_manifests, write_tiles  # noqa: E402
 
 
@@ -137,7 +143,9 @@ def build_parser() -> argparse.ArgumentParser:
                    help="materialize payload columns per tile (join bytes last; "
                         "P4 metadata null check aborts bad inputs)")
     p.add_argument("--workdir", default=None,
-                   help="stage-checkpoint dir: enables kill/resume (pipeline.py)")
+                   help="stage-checkpoint dir: persists each stage of the same "
+                        "chain for kill/resume (pipeline.py); outputs are "
+                        "identical with or without it")
     p.add_argument("--timing", action="store_true",
                    help="-v/-t parity (CommandLineParams.java:121-122): print "
                         "per-stage wall seconds and row counts from the "
@@ -167,7 +175,14 @@ def main(argv=None) -> None:
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark("split-job")
     t0 = time.time()
-    src = spark.read.parquet(args.input)
+    pipe = TilingPipeline(
+        spark, args.workdir, zoom=args.zoom, border=args.border,
+        id_col=args.id_col, lon_col=args.lon_col, lat_col=args.lat_col,
+        poly_path=args.poly, poly_id=args.poly_id, node_limit=args.optimize,
+        sessions_path=args.sessions, complete_sessions=args.complete_sessions,
+        multipolygon_only=args.multipolygon_only,
+    )
+    src = pipe.read(args.input)
     if args.date_file and args.ts_col not in src.columns:
         raise SystemExit(
             f"--date-file requires timestamp column '{args.ts_col}' "
@@ -175,75 +190,7 @@ def main(argv=None) -> None:
         )
     appointment_ms = _read_date_file(args.date_file)
 
-    manifests = None
-    if args.workdir:
-        # checkpoint-resumable path: stages persist under --workdir and a
-        # re-run recomputes only unfinished stages (north_rule resume).
-        # The CLI consumes the pipeline's stage outputs directly — the
-        # merge walk and manifest aggregation run exactly once.
-        from mapsplit_spark.pipeline import TilingPipeline
-
-        pipe = TilingPipeline(
-            spark, args.workdir, zoom=args.zoom, border=args.border,
-            id_col=args.id_col, lon_col=args.lon_col, lat_col=args.lat_col,
-            poly_path=args.poly, poly_id=args.poly_id, node_limit=args.optimize,
-            sessions_path=args.sessions, complete_sessions=args.complete_sessions,
-            multipolygon_only=args.multipolygon_only,
-        )
-        manifests = pipe.run(args.input)
-        # base-zoom pairs always available (lazy read) — --pyramid needs
-        # them even when --optimize replaced the output-zoom relation
-        pairs = spark.read.parquet(
-            os.path.join(pipe.last_assignment_dir(), "data"))
-        if args.optimize > 0:
-            tiled = spark.read.parquet(pipe.stage_data("tiled"))
-        else:
-            tiled = pairs.select(
-                "element_id", F.lit(args.zoom).alias("zoom"), "tile_x", "tile_y"
-            ).dropDuplicates(["element_id", "tile_x", "tile_y"])
-    else:
-        points = src.select(args.id_col, args.lon_col, args.lat_col)
-        pairs = assign_and_expand(points, args.id_col, args.lon_col, args.lat_col,
-                                  args.zoom, args.border)
-
-        if args.sessions:
-            from mapsplit_spark.operators.sessions import session_assignments
-
-            pairs = session_assignments(
-                pairs, spark.read.parquet(args.sessions),
-                complete=args.complete_sessions,
-                multipolygon_only=args.multipolygon_only,
-            )
-
-        if args.poly:
-            outers, inners = load_rings(spark.read.parquet(args.poly), args.poly_id)
-            kept = clip_tiles(pairs.select("tile_x", "tile_y").distinct(),
-                              outers, inners, args.zoom)
-            pairs = clip_assignments(pairs, kept)
-            if args.zonal:
-                from mapsplit_spark.operators.clip import zone_assign
-
-                za = zone_assign(
-                    src.select(args.id_col, args.lon_col, args.lat_col),
-                    outers, inners, id_col=args.id_col,
-                    lon_col=args.lon_col, lat_col=args.lat_col,
-                )
-                za.groupBy("zone").agg(
-                    F.count("*").cast("long").alias("n_points")
-                ).write.mode("overwrite").parquet(
-                    os.path.join(args.output, "zones"))
-
-        # §2.5 optimize — output-zoom relation (element_id, zoom, tile_x,
-        # tile_y); payload/raster keys derive from the SAME merged
-        # relation so every output agrees on tile identity
-        if args.optimize > 0:
-            tiled = merged_assignments(pairs, args.zoom, args.optimize)
-        else:
-            tiled = pairs.select(
-                "element_id", F.lit(args.zoom).alias("zoom"), "tile_x", "tile_y"
-            ).dropDuplicates(["element_id", "tile_x", "tile_y"])
-
-    tiled = tiled.localCheckpoint(eager=False)  # reused by manifests/payload/raster
+    pipe.run(args.input)
 
     # S5/P3/A4 — appointment-date incremental: a tile is written iff it
     # contains an element newer than the appointment date.  Element-level
@@ -259,22 +206,22 @@ def main(argv=None) -> None:
             from mapsplit_spark.operators.propagate import propagate_newer
             from mapsplit_spark.operators.sessions import session_edges
 
-            sess = spark.read.parquet(args.sessions)
+            sess = pipe.read(args.sessions)
             edges = session_edges(sess, "session").unionByName(
                 session_edges(sess, "collection"))
             newer = propagate_newer(edges, newer)
-        modified_tiles = (
-            tiled.join(newer, "element_id", "left_semi")
+        pipe.restrict(
+            pipe.tiled.join(newer, "element_id", "left_semi")
             .select("zoom", "tile_x", "tile_y").distinct()
         )
-        tiled = tiled.join(modified_tiles, ["zoom", "tile_x", "tile_y"], "left_semi")
-        if manifests is not None:  # stage manifests are pre-filter; restrict
-            manifests = manifests.join(
-                modified_tiles, ["zoom", "tile_x", "tile_y"], "left_semi")
 
-    if manifests is None:
+    # base-zoom pairs (--pyramid/--focal need them even when --optimize
+    # replaced the output-zoom relation) and the output-zoom relation
+    # that manifests, payload and raster keys all derive from
+    pairs, tiled, manifests = pipe.pairs, pipe.tiled, pipe.manifests
+    if args.chunked_manifests:
         manifests = tile_manifests(tiled, args.zoom, assume_distinct=True,
-                                   chunked=args.chunked_manifests)
+                                   chunked=True)
     manifests.write.mode("overwrite").parquet(os.path.join(args.output, "manifests"))
 
     if args.pyramid is not None:
@@ -316,13 +263,21 @@ def main(argv=None) -> None:
             hq.alias("hq"), hr.alias("hr"),
         ).write.mode("overwrite").parquet(os.path.join(args.output, "hexcells"))
 
+    if args.zonal and args.poly:
+        zone_assign(
+            src.select(args.id_col, args.lon_col, args.lat_col),
+            *pipe.rings, id_col=args.id_col,
+            lon_col=args.lon_col, lat_col=args.lat_col,
+        ).groupBy("zone").agg(
+            F.count("*").cast("long").alias("n_points")
+        ).write.mode("overwrite").parquet(os.path.join(args.output, "zones"))
+
     if args.raster is not None and args.poly:
         import numpy as np
 
         from mapsplit_spark import sqlgen, tilemath
-        from mapsplit_spark.operators import clip as _clip
 
-        outers, inners = load_rings(spark.read.parquet(args.poly), args.poly_id)
+        outers, inners = pipe.rings
         # bbox-pruned candidate grid (the rings live on the driver)
         bb = np.array([b for _, b in outers])
         x0 = int(tilemath.lon2tx(bb[:, 0].min(), args.raster))
@@ -338,7 +293,7 @@ def main(argv=None) -> None:
             F.expr(sqlgen.tile2lon_sql("x + 0.5", args.raster)).alias("lon"),
             F.expr(sqlgen.tile2lat_sql("y + 0.5", args.raster)).alias("lat"),
         )
-        za = _clip.zone_assign(centers, outers, inners, id_col="cell_id")
+        za = zone_assign(centers, outers, inners, id_col="cell_id")
         za.select(
             "zone",
             (F.col("cell_id") / n).cast("long").alias("tile_x"),
@@ -368,13 +323,11 @@ def main(argv=None) -> None:
     if args.transitions and args.poly:
         from mapsplit_spark.operators.geofence import zone_transitions
 
-        t_outers, t_inners = load_rings(
-            spark.read.parquet(args.poly), args.poly_id)
         zone_transitions(
             src.select(args.transitions, args.ts_col, args.id_col,
                        args.lon_col, args.lat_col),
             args.transitions, args.ts_col, args.id_col,
-            args.lon_col, args.lat_col, t_outers, t_inners,
+            args.lon_col, args.lat_col, *pipe.rings,
         ).write.mode("overwrite").parquet(
             os.path.join(args.output, "transitions"))
 

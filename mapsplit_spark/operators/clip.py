@@ -19,9 +19,6 @@ packed STR R-tree (``strtree.py``):
 candidates come from a vectorized whole-batch tree descent instead of
 R per-ring bbox passes, then the SAME ``_pip`` kernel refines — bit-
 identical results, differential-tested, oracle gate ``clip_strtree``.
-``broadcast_polygon_index`` ships rings + trees once per executor as
-an explicit Spark broadcast (the closures here serialize per task —
-fine for one country outline, wasteful for 10^4 rings).
 """
 
 from __future__ import annotations
@@ -156,15 +153,32 @@ def _pairs_linear(px, py, rings):
     return np.concatenate(ps), np.concatenate(rs)
 
 
-def _membership_fn(rings, use_index):
-    """Pick linear scan vs STR-tree for a ring set; both compute the
-    identical even-odd membership OR."""
+def _ring_index(rings, use_index):
+    """The one linear-scan vs STR-tree choice: → (flat, tree) when the
+    ring set goes through the tree (``use_index=True``, or "auto" from
+    ``STRTREE_MIN_RINGS`` rings), else None for the linear scan."""
     if rings and (use_index is True or
                   (use_index == "auto" and len(rings) >= STRTREE_MIN_RINGS)):
-        tree = build_strtree(np.array([b for _, b in rings]))
-        flat = _flatten_rings(rings)
-        return lambda px, py: _in_any_indexed(px, py, flat, tree)
+        return _flatten_rings(rings), build_strtree(np.array([b for _, b in rings]))
+    return None
+
+
+def _membership_fn(rings, use_index):
+    """(px, py) → bool even-odd membership OR over ``rings`` — identical
+    on the linear and the tree path."""
+    index = _ring_index(rings, use_index)
+    if index is not None:
+        return lambda px, py: _in_any_indexed(px, py, *index)
     return lambda px, py: _in_any(px, py, rings)
+
+
+def _pairs_fn(rings, use_index):
+    """(px, py) → (point_idx, ring_idx) inside-pairs over ``rings`` —
+    identical on the linear and the tree path."""
+    index = _ring_index(rings, use_index)
+    if index is not None:
+        return lambda px, py: _pairs_indexed(px, py, *index)
+    return lambda px, py: _pairs_linear(px, py, rings)
 
 
 def clip_tiles(tiles_df: DataFrame, outers, inners, zoom: int,
@@ -232,16 +246,9 @@ def zone_assign(points_df: DataFrame, outers, inners,
     Zonal statistics (the raster-algebra zonal sum/count over vector
     zones) are then one plain groupBy("zone") away — partial-aggregated
     JVM-side, so the Python stage only emits (id, zone) pairs.  Same
-    broadcast/index story as clip_points: the ring set + STR tree ship
-    once per executor; candidates per point are bounded by ring
-    overlap, not ring count."""
-    if use_index is True or (use_index == "auto"
-                             and len(outers) >= STRTREE_MIN_RINGS):
-        tree = build_strtree(np.array([b for _, b in outers]))
-        flat = _flatten_rings(outers)
-        pairs_fn = lambda px, py: _pairs_indexed(px, py, flat, tree)  # noqa: E731
-    else:
-        pairs_fn = lambda px, py: _pairs_linear(px, py, outers)  # noqa: E731
+    index story as clip_points: from ``STRTREE_MIN_RINGS`` rings the
+    candidates per point are bounded by ring overlap, not ring count."""
+    pairs_fn = _pairs_fn(outers, use_index)
     in_inner = _membership_fn(inners, use_index)
     id_type = dict(points_df.dtypes)[id_col]
 
@@ -264,47 +271,6 @@ def zone_assign(points_df: DataFrame, outers, inners,
         run, f"{id_col} {id_type}, zone int")
 
 
-def broadcast_polygon_index(spark, outers, inners, use_index: bool | str = True):
-    """Build the STR trees once driver-side and ship (rings, trees) to
-    every executor as an explicit Spark broadcast — one transfer per
-    executor instead of one closure copy per task.  Use with
-    ``clip_points_bc`` when the ring set is large (10^3-10^5 admin /
-    tile-boundary polygons — the north-star PIP-join shape)."""
-    def pack(rings):
-        if rings and (use_index is True or
-                      (use_index == "auto" and len(rings) >= STRTREE_MIN_RINGS)):
-            return rings, (_flatten_rings(rings),
-                           build_strtree(np.array([b for _, b in rings])))
-        return rings, None
-    return spark.sparkContext.broadcast((pack(outers), pack(inners)))
-
-
-def clip_points_bc(points_df: DataFrame, bc,
-                   lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    """``clip_points`` over a ``broadcast_polygon_index`` handle — the
-    Arrow batches never see the rings until ``bc.value`` resolves on
-    the executor."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        (outers, t_out), (inners, t_in) = bc.value
-        in_outer = (lambda px, py: _in_any_indexed(px, py, t_out[0], t_out[1])) \
-            if t_out is not None else (lambda px, py: _in_any(px, py, outers))
-        in_inner = (lambda px, py: _in_any_indexed(px, py, t_in[0], t_in[1])) \
-            if t_in is not None else (lambda px, py: _in_any(px, py, inners))
-        for pdf in batches:
-            if pdf.empty:
-                yield pdf
-                continue
-            px = pdf[lon_col].to_numpy(np.float64)
-            py = pdf[lat_col].to_numpy(np.float64)
-            keep = in_outer(px, py)
-            if inners:
-                keep &= ~in_inner(px, py)
-            yield pdf[keep]
-
-    return points_df.mapInPandas(run, points_df.schema)
-
-
 def clip_assignments(assignments: DataFrame, kept_tiles: DataFrame) -> DataFrame:
     """P9 — restrict the exploded assignment relation to surviving tiles
     (left-semi join ≡ the reference's bitset clear loop,
@@ -319,13 +285,7 @@ def min_zone_fn(outers, inners, use_index: bool | str = "auto"):
     outers or inside a hole) — the vectorized kernel shared by the
     batch geofence (operators/geofence.py) and its streaming twin
     (streaming/geofence_stream.py)."""
-    if use_index is True or (use_index == "auto"
-                             and len(outers) >= STRTREE_MIN_RINGS):
-        tree = build_strtree(np.array([b for _, b in outers]))
-        flat = _flatten_rings(outers)
-        pairs_fn = lambda px, py: _pairs_indexed(px, py, flat, tree)  # noqa: E731
-    else:
-        pairs_fn = lambda px, py: _pairs_linear(px, py, outers)  # noqa: E731
+    pairs_fn = _pairs_fn(outers, use_index)
     in_inner = _membership_fn(inners, use_index)
 
     def zones(px: np.ndarray, py: np.ndarray) -> np.ndarray:

@@ -30,8 +30,6 @@ the corpus.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -40,11 +38,10 @@ from .components import connected_components
 from .iterate import checkpoint_count
 
 # cluster_points broadcast guard: dense-cell relations above this row
-# count join by shuffle instead of broadcast (3 longs/row ⇒ the default
-# ~5M rows is ~120 MB built — safely under the 8 GB broadcast cap with
-# headroom on every executor)
-CLUSTER_BROADCAST_MAX_CELLS = int(
-    os.environ.get("SPARK_GRAFT_CLUSTER_BCAST_MAX", "5000000"))
+# count join by shuffle instead of broadcast (3 longs/row ⇒ 5M rows is
+# ~120 MB built — safely under the 8 GB broadcast cap with headroom on
+# every executor)
+CLUSTER_BROADCAST_MAX_CELLS = 5_000_000
 
 
 def cell_key(tile_x, tile_y, zoom: int):

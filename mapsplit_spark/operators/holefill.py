@@ -28,7 +28,8 @@ was 1.5-7 ms/group on scattered z13 geometries; the run CCL is
 ring (the ring is member-free by construction, so it is one component
 and contains the reference's (1,1) seed); unreached interior cells are
 holes, expanded back to real-coordinate rectangles on output.  The BFS
-mirror is kept as ``_fill_one_bfs`` and differentially tested.
+mirror it replaced lives on in tests/test_holefill_r6.py as the
+differential reference.
 """
 
 from __future__ import annotations
@@ -98,11 +99,12 @@ def _expand_holes(hy: np.ndarray, hx: np.ndarray, cx: np.ndarray,
 def _fill_one(xs: np.ndarray, ys: np.ndarray,
               max_holes: int = MAX_HOLES_PER_GROUP) -> list[tuple[int, int]]:
     """Holes for one geometry's member tiles — run-length CCL on the
-    compressed grid.  Semantics identical to ``_fill_one_bfs`` (the
-    reference checkAndFill): the walk never enters compressed row/col 0,
-    and a cell is OUTSIDE iff its empty 4-component touches the padded
-    border ring of the [1:, 1:] subgrid (which contains the (1,1) seed
-    and is fully member-free, hence one component)."""
+    compressed grid.  Semantics identical to the r5 frontier BFS (the
+    reference checkAndFill; its mirror is in tests/test_holefill_r6.py):
+    the walk never enters compressed row/col 0, and a cell is OUTSIDE
+    iff its empty 4-component touches the padded border ring of the
+    [1:, 1:] subgrid (which contains the (1,1) seed and is fully
+    member-free, hence one component)."""
     cx, cy, sx, sy, grid = _grid_setup(xs, ys)
     if sx < 4 or sy < 4:
         return []
@@ -168,41 +170,6 @@ def _fill_one(xs: np.ndarray, ys: np.ndarray,
         hy_list.append(np.full(len(cols), row_idx[k] + 1))
     hx = np.concatenate(hx_list)
     hy = np.concatenate(hy_list)
-    return _expand_holes(hy, hx, cx, cy, sx, sy, max_holes)
-
-
-def _fill_one_bfs(xs: np.ndarray, ys: np.ndarray,
-                  max_holes: int = MAX_HOLES_PER_GROUP) -> list[tuple[int, int]]:
-    """Reference-shaped frontier BFS on the compressed grid — the r5
-    kernel, kept as the differential-test mirror of ``_fill_one``."""
-    cx, cy, sx, sy, grid2 = _grid_setup(xs, ys)
-    grid = grid2.reshape(-1)
-
-    outside = np.zeros(sy * sx, dtype=bool)
-    seed = 1 * sx + 1  # compressed (1,1) == real (min+1, min+1): cx[1]=min_x+1
-    frontier = np.empty(0, dtype=np.int64)
-    if not grid[seed]:
-        outside[seed] = True
-        frontier = np.array([seed], dtype=np.int64)
-    while frontier.size:  # frontier BFS: O(cells) total like the BitSet BFS
-        col = frontier % sx
-        row = frontier // sx
-        # 4-neighbourhood, never into row/col 0 (MapSplit.java:311-316)
-        cand = np.concatenate([
-            frontier[col > 1] - 1,
-            frontier[col < sx - 1] + 1,
-            frontier[row > 1] - sx,
-            frontier[row < sy - 1] + sx,
-        ])
-        cand = np.unique(cand)
-        cand = cand[~outside[cand] & ~grid[cand]]
-        outside[cand] = True
-        frontier = cand
-
-    holes = (~grid & ~outside).reshape(sy, sx)
-    holes[0, :] = False
-    holes[:, 0] = False
-    hy, hx = np.where(holes)
     return _expand_holes(hy, hx, cx, cy, sx, sy, max_holes)
 
 

@@ -1,10 +1,14 @@
-"""Staged, checkpoint-resumable tiling pipeline with per-partition
-lineage + metrics tables (north_rule requirements).
+"""The tiling stage chain — assign + border expansion → [sessions] →
+[clip] → [optimize] → manifests — with optional stage-boundary
+checkpoints, per-partition lineage + metrics tables (north_rule
+requirements).
 
-The reference's closest analog is the "appointment date" incremental
-mechanism (MapSplit.java:1506-1547); ours is stage-boundary parquet
-checkpoints (Iceberg tables on a real cluster — same layout, hidden
-partitioning on tile): each stage writes
+Without a workdir every stage is the lazy frame its operator returns;
+with one, each stage is persisted and resumable.  The reference's
+closest analog is the "appointment date" incremental mechanism
+(MapSplit.java:1506-1547); ours is stage-boundary parquet checkpoints
+(Iceberg tables on a real cluster — same layout, hidden partitioning on
+tile): each stage writes
 
 * ``{workdir}/{stage}/data/``      — the stage output (parquet)
 * ``{workdir}/{stage}/metrics/``   — per-partition rows: (stage,
@@ -14,17 +18,20 @@ partitioning on tile): each stage writes
 
 ``run`` skips any stage whose marker matches the current config hash —
 kill-and-resume therefore recomputes only unfinished stages and yields
-byte-identical manifests (validated by tests/test_pipeline.py).
+byte-identical manifests (validated by
+tests/test_pipeline_multimodal.py::test_pipeline_resume_identical and
+tests/test_cli_incremental.py::test_pipeline_resume_with_sessions_stage).
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.assign import assign_and_expand
@@ -63,23 +70,33 @@ def _write_stage(df: DataFrame, stage: str, stage_dir: str, cfg_hash: str,
         .withColumn("stage", F.lit(stage))
         .withColumn("wall_sec", F.lit(round(time.time() - t0, 3)))
     )
-    metrics.write.mode("overwrite").parquet(os.path.join(stage_dir, "metrics"))
+    # the marker's row count is the sum of the per-partition rows, read
+    # on the metrics write's own job (no second scan)
+    total = Observation()
+    metrics.observe(total, F.sum("n_rows").alias("rows")) \
+        .write.mode("overwrite").parquet(os.path.join(stage_dir, "metrics"))
     with open(_marker(stage_dir), "w") as fh:
         json.dump({
-            "cfg_hash": cfg_hash, "stage": stage, "rows": out.count(),
+            "cfg_hash": cfg_hash, "stage": stage, "rows": total.get["rows"] or 0,
             "wall_sec": round(time.time() - t0, 3), "lineage": lineage,
             "finished_at_epoch": time.time(),
         }, fh)
 
 
 class TilingPipeline:
-    """assign → [sessions] → [clip] → [optimize] → manifests,
-    checkpointed per stage."""
+    """assign → [sessions] → [clip] → [optimize] → manifests, one chain
+    for lazy (``workdir=None``) and checkpointed runs.
+
+    ``run`` leaves the chain's relations on the instance: ``pairs`` —
+    the base-zoom (element_id, tile_x, tile_y) assignment after
+    sessions/clip; ``tiled`` — the output-zoom (element_id, zoom,
+    tile_x, tile_y) relation (merged under ``node_limit``); and
+    ``manifests``."""
 
     STAGES = ("assign", "sessions", "clip", "tiled", "manifests")
 
-    def __init__(self, spark: SparkSession, workdir: str, *, zoom: int = 13,
-                 border: float = 0.1, id_col: str = "image_id",
+    def __init__(self, spark: SparkSession, workdir: str | None = None, *,
+                 zoom: int = 13, border: float = 0.1, id_col: str = "image_id",
                  lon_col: str = "lon", lat_col: str = "lat",
                  poly_path: str | None = None, poly_id: str | None = None,
                  node_limit: int = 0, sessions_path: str | None = None,
@@ -96,96 +113,109 @@ class TilingPipeline:
             "multipolygon_only": multipolygon_only,
         }
         self.cfg_hash = _cfg_hash(self.cfg)
-        os.makedirs(workdir, exist_ok=True)
+        self._tables: dict[str, DataFrame] = {}
+        if workdir:
+            os.makedirs(workdir, exist_ok=True)
 
     def _dir(self, stage: str) -> str:
         return os.path.join(self.workdir, stage)
 
-    def stage_data(self, stage: str) -> str:
-        """Parquet path of a completed stage's output (public accessor
-        for downstream consumers like the CLI)."""
-        return os.path.join(self._dir(stage), "data")
+    def read(self, path: str) -> DataFrame:
+        """The parquet table at ``path``, read once per pipeline: every
+        read runs a schema job, so the chain and its caller share one
+        frame per input table."""
+        if path not in self._tables:
+            self._tables[path] = self.spark.read.parquet(path)
+        return self._tables[path]
 
-    def last_assignment_dir(self) -> str:
-        """Stage dir holding the final (element_id, tile_x, tile_y)
-        assignment relation — clip if clipping, else sessions, else
-        assign (for downstream payload/raster joins)."""
-        if self.cfg["poly_path"]:
-            return self._dir("clip")
-        if self.cfg["sessions_path"]:
-            return self._dir("sessions")
-        return self._dir("assign")
+    @functools.cached_property
+    def rings(self):
+        """(outers, inners) of the clip polygons, loaded once."""
+        from .operators.clip import load_rings
+
+        return load_rings(self.read(self.cfg["poly_path"]), self.cfg["poly_id"])
+
+    def _stage(self, stage: str, upstream: str | None, build) -> DataFrame:
+        """One stage of the chain: ``build()`` as is without a workdir;
+        with one, written once (parquet + metrics + ``_STAGE_OK``) and
+        read back — a marker with this config's hash skips ``build``."""
+        if not self.workdir:
+            return build()
+        stage_dir = self._dir(stage)
+        if not _stage_done(stage_dir, self.cfg_hash):
+            lineage = {"input": self._input, "cfg": self.cfg}
+            if upstream:
+                lineage["upstream"] = self._dir(upstream)
+            _write_stage(build(), stage, stage_dir, self.cfg_hash, lineage)
+        return self.spark.read.parquet(os.path.join(stage_dir, "data"))
 
     def run(self, input_path: str) -> DataFrame:
-        """Execute (or resume) the pipeline; returns the manifest table."""
-        from pyspark.sql import functions as F
+        """Build (lazy) or execute/resume (workdir) the chain; sets
+        ``pairs``, ``tiled`` and ``manifests`` and returns the manifests."""
+        c = self.cfg
+        self._input = input_path
+        pairs = self._stage("assign", None, lambda: assign_and_expand(
+            self.read(input_path).select(c["id_col"], c["lon_col"], c["lat_col"]),
+            c["id_col"], c["lon_col"], c["lat_col"], c["zoom"], c["border"]))
+        last = "assign"
 
-        lineage = {"input": input_path, "cfg": self.cfg}
-        assign_dir = self._dir("assign")
-        if not _stage_done(assign_dir, self.cfg_hash):
-            src = self.spark.read.parquet(input_path).select(
-                self.cfg["id_col"], self.cfg["lon_col"], self.cfg["lat_col"]
-            )
-            pairs = assign_and_expand(
-                src, self.cfg["id_col"], self.cfg["lon_col"], self.cfg["lat_col"],
-                self.cfg["zoom"], self.cfg["border"],
-            )
-            _write_stage(pairs, "assign", assign_dir, self.cfg_hash, lineage)
-        last_dir = assign_dir
-
-        if self.cfg["sessions_path"]:
+        if c["sessions_path"]:
             from .operators.sessions import session_assignments
 
-            ses_dir = self._dir("sessions")
-            if not _stage_done(ses_dir, self.cfg_hash):
-                pairs = self.spark.read.parquet(os.path.join(last_dir, "data"))
-                sessions = self.spark.read.parquet(self.cfg["sessions_path"])
-                aug = session_assignments(
-                    pairs, sessions,
-                    complete=self.cfg["complete_sessions"],
-                    multipolygon_only=self.cfg["multipolygon_only"],
-                )
-                _write_stage(aug, "sessions", ses_dir, self.cfg_hash,
-                             {**lineage, "upstream": last_dir})
-            last_dir = ses_dir
+            pairs = self._stage("sessions", last, lambda: session_assignments(
+                pairs, self.read(c["sessions_path"]),
+                complete=c["complete_sessions"],
+                multipolygon_only=c["multipolygon_only"]))
+            last = "sessions"
 
-        if self.cfg["poly_path"]:
-            from .operators.clip import clip_assignments, clip_tiles, load_rings
+        if c["poly_path"]:
+            from .operators.clip import clip_assignments, clip_tiles
 
-            clip_dir = self._dir("clip")
-            if not _stage_done(clip_dir, self.cfg_hash):
-                pairs = self.spark.read.parquet(os.path.join(last_dir, "data"))
-                outers, inners = load_rings(
-                    self.spark.read.parquet(self.cfg["poly_path"]), self.cfg["poly_id"]
-                )
+            def clipped():
                 kept = clip_tiles(pairs.select("tile_x", "tile_y").distinct(),
-                                  outers, inners, self.cfg["zoom"])
-                _write_stage(clip_assignments(pairs, kept), "clip", clip_dir,
-                             self.cfg_hash, {**lineage, "upstream": last_dir})
-            last_dir = clip_dir
+                                  *self.rings, c["zoom"])
+                return clip_assignments(pairs, kept)
 
-        if self.cfg["node_limit"] > 0:
-            # the merged output-zoom relation is its own stage: the
-            # store/payload path (J7) keys off it, so persisting it here
-            # means the CLI never recomputes the merge walk
+            pairs = self._stage("clip", last, clipped)
+            last = "clip"
+        self.pairs = pairs
+
+        # §2.5 optimize — the merged output-zoom relation is its own
+        # stage: payload/raster keys derive from the SAME relation as the
+        # manifests, so every output agrees on tile identity
+        if c["node_limit"] > 0:
             from .operators.optimize import merged_assignments
 
-            tiled_dir = self._dir("tiled")
-            if not _stage_done(tiled_dir, self.cfg_hash):
-                pairs = self.spark.read.parquet(os.path.join(last_dir, "data"))
-                merged = merged_assignments(pairs, self.cfg["zoom"],
-                                            self.cfg["node_limit"])
-                _write_stage(merged, "tiled", tiled_dir, self.cfg_hash,
-                             {**lineage, "upstream": last_dir})
-            last_dir = tiled_dir
+            tiled = self._stage("tiled", last, lambda: merged_assignments(
+                pairs, c["zoom"], c["node_limit"]))
+            last = "tiled"
+        else:
+            tiled = pairs.select(
+                "element_id", F.lit(c["zoom"]).alias("zoom"), "tile_x", "tile_y"
+            ).dropDuplicates(["element_id", "tile_x", "tile_y"])
+        if not self.workdir:
+            # lazy chain: one reuse point for the manifests and the
+            # caller's payload/raster joins (a persisted stage is its own)
+            tiled = tiled.localCheckpoint(eager=False)
+        self.tiled = tiled
 
-        man_dir = self._dir("manifests")
-        if not _stage_done(man_dir, self.cfg_hash):
-            rel = self.spark.read.parquet(os.path.join(last_dir, "data"))
-            man = tile_manifests(rel, self.cfg["zoom"], assume_distinct=True)
-            _write_stage(man, "manifests", man_dir, self.cfg_hash,
-                         {**lineage, "upstream": last_dir})
-        return self.spark.read.parquet(os.path.join(man_dir, "data"))
+        self.manifests = self._stage("manifests", last,
+                                     lambda: self._manifests(tiled))
+        return self.manifests
+
+    def _manifests(self, tiled: DataFrame) -> DataFrame:
+        return tile_manifests(tiled, self.cfg["zoom"], assume_distinct=True)
+
+    def restrict(self, tiles: DataFrame) -> None:
+        """Narrow ``tiled`` and ``manifests`` to the (zoom, tile_x,
+        tile_y) rows of ``tiles`` (the --date-file modified tiles).  Lazy
+        manifests are re-aggregated from the narrowed relation — its
+        tile-keyed semi-join leaves the aggregation no shuffle of its
+        own; persisted ones are semi-joined as stored."""
+        key = ["zoom", "tile_x", "tile_y"]
+        self.tiled = self.tiled.join(tiles, key, "left_semi")
+        self.manifests = (self.manifests.join(tiles, key, "left_semi")
+                          if self.workdir else self._manifests(self.tiled))
 
     def metrics(self) -> DataFrame:
         paths = [

@@ -440,18 +440,22 @@ def test_clusters_flag_matches_direct_operator(spark, images_dir, outbase, capsy
     assert got == want and len(got) > 0
 
 
-def test_zonal_flag_writes_per_ring_counts(spark, images_dir, outbase, capsys):
+@pytest.mark.parametrize("workdir", [False, True], ids=["no-workdir", "workdir"])
+def test_zonal_flag_writes_per_ring_counts(spark, images_dir, outbase, capsys,
+                                           workdir):
     """r5: --poly --zonal writes <out>/zones ≡ a direct zone_assign +
-    groupBy over the same rings and points."""
+    groupBy over the same rings and points — with or without --workdir
+    (both modes run the same chain and side outputs)."""
     from pyspark.sql import functions as F
 
     from mapsplit_spark.operators.clip import load_rings, zone_assign
 
-    out = os.path.join(outbase, "zonal")
+    out = os.path.join(outbase, f"zonal_{workdir}")
+    extra = ["--workdir", os.path.join(outbase, "zonal_wd")] if workdir else []
     _run([
         "--input", f"{images_dir}/images.parquet", "--output", out,
         "--zoom", "13", "--poly", f"{images_dir}/clip_polygons.parquet",
-        "--zonal",
+        "--zonal", *extra,
     ], capsys)
     got = {r.zone: r.n_points
            for r in spark.read.parquet(os.path.join(out, "zones")).collect()}

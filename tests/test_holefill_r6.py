@@ -9,7 +9,47 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from mapsplit_spark.operators.holefill import _fill_one, _fill_one_bfs
+from mapsplit_spark.operators.holefill import (
+    MAX_HOLES_PER_GROUP,
+    _expand_holes,
+    _fill_one,
+    _grid_setup,
+)
+
+
+def _fill_one_bfs(xs: np.ndarray, ys: np.ndarray,
+                  max_holes: int = MAX_HOLES_PER_GROUP) -> list[tuple[int, int]]:
+    """Reference-shaped frontier BFS on the compressed grid — the r5
+    kernel, kept here as the differential-test mirror of ``_fill_one``."""
+    cx, cy, sx, sy, grid2 = _grid_setup(xs, ys)
+    grid = grid2.reshape(-1)
+
+    outside = np.zeros(sy * sx, dtype=bool)
+    seed = 1 * sx + 1  # compressed (1,1) == real (min+1, min+1): cx[1]=min_x+1
+    frontier = np.empty(0, dtype=np.int64)
+    if not grid[seed]:
+        outside[seed] = True
+        frontier = np.array([seed], dtype=np.int64)
+    while frontier.size:  # frontier BFS: O(cells) total like the BitSet BFS
+        col = frontier % sx
+        row = frontier // sx
+        # 4-neighbourhood, never into row/col 0 (MapSplit.java:311-316)
+        cand = np.concatenate([
+            frontier[col > 1] - 1,
+            frontier[col < sx - 1] + 1,
+            frontier[row > 1] - sx,
+            frontier[row < sy - 1] + sx,
+        ])
+        cand = np.unique(cand)
+        cand = cand[~outside[cand] & ~grid[cand]]
+        outside[cand] = True
+        frontier = cand
+
+    holes = (~grid & ~outside).reshape(sy, sx)
+    holes[0, :] = False
+    holes[:, 0] = False
+    hy, hx = np.where(holes)
+    return _expand_holes(hy, hx, cx, cy, sx, sy, max_holes)
 
 
 def _groups():

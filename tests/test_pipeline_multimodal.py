@@ -97,6 +97,31 @@ def test_pipeline_resume_identical(spark, images_dir):
     assert {r.zoom for r in m3.select("zoom").distinct().collect()} == {12}
 
 
+def test_write_stage_marker_rows_ride_metrics_job(spark, tmp_path, job_count):
+    """A persisted stage runs three jobs: the data write, the read-back's
+    schema job and the per-partition metrics write.  The marker's row
+    count is the sum of those metrics rows, observed on the metrics
+    write (a separate count() would be a fourth job).  AQE is off here
+    because it submits every shuffle stage as a job of its own."""
+    import json
+
+    from mapsplit_spark.pipeline import _write_stage
+
+    stage_dir = str(tmp_path / "stage")
+    df = spark.range(0, 1000, 1, 3)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        jobs = job_count(lambda: _write_stage(df, "s", stage_dir, "h", {}))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert jobs == 3
+    with open(os.path.join(stage_dir, "_STAGE_OK")) as fh:
+        assert json.load(fh)["rows"] == 1000
+    met = spark.read.parquet(os.path.join(stage_dir, "metrics"))
+    assert met.agg(F.sum("n_rows")).collect()[0][0] == 1000
+
+
 def test_video_frame_sampling_roundtrip(spark):
     """sample_frames (r4): MVID stub container → every-n-th frame as an
     MSIM image row; decoded frames bit-equal the originals and compose

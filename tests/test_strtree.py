@@ -19,8 +19,6 @@ from mapsplit_spark.operators.clip import (
     _in_any_indexed,
     _membership_fn,
     clip_points,
-    clip_points_bc,
-    broadcast_polygon_index,
     make_ring,
     STRTREE_MIN_RINGS,
 )
@@ -131,10 +129,6 @@ def test_clip_points_indexed_and_bc_match_linear(spark):
     idx = sorted(r.id for r in
                  clip_points(df, outers, inners, use_index=True).collect())
     assert base == idx
-    bc = broadcast_polygon_index(spark, outers, inners)
-    via_bc = sorted(r.id for r in clip_points_bc(df, bc).collect())
-    assert base == via_bc
-    bc.unpersist()
 
 
 # --------------------------------------------------------- zonal assignment

@@ -4,7 +4,7 @@ Two measurements:
 1. kernel (single core): `_in_any` vs `_in_any_indexed` on one numpy
    batch — the per-core cost the Arrow clip kernels pay per batch;
 2. Spark drain (local[N]): `clip_points` over the events-scale point
-   set with the ring set broadcast via `broadcast_polygon_index`.
+   set (STR-tree path, picked by `use_index="auto"` at 5 000 rings).
 
 Ring sets are area-normalized (~1x world coverage regardless of ring
 count — the admin-boundary regime); every level is warmed once before
@@ -75,7 +75,7 @@ def kernel_ladder(n_pts: int):
 
 
 def spark_drain(n_pts: int, cores: int):
-    from mapsplit_spark.operators.clip import broadcast_polygon_index, clip_points_bc
+    from mapsplit_spark.operators.clip import clip_points
     from mapsplit_spark.session import get_spark
     from mapsplit_spark import sqlgen
     from pyspark.sql import functions as F
@@ -83,13 +83,12 @@ def spark_drain(n_pts: int, cores: int):
     spark = get_spark(cores=cores, shuffle_partitions=cores)
     rng = np.random.default_rng(11)
     rings = ring_set(rng, 5_000)
-    bc = broadcast_polygon_index(spark, rings, [])
     pts = spark.range(n_pts).select(
         F.col("id").alias("event_id"),
         F.expr(sqlgen.derived_lon_sql("id")).alias("lon"),
         F.expr(sqlgen.derived_lat_sql("id")).alias("lat"),
     )
-    clipped = clip_points_bc(pts, bc)
+    clipped = clip_points(pts, rings, [])
     clipped.count()  # warm
     t = min(_time(lambda: clipped.count()) for _ in range(2))
     n_kept = clipped.count()
