@@ -744,7 +744,8 @@ def q_emb_near_dup(spark, sf_dir):
 
     r5 (VERDICT r4 trivia): this labeled n² BNLJ gate runs with
     ``spark.sql.codegen.wholeStage=false`` — the interleaved A/B
-    (tools/ab_dot_pair.py) measured 12.7 s vs 23.4 s (HOF) vs 40.5 s
+    (tools/ab_dot_pair.py at commit 0233616, ``git show
+    0233616:tools/ab_dot_pair.py``) measured 12.7 s vs 23.4 s (HOF) vs 40.5 s
     (unrolled) for this one shape, because BNLJ-condition evaluation
     of a big expression never JITs inside one whole-stage method.  The
     conf is left set when this callable returns (the collect happens

@@ -10,14 +10,23 @@ and input row counts.  ``--scaling`` additionally runs the flagship at
 N and 4N cores on the same input and reports scaling efficiency
 T_4N / (4 · T_N) — the sandbox substitute for the two-cluster-size
 criterion (see BASELINE.md).
+
+``bench_out.json`` holds the same record plus ``query_counters``: per
+query the jobs, tasks, task/GC seconds, shuffle, spill and Arrow bytes
+of its two timed runs, read after the session stops from Spark's event
+log, which stays in ``bench_eventlog/`` until the next run.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
+
+REPO = os.path.dirname(os.path.abspath(__file__))
+EVENT_LOG_DIR = os.path.join(REPO, "bench_eventlog")
 
 
 def _force(df) -> None:
@@ -29,100 +38,144 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def run_queries(spark, sf_dir: str) -> tuple[dict, dict]:
+BENCH_SET = [
+    "tile_manifest",        # flagship: assign → expand → salted manifests
+    "tile_assign",          # r4: previously un-benched gates below
+    "latest_ts",
+    "bounds_union",
+    "lang_profile",
+    "doc_exact_dup",
+    "doc_lang_id",
+    "doc_dedup_keep",
+    # emb_near_dup and doc_jaccard_pairs are deliberately NOT
+    # benched: both are the labeled n² brute-force GATE variants
+    # (12 s and tens of minutes respectively at sf0.1 — the Jaccard
+    # one intersects ~150-token shingle arrays for 12.5 M pairs on
+    # the single-partition BNLJ output); the production near-dup
+    # paths (lsh/phash/ann) are in the suite
+    "modified_tiles_sessions",  # r4: watermark + transitive closure
+    "tile_pyramid",         # r4: multi-level rollup, two shuffles at any depth
+    "tile_assign_border",
+    "tile_counts",
+    "session_tiles",
+    "node_backfill",
+    "modified_tiles",
+    "knn",
+    "knn_tiled",            # tile-ring scale path + coverage-proof escalation
+    "clip_convex",
+    "clip_ring",            # concave even-odd corner clip (numpy kernel)
+    "tile_bounds",
+    "tile_merge",           # distributed superblock merge walk
+    "relation_tiles",       # J3/J4 fixed point, 3-level nesting
+    "complete_rel",         # J5/J6 down-propagation
+    "complete_rel_mp",      # P6 multipolygon-only restriction (r3)
+    "session_holefill",     # compressed-grid flood fill (+ ring fixture)
+    "mbtiles_rows",         # TMS flip + blob construction
+    "lsh_near_dup",         # MinHash-LSH scale path e2e
+    "phash_near_dup",       # pHash pigeonhole band join (r3)
+    "dup_components",       # pointer-jumping connected components (r3)
+    "emb_ann_topk",         # IVF cells + probe + re-rank (full probe)
+    "emb_ann_pruned",       # IVF with GENUINE pruning, clustered vecs (r3)
+    "doc_winnow",           # rolling-window winnowing fingerprints
+    "tile_cellid",          # Morton/quadkey cell encodings
+    "doc_token_stats",
+    "doc_quality",
+    "doc_fingerprint",
+    "emb_cosine_topk",
+    "events_asof",          # r5: union+window as-of join (no join node)
+    "event_sessions",       # r5: gap sessionization, one shuffle
+    "event_window_join",    # r5: binned-interval equi-join rewrite
+    "doc_simhash",          # r5: portable md5-nibble SimHash gate
+    "clip_strtree",         # r5: STR-tree indexed PIP over 48 rings
+    "user_distinct_hll",    # r5: portable HyperLogLog sketch fold
+    "doc_weighted_sample",  # r5: A-ES weighted top-n per stratum
+    "event_quantiles",      # r5: exact type-7 percentiles per group
+    "event_geohash",        # r5: base-32 geohash cell ids (JVM kernel)
+    "doc_tfidf",            # r5: top-k TF-IDF terms per document
+    "tile_focal",           # r5: raster focal-sum (scatter kernel)
+    "lang_top_terms",       # r5: exact heavy hitters per group
+    "tile_clusters",        # r5: grid-density DBSCAN + components
+    "term_cms",             # r5: Count-Min sketch point queries
+    "way_geometry",         # r5: polyline length/bbox/centroid
+    "doc_contamination",    # r5: winnow-fp train/test leakage join
+    "ring_zonal",           # r5: per-ring zonal stats (pair descent)
+    "event_hexcell",        # r5: hex lattice cell ids (cube round)
+    "knn_hex",              # r5: hex k-disk kNN + coverage ladder
+    "points_dwithin",       # r5: within-distance self-join (grid method)
+    "user_trajectory",      # r5: per-user trace stats, one shuffle
+    "point_snap",           # r5: snap-to-segment map matching
+    "ring_raster",          # r5: vector→raster tile coverage
+    "way_rings",            # r5: closed-ring area/winding/perimeter
+    "tile_idw",             # r5: IDW surface via inverted kernel
+    "zone_transitions",     # r5: geofence enter/exit (PIP + lag)
+    "user_heading",         # r5: circular mean bearing (exact-int trig sums)
+    "tile_flows",           # r5: OD-matrix flow aggregation
+    "geo_image_dups",       # r5: hash-banded + geo-refined near-dup
+    "gps_spikes",           # r5: implausible-speed trace cleaning
+]
+
+
+def run_queries(spark, sf_dir: str, tracer,
+                names: list[str] = BENCH_SET) -> tuple[dict, dict]:
+    """Best-of-2 noop-sink seconds and result rows per query.  Each
+    query's two timed runs (not its row count) run inside one
+    ``tracer`` span named after the query."""
     import __spark_entry__ as entry
 
-    bench_set = [
-        "tile_manifest",        # flagship: assign → expand → salted manifests
-        "tile_assign",          # r4: previously un-benched gates below
-        "latest_ts",
-        "bounds_union",
-        "lang_profile",
-        "doc_exact_dup",
-        "doc_lang_id",
-        "doc_dedup_keep",
-        # emb_near_dup and doc_jaccard_pairs are deliberately NOT
-        # benched: both are the labeled n² brute-force GATE variants
-        # (12 s and tens of minutes respectively at sf0.1 — the Jaccard
-        # one intersects ~150-token shingle arrays for 12.5 M pairs on
-        # the single-partition BNLJ output); the production near-dup
-        # paths (lsh/phash/ann) are in the suite
-        "modified_tiles_sessions",  # r4: watermark + transitive closure
-        "tile_pyramid",         # r4: multi-level rollup, two shuffles at any depth
-        "tile_assign_border",
-        "tile_counts",
-        "session_tiles",
-        "node_backfill",
-        "modified_tiles",
-        "knn",
-        "knn_tiled",            # tile-ring scale path + coverage-proof escalation
-        "clip_convex",
-        "clip_ring",            # concave even-odd corner clip (numpy kernel)
-        "tile_bounds",
-        "tile_merge",           # distributed superblock merge walk
-        "relation_tiles",       # J3/J4 fixed point, 3-level nesting
-        "complete_rel",         # J5/J6 down-propagation
-        "complete_rel_mp",      # P6 multipolygon-only restriction (r3)
-        "session_holefill",     # compressed-grid flood fill (+ ring fixture)
-        "mbtiles_rows",         # TMS flip + blob construction
-        "lsh_near_dup",         # MinHash-LSH scale path e2e
-        "phash_near_dup",       # pHash pigeonhole band join (r3)
-        "dup_components",       # pointer-jumping connected components (r3)
-        "emb_ann_topk",         # IVF cells + probe + re-rank (full probe)
-        "emb_ann_pruned",       # IVF with GENUINE pruning, clustered vecs (r3)
-        "doc_winnow",           # rolling-window winnowing fingerprints
-        "tile_cellid",          # Morton/quadkey cell encodings
-        "doc_token_stats",
-        "doc_quality",
-        "doc_fingerprint",
-        "emb_cosine_topk",
-        "events_asof",          # r5: union+window as-of join (no join node)
-        "event_sessions",       # r5: gap sessionization, one shuffle
-        "event_window_join",    # r5: binned-interval equi-join rewrite
-        "doc_simhash",          # r5: portable md5-nibble SimHash gate
-        "clip_strtree",         # r5: STR-tree indexed PIP over 48 rings
-        "user_distinct_hll",    # r5: portable HyperLogLog sketch fold
-        "doc_weighted_sample",  # r5: A-ES weighted top-n per stratum
-        "event_quantiles",      # r5: exact type-7 percentiles per group
-        "event_geohash",        # r5: base-32 geohash cell ids (JVM kernel)
-        "doc_tfidf",            # r5: top-k TF-IDF terms per document
-        "tile_focal",           # r5: raster focal-sum (scatter kernel)
-        "lang_top_terms",       # r5: exact heavy hitters per group
-        "tile_clusters",        # r5: grid-density DBSCAN + components
-        "term_cms",             # r5: Count-Min sketch point queries
-        "way_geometry",         # r5: polyline length/bbox/centroid
-        "doc_contamination",    # r5: winnow-fp train/test leakage join
-        "ring_zonal",           # r5: per-ring zonal stats (pair descent)
-        "event_hexcell",        # r5: hex lattice cell ids (cube round)
-        "knn_hex",              # r5: hex k-disk kNN + coverage ladder
-        "points_dwithin",       # r5: within-distance self-join (grid method)
-        "user_trajectory",      # r5: per-user trace stats, one shuffle
-        "point_snap",           # r5: snap-to-segment map matching
-        "ring_raster",          # r5: vector→raster tile coverage
-        "way_rings",            # r5: closed-ring area/winding/perimeter
-        "tile_idw",             # r5: IDW surface via inverted kernel
-        "zone_transitions",     # r5: geofence enter/exit (PIP + lag)
-        "user_heading",         # r5: circular mean bearing (exact-int trig sums)
-        "tile_flows",           # r5: OD-matrix flow aggregation
-        "geo_image_dups",       # r5: hash-banded + geo-refined near-dup
-        "gps_spikes",           # r5: implausible-speed trace cleaning
-    ]
     qs = entry.queries()
     # one warm pass primes JIT/codegen + parquet footer caches so the
     # timings measure the engine, not first-query JVM warm-up
     qs["tile_manifest"](spark, sf_dir).limit(1).count()
     times, rows = {}, {}
-    for name in bench_set:
+    for name in names:
         if name not in qs:
             continue
         best = float("inf")
-        for _ in range(2):  # best of 2 — this VM has ±2× noise windows
-            t0 = time.perf_counter()
-            _force(qs[name](spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
+        with tracer.span(name):
+            for _ in range(2):  # best of 2 — this VM has ±2× noise windows
+                t0 = time.perf_counter()
+                _force(qs[name](spark, sf_dir))
+                best = min(best, time.perf_counter() - t0)
         times[name] = round(best, 3)
         rows[name] = qs[name](spark, sf_dir).count()
     return times, rows
+
+
+def traced_session(cpus: int, log_dir: str = EVENT_LOG_DIR):
+    """The bench session with Spark's event log on (the UI stays off),
+    and a ``Tracer`` bound to it.  ``log_dir`` is emptied first.  The
+    event-log conf goes in as JVM system properties, which the next
+    ``SparkConf`` reads, so ``get_spark`` keeps its signature; the first
+    session only starts the JVM with ``get_spark``'s driver settings."""
+    from pyspark import SparkContext
+
+    from mapsplit_spark.session import get_spark
+    from perfbench.tracing import Tracer, event_log_conf
+
+    shutil.rmtree(log_dir, ignore_errors=True)
+    os.makedirs(log_dir)
+    get_spark("bench", cores=cpus, shuffle_partitions=2 * cpus).stop()
+    system = SparkContext._jvm.java.lang.System
+    conf = event_log_conf(log_dir)
+    for k, v in conf.items():
+        system.setProperty(k, v)
+    try:
+        spark = get_spark("bench", cores=cpus, shuffle_partitions=2 * cpus)
+    finally:
+        for k in conf:
+            system.clearProperty(k)
+    return spark, Tracer(spark.sparkContext)
+
+
+def query_counters(tracer, log_dir: str = EVENT_LOG_DIR) -> dict:
+    """query → jobs, tasks, task/GC seconds, shuffle, spill and Arrow
+    bytes of its span, summed over both timed runs.  Read from the event
+    log, so only after the traced session has stopped."""
+    from perfbench.tracing import attribute, read_event_log
+
+    by_span = attribute(tracer.spans, read_event_log(log_dir))
+    return {sp["name"]: {k: round(v, 3) for k, v in by_span[sp["id"]].items()}
+            for sp in tracer.spans}
 
 
 def _scaling_pipeline(spark, n_rows: int):
@@ -247,21 +300,20 @@ def _load_prev_round_queries(repo: str) -> tuple[str | None, dict]:
     return path, {}
 
 
-def _emit(record: dict) -> None:
+def _emit(record: dict, **file_only) -> None:
     """One JSON line on stdout (driver contract) AND the same record in
     its own file — r4's driver tail-capture truncated the line
     mid-string, leaving BENCH_r04.json unparseable (VERDICT r4 #7);
-    the file survives any stdout mangling."""
-    repo = os.path.dirname(os.path.abspath(__file__))
-    out_path = os.path.join(repo, "bench_out.json")
-    with open(out_path, "w") as fh:
-        json.dump(record, fh)
+    the file survives any stdout mangling.  ``file_only`` keys go to
+    the file alone, so the stdout line keeps its key set."""
+    with open(os.path.join(REPO, "bench_out.json"), "w") as fh:
+        json.dump({**record, **file_only}, fh)
         fh.write("\n")
     print(json.dumps(record))
 
 
 def main() -> None:
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, REPO)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -307,7 +359,7 @@ def main() -> None:
             out = subprocess.run(
                 [sys.executable, "-c", code],
                 capture_output=True, text=True, check=True,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
+                cwd=REPO,
             ).stdout.strip().splitlines()[-1]
             return float(out)
 
@@ -326,7 +378,7 @@ def main() -> None:
             out = subprocess.run(
                 [sys.executable, "-c", code],
                 capture_output=True, text=True, check=True,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
+                cwd=REPO,
             ).stdout.strip().splitlines()[-1]
             return float(out)
 
@@ -390,12 +442,10 @@ def main() -> None:
         })
         return
 
-    from mapsplit_spark.session import get_spark
-
-    spark = get_spark("bench", cores=cpus, shuffle_partitions=2 * cpus)
+    spark, tracer = traced_session(cpus)
     try:
         n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-        times, rows = run_queries(spark, sf_dir)
+        times, rows = run_queries(spark, sf_dir, tracer)
         # at-scale datapoint: the toy sf input is overhead-dominated, so
         # also time the identical flagship plan over a 20M-row
         # deterministic input (same pipeline the scaling protocol uses)
@@ -433,13 +483,13 @@ def main() -> None:
             t_img = min(t_img, time.perf_counter() - t0)
     finally:
         spark.stop()
+    counters = query_counters(tracer)
     total = round(sum(times.values()), 3)
     flagship = times.get("tile_manifest", total)
     # per-query diff vs the newest BENCH_r*.json (VERDICT r4 #7) — on
     # stderr-style preamble lines BEFORE the JSON so the driver's tail
     # capture still ends with the one-line record
-    prev_path, prev_q = _load_prev_round_queries(
-        os.path.dirname(os.path.abspath(__file__)))
+    prev_path, prev_q = _load_prev_round_queries(REPO)
     if prev_q:
         print(f"[diff] vs {os.path.basename(prev_path)} "
               f"(> ±30% flagged; this VM's same-code noise is ±27%):")
@@ -466,6 +516,10 @@ def main() -> None:
         "total_sec": total,
         "result_rows": rows,
         "cores": cpus,
+    }, query_counters={
+        "covers": "both timed runs of each query (not its row count)",
+        "event_log": os.path.relpath(EVENT_LOG_DIR, REPO),
+        "queries": counters,
     })
 
 

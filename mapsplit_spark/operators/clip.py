@@ -33,10 +33,11 @@ from pyspark.sql import functions as F
 from .. import tilemath as tm
 from ..strtree import build_strtree, query_strtree
 
-# measured crossover (tools/bench_strtree.py, ~1x-coverage rings,
-# 100 k-pt batches): the linear scan's streaming passes beat the tree's
-# gather-heavy descent below ~1000 rings; the tree wins 3x at 2000,
-# ~10x at 5000, ~80x at 50 000.  "auto" switches just under the
+# measured crossover (tools/bench_strtree.py at commit 0233616, read it
+# back with `git show 0233616:tools/bench_strtree.py`; ~1x-coverage
+# rings, 100 k-pt batches): the linear scan's streaming passes beat the
+# tree's gather-heavy descent below ~1000 rings; the tree wins 3x at
+# 2000, ~10x at 5000, ~80x at 50 000.  "auto" switches just under the
 # crossover; pass use_index=True to force the tree at any count.
 STRTREE_MIN_RINGS = 768
 

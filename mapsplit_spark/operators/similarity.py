@@ -21,8 +21,9 @@ exactly the hot path every IVF/kNN probe re-ranks on.  The fixed shape:
 Round-5 boundary (settles VERDICT r4's "contradictory measurements"
 finding — the r4 comment here claiming "13.8 → 7-8 s" for the dim-64
 unrolled form was WRONG; BASELINE's 35-37 s matrix row was right):
-one interleaved same-session A/B (``tools/ab_dot_pair.py``, sf0.1
-all-pairs near-dup shape, median of 3):
+one interleaved same-session A/B (``tools/ab_dot_pair.py`` at commit
+0233616, ``git show 0233616:tools/ab_dot_pair.py``; sf0.1 all-pairs
+near-dup shape, median of 3):
 
   dim 64: unrolled 40.5 s · HOF 23.4 s · unrolled+wholeStage-off 12.7 s
   dim 32: unrolled 0.61 s · HOF 1.15 s   (sub-second, ~noise)
@@ -54,7 +55,8 @@ from .. import sqlgen
 # boundary is the HotSpot JIT window, not janino's 64 KB compile limit:
 # at dim 64 the unrolled pair stage compiles but never JITs (8-64 KB
 # window) and loses 2× to the HOF form; at ≤32 it JITs and wins
-# marginally — measured, see module docstring + tools/ab_dot_pair.py
+# marginally — measured, see module docstring (tools/ab_dot_pair.py at
+# commit 0233616)
 UNROLL_MAX_DIM = 32
 
 

@@ -2,9 +2,10 @@
 
 Local testing runs on ``local[N]`` but every default here is chosen for
 the 1000-executor / 100 TB target: AQE on (runtime partition coalescing
-+ skew-join splitting), shuffle partitions sized per-core locally and
-overridable via env for cluster runs, Arrow enabled for the few
-pandas-UDF operators (hole-fill, mosaic assembly).
++ skew-join splitting), shuffle partitions twice the core count (at
+least 32; cores default to $SPARK_GRAFT_CPUS) unless the caller passes
+``shuffle_partitions``, Arrow enabled for the few pandas-UDF operators
+(hole-fill, mosaic assembly).
 """
 
 from __future__ import annotations
@@ -35,10 +36,6 @@ def get_spark(app: str = "mapsplit-spark", cores: int | None = None,
         # the Spark default; hot pair-scan expressions are instead kept
         # small by construction (similarity.dot_pair: one dot per pair).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # UI off by default (driver bench); SPARK_EXTRA_UI=1 turns it on so
-        # bench_extra.py can read per-stage task-time/shuffle-bytes telemetry
-        # from the REST API (guide §7.1) without touching the frozen bench
-        .config("spark.ui.enabled",
-                "true" if os.environ.get("SPARK_EXTRA_UI") else "false")
+        .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

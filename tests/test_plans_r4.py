@@ -83,7 +83,8 @@ def _vectors(spark, n: int, id_name: str, vec_name: str):
 def test_emb_near_dup_gate_uses_wholestage_off_hint(spark, no_aqe):
     """r5: the labeled n² BNLJ gate deliberately runs with whole-stage
     codegen OFF (measured 12.7 s vs 23.4/40.5 s for the codegen forms —
-    tools/ab_dot_pair.py); the callable sets the session conf and the
+    tools/ab_dot_pair.py at commit 0233616, ``git show
+    0233616:tools/ab_dot_pair.py``); the callable sets the session conf and the
     plan must therefore contain NO WholeStageCodegen subtree.  _t()
     restores the default for every other gate."""
     import __spark_entry__ as entry

@@ -35,6 +35,47 @@ def _norm(v):
     return str(v)
 
 
+def oracle_connection(sf_dir: str):
+    """DuckDB connection with one view per fixture table in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def compare(spark, con, sf_dir: str, fn, oracle: str | None) -> dict:
+    """One gate: collect ``fn(spark, sf_dir)`` on Spark, run ``oracle`` on
+    DuckDB, compare row count, column names and value hash.  → ``ok``
+    plus ``error`` or the per-check results (``rows``/``oracle_rows``,
+    ``schema``, ``hash``, a few rows found on one side only); with no
+    oracle only the Spark side runs (``oracle_rows`` is None)."""
+    try:
+        df = fn(spark, sf_dir)
+        cols = df.columns
+        rows = [tuple(r) for r in df.collect()]
+    except Exception as e:  # noqa: BLE001
+        return {"ok": False, "error": f"SPARK ERROR {e}"}
+    if oracle is None:
+        return {"ok": True, "rows": len(rows), "oracle_rows": None}
+    try:
+        o = con.sql(oracle)
+        ocols = list(o.columns)
+        orows = o.fetchall()
+    except Exception as e:  # noqa: BLE001
+        return {"ok": False, "error": f"DUCKDB ERROR {e}"}
+    res = {"rows": len(rows), "oracle_rows": len(orows),
+           "schema": sorted(cols) == sorted(ocols)}
+    res["hash"] = res["schema"] and value_hash(rows, cols) == value_hash(orows, ocols)
+    res["ok"] = res["rows"] == res["oracle_rows"] and res["hash"]
+    if res["schema"] and not res["hash"]:
+        s = {tuple(_norm(v) for v in r) for r in rows}
+        d = {tuple(_norm(v) for v in r) for r in orows}
+        res["only_spark"], res["only_oracle"] = list(s - d)[:3], list(d - s)[:3]
+    return res
+
+
 def main(sf_dir: str, only: list[str] | None = None):
     # the tile_merge oracle embeds a remap computed from the SAME dir
     # the Spark queries run on — point it at ours before building oracles
@@ -44,11 +85,7 @@ def main(sf_dir: str, only: list[str] | None = None):
     from mapsplit_spark.session import get_spark
 
     spark = get_spark("gate-check", cores=8, shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    con = oracle_connection(sf_dir)
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
@@ -57,41 +94,26 @@ def main(sf_dir: str, only: list[str] | None = None):
         if only and name not in only:
             continue
         t0 = time.time()
-        try:
-            df = fn(spark, sf_dir)
-            cols = df.columns
-            rows = [tuple(r) for r in df.collect()]
-        except Exception as e:  # noqa: BLE001
-            failures.append((name, f"SPARK ERROR {e}"))
-            print(f"{name:24s} SPARK ERROR: {e}")
+        r = compare(spark, con, sf_dir, fn, oracles.get(name))
+        if "error" in r:
+            failures.append((name, r["error"]))
+            print(f"{name:24s} {r['error']}")
             continue
-        if name not in oracles:
-            print(f"{name:24s} rows={len(rows):7d}  (rows-only check, no oracle)")
+        if r["oracle_rows"] is None:
+            print(f"{name:24s} rows={r['rows']:7d}  (rows-only check, no oracle)")
             continue
-        try:
-            o = con.sql(oracles[name])
-            ocols = [c for c in o.columns]
-            orows = o.fetchall()
-        except Exception as e:  # noqa: BLE001
-            failures.append((name, f"DUCKDB ERROR {e}"))
-            print(f"{name:24s} DUCKDB ERROR: {e}")
-            continue
-        ok_count = len(rows) == len(orows)
-        ok_schema = sorted(cols) == sorted(ocols)
-        ok_hash = ok_schema and value_hash(rows, cols) == value_hash(orows, ocols)
-        status = "OK " if (ok_count and ok_schema and ok_hash) else "FAIL"
+        status = "OK " if r["ok"] else "FAIL"
         print(
-            f"{name:24s} {status} rows={len(rows):7d}/{len(orows):7d} "
-            f"schema={'Y' if ok_schema else 'N'} hash={'Y' if ok_hash else 'N'} "
+            f"{name:24s} {status} rows={r['rows']:7d}/{r['oracle_rows']:7d} "
+            f"schema={'Y' if r['schema'] else 'N'} hash={'Y' if r['hash'] else 'N'} "
             f"({time.time() - t0:.1f}s)"
         )
-        if status == "FAIL":
-            failures.append((name, f"count={ok_count} schema={ok_schema} hash={ok_hash}"))
-            if ok_schema and not ok_hash:
-                s = {tuple(_norm(v) for v in r) for r in rows}
-                d = {tuple(_norm(v) for v in r) for r in orows}
-                print("   only-spark:", list(s - d)[:3])
-                print("   only-duck :", list(d - s)[:3])
+        if not r["ok"]:
+            failures.append((name, f"count={r['rows'] == r['oracle_rows']} "
+                                   f"schema={r['schema']} hash={r['hash']}"))
+            if "only_spark" in r:
+                print("   only-spark:", r["only_spark"])
+                print("   only-duck :", r["only_oracle"])
     spark.stop()
     if failures:
         print("\nFAILURES:", failures)
