@@ -175,9 +175,10 @@ def q_session_tiles(spark, sf_dir):
 def q_node_backfill(spark, sf_dir):
     """J2 — members inherit their way's full tile set
     (MapSplit.java:506-510); union with the nodes' own tiles."""
-    # NOT _li_members: members feeds three consumers here (way_tiles,
-    # the ok-ways semi-join, the backfill join) and each would re-run
-    # the widening shuffle — A/B'd slower (3.1 vs 2.7 s warm)
+    # NOT _li_members: members feeds two consumers here (way_tiles and
+    # the backfill join, whose inner join with wt skips dropped ways)
+    # and each would re-run the widening shuffle — A/B'd slower (3.1 vs
+    # 2.7 s warm, measured with one more consumer)
     members = _t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("way_id"), F.expr(NID).alias("member_id")
     )
@@ -189,10 +190,7 @@ def q_node_backfill(spark, sf_dir):
     # queries() use doesn't accumulate pinned cache entries.
     node_tiles = _event_pairs(spark, sf_dir).localCheckpoint(eager=True)
     wt = way_tiles(members, node_tiles, "way_id", "member_id").localCheckpoint(eager=True)
-    ok_members = members.join(
-        wt.select("way_id").distinct(), "way_id"
-    )
-    return backfill_member_tiles(ok_members, wt, node_tiles, "way_id", "member_id")
+    return backfill_member_tiles(members, wt, node_tiles, "way_id", "member_id")
 
 
 def q_knn(spark, sf_dir):

@@ -100,12 +100,14 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv: list[str] | None = None) -> None:
     args = build_parser().parse_args(argv)
+    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from mapsplit_spark.operators.sampling import deterministic_split, weighted_sample
     from mapsplit_spark.operators.sketches import hll_distinct
     from mapsplit_spark.session import get_spark
 
+    owns_session = SparkSession.getActiveSession() is None
     spark = get_spark("stats-job", cores=args.cores,
                       shuffle_partitions=2 * args.cores)
     t0 = time.time()
@@ -206,7 +208,8 @@ def main(argv: list[str] | None = None) -> None:
         summary["wall_sec"] = round(time.time() - t0, 2)
         print(json.dumps(summary))
     finally:
-        spark.stop()
+        if owns_session:  # don't tear down a caller-owned session (tests)
+            spark.stop()
 
 
 if __name__ == "__main__":

@@ -123,8 +123,7 @@ def _banded(signatures: DataFrame, bands: int, id_col: str) -> DataFrame:
 def lsh_candidate_pairs(signatures: DataFrame, bands: int = 8,
                         id_col: str = "doc_id",
                         max_bucket: int | None = 1024,
-                        observation=None,
-                        materialize_banded: bool = False) -> DataFrame:
+                        observation=None) -> DataFrame:
     """Band the signature and bucket-join: docs sharing any band hash are
     candidates.  → distinct (id_a, id_b) with id_a < id_b.
 
@@ -153,17 +152,12 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 8,
     never consumed.  Pass it per run where wanted, not habitually.
     The full histogram is ``bucket_sizes()``.
 
-    ``materialize_banded`` predates the single-shuffle candidate stage,
-    when the banded relation fed three consumers (bucket stats + both
-    join sides) and checkpointing it once saved ~40% end-to-end.  The
-    grouped formulation consumes it exactly once, so the default is now
-    False (measured 1.59 → 1.42 s at sf0.1); pass True only if you fan
-    the same banded relation into extra consumers of your own."""
-    banded = _banded(signatures, bands, id_col)
-    if materialize_banded:
-        banded = banded.localCheckpoint(eager=True)
+    The grouped formulation consumes the banded relation exactly once,
+    so it is not checkpointed (dropping the checkpoint measured 1.59 →
+    1.42 s at sf0.1)."""
     return _capped_bucket_pairs(
-        banded, id_col, ["band", "bhash"], max_bucket, observation
+        _banded(signatures, bands, id_col), id_col, ["band", "bhash"],
+        max_bucket, observation,
     )
 
 
@@ -316,7 +310,6 @@ def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
                       num_hashes: int = 32, bands: int = 8,
                       threshold: float = 0.7,
                       max_bucket: int | None = 1024,
-                      materialize_shingles: bool = True,
                       observation=None) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → minhash → band
     bucket join (hot buckets capped) → exact Jaccard verification.
@@ -328,11 +321,10 @@ def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
 
     The shingle relation feeds three consumers (signatures + both verify
     sides); Spark reuses none of those subtrees, so it is materialized
-    once by default (localCheckpoint — measured 1.7× on sf0.1; a real
-    pipeline checkpoints it as a stage table, pipeline.py-style)."""
-    shingled = with_shingle_hashes(docs, id_col, text_col, ngram)
-    if materialize_shingles:
-        shingled = shingled.localCheckpoint(eager=True)
+    once (localCheckpoint — measured 1.7× on sf0.1; a real pipeline
+    checkpoints it as a stage table, pipeline.py-style)."""
+    shingled = with_shingle_hashes(docs, id_col, text_col, ngram) \
+        .localCheckpoint(eager=True)
     sigs = minhash_signatures(shingled, num_hashes, id_col)
     cands = lsh_candidate_pairs(sigs, bands, id_col, max_bucket, observation)
     return jaccard_verify(cands, shingled, threshold, id_col)

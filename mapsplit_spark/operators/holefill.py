@@ -6,16 +6,12 @@ must be added to the geometry's tile set (pad bbox by 2, flood-fill the
 outside from (1,1) with a 4-neighbourhood, unreached cells are holes).
 Trigger: tile-set size ≥ 8 (MapSplit.java:491-493).
 
-Spark-first: this is inherently per-group imperative logic, so it is the
-one place we drop to ``applyInPandas`` — Arrow-batched, keyed by a HASH
-BUCKET of the group id (not the group id itself: one Arrow/pandas
-round-trip per group measured ~4 ms of fixed overhead × tens of
-thousands of candidate groups = the dominant cost of the whole operator
-at sf0.1; r6 guide-§4 fix).  Each Python call walks every group in its
-bucket via one numpy sort + split.  The only shuffle is the groupBy;
-groups below the ≥ 8-tile trigger are filtered out BEFORE the shuffle
-(a map-side count aggregation), so at 100 TB the expensive path sees
-only the tiny fraction of large geometries.
+Spark-first: this is inherently per-group imperative logic, so it runs
+in the bucketed Python stage (``buckets.apply_in_buckets``), walking
+each bucket's groups via one numpy sort + split.  Groups below the
+≥ 8-tile trigger are filtered out before its shuffle (a map-side count
+aggregation), so at 100 TB the expensive path sees only the tiny
+fraction of large geometries.
 
 Per-group kernel (r6): the fill runs as RUN-LENGTH connected-component
 labelling on a COORDINATE-COMPRESSED grid (every member coordinate ±1
@@ -38,6 +34,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .buckets import apply_in_buckets
 
 
 def _compress(vals: np.ndarray, lo: int, hi: int) -> np.ndarray:
@@ -174,9 +172,7 @@ def _fill_one(xs: np.ndarray, ys: np.ndarray,
 
 
 def fill_holes(group_tiles: DataFrame, group_col: str = "group_id",
-               min_tiles: int = 8, materialize: bool = False,
-               assume_distinct: bool = False,
-               n_buckets: int = 256) -> DataFrame:
+               min_tiles: int = 8, assume_distinct: bool = False) -> DataFrame:
     """(group_id, tile_x, tile_y) → same relation + patched hole tiles.
 
     Small groups (< min_tiles, MapSplit.java:491-493) bypass the Python
@@ -188,39 +184,20 @@ def fill_holes(group_tiles: DataFrame, group_col: str = "group_id",
     their group's member set and each hole is emitted once; this removes
     a full shuffle of the output relation (r6).
 
-    ``n_buckets``: candidate groups hash into this many applyInPandas
-    calls (the zoom_map_df bucketing pattern) so the per-call
-    Arrow/pandas overhead amortizes over ~|candidates|/n_buckets groups
-    instead of being paid per group.
-
     The input relation feeds three consumers (count gate, candidate
-    join, output union).  ``materialize`` checkpoints it once — measured
-    SLOWER at sf0.1 for a cheap upstream (the eager barrier +
-    serialization cost beats re-running the codegen subtree 3× in
-    parallel), so it defaults off; callers with an expensive upstream
-    should checkpoint that upstream themselves (q_session_holefill
-    does).
+    join, output union); callers with an expensive upstream checkpoint
+    it themselves (q_session_holefill does) — checkpointing here
+    measured SLOWER at sf0.1 for a cheap upstream.
     """
     src = group_tiles.select(
         F.col(group_col).alias("group_id"), "tile_x", "tile_y"
     )
-    if materialize:
-        src = src.localCheckpoint(eager=True)
     big = (
         src.groupBy("group_id").count()
         .filter(F.col("count") >= min_tiles)
         .select("group_id")
     )
     candidates = src.join(big, "group_id")  # AQE picks broadcast when small
-    # explicit repartition on the group key: the fill is Python-CPU-heavy
-    # but byte-light, and AQE's byte-sized coalescing would squeeze it
-    # into 1-3 tasks (same fix as zoom_map_df; exempt from coalescing,
-    # reused by the groupBy below)
-    n_part = min(n_buckets,
-                 src.sparkSession.sparkContext.defaultParallelism)
-    bucketed = candidates.withColumn(
-        "bucket", F.pmod(F.xxhash64("group_id"), F.lit(n_buckets))
-    ).repartition(n_part, "bucket")
 
     def patch_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         gids = pdf["group_id"].to_numpy()
@@ -247,8 +224,8 @@ def fill_holes(group_tiles: DataFrame, group_col: str = "group_id",
         })
 
     gid_type = dict(src.dtypes)["group_id"]  # schema follows the caller's key type
-    holes = bucketed.groupBy("bucket").applyInPandas(
-        lambda key, pdf: patch_bucket(pdf),
+    holes = apply_in_buckets(
+        candidates, ["group_id"], patch_bucket,
         f"group_id {gid_type}, tile_x long, tile_y long",
     )
     out = src.unionByName(holes)

@@ -16,18 +16,18 @@ decomposes exactly by level-4 superblock — a tile's walk reads only
 block sums at levels d ≤ 4 (all inside its own (x>>4, y>>4) block,
 getCounts :952-976) and marks only tiles inside that block, so tiles in
 different superblocks never interact and within-block ascending order
-equals global ascending order restricted to the block.  The distributed
-path therefore runs the identical pure-Python walk per superblock group
-via applyInPandas (each group ≤ 256 tiles) — no full-histogram driver
-collect; only the (small) merged-tile remap is joined back.  The
-driver-side path (collect + one walk) remains for tiny inputs and as
-the differential-test mirror.
+equals global ascending order restricted to the block.  ``zoom_map_df``
+therefore runs the walk (``compute_zoom_map``, also the tests' driver
+mirror) per superblock in the bucketed Python stage — no full-histogram
+driver collect; only the (small) merged-tile remap is joined back.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .buckets import apply_in_buckets
 
 MAX_ZOOM_OUT_DIFF = 5  # MapSplit.java:80
 _SUPER_SHIFT = MAX_ZOOM_OUT_DIFF - 1  # deepest walk level ⇒ superblock side 2^4
@@ -91,21 +91,16 @@ def compute_zoom_map(counts: dict[tuple[int, int], int], zoom: int,
     return zoom_map
 
 
-def zoom_map_df(counts: DataFrame, zoom: int, node_limit: int,
-                n_buckets: int = 256) -> DataFrame:
+def zoom_map_df(counts: DataFrame, zoom: int, node_limit: int) -> DataFrame:
     """Distributed merge walk: counts(tile_x, tile_y, n) →
     (mx, my, new_zoom) for merged tiles only.
 
-    Superblocks ((x>>4, y>>4) blocks) are independent, so the walk
-    shards perfectly — but one applyInPandas GROUP per superblock pays
-    ~1 ms of Arrow/pandas overhead × millions of superblocks at planet
-    scale.  Instead superblocks hash into ``n_buckets`` groups (one
-    Python call each, superblocks co-located by construction) and each
-    call walks its superblocks locally: singleton superblocks take a
-    vectorized shortcut (an under-limit tile alone in its level-4 block
-    always merges at the deepest level, zoom−4 — the walk never finds a
-    sibling), the rest run the identical pure-Python walk.  Bit-equal to
-    the global driver walk; no driver collect.
+    Each Python call walks its bucket's superblocks ((x>>4, y>>4)
+    blocks) locally: singleton superblocks take a vectorized shortcut
+    (an under-limit tile alone in its level-4 block always merges at the
+    deepest level, zoom−4 — the walk never finds a sibling), the rest
+    run the identical pure-Python walk.  Bit-equal to the global driver
+    walk; no driver collect.
     """
     import pandas as pd
 
@@ -131,56 +126,34 @@ def zoom_map_df(counts: DataFrame, zoom: int, node_limit: int,
             "new_zoom": pd.Series(out_z, dtype="int32"),
         })
 
-    bucketed = counts.withColumns({
+    superblocks = counts.withColumns({
         "sbx": F.shiftright("tile_x", _SUPER_SHIFT),
         "sby": F.shiftright("tile_y", _SUPER_SHIFT),
-    }).withColumn("bucket", F.pmod(F.xxhash64("sbx", "sby"), F.lit(n_buckets)))
-    # the walk is Python-CPU-heavy but byte-light: AQE's byte-sized
-    # coalescing squeezed it into ~3 tasks (measured 6 s of 17 s CPU at
-    # sf0.1).  An EXPLICIT repartition on the group key is exempt from
-    # AQE coalescing and the groupBy below reuses its partitioning, so
-    # the walk runs core-wide at any scale (r6, guide §2.5).
-    n_part = min(n_buckets,
-                 counts.sparkSession.sparkContext.defaultParallelism)
-    bucketed = bucketed.repartition(n_part, "bucket")
-    return bucketed.groupBy("bucket").applyInPandas(
-        lambda key, pdf: walk_bucket(pdf),
-        "mx long, my long, new_zoom int",
-    )
+    })
+    return apply_in_buckets(superblocks, ["sbx", "sby"], walk_bucket,
+                            "mx long, my long, new_zoom int")
 
 
-def merged_assignments(assignments: DataFrame, zoom: int, node_limit: int,
-                       counts: DataFrame | None = None,
-                       distributed: bool = True) -> DataFrame:
+def merged_assignments(assignments: DataFrame, zoom: int,
+                       node_limit: int) -> DataFrame:
     """Re-key exploded (element_id, tile_x, tile_y) through the merge map.
 
     → (element_id, zoom, tile_x, tile_y) distinct — merged tiles carry
     their coarser zoom and right-shifted coordinates
-    (mapToNewTile, MapSplit.java:985-989).
+    (mapToNewTile, MapSplit.java:985-989); ``node_limit <= 0`` merges
+    nothing and keeps the base zoom.
     """
-    spark = assignments.sparkSession
-    if counts is None:
-        counts = assignments.groupBy("tile_x", "tile_y").agg(F.count("*").alias("n"))
     if node_limit <= 0:
-        zmap_df = None
-    elif distributed:
-        # merged subset ≪ histogram; broadcast keeps the remap join
-        # shuffle-free (falls back to shuffle join above the 8 GB
-        # broadcast cap — then partitioned on the same tile key)
-        # an empty map degenerates to a no-op left join — no pre-check
-        # (isEmpty would execute the walk twice)
-        zmap_df = F.broadcast(zoom_map_df(counts, zoom, node_limit))
-    else:
-        stats = {(r.tile_x, r.tile_y): r.n for r in counts.collect()}
-        zmap = compute_zoom_map(stats, zoom, node_limit)
-        zmap_df = F.broadcast(spark.createDataFrame(
-            [(x, y, z) for (x, y), z in zmap.items()],
-            "mx long, my long, new_zoom int",
-        )) if zmap else None
-    if zmap_df is None:
         return assignments.select(
             "element_id", F.lit(zoom).alias("zoom"), "tile_x", "tile_y"
         ).dropDuplicates(["element_id", "tile_x", "tile_y"])
+    counts = assignments.groupBy("tile_x", "tile_y").agg(F.count("*").alias("n"))
+    # merged subset ≪ histogram; broadcast keeps the remap join
+    # shuffle-free (falls back to shuffle join above the 8 GB broadcast
+    # cap — then partitioned on the same tile key).  An empty map
+    # degenerates to a no-op left join — no pre-check (isEmpty would
+    # execute the walk twice)
+    zmap_df = F.broadcast(zoom_map_df(counts, zoom, node_limit))
     joined = assignments.join(
         zmap_df,
         (assignments.tile_x == zmap_df.mx) & (assignments.tile_y == zmap_df.my),

@@ -23,22 +23,8 @@ from pyspark.sql import functions as F
 from .iterate import checkpoint_count, fixed_point
 
 
-def drop_incomplete_groups(members: DataFrame, node_ids: DataFrame,
-                           group_col: str = "way_id",
-                           member_col: str = "member_id") -> DataFrame:
-    """P5 way semantics (MapSplit.java:468-473): a group with ANY member
-    missing from ``node_ids`` is dropped entirely.  Returns the surviving
-    membership edges.  node_ids: single-column DataFrame `element_id`."""
-    missing = (
-        members.join(node_ids, members[member_col] == node_ids["element_id"], "left_anti")
-        .select(group_col).distinct()
-    )
-    return members.join(missing, group_col, "left_anti")
-
-
 def way_tiles(members: DataFrame, node_tiles: DataFrame,
-              group_col: str = "way_id", member_col: str = "member_id",
-              drop_incomplete: bool = True) -> DataFrame:
+              group_col: str = "way_id", member_col: str = "member_id") -> DataFrame:
     """J1 — way tile set = union of member node tile sets, dropping the
     whole way if ANY member is missing (MapSplit.java:462-502).
     → distinct (group_col, tile_x, tile_y).
@@ -56,8 +42,7 @@ def way_tiles(members: DataFrame, node_tiles: DataFrame,
         F.collect_set(
             F.when(F.col("tile_x").isNotNull(), F.struct("tile_x", "tile_y"))
         ).alias("tiles"),
-    )
-    agg = agg.filter("n_missing = 0") if drop_incomplete else agg.filter("size(tiles) > 0")
+    ).filter("n_missing = 0")
     return agg.select(group_col, F.explode("tiles").alias("t")).select(
         group_col, F.col("t.tile_x").alias("tile_x"), F.col("t.tile_y").alias("tile_y")
     )
@@ -68,7 +53,10 @@ def backfill_member_tiles(members: DataFrame, group_tiles: DataFrame,
                           member_col: str = "member_id") -> DataFrame:
     """J2 — every member inherits its group's full tile set
     (MapSplit.java:506-510); result unioned with the nodes' own tiles.
-    → distinct (element_id, tile_x, tile_y) superset of node_tiles."""
+    → distinct (element_id, tile_x, tile_y) superset of node_tiles.
+    The inner join on ``group_tiles`` gives members of groups it lacks
+    (ways dropped by ``way_tiles``) nothing, so ``members`` needs no
+    pre-filter."""
     inherited = (
         members.join(group_tiles, group_col)
         .select(F.col(member_col).alias("element_id"), "tile_x", "tile_y")

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from .holefill import fill_holes
 from .propagate import (
     backfill_member_tiles,
+    complete_relation_propagation,
     relation_tiles_fixed_point,
     way_tiles,
 )
@@ -77,9 +78,9 @@ def session_assignments(node_tiles: DataFrame, sessions: DataFrame,
     wt = wt.localCheckpoint(eager=True)
     way_rel = wt.select(F.col("group_id").alias("element_id"), "tile_x", "tile_y")
 
-    # J2: member nodes inherit the (hole-patched) way tile set
-    ok_edges = way_edges.join(wt.select("group_id").distinct(), "group_id")
-    nodes_aug = backfill_member_tiles(ok_edges, wt, node_tiles,
+    # J2: member nodes inherit the (hole-patched) way tile set; the
+    # backfill's inner join with wt leaves members of dropped ways out
+    nodes_aug = backfill_member_tiles(way_edges, wt, node_tiles,
                                       "group_id", "member_id")
 
     # J3/J4: collections against the post-way state, to fixed point.
@@ -98,32 +99,18 @@ def session_assignments(node_tiles: DataFrame, sessions: DataFrame,
     # col_rel is internally distinct (fixpoint deltas are anti-joined
     # against the accumulated set) and collection ids are disjoint from
     # base's node/way ids — base ∪ col_rel needs no dedupe.  Only the
-    # complete-mode down-propagation (inherit/way_aug re-emit tiles
-    # already present in base) requires the final distinct.
+    # complete-mode down-propagation (its inherited rows re-emit tiles
+    # already present in base) ends in a distinct.
     out = base.union(col_rel)
+    if not complete:
+        return out
 
-    if complete:
-        # J5: members inherit the relation's full tile set
-        targets = sessions.filter(F.col("kind") == "collection")
-        if multipolygon_only:
-            targets = targets.filter(F.col("tags")["type"] == "multipolygon")
-        t_edges = targets.select(
-            F.col("session_id").alias("relation_id"),
-            F.explode("member_ids").alias("member_id"),
-        )
-        inherit = (
-            t_edges.join(
-                col_rel.withColumnRenamed("element_id", "relation_id"),
-                "relation_id",
-            ).select(F.col("member_id").alias("element_id"), "tile_x", "tile_y")
-        )
-        # J6 pass 2: nodes of member SESSIONS inherit the augmented sets
-        way_aug = (
-            inherit.withColumnRenamed("element_id", "group_id")
-            .join(way_edges, "group_id")
-            .select(F.col("member_id").alias("element_id"), "tile_x", "tile_y")
-        )
-        out = out.union(inherit).union(way_aug)
-        return out.distinct()
-
-    return out
+    # J5/J6: members inherit the relation's full tile set, and nodes of
+    # member SESSIONS inherit those sessions' augmented sets (pass 2)
+    targets = (sessions.filter(F.col("tags")["type"] == "multipolygon")
+               if multipolygon_only else sessions)
+    return complete_relation_propagation(
+        session_edges(targets, "collection")
+        .withColumnRenamed("group_id", "relation_id"),
+        col_rel, way_edges.withColumnRenamed("group_id", "way_id"), out,
+    )

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.assign import assign_and_expand
+from .operators.optimize import merged_assignments
 from .sinks.manifests import tile_manifests
 
 
@@ -180,19 +181,17 @@ class TilingPipeline:
             last = "clip"
         self.pairs = pairs
 
-        # §2.5 optimize — the merged output-zoom relation is its own
-        # stage: payload/raster keys derive from the SAME relation as the
-        # manifests, so every output agrees on tile identity
-        if c["node_limit"] > 0:
-            from .operators.optimize import merged_assignments
+        # §2.5 optimize — the output-zoom relation; payload/raster keys
+        # derive from the SAME relation as the manifests, so every output
+        # agrees on tile identity.  Only a real merge is its own stage.
+        def merged():
+            return merged_assignments(pairs, c["zoom"], c["node_limit"])
 
-            tiled = self._stage("tiled", last, lambda: merged_assignments(
-                pairs, c["zoom"], c["node_limit"]))
+        if c["node_limit"] > 0:
+            tiled = self._stage("tiled", last, merged)
             last = "tiled"
         else:
-            tiled = pairs.select(
-                "element_id", F.lit(c["zoom"]).alias("zoom"), "tile_x", "tile_y"
-            ).dropDuplicates(["element_id", "tile_x", "tile_y"])
+            tiled = merged()
         if not self.workdir:
             # lazy chain: one reuse point for the manifests and the
             # caller's payload/raster joins (a persisted stage is its own)

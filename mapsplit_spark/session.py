@@ -5,7 +5,8 @@ the 1000-executor / 100 TB target: AQE on (runtime partition coalescing
 + skew-join splitting), shuffle partitions twice the core count (at
 least 32; cores default to $SPARK_GRAFT_CPUS) unless the caller passes
 ``shuffle_partitions``, Arrow enabled for the few pandas-UDF operators
-(hole-fill, mosaic assembly).
+(hole-fill, mosaic assembly).  A running session is returned as it is,
+keeping the conf its owner chose.
 """
 
 from __future__ import annotations
@@ -17,6 +18,9 @@ from pyspark.sql import SparkSession
 
 def get_spark(app: str = "mapsplit-spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(2 * cores, 32)
     return (

@@ -20,6 +20,24 @@ def spark():
     s.stop()
 
 
+GUARDED_CONF = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+
+
+@pytest.fixture(autouse=True)
+def shared_conf_unchanged(request):
+    """Fail the test that leaves the shared session's shuffle or AQE
+    settings different from the values it started with: later tests
+    (job counts, plan shapes) would run under that test's settings."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    spark = request.getfixturevalue("spark")
+    before = {k: spark.conf.get(k) for k in GUARDED_CONF}
+    yield
+    after = {k: spark.conf.get(k) for k in GUARDED_CONF}
+    assert after == before, f"test changed the shared session's conf: {before} -> {after}"
+
+
 @pytest.fixture(scope="session")
 def job_count(spark):
     """→ fn(action) returning the number of Spark jobs ``action()`` ran,

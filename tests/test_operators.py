@@ -61,10 +61,17 @@ def test_way_union_and_drop(spark, node_tiles):
     assert {w: sorted(t) for w, t in got_map.items()} == expect_tiles
 
 
-def test_backfill_matches_oracle(spark, node_tiles):
+@pytest.mark.parametrize("ways", [
+    [("w0", ["n0", "n1", "n5"])],
+    # w1 is dropped (one member missing): its present members n2 and
+    # n7 must not inherit each other's tiles, with the unfiltered
+    # membership passed in
+    [("w0", ["n0", "n1", "n5"]), ("w1", ["n2", "n7", "MISSING"])],
+], ids=["complete", "dropped_way"])
+def test_backfill_matches_oracle(spark, node_tiles, ways):
     tiles_df, _ = node_tiles
     members = spark.createDataFrame(
-        [("w0", "n0"), ("w0", "n1"), ("w0", "n5")], "way_id string, member_id string"
+        [(w, m) for w, ms in ways for m in ms], "way_id string, member_id string"
     )
     wt = way_tiles(members, tiles_df, "way_id", "member_id")
     got = {
@@ -72,7 +79,7 @@ def test_backfill_matches_oracle(spark, node_tiles):
         for r in backfill_member_tiles(members, wt, tiles_df, "way_id", "member_id").collect()
     }
     pairs = {(r.element_id, r.tile_x, r.tile_y) for r in tiles_df.collect()}
-    _, extra = oracle.session_tiles(pairs, [("w0", ["n0", "n1", "n5"])])
+    _, extra = oracle.session_tiles(pairs, ways)
     assert got == pairs | extra
 
 

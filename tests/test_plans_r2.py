@@ -102,8 +102,7 @@ def test_lsh_bucket_cap_single_exchange_no_python(spark):
     )
     sigs = minhash_signatures(with_shingle_hashes(docs), 32,
                               id_col="doc_id")
-    plan = _plan(lsh_candidate_pairs(sigs, bands=8, max_bucket=64,
-                                     materialize_banded=False))
+    plan = _plan(lsh_candidate_pairs(sigs, bands=8, max_bucket=64))
     assert "EvalPython" not in plan and "InPandas" not in plan
     assert "CartesianProduct" not in plan
     assert "Join" not in plan  # map-side expansion, not a self-join
