@@ -572,16 +572,14 @@ def q_session_holefill(spark, sf_dir):
     # the expensive upstream and fill_holes consumes it three times
     # (count gate, candidate join, output union) — checkpoint it ONCE
     # (r6: the plan previously evaluated the ObjectHashAggregate subtree
-    # 3×, ~2/3 of this gate's executor time).  Its output is distinct by
-    # construction → assume_distinct skips the output dedup shuffle.
+    # 3×, ~2/3 of this gate's executor time).
     wt = q_session_tiles(spark, sf_dir).withColumnRenamed("way_id", "group_id") \
         .localCheckpoint(eager=True)
     # ring ids are disjoint from session ids, so the two fills compose by
     # union — keeping the big session path's plan identical to the
     # fixture-free formulation (unioning BEFORE the fill inflated the
     # shuffle partitioning of all three src consumers, measured +60%)
-    out = fill_holes(wt, assume_distinct=True).unionByName(
-        fill_holes(rings, assume_distinct=True))
+    out = fill_holes(wt).unionByName(fill_holes(rings))
     return out.withColumnRenamed("group_id", "way_id")
 
 
@@ -649,7 +647,7 @@ def q_tile_pyramid(spark, sf_dir):
     pts = _event_points(spark, sf_dir).repartition(
         max(8, spark.sparkContext.defaultParallelism // 4))
     pairs = assign_and_expand(pts, "event_id", "lon", "lat", ZOOM, BORDER)
-    return pyramid_counts(pairs, ZOOM, PYRAMID_MIN_ZOOM, assume_distinct=True)
+    return pyramid_counts(pairs, ZOOM, PYRAMID_MIN_ZOOM)
 
 
 def q_doc_token_stats(spark, sf_dir):
@@ -954,10 +952,11 @@ def q_doc_simhash(spark, sf_dir):
 
 
 # multi-ring clip fixture (r5): 40 diamond outers + 8 diamond holes
-# (the gate forces use_index=True — the auto threshold sits at the
-# measured ~1000-ring crossover, far above an oracle-sized fixture);
-# vertex coords quantized to .25 so SQL literals are exact doubles, and
-# diamonds have no horizontal edges (ring_pip_sql requirement)
+# (below clip.STRTREE_MIN_RINGS, so the gates run the linear scan that
+# production picks at this ring count; tests/test_strtree.py holds the
+# tree path bit-equal to it); vertex coords quantized to .25 so SQL
+# literals are exact doubles, and diamonds have no horizontal edges
+# (ring_pip_sql requirement)
 def _diamond(cx, cy, rx, ry):
     return [(cx - rx, cy), (cx, cy - ry), (cx + rx, cy), (cx, cy + ry)]
 
@@ -979,13 +978,12 @@ CLIP_MULTI_HOLES = [
 
 def q_clip_strtree(spark, sf_dir):
     """North-star PIP join at many-ring scale: 40 outer + 8 hole rings
-    clipped through the STR-tree-indexed Arrow kernel (strtree.py —
-    vectorized packed-R-tree descent + one batched even-odd pass), the
-    web-scale replacement for the reference's per-ring scan
-    (clipPoly/isInside, MapSplit.java:999-1145).  use_index=True forces
-    the tree even at this ring count; results are bit-equal to the
-    linear scan (tests/test_strtree.py) and to the oracle's 48 unrolled
-    ring_pip_sql predicates."""
+    clipped through the Arrow PIP kernel (clip._pairs_fn), whose
+    candidate source — per-ring bbox scan or the STR tree (strtree.py)
+    — the ring count picks; at 48 rings that is the linear scan, the
+    reference's per-ring test (clipPoly/isInside, MapSplit.java:
+    999-1145).  Both sources are bit-equal (tests/test_strtree.py) and
+    match the oracle's 48 unrolled ring_pip_sql predicates."""
     from mapsplit_spark.operators.clip import clip_points, make_ring
 
     pts = _event_points(spark, sf_dir)
@@ -993,7 +991,6 @@ def q_clip_strtree(spark, sf_dir):
         pts,
         [make_ring(v) for v in CLIP_MULTI_OUTERS],
         [make_ring(v) for v in CLIP_MULTI_HOLES],
-        use_index=True,
     )
     return kept.select("event_id")
 
@@ -1252,7 +1249,7 @@ def q_ring_zonal(spark, sf_dir):
     """Zonal statistics over the 48-ring fixture (operators/clip.py::
     zone_assign): per containing OUTER ring, the point count and an
     exact id checksum — the raster-algebra 'zonal sum' over vector
-    zones.  The STR-tree pair descent emits (point, zone) rows; the
+    zones.  The PIP pairs kernel emits (point, zone) rows; the
     aggregation is a plain partial-agg groupBy.  Oracle: 40 unrolled
     per-ring ring_pip_sql aggregates UNION ALL'd (same even-odd
     formula text as the clip gates)."""
@@ -1262,7 +1259,7 @@ def q_ring_zonal(spark, sf_dir):
         _event_points(spark, sf_dir),
         [make_ring(v) for v in CLIP_MULTI_OUTERS],
         [make_ring(v) for v in CLIP_MULTI_HOLES],
-        id_col="event_id", use_index=True,
+        id_col="event_id",
     )
     return za.groupBy("zone").agg(
         F.count("*").cast("long").alias("n_points"),
@@ -1420,8 +1417,8 @@ RASTER_ZOOM = 7  # vector→raster gate: 128×128 global grid
 def q_ring_raster(spark, sf_dir):
     """Vector→raster conversion (the north star's raster↔vector
     surface): rasterize the 40-ring zone fixture onto the z7 tile grid
-    by center-in-polygon — the ENGINE runs the production STR-tree
-    Arrow kernel (clip.zone_assign) over a GENERATED tile-center grid
+    by center-in-polygon — the ENGINE runs the production PIP Arrow
+    kernel (clip.zone_assign) over a GENERATED tile-center grid
     (16 k rows at z7; a higher-zoom raster would bbox-prune candidates
     first), then joins the z13 event tile assignment (quadtree
     bit-shift, never re-projected) against the covered cells.  → per
@@ -1447,7 +1444,7 @@ def q_ring_raster(spark, sf_dir):
         F.expr(sqlgen.tile2lat_sql("y + 0.5", RASTER_ZOOM)).alias("lat"),
     )
     za = zone_assign(centers, [make_ring(v) for v in CLIP_MULTI_OUTERS], [],
-                     id_col="cell_id", use_index=True)
+                     id_col="cell_id")
     raster = za.select(
         F.col("zone").cast("int").alias("zone"),
         (F.col("cell_id") / n).cast("long").alias("x"),
@@ -1512,9 +1509,9 @@ def q_tile_idw(spark, sf_dir):
 def q_zone_transitions(spark, sf_dir):
     """Geofence enter/exit detection (operators/geofence.py): per-user
     consecutive events whose min-containing-zone differs — PIP via the
-    production STR-tree Arrow kernel (independent of the oracle's 40
-    unrolled ring_pip_sql predicates folded with LEAST), transitions
-    via the per-user lag window.  Zone −1 = outside all rings."""
+    production Arrow kernel, linear scan at 40 rings (independent of
+    the oracle's 40 unrolled ring_pip_sql predicates folded with
+    LEAST), transitions via the per-user lag window.  Zone −1 = outside all rings."""
     from mapsplit_spark.operators.clip import make_ring
     from mapsplit_spark.operators.geofence import zone_transitions
 
@@ -2343,7 +2340,7 @@ SELECT doc_id, {_SIMHASH_COMBINE} AS simhash, CAST(n_tok AS BIGINT) AS n_tok
 FROM v
 """,
         # 48 unrolled even-odd ring predicates — the raw per-ring scan
-        # the STR-tree path must reproduce exactly
+        # the PIP kernel must reproduce exactly
         "clip_strtree": f"""
 WITH p AS (SELECT event_id, {EV_LON} AS lon, {EV_LAT} AS lat FROM events)
 SELECT event_id FROM p

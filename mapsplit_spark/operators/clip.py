@@ -12,13 +12,12 @@ Arrow-batched, one O(corners × vertices) matrix op per batch — with a
 bbox prefilter per ring.  Point-level exact clip (``clip_points``) is
 the engine's extra precise mode.
 
-At web scale the ring side grows to thousands of admin/tile-boundary
-polygons; from ``STRTREE_MIN_RINGS`` rings (the measured linear/tree
-crossover) both clip operators switch (``use_index="auto"``) to the
-packed STR R-tree (``strtree.py``):
-candidates come from a vectorized whole-batch tree descent instead of
-R per-ring bbox passes, then the SAME ``_pip`` kernel refines — bit-
-identical results, differential-tested, oracle gate ``clip_strtree``.
+Every ring operator runs ONE kernel, ``_pairs_fn`` → (point, ring)
+inside-pairs (membership is its OR-collapse).  The ring count alone
+picks its candidate source (``_ring_index``): per-ring bbox passes, or
+from ``STRTREE_MIN_RINGS`` rings (the measured crossover) a vectorized
+descent of the packed STR R-tree (``strtree.py``); the same even-odd
+formula refines both — bit-identical results, differential-tested.
 """
 
 from __future__ import annotations
@@ -37,8 +36,8 @@ from ..strtree import build_strtree, query_strtree
 # back with `git show 0233616:tools/bench_strtree.py`; ~1x-coverage
 # rings, 100 k-pt batches): the linear scan's streaming passes beat the
 # tree's gather-heavy descent below ~1000 rings; the tree wins 3x at
-# 2000, ~10x at 5000, ~80x at 50 000.  "auto" switches just under the
-# crossover; pass use_index=True to force the tree at any count.
+# 2000, ~10x at 5000, ~80x at 50 000.  The tree is picked from this
+# many rings on, just under the crossover.
 STRTREE_MIN_RINGS = 768
 
 
@@ -74,15 +73,6 @@ def _pip(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     return (crossings.sum(axis=1) % 2).astype(bool)
 
 
-def _in_any(px, py, rings) -> np.ndarray:
-    hit = np.zeros(px.shape[0], dtype=bool)
-    for ring, (x0, x1, y0, y1) in rings:
-        cand = ~hit & (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)  # bbox prefilter
-        if cand.any():
-            hit[cand] |= _pip(px[cand], py[cand], ring)
-    return hit
-
-
 def _flatten_rings(rings):
     """Concatenate ring vertices into flat arrays (vx, vy, off, lens)
     so the pair-batched PIP can gather edges with pure index math."""
@@ -93,23 +83,13 @@ def _flatten_rings(rings):
     return vx, vy, off, lens
 
 
-def _in_any_indexed(px, py, flat, tree) -> np.ndarray:
-    """Same membership OR as ``_in_any`` but candidates come from one
-    vectorized STR-tree descent (O(hits) pairs) instead of R bbox
-    passes, and the even-odd refine runs ONE batched pass over all
-    (pair, edge) tuples — no per-ring Python loop.  The crossing
-    formula is ``_pip``'s verbatim, so parities (and therefore the
-    result) are bit-equal to the linear scan."""
-    hit = np.zeros(px.shape[0], dtype=bool)
-    p_in, _ = _pairs_indexed(px, py, flat, tree)
-    hit[p_in] = True
-    return hit
-
-
 def _pairs_indexed(px, py, flat, tree):
-    """(point_idx, ring_idx) pairs with the point INSIDE the ring —
-    the per-zone variant of ``_in_any_indexed`` (same descent, same
-    batched even-odd refine, no OR-collapse)."""
+    """(point_idx, ring_idx) pairs with the point INSIDE the ring, the
+    candidates from one vectorized STR-tree descent (O(hits) pairs)
+    instead of R bbox passes, and the even-odd refine ONE batched pass
+    over all (pair, edge) tuples — no per-ring Python loop.  The
+    crossing formula is ``_pip``'s verbatim, so parities (and therefore
+    the pairs) are bit-equal to ``_pairs_linear``."""
     empty = np.zeros(0, dtype=np.int64)
     p_idx, r_idx = query_strtree(tree, px, py)
     if p_idx.size == 0:
@@ -154,41 +134,42 @@ def _pairs_linear(px, py, rings):
     return np.concatenate(ps), np.concatenate(rs)
 
 
-def _ring_index(rings, use_index):
-    """The one linear-scan vs STR-tree choice: → (flat, tree) when the
-    ring set goes through the tree (``use_index=True``, or "auto" from
-    ``STRTREE_MIN_RINGS`` rings), else None for the linear scan."""
-    if rings and (use_index is True or
-                  (use_index == "auto" and len(rings) >= STRTREE_MIN_RINGS)):
+def _ring_index(rings):
+    """The one linear-scan vs STR-tree choice, from the ring count
+    alone: → (flat, tree) from ``STRTREE_MIN_RINGS`` rings on, else
+    None for the linear scan.  Made on the driver when an operator is
+    called, so the kernel it returns is what the executors run."""
+    if rings and len(rings) >= STRTREE_MIN_RINGS:
         return _flatten_rings(rings), build_strtree(np.array([b for _, b in rings]))
     return None
 
 
-def _membership_fn(rings, use_index):
-    """(px, py) → bool even-odd membership OR over ``rings`` — identical
-    on the linear and the tree path."""
-    index = _ring_index(rings, use_index)
-    if index is not None:
-        return lambda px, py: _in_any_indexed(px, py, *index)
-    return lambda px, py: _in_any(px, py, rings)
-
-
-def _pairs_fn(rings, use_index):
+def _pairs_fn(rings):
     """(px, py) → (point_idx, ring_idx) inside-pairs over ``rings`` —
-    identical on the linear and the tree path."""
-    index = _ring_index(rings, use_index)
+    identical on the linear and the tree path; the only kernel entry
+    point of the ring operators."""
+    index = _ring_index(rings)
     if index is not None:
         return lambda px, py: _pairs_indexed(px, py, *index)
     return lambda px, py: _pairs_linear(px, py, rings)
 
 
-def clip_tiles(tiles_df: DataFrame, outers, inners, zoom: int,
-               use_index: bool | str = "auto") -> DataFrame:
+def _membership_of(pairs_fn):
+    """(px, py) → bool "inside ≥1 ring": the OR-collapse of a
+    ``_pairs_fn`` kernel's point indices."""
+    def inside(px, py):
+        hit = np.zeros(px.shape[0], dtype=bool)
+        hit[pairs_fn(px, py)[0]] = True
+        return hit
+    return inside
+
+
+def clip_tiles(tiles_df: DataFrame, outers, inners, zoom: int) -> DataFrame:
     """Corner-parity mode (P8): keep tiles where ≥1 of the 4 corners is
     inside an outer ring and not inside any inner ring
     (MapSplit.java:1020-1065 — corner-only, approximate by design)."""
-    in_outer = _membership_fn(outers, use_index)
-    in_inner = _membership_fn(inners, use_index)
+    in_outer = _membership_of(_pairs_fn(outers))
+    in_inner = _membership_of(_pairs_fn(inners))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -212,12 +193,11 @@ def clip_tiles(tiles_df: DataFrame, outers, inners, zoom: int,
 
 
 def clip_points(points_df: DataFrame, outers, inners,
-                lon_col: str = "lon", lat_col: str = "lat",
-                use_index: bool | str = "auto") -> DataFrame:
+                lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Exact point-level clip (engine precise mode): keep rows whose
     point is inside ≥1 outer ring and no inner ring."""
-    in_outer = _membership_fn(outers, use_index)
-    in_inner = _membership_fn(inners, use_index)
+    in_outer = _membership_of(_pairs_fn(outers))
+    in_inner = _membership_of(_pairs_fn(inners))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -236,8 +216,7 @@ def clip_points(points_df: DataFrame, outers, inners,
 
 def zone_assign(points_df: DataFrame, outers, inners,
                 id_col: str = "element_id",
-                lon_col: str = "lon", lat_col: str = "lat",
-                use_index: bool | str = "auto") -> DataFrame:
+                lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Zonal assignment — the per-zone refinement of ``clip_points``:
     → (id_col, zone) with ``zone`` = 0-based index of each OUTER ring
     containing the point (one row per containing ring, so overlapping
@@ -249,8 +228,8 @@ def zone_assign(points_df: DataFrame, outers, inners,
     JVM-side, so the Python stage only emits (id, zone) pairs.  Same
     index story as clip_points: from ``STRTREE_MIN_RINGS`` rings the
     candidates per point are bounded by ring overlap, not ring count."""
-    pairs_fn = _pairs_fn(outers, use_index)
-    in_inner = _membership_fn(inners, use_index)
+    pairs_fn = _pairs_fn(outers)
+    in_inner = _membership_of(_pairs_fn(inners))
     id_type = dict(points_df.dtypes)[id_col]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -277,17 +256,17 @@ def clip_assignments(assignments: DataFrame, kept_tiles: DataFrame) -> DataFrame
     (left-semi join ≡ the reference's bitset clear loop,
     MapSplit.java:1128-1145)."""
     return assignments.join(
-        kept_tiles.select("tile_x", "tile_y").distinct(), ["tile_x", "tile_y"], "left_semi"
+        kept_tiles.select("tile_x", "tile_y"), ["tile_x", "tile_y"], "left_semi"
     )
 
 
-def min_zone_fn(outers, inners, use_index: bool | str = "auto"):
+def min_zone_fn(outers, inners):
     """(px, py) → int32 min-containing-zone array (−1 outside all
     outers or inside a hole) — the vectorized kernel shared by the
     batch geofence (operators/geofence.py) and its streaming twin
     (streaming/geofence_stream.py)."""
-    pairs_fn = _pairs_fn(outers, use_index)
-    in_inner = _membership_fn(inners, use_index)
+    pairs_fn = _pairs_fn(outers)
+    in_inner = _membership_of(_pairs_fn(inners))
 
     def zones(px: np.ndarray, py: np.ndarray) -> np.ndarray:
         out = np.full(len(px), -1, dtype=np.int32)

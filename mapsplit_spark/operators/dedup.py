@@ -96,7 +96,8 @@ def minhash_signatures(shingled: DataFrame, num_hashes: int = 32,
 
 def _banded(signatures: DataFrame, bands: int, id_col: str) -> DataFrame:
     """Signature → (id, band, bhash) rows — the single banding
-    construction shared by candidate generation and bucket_sizes."""
+    construction; the hot-bucket cap and its observation both act on
+    it."""
     rows_per_band = F.floor(F.size("sig") / bands).cast("int")
     return signatures.select(
         F.col(id_col),
@@ -150,7 +151,7 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 8,
     bucket-size aggregate job fired eagerly AT CALL TIME — one extra
     scan + shuffle of the banded relation, paid even if the pairs are
     never consumed.  Pass it per run where wanted, not habitually.
-    The full histogram is ``bucket_sizes()``.
+    The full histogram is ``_banded(...).groupBy("band", "bhash").count()``.
 
     The grouped formulation consumes the banded relation exactly once,
     so it is not checkpointed (dropping the checkpoint measured 1.59 →
@@ -294,17 +295,6 @@ def jaccard_verify(pairs: DataFrame, shingled: DataFrame, threshold: float = 0.7
     )
 
 
-def bucket_sizes(signatures: DataFrame, bands: int = 8,
-                 id_col: str = "doc_id") -> DataFrame:
-    """Band-bucket size histogram — the observability companion to the
-    ``max_bucket`` cap: report/alert on buckets that degrade to star
-    edges.  Shares ``_banded`` with candidate generation so the report
-    always matches what the cap acts on."""
-    return _banded(signatures, bands, id_col).groupBy("band", "bhash").agg(
-        F.count("*").alias("bsize")
-    )
-
-
 def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", ngram: int = 3,
                       num_hashes: int = 32, bands: int = 8,
@@ -387,20 +377,6 @@ def hamming_banded(df: DataFrame, id_col: str, hash_col: str,
         ).alias("bk"),
     ).select(id_col, hash_col,
              F.col("bk.band").alias("band"), F.col("bk.bval").alias("bval"))
-
-
-def hamming_verify(pairs: DataFrame, hashed: DataFrame, radius: int,
-                   id_col: str, hash_col: str) -> DataFrame:
-    """Exact Hamming distance on candidate pairs only — one XOR +
-    bit_count per pair, all JVM.  → (id_a, id_b, hamming ≤ radius)."""
-    a = hashed.select(F.col(id_col).alias("id_a"), F.col(hash_col).alias("h_a"))
-    b = hashed.select(F.col(id_col).alias("id_b"), F.col(hash_col).alias("h_b"))
-    return (
-        pairs.join(a, "id_a").join(b, "id_b")
-        .withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
-        .filter(F.col("hamming") <= radius)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 def auto_bands(n_rows: int, radius: int, bits: int = 64,

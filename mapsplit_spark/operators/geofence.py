@@ -2,12 +2,12 @@
 the moments the trace ENTERS or LEAVES a zone (enter/exit events of a
 geofencing system, alerting/attribution surface of a tracking
 pipeline).  Combines the engine's two join families: point-in-polygon
-zone membership (the STR-tree Arrow kernel, clip.zone_assign) and
+zone membership (the ring-count-selected Arrow kernel of clip.py) and
 ordered window analytics (lag over the per-user timeline).
 
 Shape: ONE shuffle.  Zone membership including the min-zone fold is
-fully map-side (clip.min_zone_fn — rings + STR tree ship once per
-executor, the per-point minimum is resolved inside the Arrow batch, so
+fully map-side (clip.min_zone_fn — rings, plus the STR tree from
+``STRTREE_MIN_RINGS`` rings on, ship once per executor, the per-point minimum is resolved inside the Arrow batch, so
 there is no groupBy-on-id/join-back round trip); the only exchange is
 the per-user transition window.  No Python outside the PIP kernel.
 
@@ -32,14 +32,13 @@ from .clip import min_zone_fn
 
 
 def with_min_zone(events: DataFrame, lon_col: str, lat_col: str,
-                  outers, inners=(),
-                  use_index: bool | str = "auto") -> DataFrame:
+                  outers, inners=()) -> DataFrame:
     """events → events + ``zone`` int column (min containing outer,
     −1 outside/hole) — one mapInPandas pass over the Arrow batches,
     no shuffle.  Streaming-safe (used by streaming/geofence_stream)."""
     from pyspark.sql import types as T
 
-    zones = min_zone_fn(outers, list(inners), use_index)
+    zones = min_zone_fn(outers, list(inners))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -172,17 +172,16 @@ def _fill_one(xs: np.ndarray, ys: np.ndarray,
 
 
 def fill_holes(group_tiles: DataFrame, group_col: str = "group_id",
-               min_tiles: int = 8, assume_distinct: bool = False) -> DataFrame:
+               min_tiles: int = 8) -> DataFrame:
     """(group_id, tile_x, tile_y) → same relation + patched hole tiles.
 
     Small groups (< min_tiles, MapSplit.java:491-493) bypass the Python
     stage entirely via a pre-shuffle semi-join on a count aggregate.
 
-    ``assume_distinct`` skips the final (group, tile) dedupe — safe when
-    the input relation is already distinct (way_tiles / assign→expand
-    outputs), because patched holes are by construction tiles NOT in
-    their group's member set and each hole is emitted once; this removes
-    a full shuffle of the output relation (r6).
+    The output is the input rows plus the holes, with no dedupe
+    shuffle: a patched hole is by construction a tile NOT in its
+    group's member set and each hole is emitted once, so a distinct
+    input (way_tiles / assign→expand outputs) gives a distinct output.
 
     The input relation feeds three consumers (count gate, candidate
     join, output union); callers with an expensive upstream checkpoint
@@ -228,7 +227,4 @@ def fill_holes(group_tiles: DataFrame, group_col: str = "group_id",
         candidates, ["group_id"], patch_bucket,
         f"group_id {gid_type}, tile_x long, tile_y long",
     )
-    out = src.unionByName(holes)
-    if not assume_distinct:
-        out = out.dropDuplicates(["group_id", "tile_x", "tile_y"])
-    return out.withColumnRenamed("group_id", group_col)
+    return src.unionByName(holes).withColumnRenamed("group_id", group_col)

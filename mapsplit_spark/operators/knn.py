@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import sqlgen
+from ..sinks.manifests import TILE_BUCKETS
 from .assign import assign_tiles
 from .iterate import checkpoint_count, fixed_point
 
@@ -207,7 +208,7 @@ def _coverage_ladder(queries: DataFrame, levels: list, probe, fallback,
 
 
 def knn_tiled(queries: DataFrame, points: DataFrame, zoom: int, ring: int = 1,
-              k: int = 5, escalate: bool = True, min_zoom: int = 0) -> DataFrame:
+              k: int = 5, escalate: bool = True) -> DataFrame:
     """Tile-ring candidate generation + exact haversine re-rank.
 
     Each query expands to its (2·ring+1)² surrounding tiles (H3 k-ring
@@ -218,7 +219,7 @@ def knn_tiled(queries: DataFrame, points: DataFrame, zoom: int, ring: int = 1,
     With ``escalate`` (default) the result is EXACT at any density: each
     query's top-k is accepted only when provably covered by its ring
     (see ``_coverage_radius_km``); unproven queries walk coarser zooms
-    down to ``min_zoom`` (ring area ×4 per step) and finally fall back
+    down to zoom 0 (ring area ×4 per step) and finally fall back
     to brute force — by construction the fallback set is tiny (the few
     sparse-region queries).  ``escalate=False`` keeps the single-probe
     behaviour for callers that sized zoom/ring themselves.
@@ -243,7 +244,7 @@ def knn_tiled(queries: DataFrame, points: DataFrame, zoom: int, ring: int = 1,
                 _coverage_radius_km(qt, z, ring))
 
     return _coverage_ladder(
-        queries, list(range(zoom, min_zoom - 1, -1)), probe,
+        queries, list(range(zoom, -1, -1)), probe,
         lambda pending: knn_bruteforce(pending, points, k), k, escalate,
     )
 
@@ -285,11 +286,11 @@ def _probe_buckets(spark, ringed: DataFrame, d: int, n_buckets: int) -> list[int
 
 
 def knn_tiled_bucketed(queries: DataFrame, points_path: str, zoom: int,
-                       ring: int = 1, k: int = 5, n_buckets: int = 256,
-                       escalate: bool = True, min_zoom: int = 0) -> DataFrame:
+                       ring: int = 1, k: int = 5,
+                       escalate: bool = True) -> DataFrame:
     """kNN over a tile-BUCKETED points layout (sinks.manifests.write_tiles:
     parquet partitioned by bucket = pmod(xxhash64(tile_x, tile_y),
-    n_buckets)) — the 100 TB read path: the query set's ring tiles map to
+    TILE_BUCKETS)) — the 100 TB read path: the query set's ring tiles map to
     a small bucket set, the filter on the PARTITION column prunes every
     other bucket directory at planning time, and only then does the ring
     equi-join + exact re-rank run.
@@ -314,7 +315,7 @@ def knn_tiled_bucketed(queries: DataFrame, points_path: str, zoom: int,
         d = zoom - z
         qt = _query_tiles(pending, z)
         buckets = _probe_buckets(spark, _ring_tiles(qt, z, ring, ["query_id"]),
-                                 d, n_buckets)
+                                 d, TILE_BUCKETS)
         pts = spark.read.parquet(points_path)
         if buckets is not None:
             pts = pts.filter(F.col("bucket").isin(buckets))
@@ -329,7 +330,7 @@ def knn_tiled_bucketed(queries: DataFrame, points_path: str, zoom: int,
         points = spark.read.parquet(points_path).select("point_id", "p_lon", "p_lat")
         return knn_bruteforce(pending, points, k)
 
-    return _coverage_ladder(queries, list(range(zoom, min_zoom - 1, -1)),
+    return _coverage_ladder(queries, list(range(zoom, -1, -1)),
                             probe, fallback, k, escalate)
 
 

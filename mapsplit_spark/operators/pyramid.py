@@ -31,20 +31,17 @@ from pyspark.sql import functions as F
 
 
 def pyramid_counts(assignments: DataFrame, base_zoom: int, min_zoom: int,
-                   id_col: str = "element_id",
-                   assume_distinct: bool = False) -> DataFrame:
+                   id_col: str = "element_id") -> DataFrame:
     """(element_id, tile_x, tile_y) at ``base_zoom`` →
     (zoom, tile_x, tile_y, n) for every level in [min_zoom, base_zoom];
     ``n`` counts DISTINCT elements per tile at that level.
 
-    ``assume_distinct`` skips the base-pair dedupe when the input is
-    already distinct (the assign→expand output) — the ancestor-level
-    dedupe always runs (it is what collapses multi-child convergence).
+    The input may repeat pairs: the one all-levels dedupe below covers
+    the base level too (d = 0), next to collapsing multi-child
+    convergence at the ancestors.
     """
     if min_zoom > base_zoom or min_zoom < 0:
         raise ValueError(f"need 0 ≤ min_zoom ≤ base_zoom, got {min_zoom}/{base_zoom}")
-    src = assignments if assume_distinct else \
-        assignments.dropDuplicates([id_col, "tile_x", "tile_y"])
     depth = base_zoom - min_zoom
     levels = F.explode(F.array(*[
         F.struct(
@@ -55,7 +52,7 @@ def pyramid_counts(assignments: DataFrame, base_zoom: int, min_zoom: int,
         for d in range(depth + 1)
     ])).alias("lv")
     return (
-        src.select(F.col(id_col), levels)
+        assignments.select(F.col(id_col), levels)
         .select(id_col, "lv.zoom", "lv.tile_x", "lv.tile_y")
         .dropDuplicates([id_col, "zoom", "tile_x", "tile_y"])
         .groupBy("zoom", "tile_x", "tile_y")

@@ -71,10 +71,9 @@ def session_assignments(node_tiles: DataFrame, sessions: DataFrame,
     # branches; the checkpointed pipeline materializes stages instead)
     wt = way_tiles(way_edges, node_tiles, "group_id", "member_id")
     if holefill_min is not None:
-        # way_tiles output is distinct by construction; the fill only
-        # adds tiles NOT in the member set → skip the output dedupe (r6)
-        wt = fill_holes(wt, "group_id", min_tiles=holefill_min,
-                        assume_distinct=True)
+        # way_tiles output is distinct by construction, and the fill
+        # only adds tiles NOT in the member set → still distinct (r6)
+        wt = fill_holes(wt, "group_id", min_tiles=holefill_min)
     wt = wt.localCheckpoint(eager=True)
     way_rel = wt.select(F.col("group_id").alias("element_id"), "tile_x", "tile_y")
 

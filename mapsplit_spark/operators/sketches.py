@@ -253,13 +253,6 @@ def cms_query(sketch: DataFrame, probes: DataFrame, probe_col: str,
     )
 
 
-def cms_error_bound(n: int, width: int) -> float:
-    """ε·n overestimate bound with ε = 2/width (e/width for the e-based
-    variant; the 2/width form matches the two-universal construction) —
-    test helper: P[est − true > 2n/width] < 2^−depth."""
-    return 2.0 * n / width
-
-
 # ------------------------------------------------------- frequent items
 
 def exact_top_items(df: DataFrame, group_cols: list[str], item_col: str,

@@ -25,6 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# hash buckets of the stored tile layout (write_tiles); the bucketed kNN
+# read path (knn.knn_tiled_bucketed) recomputes a tile's bucket from it,
+# so writer and reader must share this one value — a mismatch filters
+# the wrong directories and can miss a closer point
+TILE_BUCKETS = 256
+
 
 def tile_manifests(assignments: DataFrame, zoom: int, n_salts: int = 32,
                    id_col: str = "element_id",
@@ -93,8 +99,7 @@ def tile_counts(assignments: DataFrame) -> DataFrame:
     return assignments.groupBy("tile_x", "tile_y").agg(F.count("*").alias("n"))
 
 
-def write_tiles(df_with_payload: DataFrame, out_path: str, zoom: int,
-                n_buckets: int = 256) -> None:
+def write_tiles(df_with_payload: DataFrame, out_path: str, zoom: int) -> None:
     """Materialize per-tile rows as parquet partitioned by tile.
 
     For 100 TB: repartition by a bucketed tile key (not raw tile — a
@@ -104,7 +109,7 @@ def write_tiles(df_with_payload: DataFrame, out_path: str, zoom: int,
     """
     (
         df_with_payload
-        .withColumn("bucket", F.pmod(F.xxhash64("tile_x", "tile_y"), F.lit(n_buckets)))
+        .withColumn("bucket", F.pmod(F.xxhash64("tile_x", "tile_y"), F.lit(TILE_BUCKETS)))
         .repartition("bucket")
         .sortWithinPartitions("tile_x", "tile_y")
         .write.mode("overwrite")

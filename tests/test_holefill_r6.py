@@ -96,7 +96,7 @@ def test_run_ccl_matches_bfs(idx):
 
 
 def test_bucketed_stage_matches_per_group(spark):
-    """fill_holes output (bucketed Python stage, assume_distinct) equals
+    """fill_holes output (bucketed Python stage) equals
     the per-group reference composition over a mixed fixture."""
     from mapsplit_spark.operators.holefill import fill_holes
 
@@ -117,5 +117,5 @@ def test_bucketed_stage_matches_per_group(spark):
         expected |= {(gid, x, y) for x, y in holes}
     df = spark.createDataFrame(rows, "group_id long, tile_x long, tile_y long")
     got = {(r.group_id, r.tile_x, r.tile_y)
-           for r in fill_holes(df, assume_distinct=True).collect()}
+           for r in fill_holes(df).collect()}
     assert got == expected

@@ -108,10 +108,9 @@ def test_bucketed_layout_prunes_partitions_and_matches(spark, data, tmp_path):
                           keep_cols=["p_lon", "p_lat"]).select(
         F.col("element_id").alias("point_id"), "p_lon", "p_lat", "tile_x", "tile_y")
     path = str(tmp_path / "pts_bucketed")
-    write_tiles(stored, path, 4, n_buckets=16)
+    write_tiles(stored, path, 4)
 
-    out = knn_tiled_bucketed(qs, path, zoom=4, ring=2, k=3, n_buckets=16,
-                             escalate=False)
+    out = knn_tiled_bucketed(qs, path, zoom=4, ring=2, k=3, escalate=False)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "bucket" in plan
     expect = {(r.query_id, r.rank, r.point_id)
@@ -136,7 +135,7 @@ def test_bucketed_escalation_exact_on_sparse_fixture(spark, tmp_path):
         knn_bruteforce,
         knn_tiled_bucketed,
     )
-    from mapsplit_spark.sinks.manifests import write_tiles
+    from mapsplit_spark.sinks.manifests import TILE_BUCKETS, write_tiles
 
     # 3 points thousands of km apart: at z8/ring1 (~300 km ring) no
     # query proves coverage → the ladder must escalate several zooms
@@ -152,11 +151,10 @@ def test_bucketed_escalation_exact_on_sparse_fixture(spark, tmp_path):
         F.col("element_id").alias("point_id"), "p_lon", "p_lat",
         "tile_x", "tile_y")
     path = str(tmp_path / "sparse_bucketed")
-    write_tiles(stored, path, 8, n_buckets=64)
+    write_tiles(stored, path, 8)
 
     got = {(r.query_id, r.rank, r.point_id)
-           for r in knn_tiled_bucketed(qs, path, zoom=8, ring=1, k=3,
-                                       n_buckets=64).collect()}
+           for r in knn_tiled_bucketed(qs, path, zoom=8, ring=1, k=3).collect()}
     expect = {(r.query_id, r.rank, r.point_id)
               for r in knn_bruteforce(qs, pts, k=3).collect()}
     assert got == expect
@@ -165,10 +163,10 @@ def test_bucketed_escalation_exact_on_sparse_fixture(spark, tmp_path):
     # set for the query's coarse ring is a strict subset of directories
     qt = _query_tiles(qs, 6)
     ringed = _ring_tiles(qt, 6, 1, ["query_id"])
-    buckets = _probe_buckets(spark, ringed, d=2, n_buckets=64)
-    assert buckets is not None and 0 < len(buckets) < 64
+    buckets = _probe_buckets(spark, ringed, d=2, n_buckets=TILE_BUCKETS)
+    assert buckets is not None and 0 < len(buckets) < TILE_BUCKETS
     # and the cutover to a full scan happens once enumeration can't pay
-    assert _probe_buckets(spark, ringed, d=5, n_buckets=64) is None
+    assert _probe_buckets(spark, ringed, d=5, n_buckets=TILE_BUCKETS) is None
 
 
 def test_tiled_exactness_randomized_densities(spark):

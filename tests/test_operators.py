@@ -430,7 +430,7 @@ def test_pyramid_counts_properties_and_plan(spark):
                     if cz == z + 1 and cx >> 1 == x and cy >> 1 == y]
         assert max(child_ns) <= n <= sum(child_ns)
 
-    plan = pyramid_counts(df, base_zoom=13, min_zoom=5, assume_distinct=True) \
+    plan = pyramid_counts(df, base_zoom=13, min_zoom=5) \
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 2  # ancestor dedupe + final agg, depth-free
     assert "EvalPython" not in plan and "Join" not in plan

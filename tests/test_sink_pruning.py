@@ -19,7 +19,7 @@ def test_bucketed_write_prunes_partitions(spark, images_dir):
     pairs = assign_and_expand(
         imgs.select("image_id", "lon", "lat"), "image_id", "lon", "lat", 13, 0.1
     )
-    write_tiles(with_tile_id(pairs, 13), OUT, 13, n_buckets=16)
+    write_tiles(with_tile_id(pairs, 13), OUT, 13)
     back = spark.read.parquet(OUT)
     one = back.filter(F.col("bucket") == 3)
     plan = one._jdf.queryExecution().executedPlan().toString()

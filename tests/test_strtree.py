@@ -13,11 +13,14 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from mapsplit_spark.operators import clip
 from mapsplit_spark.operators.clip import (
     _flatten_rings,
-    _in_any,
-    _in_any_indexed,
-    _membership_fn,
+    _membership_of,
+    _pairs_fn,
+    _pairs_indexed,
+    _pairs_linear,
+    _ring_index,
     clip_points,
     make_ring,
     STRTREE_MIN_RINGS,
@@ -37,6 +40,18 @@ def _ring_set(rng, n, rmin=0.5, rmax=15.0, kmax=24):
                    rng.uniform(rmin, rmax), k=int(rng.integers(3, kmax)))
         for _ in range(n)
     ]
+
+
+def _assert_paths_bitequal(px, py, rings):
+    """The linear and the tree candidate source give the same inside
+    pairs, and so the same OR-collapsed membership."""
+    lin = _pairs_linear(px, py, rings)
+    idx = _pairs_indexed(px, py, _flatten_rings(rings),
+                         build_strtree(np.array([b for _, b in rings])))
+    assert sorted(zip(lin[0].tolist(), lin[1].tolist())) == \
+        sorted(zip(idx[0].tolist(), idx[1].tolist()))
+    assert np.array_equal(_membership_of(lambda x, y: lin)(px, py),
+                          _membership_of(lambda x, y: idx)(px, py))
 
 
 def test_query_matches_bruteforce_bbox_candidates():
@@ -79,25 +94,23 @@ def test_indexed_membership_bitequal_linear(n_rings):
     rings = _ring_set(rng, n_rings)
     px = rng.uniform(-180, 180, 5000)
     py = rng.uniform(-85, 85, 5000)
-    lin = _in_any(px, py, rings)
-    idx = _in_any_indexed(px, py, _flatten_rings(rings),
-                          build_strtree(np.array([b for _, b in rings])))
-    assert np.array_equal(lin, idx)
+    _assert_paths_bitequal(px, py, rings)
 
 
 def test_membership_fn_auto_threshold():
+    """The ring count alone picks the tree (from STRTREE_MIN_RINGS on),
+    and the picked kernel's membership equals the linear scan's."""
     rng = np.random.default_rng(3)
     small = _ring_set(rng, STRTREE_MIN_RINGS - 1)
     large = _ring_set(rng, STRTREE_MIN_RINGS)
+    assert _ring_index([]) is None and _ring_index(small) is None
+    assert _ring_index(large) is not None
     px = rng.uniform(-180, 180, 200)
     py = rng.uniform(-85, 85, 200)
-    # either path, same answer — and "auto" must not change results
     for rings in (small, large):
-        auto = _membership_fn(rings, "auto")(px, py)
-        lin = _membership_fn(rings, False)(px, py)
-        forced = _membership_fn(rings, True)(px, py)
-        assert np.array_equal(auto, lin)
-        assert np.array_equal(auto, forced)
+        picked = _membership_of(_pairs_fn(rings))(px, py)
+        lin = _membership_of(lambda x, y: _pairs_linear(x, y, rings))(px, py)
+        assert np.array_equal(picked, lin)
 
 
 def test_degenerate_and_edge_rings():
@@ -111,23 +124,30 @@ def test_degenerate_and_edge_rings():
     ] + _ring_set(rng, 40)
     px = rng.uniform(-180, 180, 4000)
     py = rng.uniform(-85, 85, 4000)
-    lin = _in_any(px, py, rings)
-    idx = _in_any_indexed(px, py, _flatten_rings(rings),
-                          build_strtree(np.array([b for _, b in rings])))
-    assert np.array_equal(lin, idx)
+    _assert_paths_bitequal(px, py, rings)
 
 
-def test_clip_points_indexed_and_bc_match_linear(spark):
+def _run_on_path(monkeypatch, tree: bool, rings, op):
+    """Run ``op()`` with the operator's kernel forced onto one candidate
+    source.  The choice is made on the driver when the operator is
+    called, so the patched threshold reaches the pickled kernel."""
+    with monkeypatch.context() as m:
+        m.setattr(clip, "STRTREE_MIN_RINGS", 1 if tree else len(rings) + 1)
+        assert (_ring_index(rings) is not None) == tree
+        df = op()
+    return df.collect()
+
+
+def test_clip_points_indexed_and_bc_match_linear(spark, monkeypatch):
     rng = np.random.default_rng(17)
     outers = _ring_set(rng, 48, rmin=2, rmax=20)
     inners = _ring_set(rng, 20, rmin=0.5, rmax=4)
     pts = [(int(i), float(rng.uniform(-180, 180)), float(rng.uniform(-85, 85)))
            for i in range(4000)]
     df = spark.createDataFrame(pts, "id long, lon double, lat double")
-    base = sorted(r.id for r in
-                  clip_points(df, outers, inners, use_index=False).collect())
-    idx = sorted(r.id for r in
-                 clip_points(df, outers, inners, use_index=True).collect())
+    base, idx = (sorted(r.id for r in _run_on_path(
+        monkeypatch, tree, outers, lambda: clip_points(df, outers, inners)))
+        for tree in (False, True))
     assert base == idx
 
 
@@ -162,33 +182,31 @@ def test_zone_assign_matches_expected_membership(spark):
     got = sorted(
         (r.pid, r.zone) for r in
         zone_assign(_zone_points(spark), outers, holes,
-                    id_col="pid", use_index=False).collect()
+                    id_col="pid").collect()
     )
     assert got == [(1, 0), (2, 0), (2, 1), (3, 1), (4, 2)]
 
 
-def test_zone_assign_indexed_equals_linear(spark):
+def test_zone_assign_indexed_equals_linear(spark, monkeypatch):
     from mapsplit_spark.operators.clip import zone_assign
 
     outers, holes = _zone_rings()
     pts = _zone_points(spark)
-    lin = sorted((r.pid, r.zone) for r in
-                 zone_assign(pts, outers, holes, id_col="pid",
-                             use_index=False).collect())
-    idx = sorted((r.pid, r.zone) for r in
-                 zone_assign(pts, outers, holes, id_col="pid",
-                             use_index=True).collect())
+    lin, idx = (sorted((r.pid, r.zone) for r in _run_on_path(
+        monkeypatch, tree, outers,
+        lambda: zone_assign(pts, outers, holes, id_col="pid")))
+        for tree in (False, True))
     assert lin == idx
 
 
-def test_zone_assign_no_holes(spark):
+def test_zone_assign_no_holes(spark, monkeypatch):
     from mapsplit_spark.operators.clip import zone_assign
 
     outers, _ = _zone_rings()
     got = sorted(
-        (r.pid, r.zone) for r in
-        zone_assign(_zone_points(spark), outers, [],
-                    id_col="pid", use_index=True).collect()
+        (r.pid, r.zone) for r in _run_on_path(
+            monkeypatch, True, outers,
+            lambda: zone_assign(_zone_points(spark), outers, [], id_col="pid"))
     )
     # the hole point (5) now lands in both overlapping zones
     assert got == [(1, 0), (2, 0), (2, 1), (3, 1), (4, 2), (5, 0), (5, 1)]
