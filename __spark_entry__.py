@@ -1509,9 +1509,10 @@ def q_tile_idw(spark, sf_dir):
 def q_zone_transitions(spark, sf_dir):
     """Geofence enter/exit detection (operators/geofence.py): per-user
     consecutive events whose min-containing-zone differs — PIP via the
-    production Arrow kernel, linear scan at 40 rings (independent of
-    the oracle's 40 unrolled ring_pip_sql predicates folded with
-    LEAST), transitions via the per-user lag window.  Zone −1 = outside all rings."""
+    production Arrow kernel, linear scan at 40 rings (independent of the
+    oracle's 40 unrolled ring_pip_sql predicates folded with LEAST),
+    transitions via the per-user lag window.  Zone −1 = outside all
+    rings."""
     from mapsplit_spark.operators.clip import make_ring
     from mapsplit_spark.operators.geofence import zone_transitions
 

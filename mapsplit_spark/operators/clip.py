@@ -154,9 +154,11 @@ def _pairs_fn(rings):
     return lambda px, py: _pairs_linear(px, py, rings)
 
 
-def _membership_of(pairs_fn):
-    """(px, py) → bool "inside ≥1 ring": the OR-collapse of a
+def _membership_of(rings):
+    """(px, py) → bool "inside ≥1 of ``rings``": the OR-collapse of the
     ``_pairs_fn`` kernel's point indices."""
+    pairs_fn = _pairs_fn(rings)
+
     def inside(px, py):
         hit = np.zeros(px.shape[0], dtype=bool)
         hit[pairs_fn(px, py)[0]] = True
@@ -168,8 +170,8 @@ def clip_tiles(tiles_df: DataFrame, outers, inners, zoom: int) -> DataFrame:
     """Corner-parity mode (P8): keep tiles where ≥1 of the 4 corners is
     inside an outer ring and not inside any inner ring
     (MapSplit.java:1020-1065 — corner-only, approximate by design)."""
-    in_outer = _membership_of(_pairs_fn(outers))
-    in_inner = _membership_of(_pairs_fn(inners))
+    in_outer = _membership_of(outers)
+    in_inner = _membership_of(inners)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -196,8 +198,8 @@ def clip_points(points_df: DataFrame, outers, inners,
                 lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Exact point-level clip (engine precise mode): keep rows whose
     point is inside ≥1 outer ring and no inner ring."""
-    in_outer = _membership_of(_pairs_fn(outers))
-    in_inner = _membership_of(_pairs_fn(inners))
+    in_outer = _membership_of(outers)
+    in_inner = _membership_of(inners)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -229,7 +231,7 @@ def zone_assign(points_df: DataFrame, outers, inners,
     index story as clip_points: from ``STRTREE_MIN_RINGS`` rings the
     candidates per point are bounded by ring overlap, not ring count."""
     pairs_fn = _pairs_fn(outers)
-    in_inner = _membership_of(_pairs_fn(inners))
+    in_inner = _membership_of(inners)
     id_type = dict(points_df.dtypes)[id_col]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -266,7 +268,7 @@ def min_zone_fn(outers, inners):
     batch geofence (operators/geofence.py) and its streaming twin
     (streaming/geofence_stream.py)."""
     pairs_fn = _pairs_fn(outers)
-    in_inner = _membership_of(_pairs_fn(inners))
+    in_inner = _membership_of(inners)
 
     def zones(px: np.ndarray, py: np.ndarray) -> np.ndarray:
         out = np.full(len(px), -1, dtype=np.int32)

@@ -7,9 +7,10 @@ ordered window analytics (lag over the per-user timeline).
 
 Shape: ONE shuffle.  Zone membership including the min-zone fold is
 fully map-side (clip.min_zone_fn — rings, plus the STR tree from
-``STRTREE_MIN_RINGS`` rings on, ship once per executor, the per-point minimum is resolved inside the Arrow batch, so
-there is no groupBy-on-id/join-back round trip); the only exchange is
-the per-user transition window.  No Python outside the PIP kernel.
+``STRTREE_MIN_RINGS`` rings on, ship once per executor, the per-point
+minimum is resolved inside the Arrow batch, so there is no
+groupBy-on-id/join-back round trip); the only exchange is the per-user
+transition window.  No Python outside the PIP kernel.
 
 Zone convention: ``zone`` = the smallest index of a containing outer
 ring, −1 when outside all rings (overlaps resolve to the lowest index

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import sqlgen
-from ..sinks.manifests import TILE_BUCKETS
+from ..sinks.manifests import TILE_BUCKETS, tile_bucket
 from .assign import assign_tiles
 from .iterate import checkpoint_count, fixed_point
 
@@ -254,12 +254,12 @@ def _probe_buckets(spark, ringed: DataFrame, d: int, n_buckets: int) -> list[int
     bucketed at the BASE zoom: each coarse ring tile covers its 4^d
     base-zoom descendants (quadtree nesting), and the bucket of every
     descendant is what the partition filter needs.  The hash is computed
-    by the SAME JVM expression the writer used (xxhash64 — not
-    reproducible driver-side), over the exploded descendant relation —
-    still a tiny query-side job.  Returns None when the descendant
-    enumeration can no longer pay for itself (≥ every bucket would be
-    read anyway) — the caller then scans unfiltered, which is exactly
-    the brute-force coverage the deep ladder ends in."""
+    by the SAME JVM expression the writer used (``tile_bucket``), over
+    the exploded descendant relation — still a tiny query-side job;
+    ``n_buckets`` only sizes the cutover.  Returns None when the
+    descendant enumeration can no longer pay for itself (≥ every bucket
+    would be read anyway) — the caller then scans unfiltered, which is
+    exactly the brute-force coverage the deep ladder ends in."""
     side = 1 << d
     n_desc_per = side * side
     ring_tiles = ringed.select("tile_x", "tile_y").distinct()
@@ -278,9 +278,7 @@ def _probe_buckets(spark, ringed: DataFrame, d: int, n_buckets: int) -> list[int
         (F.col("by") + F.floor(F.col("i") / side)).alias("tile_y"),
     )
     buckets = sorted({
-        r.bucket for r in desc.select(
-            F.pmod(F.xxhash64("tile_x", "tile_y"), F.lit(n_buckets)).alias("bucket")
-        ).distinct().collect()
+        r.bucket for r in desc.select(tile_bucket().alias("bucket")).distinct().collect()
     })
     return buckets if len(buckets) < n_buckets else None
 

@@ -22,14 +22,21 @@ round 2).  Salting never changes output values (ids re-sort in phase 2).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # hash buckets of the stored tile layout (write_tiles); the bucketed kNN
-# read path (knn.knn_tiled_bucketed) recomputes a tile's bucket from it,
-# so writer and reader must share this one value — a mismatch filters
-# the wrong directories and can miss a closer point
+# read path (knn.knn_tiled_bucketed) recomputes a tile's bucket with
+# ``tile_bucket``, so writer and reader share one expression — a
+# mismatch filters the wrong directories and can miss a closer point
 TILE_BUCKETS = 256
+
+
+def tile_bucket() -> Column:
+    """The stored layout's bucket of a (tile_x, tile_y) row:
+    pmod(xxhash64(tile_x, tile_y), TILE_BUCKETS) — JVM-side, not
+    reproducible driver-side."""
+    return F.pmod(F.xxhash64("tile_x", "tile_y"), F.lit(TILE_BUCKETS))
 
 
 def tile_manifests(assignments: DataFrame, zoom: int, n_salts: int = 32,
@@ -109,7 +116,7 @@ def write_tiles(df_with_payload: DataFrame, out_path: str, zoom: int) -> None:
     """
     (
         df_with_payload
-        .withColumn("bucket", F.pmod(F.xxhash64("tile_x", "tile_y"), F.lit(TILE_BUCKETS)))
+        .withColumn("bucket", tile_bucket())
         .repartition("bucket")
         .sortWithinPartitions("tile_x", "tile_y")
         .write.mode("overwrite")

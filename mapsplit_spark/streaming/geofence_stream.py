@@ -7,9 +7,9 @@ Construction mirrors the streaming dedup twin (dedup_stream.py):
 
 * zone membership is computed map-side on the arriving micro-batch by
   the SAME kernel the batch operator uses (clip.min_zone_fn inside
-  ``geofence.with_min_zone`` — mapInPandas is streaming-safe, rings
-  and the ring-count-picked index ship once per executor), so the zone semantics carry over
-  verbatim;
+  ``geofence.with_min_zone`` — mapInPandas is streaming-safe, rings and
+  the ring-count-picked index ship once per executor), so the zone
+  semantics carry over verbatim;
 * ``applyInPandasWithState`` keyed by the user holds ONE row of state
   per user — the last seen (zone) — and emits a transition row for
   every arrival whose zone differs from its predecessor.  State is

@@ -42,6 +42,14 @@ def _ring_set(rng, n, rmin=0.5, rmax=15.0, kmax=24):
     ]
 
 
+def _collapse(n, pairs):
+    """OR-collapse of (point_idx, ring_idx) pairs → bool membership over
+    ``n`` points — what ``_membership_of`` does to its kernel's pairs."""
+    hit = np.zeros(n, dtype=bool)
+    hit[pairs[0]] = True
+    return hit
+
+
 def _assert_paths_bitequal(px, py, rings):
     """The linear and the tree candidate source give the same inside
     pairs, and so the same OR-collapsed membership."""
@@ -50,8 +58,7 @@ def _assert_paths_bitequal(px, py, rings):
                          build_strtree(np.array([b for _, b in rings])))
     assert sorted(zip(lin[0].tolist(), lin[1].tolist())) == \
         sorted(zip(idx[0].tolist(), idx[1].tolist()))
-    assert np.array_equal(_membership_of(lambda x, y: lin)(px, py),
-                          _membership_of(lambda x, y: idx)(px, py))
+    assert np.array_equal(_collapse(px.shape[0], lin), _collapse(px.shape[0], idx))
 
 
 def test_query_matches_bruteforce_bbox_candidates():
@@ -99,7 +106,8 @@ def test_indexed_membership_bitequal_linear(n_rings):
 
 def test_membership_fn_auto_threshold():
     """The ring count alone picks the tree (from STRTREE_MIN_RINGS on),
-    and the picked kernel's membership equals the linear scan's."""
+    and the picked kernel's pairs and membership equal the linear
+    scan's."""
     rng = np.random.default_rng(3)
     small = _ring_set(rng, STRTREE_MIN_RINGS - 1)
     large = _ring_set(rng, STRTREE_MIN_RINGS)
@@ -108,9 +116,12 @@ def test_membership_fn_auto_threshold():
     px = rng.uniform(-180, 180, 200)
     py = rng.uniform(-85, 85, 200)
     for rings in (small, large):
-        picked = _membership_of(_pairs_fn(rings))(px, py)
-        lin = _membership_of(lambda x, y: _pairs_linear(x, y, rings))(px, py)
-        assert np.array_equal(picked, lin)
+        lin = _pairs_linear(px, py, rings)
+        picked = _pairs_fn(rings)(px, py)
+        assert sorted(zip(*map(np.ndarray.tolist, picked))) == \
+            sorted(zip(*map(np.ndarray.tolist, lin)))
+        assert np.array_equal(_membership_of(rings)(px, py),
+                              _collapse(px.shape[0], lin))
 
 
 def test_degenerate_and_edge_rings():

@@ -1,10 +1,9 @@
 """Interleaved A/B of the repository benchmark: a base revision against
 the working tree.
 
-    python3 tools/ab.py --base HEAD~1 --pairs 5 [--workload split_full ...]
+    python3 tools/ab.py --base HEAD~1 --pairs 5
 
-For each workload (default: every workload in ``BENCHMARK.json``) and
-each pair i = 1..N it runs
+For each workload in ``BENCHMARK.json`` and each pair i = 1..N it runs
 
     python3 perfbench/run.py --workload W --seed i --seconds S --trace 0
 
@@ -101,13 +100,10 @@ def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--base", default="HEAD", help="git revision to compare against")
     ap.add_argument("--pairs", type=int, default=5)
-    ap.add_argument("--workload", action="append",
-                    help="repeatable; default every BENCHMARK.json workload")
     args = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    workloads = args.workload or [w["name"] for w in bench["workloads"]]
     # a SIGTERM unwinds like Ctrl-C: the running benchmark is killed and
     # the copies are removed
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
@@ -125,7 +121,7 @@ def main(argv: list[str] | None = None) -> None:
                 dst = os.path.join(checkouts["head"], rel)
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 shutil.copy2(os.path.join(ROOT, rel), dst)
-        for w in workloads:
+        for w in [w["name"] for w in bench["workloads"]]:
             records = []
             for i in range(1, args.pairs + 1):
                 for side in ("base", "head") if i % 2 else ("head", "base"):
