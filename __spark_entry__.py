@@ -193,23 +193,6 @@ def q_node_backfill(spark, sf_dir):
     return backfill_member_tiles(members, wt, node_tiles, "way_id", "member_id")
 
 
-def q_knn(spark, sf_dir):
-    """kNN lookup (north-star addition): 5 query points, top-5 events by
-    exact haversine, deterministic ties."""
-    qk = "(n_nationkey * 37 + 11)"
-    queries = _t(spark, sf_dir, "nation").filter("n_nationkey < 5").select(
-        F.col("n_nationkey").cast("long").alias("query_id"),
-        F.expr(sqlgen.derived_lon_sql(qk)).alias("q_lon"),
-        F.expr(sqlgen.derived_lat_sql(qk)).alias("q_lat"),
-    )
-    points = _t(spark, sf_dir, "events").select(
-        F.col("event_id").alias("point_id"),
-        F.expr(EV_LON).alias("p_lon"),
-        F.expr(EV_LAT).alias("p_lat"),
-    )
-    return knn_bruteforce(queries, points, k=5).withColumnRenamed("rank", "rnk")
-
-
 def _knn_inputs(spark, sf_dir):
     qk = "(n_nationkey * 37 + 11)"
     queries = _t(spark, sf_dir, "nation").filter("n_nationkey < 5").select(
@@ -223,6 +206,13 @@ def _knn_inputs(spark, sf_dir):
         F.expr(EV_LAT).alias("p_lat"),
     )
     return queries, points
+
+
+def q_knn(spark, sf_dir):
+    """kNN lookup (north-star addition): 5 query points, top-5 events by
+    exact haversine, deterministic ties."""
+    queries, points = _knn_inputs(spark, sf_dir)
+    return knn_bruteforce(queries, points, k=5).withColumnRenamed("rank", "rnk")
 
 
 def q_knn_tiled(spark, sf_dir):
@@ -495,8 +485,8 @@ def q_doc_dedup_keep(spark, sf_dir):
     """Corpus reduction after group resolution: drop every non-
     representative member (component min survives, untouched docs
     survive) — |kept| = |docs| − Σ(|group|−1)."""
+    from mapsplit_spark.operators.components import connected_components, dedup_keep
     from mapsplit_spark.operators.dedup import hamming_near_dups
-    from mapsplit_spark.operators.components import dedup_keep
 
     bands = [sqlgen.derived_phash_band_sql("doc_id", k) for k in range(4)]
     docs = _t(spark, sf_dir, "documents").select(
@@ -506,7 +496,7 @@ def q_doc_dedup_keep(spark, sf_dir):
     pairs = hamming_near_dups(
         docs, id_col="doc_id", hash_col="phash", radius=3, n_bands=4, bits=60
     )
-    return dedup_keep(docs, pairs).select("doc_id")
+    return dedup_keep(docs, connected_components(pairs)).select("doc_id")
 
 
 def q_tile_cellid(spark, sf_dir):

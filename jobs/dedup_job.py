@@ -101,7 +101,7 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
-    from mapsplit_spark.operators.components import connected_components
+    from mapsplit_spark.operators.components import connected_components, dedup_keep
     from mapsplit_spark.operators.dedup import auto_bands, hamming_near_dups
     from mapsplit_spark.session import get_spark
 
@@ -132,16 +132,11 @@ def main(argv: list[str] | None = None) -> None:
         comp.write.mode("overwrite").parquet(f"{args.output}/components")
         n_kept = None
         if args.keep:
-            losers = comp.filter(F.col("v") != F.col("component")).select(
-                F.col("v").alias(args.id_col)
-            )
-            kept = imgs.join(losers, args.id_col, "left_anti")
-            kept.write.mode("overwrite").parquet(f"{args.output}/kept")
+            dedup_keep(imgs, comp, args.id_col).write.mode("overwrite") \
+                .parquet(f"{args.output}/kept")
             n_kept = spark.read.parquet(f"{args.output}/kept").count()
         ann_recall = None
         if args.embeddings:
-            from pyspark.sql import functions as F2  # noqa: F401
-
             from mapsplit_spark.operators.similarity import ivf_recall
 
             emb = spark.read.parquet(args.embeddings)

@@ -147,13 +147,13 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
     return labels.select("v", F.col("lab").alias("component"))
 
 
-def dedup_keep(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-               max_iters: int = 20) -> DataFrame:
+def dedup_keep(docs: DataFrame, components: DataFrame,
+               id_col: str = "doc_id") -> DataFrame:
     """Drop every document that is NOT its dup group's representative
-    (component min); documents in no pair survive untouched.  The
-    standard corpus-dedup reduction: |kept| = |docs| − Σ (|group|−1)."""
-    comp = connected_components(pairs, max_iters)
-    losers = comp.filter(F.col("v") != F.col("component")).select(
+    (component min) — ``components`` as ``connected_components``
+    returns them; documents in no pair survive untouched.  The standard
+    corpus-dedup reduction: |kept| = |docs| − Σ (|group|−1)."""
+    losers = components.filter(F.col("v") != F.col("component")).select(
         F.col("v").alias(id_col)
     )
     return docs.join(losers, id_col, "left_anti")

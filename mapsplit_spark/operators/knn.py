@@ -1,16 +1,18 @@
 """kNN lookup — engine addition mandated by BASELINE.json north_star
 (no reference analog; SURVEY.md §2.3 "new surface").
 
-Two paths:
-
 * ``knn_bruteforce`` — exact: query-set × points cross join (query set
   broadcast — it is small by definition) + haversine + per-query top-k
   window.  The baseline and the oracle-checkable path.
-* ``knn_tiled`` — scale path: candidates restricted to the query's tile
-  k-ring (quadtree analog of an H3 k-ring) before the exact haversine
-  re-rank.  Turns the O(Q×N) cross join into a partition-pruned join on
-  tile_id: at 100 TB the points side is bucketed by tile, so the ring
-  join touches only (2r+1)² tiles per query.
+* ``knn_tiled`` / ``knn_tiled_bucketed`` — scale path: candidates
+  restricted to the query's tile k-ring (quadtree analog of an H3
+  k-ring) before the exact haversine re-rank.  Turns the O(Q×N) cross
+  join into a partition-pruned join on tile_id: at 100 TB the points
+  side is bucketed by tile, so the ring join touches only (2r+1)² tiles
+  per query.  Both build candidates through one probe
+  (``_tile_ring_probe``); they differ only in where a level's points
+  come from (the in-memory frame or the stored bucketed layout).
+* ``knn_hex`` — the same contract on the hex lattice (k-disks).
 
 Scale-correctness details of the tiled path:
 
@@ -20,20 +22,23 @@ Scale-correctness details of the tiled path:
 * ring x wraps modulo 2^zoom so queries near lon ±180 see candidates on
   the other side of the antimeridian seam; ring y is clamped to
   [0, 2^zoom) (there is nothing beyond the Mercator poles);
-* shortfall/coverage escalation: a query's top-k is accepted only when
-  its k-th candidate distance is PROVABLY inside the probed ring — i.e.
+* coverage escalation, the only mode of all three scale paths
+  (``_coverage_ladder``): a query's top-k is accepted only when its
+  k-th candidate distance is PROVABLY inside the probed ring — i.e.
   ≤ a conservative lower bound on the distance from the query to the
   ring's boundary (meridian / parallel great-circle bounds).  Unproven
   queries (sparse oceans at 100× density variance) re-probe at
   progressively coarser zooms (ring area ×4 per step) and finally fall
-  back to exact brute force — so the tiled path returns the exact top-k
-  at every density, and the expensive fallback only ever sees the few
-  queries the ladder could not prove.
+  back to exact brute force — so the scale paths return the exact
+  top-k at every density, and the expensive fallback only ever sees
+  the few queries the ladder could not prove.  The ladder runs Spark
+  jobs EAGERLY at call time (each level's accept decision needs that
+  level's coverage proof).
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,6 +51,9 @@ from .iterate import checkpoint_count, fixed_point
 
 EARTH_R_KM = 6371.0088  # matches sqlgen.haversine_sql
 _FAR_KM = 1.0e9  # "side fully covered" sentinel (wraps / poles)
+# knn_hex's disk ladder: radii K0·2^i up to K_MAX, then brute force
+K0 = 1
+K_MAX = 8
 
 
 def _ranked(joined: DataFrame, k: int) -> DataFrame:
@@ -77,7 +85,7 @@ def _coarsen_tiles(pt_base: DataFrame, d: int) -> DataFrame:
     (quadtree nesting: floor(v·2^(z−d)) == floor(v·2^z) >> d, clamping
     included) — escalation levels never re-scan or re-project the points
     table; the only new expression is the shift itself (pinned by
-    tests/test_plans_r3.py)."""
+    tests/test_knn.py)."""
     if d == 0:
         return pt_base
     return pt_base.select(
@@ -111,16 +119,6 @@ def _ring_tiles(qt: DataFrame, zoom: int, ring: int,
         (F.col("tile_y") + F.col("ring.dy")).alias("tile_y"),
     ).filter((F.col("tile_y") >= 0) & (F.col("tile_y") < n)).dropDuplicates(
         [*keep, "tile_x", "tile_y"]  # wrap can alias ring tiles at tiny zooms
-    )
-
-
-def _ring_candidates(qt: DataFrame, points_tiled: DataFrame, zoom: int,
-                     ring: int) -> DataFrame:
-    """Query ring tiles ⋈ tiled points.
-    → (query_id, q_lon, q_lat, point_id, p_lon, p_lat)."""
-    ringed = _ring_tiles(qt, zoom, ring, ["query_id", "q_lon", "q_lat"])
-    return F.broadcast(ringed).join(points_tiled, ["tile_x", "tile_y"]).select(
-        "query_id", "q_lon", "q_lat", "point_id", "p_lon", "p_lat"
     )
 
 
@@ -180,17 +178,18 @@ def _proven(ranked: DataFrame, coverage: DataFrame, k: int) -> DataFrame:
 
 
 def _coverage_ladder(queries: DataFrame, levels: list, probe, fallback,
-                     k: int, escalate: bool) -> DataFrame:
+                     k: int) -> DataFrame:
     """The exact-top-k escalation shared by the kNN scale paths.
     ``probe(pending, level)`` → (candidate pairs, per-query ``cov_km``);
     level by level, queries whose top-k is provably inside their coverage
     (``_proven``) are accepted and the rest re-probe at the next level;
-    ``fallback(pending)`` answers what the last level leaves.  Eager with
-    ``escalate``: per level, ranked candidates and the pending set are
-    checkpointed, the pending count observed on its checkpoint."""
+    ``fallback(pending)`` answers what the last level leaves.  Eager: per
+    level, ranked candidates and the pending set are checkpointed, the
+    pending count observed on its checkpoint.  The checkpointed
+    intermediates backing the result are context-cleaned once the
+    caller drops its reference (localCheckpoint blocks are GC-managed,
+    not pinned)."""
     pending = queries.select("query_id", "q_lon", "q_lat")
-    if not escalate and levels:
-        return _ranked(probe(pending, levels[0])[0], k)
 
     def level(i, state):
         pending, results = state
@@ -207,8 +206,26 @@ def _coverage_ladder(queries: DataFrame, levels: list, probe, fallback,
     return reduce(DataFrame.unionByName, results)
 
 
+def _tile_ring_probe(pending: DataFrame, z: int, zoom: int, ring: int,
+                     points_at) -> tuple[DataFrame, DataFrame]:
+    """The probe of both tiled ladders at zoom ``z`` ≤ base ``zoom``:
+    the pending queries' ring tiles (broadcast — the query side is small
+    by definition) ⋈ ``points_at(ringed, zoom − z)``, the points with
+    their tiles at zoom z.  → (query_id, q_lon, q_lat, point_id, p_lon,
+    p_lat) candidates, one row per (query, point), and the per-query
+    ``cov_km``."""
+    qt = _query_tiles(pending, z)
+    ringed = _ring_tiles(qt, z, ring, ["query_id", "q_lon", "q_lat"])
+    cands = F.broadcast(ringed).join(points_at(ringed, zoom - z), ["tile_x", "tile_y"])
+    return (
+        cands.select("query_id", "q_lon", "q_lat", "point_id", "p_lon", "p_lat")
+        .dropDuplicates(["query_id", "point_id"]),
+        _coverage_radius_km(qt, z, ring),
+    )
+
+
 def knn_tiled(queries: DataFrame, points: DataFrame, zoom: int, ring: int = 1,
-              k: int = 5, escalate: bool = True) -> DataFrame:
+              k: int = 5) -> DataFrame:
     """Tile-ring candidate generation + exact haversine re-rank.
 
     Each query expands to its (2·ring+1)² surrounding tiles (H3 k-ring
@@ -216,56 +233,44 @@ def knn_tiled(queries: DataFrame, points: DataFrame, zoom: int, ring: int = 1,
     join hits only ring tiles.  With the points side bucketed/partitioned
     by tile this is a partition-pruned join, not a cross join.
 
-    With ``escalate`` (default) the result is EXACT at any density: each
-    query's top-k is accepted only when provably covered by its ring
-    (see ``_coverage_radius_km``); unproven queries walk coarser zooms
-    down to zoom 0 (ring area ×4 per step) and finally fall back
-    to brute force — by construction the fallback set is tiny (the few
-    sparse-region queries).  ``escalate=False`` keeps the single-probe
-    behaviour for callers that sized zoom/ring themselves.
-
-    NOTE: ``escalate=True`` executes Spark jobs EAGERLY at call time
-    (the per-level accept/retry decision needs each level's coverage
-    proof — two eager localCheckpoints per zoom), unlike the lazy
-    single-probe path.  The checkpointed intermediates backing the
-    returned DataFrame are context-cleaned once the caller drops its
-    reference (localCheckpoint blocks are GC-managed, not pinned).
+    The result is EXACT at any density: each query's top-k is accepted
+    only when provably covered by its ring (see ``_coverage_radius_km``);
+    unproven queries walk coarser zooms down to zoom 0 (ring area ×4
+    per step) and finally fall back to brute force — by construction
+    the fallback set is tiny (the few sparse-region queries).  There is
+    no single-probe mode: the call runs the ladder's Spark jobs EAGERLY
+    (two localCheckpoints per zoom reached).
     """
     # assign the big points side ONCE at the base zoom; coarser levels
     # derive by bit-shift (quadtree nesting: floor(v·2^(z−d)) ==
     # floor(v·2^z) >> d, clamping included) — escalation never rescans
     # or re-projects the points table
     pt_base = _tiled_points(points, zoom)
-
-    def probe(pending, z):
-        qt = _query_tiles(pending, z)
-        cands = _ring_candidates(qt, _coarsen_tiles(pt_base, zoom - z), z, ring)
-        return (cands.dropDuplicates(["query_id", "point_id"]),
-                _coverage_radius_km(qt, z, ring))
-
+    probe = partial(_tile_ring_probe, zoom=zoom, ring=ring,
+                    points_at=lambda _, d: _coarsen_tiles(pt_base, d))
     return _coverage_ladder(
         queries, list(range(zoom, -1, -1)), probe,
-        lambda pending: knn_bruteforce(pending, points, k), k, escalate,
+        lambda pending: knn_bruteforce(pending, points, k), k,
     )
 
 
-def _probe_buckets(spark, ringed: DataFrame, d: int, n_buckets: int) -> list[int] | None:
+def _probe_buckets(ringed: DataFrame, d: int) -> list[int] | None:
     """Bucket set for a ring-tile relation at zoom z−d against a layout
     bucketed at the BASE zoom: each coarse ring tile covers its 4^d
     base-zoom descendants (quadtree nesting), and the bucket of every
     descendant is what the partition filter needs.  The hash is computed
     by the SAME JVM expression the writer used (``tile_bucket``), over
-    the exploded descendant relation — still a tiny query-side job;
-    ``n_buckets`` only sizes the cutover.  Returns None when the
-    descendant enumeration can no longer pay for itself (≥ every bucket
-    would be read anyway) — the caller then scans unfiltered, which is
-    exactly the brute-force coverage the deep ladder ends in."""
+    the exploded descendant relation — still a tiny query-side job.
+    Returns None when the descendant enumeration can no longer pay for
+    itself (≥ every bucket would be read anyway) — the caller then scans
+    unfiltered, which is exactly the brute-force coverage the deep
+    ladder ends in."""
     side = 1 << d
     n_desc_per = side * side
     ring_tiles = ringed.select("tile_x", "tile_y").distinct()
     n_ring = ring_tiles.count()
-    if n_ring * n_desc_per >= n_buckets * 4:
-        # expected distinct buckets ≈ n_buckets·(1−e^{−desc/n_buckets}):
+    if n_ring * n_desc_per >= TILE_BUCKETS * 4:
+        # expected distinct buckets ≈ B·(1−e^{−desc/B}) for B buckets:
         # at 4× oversampling the filter keeps <2% of directories out —
         # not worth the enumeration
         return None
@@ -280,12 +285,25 @@ def _probe_buckets(spark, ringed: DataFrame, d: int, n_buckets: int) -> list[int
     buckets = sorted({
         r.bucket for r in desc.select(tile_bucket().alias("bucket")).distinct().collect()
     })
-    return buckets if len(buckets) < n_buckets else None
+    return buckets if len(buckets) < TILE_BUCKETS else None
+
+
+def _stored_points_at(points_path: str, ringed: DataFrame, d: int) -> DataFrame:
+    """A ladder level's points from the stored bucketed layout: only the
+    bucket directories of the ring's base-zoom descendants
+    (``_probe_buckets``, a filter on the PARTITION column — pruned at
+    planning time), tiles coarsened by bit-shift to zoom z = base − d."""
+    pts = ringed.sparkSession.read.parquet(points_path)
+    buckets = _probe_buckets(ringed, d)
+    if buckets is not None:
+        pts = pts.filter(F.col("bucket").isin(buckets))
+    return _coarsen_tiles(
+        pts.select("point_id", "p_lon", "p_lat", "tile_x", "tile_y"), d
+    )
 
 
 def knn_tiled_bucketed(queries: DataFrame, points_path: str, zoom: int,
-                       ring: int = 1, k: int = 5,
-                       escalate: bool = True) -> DataFrame:
+                       ring: int = 1, k: int = 5) -> DataFrame:
     """kNN over a tile-BUCKETED points layout (sinks.manifests.write_tiles:
     parquet partitioned by bucket = pmod(xxhash64(tile_x, tile_y),
     TILE_BUCKETS)) — the 100 TB read path: the query set's ring tiles map to
@@ -293,43 +311,28 @@ def knn_tiled_bucketed(queries: DataFrame, points_path: str, zoom: int,
     other bucket directory at planning time, and only then does the ring
     equi-join + exact re-rank run.
 
-    With ``escalate`` (default, r4 — VERDICT r3 missing #2) the stored
-    path walks the SAME coverage-proof ladder as ``knn_tiled``: a
-    query's top-k is accepted only when provably inside its probed ring;
-    unproven queries re-probe at coarser zooms, where each coarse ring
-    tile's 4^d base-zoom descendants define the (wider) bucket set to
-    read — partition pruning persists level by level until the
-    enumeration would cover every bucket anyway, at which point the
-    level reads the full layout (≡ the brute-force fallback of the
-    in-memory ladder).  Exact at any density, by the same argument.
+    The stored path walks the SAME coverage-proof ladder and the same
+    probe as ``knn_tiled``: a query's top-k is accepted only when
+    provably inside its probed ring; unproven queries re-probe at
+    coarser zooms, where each coarse ring tile's 4^d base-zoom
+    descendants define the (wider) bucket set to read — partition
+    pruning persists level by level until the enumeration would cover
+    every bucket anyway, at which point the level reads the full layout
+    (≡ the brute-force fallback of the in-memory ladder).  Exact at any
+    density, by the same argument, and eager like ``knn_tiled``.
 
     The stored layout must carry (point_id, p_lon, p_lat, tile_x,
     tile_y) at the BASE zoom; coarser levels derive tiles by bit-shift
     (quadtree nesting), never re-projecting the stored rows.
     """
-    spark = queries.sparkSession
-
-    def probe(pending, z):
-        d = zoom - z
-        qt = _query_tiles(pending, z)
-        buckets = _probe_buckets(spark, _ring_tiles(qt, z, ring, ["query_id"]),
-                                 d, TILE_BUCKETS)
-        pts = spark.read.parquet(points_path)
-        if buckets is not None:
-            pts = pts.filter(F.col("bucket").isin(buckets))
-        pt_z = _coarsen_tiles(
-            pts.select("point_id", "p_lon", "p_lat", "tile_x", "tile_y"), d
-        )
-        cands = _ring_candidates(qt, pt_z, z, ring)
-        return (cands.dropDuplicates(["query_id", "point_id"]),
-                _coverage_radius_km(qt, z, ring))
+    probe = partial(_tile_ring_probe, zoom=zoom, ring=ring,
+                    points_at=partial(_stored_points_at, points_path))
 
     def fallback(pending):
-        points = spark.read.parquet(points_path).select("point_id", "p_lon", "p_lat")
-        return knn_bruteforce(pending, points, k)
+        points = queries.sparkSession.read.parquet(points_path)
+        return knn_bruteforce(pending, points.select("point_id", "p_lon", "p_lat"), k)
 
-    return _coverage_ladder(queries, list(range(zoom, -1, -1)),
-                            probe, fallback, k, escalate)
+    return _coverage_ladder(queries, list(range(zoom, -1, -1)), probe, fallback, k)
 
 
 # ---------------------------------------------------------------------------
@@ -411,9 +414,22 @@ def _hex_coverage_km(qt: DataFrame, k: int, s_deg: float) -> DataFrame:
     )
 
 
+def _hex_probe(pending: DataFrame, kk: int, pt: DataFrame,
+               s_deg: float) -> tuple[DataFrame, DataFrame]:
+    """The hex ladder's probe at disk radius ``kk``: the pending queries'
+    exploded k-disks (broadcast — the query side is small by definition)
+    ⋈ the hex-assigned points ``pt`` → (candidate pairs, per-query
+    ``cov_km``)."""
+    qt = _hex_assigned(pending, "query_id", "q_lon", "q_lat", s_deg)
+    cells = _hex_disk_cells(qt, kk, ["query_id", "q_lon", "q_lat"])
+    cands = F.broadcast(cells).join(pt, ["hq", "hr"]).select(
+        "query_id", "q_lon", "q_lat", "point_id", "p_lon", "p_lat"
+    )
+    return cands, _hex_coverage_km(qt, kk, s_deg)
+
+
 def knn_hex(queries: DataFrame, points: DataFrame, s_deg: float,
-            k: int = 5, k0: int = 1, k_max: int = 8,
-            escalate: bool = True) -> DataFrame:
+            k: int = 5) -> DataFrame:
     """Hex k-disk candidate generation + exact haversine re-rank.
 
     queries(query_id, q_lon, q_lat) × points(point_id, p_lon, p_lat) →
@@ -426,27 +442,17 @@ def knn_hex(queries: DataFrame, points: DataFrame, s_deg: float,
     (broadcast — query side is small by definition) against the point
     cells, re-ranks by exact haversine, and accepts only queries whose
     k-th distance is provably inside the disk (``_hex_coverage_km``).
-    Unproven queries escalate k ×2 up to ``k_max``, then fall back to
-    brute force (sparse regions + the antimeridian seam, which the
-    non-wrapping lattice never covers).
+    Unproven queries escalate the disk radius from ``K0`` ×2 up to
+    ``K_MAX``, then fall back to brute force (sparse regions + the
+    antimeridian seam, which the non-wrapping lattice never covers).
 
-    Like knn_tiled, ``escalate=True`` runs eagerly at call time (the
-    per-level accept decision needs each level's coverage proof).
+    Like knn_tiled there is no single-probe mode: the call runs the
+    ladder's Spark jobs eagerly (the per-level accept decision needs
+    each level's coverage proof).
     """
-    if k0 < 1:
-        raise ValueError("k0 must be >= 1 (a 0-disk has no coverage proof)")
     pt = _hex_assigned(points.select("point_id", "p_lon", "p_lat"),
                        "point_id", "p_lon", "p_lat", s_deg)
-
-    def probe(pending, kk):
-        qt = _hex_assigned(pending, "query_id", "q_lon", "q_lat", s_deg)
-        cells = _hex_disk_cells(qt, kk, ["query_id", "q_lon", "q_lat"])
-        cands = F.broadcast(cells).join(pt, ["hq", "hr"]).select(
-            "query_id", "q_lon", "q_lat", "point_id", "p_lon", "p_lat"
-        )
-        return cands, _hex_coverage_km(qt, kk, s_deg)
-
-    levels = [k0 << i for i in range(max(k_max // k0, 0).bit_length())]  # k0·2^i ≤ k_max
-    return _coverage_ladder(queries, levels, probe,
-                            lambda pending: knn_bruteforce(pending, points, k),
-                            k, escalate)
+    levels = [K0 << i for i in range(max(K_MAX // K0, 0).bit_length())]  # K0·2^i ≤ K_MAX
+    return _coverage_ladder(queries, levels,
+                            partial(_hex_probe, pt=pt, s_deg=s_deg),
+                            lambda pending: knn_bruteforce(pending, points, k), k)

@@ -86,35 +86,39 @@ def dot_pair(a: str, b: str, dim: int) -> Column:
     return dot_col(F.col(a), F.col(b))
 
 
-def _cos_pair(vec_q: str, vec_c: str, dim: int) -> Column:
-    """Per-pair cosine with the norms read from the precomputed side
-    columns (``_qn`` / ``_cn``) — the n² pair stream does ONE dot, not
-    three."""
-    return dot_pair(vec_q, vec_c, dim) / (F.col("_qn") * F.col("_cn"))
-
-
-def _with_norms(queries: DataFrame, corpus: DataFrame,
-                vec_q: str, vec_c: str) -> tuple[DataFrame, DataFrame]:
+def _with_norms(queries: DataFrame,
+                corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Norms once per SIDE (n rows, not n²) — the pair stream then does
+    ONE dot, not three."""
     return (
-        queries.withColumn("_qn", norm_col(F.col(vec_q))),
-        corpus.withColumn("_cn", norm_col(F.col(vec_c))),
+        queries.withColumn("_qn", norm_col(F.col("q_vec"))),
+        corpus.withColumn("_cn", norm_col(F.col("c_vec"))),
     )
 
 
-def cosine_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 3,
-                id_q: str = "qid", id_c: str = "cid",
-                vec_q: str = "q_vec", vec_c: str = "c_vec") -> DataFrame:
-    """→ (qid, rank, cid, cos_sim) — exact cosine top-k, self-matches
-    excluded, ties broken by cid for determinism."""
-    qn, cn = _with_norms(queries, corpus, vec_q, vec_c)
-    joined = F.broadcast(qn).crossJoin(cn).filter(F.col(id_q) != F.col(id_c))
-    w = Window.partitionBy(id_q).orderBy(F.col("cos_sim").desc(), F.col(id_c).asc())
+def _cosine_ranked(joined: DataFrame, dim: int, k: int) -> DataFrame:
+    """The exact cosine re-rank every top-k path ends in: a (query,
+    corpus) pair stream carrying both sides' norms (``_with_norms``) →
+    (qid, rank, cid, cos_sim), self-matches excluded, ties broken by cid
+    for determinism."""
+    cos = dot_pair("q_vec", "c_vec", dim) / (F.col("_qn") * F.col("_cn"))
+    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("cid").asc())
     return (
-        joined.withColumn("cos_sim", F.round(_cos_pair(vec_q, vec_c, dim), 6))
+        joined.filter(F.col("qid") != F.col("cid"))
+        .withColumn("cos_sim", F.round(cos, 6))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(id_q, "rank", id_c, "cos_sim")
+        .select("qid", "rank", "cid", "cos_sim")
     )
+
+
+def cosine_topk(queries: DataFrame, corpus: DataFrame, dim: int,
+                k: int = 3) -> DataFrame:
+    """queries(qid, q_vec) × corpus(cid, c_vec) → (qid, rank, cid,
+    cos_sim) — exact cosine top-k, self-matches excluded, ties broken by
+    cid for determinism."""
+    qn, cn = _with_norms(queries, corpus)
+    return _cosine_ranked(F.broadcast(qn).crossJoin(cn), dim, k)
 
 
 def simhash_signature(df: DataFrame, vec_col: str, dim: int, n_bits: int = 16,
@@ -151,10 +155,9 @@ def _kmeans_centroids(sample: np.ndarray, n_clusters: int, iters: int = 8,
     return centroids
 
 
-def ivf_assign(df: DataFrame, vec_col: str, centroids: np.ndarray,
-               out_col: str = "ivf_cell") -> DataFrame:
-    """Assign each vector to its nearest centroid (IVF cell) — Arrow-
-    batched numpy matmul over broadcast centroids."""
+def ivf_assign(df: DataFrame, vec_col: str, centroids: np.ndarray) -> DataFrame:
+    """Assign each vector to its nearest centroid (IVF cell, column
+    ``ivf_cell``) — Arrow-batched numpy matmul over broadcast centroids."""
     c = centroids.astype(np.float64)
     c_norm2 = (c ** 2).sum(1)
 
@@ -164,25 +167,28 @@ def ivf_assign(df: DataFrame, vec_col: str, centroids: np.ndarray,
         d = -2.0 * (x @ c.T) + c_norm2[None, :]  # argmin over ||x-c||²
         return pd.Series(d.argmin(1).astype(np.int32))
 
-    return df.withColumn(out_col, cell(F.col(vec_col)))
+    return df.withColumn("ivf_cell", cell(F.col(vec_col)))
 
 
 def train_ivf_centroids(corpus: DataFrame, n_clusters: int = 16,
-                        sample_rows: int = 2000, id_c: str = "cid",
-                        vec_c: str = "c_vec") -> np.ndarray:
-    """Deterministic IVF centroid model from an id-ORDERED sample (a bare
-    LIMIT's row order is partition-order-dependent and would make the
-    model — and thus the probe sets — run-dependent).  A tiny driver-side
-    artifact, broadcast into the assign/probe UDF closures."""
+                        sample_rows: int = 2000) -> np.ndarray:
+    """Deterministic IVF centroid model from a cid-ORDERED sample of
+    ``c_vec`` (a bare LIMIT's row order is partition-order-dependent and
+    would make the model — and thus the probe sets — run-dependent).  A
+    tiny driver-side artifact, broadcast into the assign/probe UDF
+    closures."""
     sample = np.stack([
-        np.asarray(r[vec_c], dtype=np.float64)
-        for r in corpus.select(id_c, vec_c).orderBy(id_c).limit(sample_rows).collect()
+        np.asarray(r.c_vec, dtype=np.float64)
+        for r in corpus.select("cid", "c_vec").orderBy("cid").limit(sample_rows).collect()
     ])
     return _kmeans_centroids(sample, n_clusters)
 
 
-def _probe_cells_udf(centroids: np.ndarray, n_probe: int):
-    """pandas_udf: each vector → its ``n_probe`` nearest centroid ids."""
+def _probe_cells(queries: DataFrame, centroids: np.ndarray,
+                 n_probe: int) -> DataFrame:
+    """One row per (query, probe cell): each ``q_vec`` exploded to its
+    ``n_probe`` nearest centroid ids (column ``ivf_cell``) by an
+    Arrow-batched numpy pandas_udf."""
     c = centroids.astype(np.float64)
     c_norm2 = (c ** 2).sum(1)
 
@@ -193,53 +199,40 @@ def _probe_cells_udf(centroids: np.ndarray, n_probe: int):
         order = d.argsort(1)[:, :n_probe].astype(np.int32)
         return pd.Series(list(order))
 
-    return probe_cells
+    return queries.withColumn("ivf_cell", F.explode(probe_cells(F.col("q_vec"))))
 
 
-def _probe_rerank(qb: DataFrame, cb: DataFrame, dim: int, k: int,
-                  id_q: str, id_c: str, vec_q: str, vec_c: str) -> DataFrame:
-    """Probe-cell equi-join + exact cosine re-rank; multi-probe
-    duplicates dropped before ranking.  Norms computed once per SIDE
-    (pre-join) — the probe-join pair stream does one HOF dot."""
-    qn, cn = _with_norms(qb, cb, vec_q, vec_c)
-    joined = F.broadcast(qn).join(cn, "ivf_cell").filter(F.col(id_q) != F.col(id_c))
-    w = Window.partitionBy(id_q).orderBy(F.col("cos_sim").desc(), F.col(id_c).asc())
-    return (
-        joined.withColumn("cos_sim", F.round(_cos_pair(vec_q, vec_c, dim), 6))
-        .dropDuplicates([id_q, id_c])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(id_q, "rank", id_c, "cos_sim")
-    )
+def _probe_rerank(qb: DataFrame, cb: DataFrame, dim: int, k: int) -> DataFrame:
+    """Probe-cell equi-join + exact cosine re-rank.  A query's probe
+    cells are distinct (argsort columns) and each corpus row sits in one
+    cell, so every (query, corpus) pair meets at most once — no dedup."""
+    qn, cn = _with_norms(qb, cb)
+    return _cosine_ranked(F.broadcast(qn).join(cn, "ivf_cell"), dim, k)
 
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 3,
-             n_clusters: int = 16, n_probe: int = 4, sample_rows: int = 2000,
-             id_q: str = "qid", id_c: str = "cid",
-             vec_q: str = "q_vec", vec_c: str = "c_vec") -> DataFrame:
+             n_clusters: int = 16, n_probe: int = 4,
+             sample_rows: int = 2000) -> DataFrame:
     """IVF approximate top-k: corpus partitioned into k-means cells; each
     query probes its ``n_probe`` nearest cells and re-ranks exactly inside
     them.  At 100 TB the corpus is written bucketed by ivf_cell
     (``write_ivf_corpus`` + ``ivf_topk_bucketed`` — planning-time
     directory pruning); the centroid model is a tiny driver-side
     artifact (trained once on a sample, broadcast)."""
-    centroids = train_ivf_centroids(corpus, n_clusters, sample_rows, id_c, vec_c)
-    cb = ivf_assign(corpus, vec_c, centroids)
-    qb = queries.withColumn(
-        "ivf_cell", F.explode(_probe_cells_udf(centroids, n_probe)(F.col(vec_q)))
-    )
-    return _probe_rerank(qb, cb, dim, k, id_q, id_c, vec_q, vec_c)
+    centroids = train_ivf_centroids(corpus, n_clusters, sample_rows)
+    return _probe_rerank(_probe_cells(queries, centroids, n_probe),
+                         ivf_assign(corpus, "c_vec", centroids), dim, k)
 
 
-def write_ivf_corpus(corpus: DataFrame, centroids: np.ndarray, out_path: str,
-                     vec_c: str = "c_vec") -> None:
+def write_ivf_corpus(corpus: DataFrame, centroids: np.ndarray,
+                     out_path: str) -> None:
     """Materialize the corpus partitioned by IVF cell — the 100 TB ANN
     layout (write_tiles' analog for vector search): a probe query reads
     only its n_probe cell directories; every other cell is pruned at
     planning time.  Iceberg hidden partitioning replaces the explicit
     partitionBy on a real cluster."""
     (
-        ivf_assign(corpus, vec_c, centroids)
+        ivf_assign(corpus, "c_vec", centroids)
         .repartition("ivf_cell")
         .write.mode("overwrite")
         .partitionBy("ivf_cell")
@@ -249,59 +242,40 @@ def write_ivf_corpus(corpus: DataFrame, centroids: np.ndarray, out_path: str,
 
 def ivf_topk_bucketed(queries: DataFrame, corpus_path: str,
                       centroids: np.ndarray, dim: int, k: int = 3,
-                      n_probe: int = 4, id_q: str = "qid", id_c: str = "cid",
-                      vec_q: str = "q_vec", vec_c: str = "c_vec") -> DataFrame:
+                      n_probe: int = 4) -> DataFrame:
     """ANN over the cell-partitioned layout: the query side's probe-cell
     set (small by definition) collects into a literal IN filter on the
     PARTITION column, pruning every other cell directory at planning
     time (asserted in tests/test_sink_pruning.py), then the same probe
     join + exact re-rank as ``ivf_topk`` runs over the survivors."""
-    spark = queries.sparkSession
-    qb = queries.withColumn(
-        "ivf_cell", F.explode(_probe_cells_udf(centroids, n_probe)(F.col(vec_q)))
-    )
+    qb = _probe_cells(queries, centroids, n_probe)
     cells = sorted({r.ivf_cell for r in qb.select("ivf_cell").distinct().collect()})
-    cb = spark.read.parquet(corpus_path).filter(F.col("ivf_cell").isin(cells))
-    return _probe_rerank(qb, cb, dim, k, id_q, id_c, vec_q, vec_c)
+    cb = queries.sparkSession.read.parquet(corpus_path) \
+        .filter(F.col("ivf_cell").isin(cells))
+    return _probe_rerank(qb, cb, dim, k)
 
 
 def ivf_recall(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 3,
-               n_clusters: int = 16, n_probe: int = 4,
-               sample_rows: int = 2000,
-               id_q: str = "qid", id_c: str = "cid",
-               vec_q: str = "q_vec", vec_c: str = "c_vec") -> float:
+               n_clusters: int = 16, n_probe: int = 4) -> float:
     """Measured recall@k of the PRUNED IVF probe against the exact
     brute-force top-k on the same (query, corpus) pair — the in-flight
     telemetry companion to ``ivf_topk`` (VERDICT r3 #9: pruning quality
     should be a reported number, not an assumption).  Run it on a small
     query sample; the corpus side is the same relation the real probe
     reads."""
-    exact = cosine_topk(queries, corpus, dim, k, id_q, id_c, vec_q, vec_c) \
-        .select(id_q, id_c)
-    pruned = ivf_topk(queries, corpus, dim, k, n_clusters, n_probe,
-                      sample_rows, id_q, id_c, vec_q, vec_c).select(id_q, id_c)
+    exact = cosine_topk(queries, corpus, dim, k).select("qid", "cid")
+    pruned = ivf_topk(queries, corpus, dim, k, n_clusters, n_probe).select("qid", "cid")
     n_exact = exact.count()
     if n_exact == 0:
         return 1.0
-    n_hit = exact.join(pruned, [id_q, id_c], "left_semi").count()
+    n_hit = exact.join(pruned, ["qid", "cid"], "left_semi").count()
     return round(n_hit / n_exact, 4)
 
 
 def lsh_bucket_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 3,
-                    n_bits: int = 12, id_q: str = "qid", id_c: str = "cid",
-                    vec_q: str = "q_vec", vec_c: str = "c_vec") -> DataFrame:
+                    n_bits: int = 12) -> DataFrame:
     """Approximate top-k: SimHash bucket equi-join + exact re-rank.
     Recall < 1 by design; widen with fewer bits or multi-probe."""
-    qb, cb = _with_norms(
-        simhash_signature(queries, vec_q, dim, n_bits),
-        simhash_signature(corpus, vec_c, dim, n_bits),
-        vec_q, vec_c,
-    )
-    joined = qb.join(cb, "bucket").filter(F.col(id_q) != F.col(id_c))
-    w = Window.partitionBy(id_q).orderBy(F.col("cos_sim").desc(), F.col(id_c).asc())
-    return (
-        joined.withColumn("cos_sim", F.round(_cos_pair(vec_q, vec_c, dim), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(id_q, "rank", id_c, "cos_sim")
-    )
+    qb, cb = _with_norms(simhash_signature(queries, "q_vec", dim, n_bits),
+                         simhash_signature(corpus, "c_vec", dim, n_bits))
+    return _cosine_ranked(qb.join(cb, "bucket"), dim, k)

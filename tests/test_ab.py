@@ -46,3 +46,32 @@ def test_summary_reports_a_regression_as_positive_worse():
     op, rps = summarize(records, METRICS)
     assert op["worse"] == pytest.approx(0.3) and rps["worse"] == pytest.approx(0.3)
     assert op["wins"] == rps["wins"] == 0 and op["base_iqr"] == 0.0
+
+
+def test_verdict_unresolved_when_base_spread_exceeds_bound():
+    # base op_s 10, 20, 14 → median 14, IQR 5 > 0.25 × 14; the head
+    # beats the median but not every base run → unresolved
+    records = [_rec("base", 1, 10.0, 100.0), _rec("head", 1, 12.0, 101.0),
+               _rec("base", 2, 20.0, 99.0), _rec("head", 2, 11.0, 100.0),
+               _rec("base", 3, 14.0, 100.0), _rec("head", 3, 12.0, 100.0)]
+    op, rps = summarize(records, METRICS)
+    assert op["base_iqr"] == pytest.approx(5.0) and op["verdict"] == "unresolved"
+    assert rps["verdict"] == "ok"           # rows_per_s spread 1 of 100
+    # every head run beats every base run: resolved despite the spread
+    fast = [r if r["side"] == "base" else _rec("head", r["pair"], 9.0, 100.0)
+            for r in records]
+    assert summarize(fast, METRICS)[0]["verdict"] == "ok"
+    assert format_rows("w", [op, rps]).splitlines()[1].endswith("unresolved")
+
+
+def test_verdict_worse_past_bound_with_tight_base():
+    records = [_rec("base", 1, 10.0, 100.0), _rec("head", 1, 12.0, 70.0),
+               _rec("base", 2, 10.0, 100.0), _rec("head", 2, 13.0, 80.0)]
+    op, rps = summarize(records, METRICS)
+    # op_s +25% is at the bound, not past it; rows_per_s −25% likewise;
+    # a third head run pushes both past it
+    assert (op["verdict"], rps["verdict"]) == ("ok", "ok")
+    records += [_rec("base", 3, 10.0, 100.0), _rec("head", 3, 14.0, 60.0)]
+    op, rps = summarize(records, METRICS)
+    assert op["worse"] == pytest.approx(0.3) and rps["worse"] == pytest.approx(0.3)
+    assert (op["verdict"], rps["verdict"]) == ("worse", "worse")

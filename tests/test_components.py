@@ -101,13 +101,13 @@ def test_cc_driver_path_matches_distributed(spark):
 
 
 def test_dedup_keep_reduces_corpus(spark):
-    from mapsplit_spark.operators.components import dedup_keep
+    from mapsplit_spark.operators.components import connected_components, dedup_keep
 
     docs = spark.createDataFrame(
         [(i, f"text {i}") for i in range(10)], "doc_id long, text string"
     )
     pairs = _pairs_df(spark, [(0, 1), (1, 2), (5, 6)])
-    kept = sorted(r.doc_id for r in dedup_keep(docs, pairs).collect())
+    kept = sorted(r.doc_id for r in dedup_keep(docs, connected_components(pairs)).collect())
     # groups {0,1,2} → keep 0; {5,6} → keep 5; others untouched
     assert kept == [0, 3, 4, 5, 7, 8, 9]
 

@@ -190,11 +190,14 @@ def test_knn_hex_matches_bruteforce(spark):
     assert got == want
 
 
-def test_knn_hex_sparse_forces_bruteforce_tail_and_stays_exact(spark):
-    """9 points spread over the globe, k_max tiny: no disk can prove
+def test_knn_hex_sparse_forces_bruteforce_tail_and_stays_exact(spark, monkeypatch):
+    """9 points spread over the globe, K_MAX tiny: no disk can prove
     coverage, so every query must fall through to the brute-force tail
     — and the answer must still be exact."""
+    from mapsplit_spark.operators import knn
     from mapsplit_spark.operators.knn import knn_bruteforce, knn_hex
+
+    monkeypatch.setattr(knn, "K_MAX", 2)
 
     rng = np.random.default_rng(3)
     pts = spark.createDataFrame(pd.DataFrame({
@@ -207,7 +210,7 @@ def test_knn_hex_sparse_forces_bruteforce_tail_and_stays_exact(spark):
         "q_lon": np.array([0.0, 90.0]),
         "q_lat": np.array([0.0, -45.0]),
     }))
-    got = _knn_rows(knn_hex(qs, pts, s_deg=1.0, k=3, k_max=2))
+    got = _knn_rows(knn_hex(qs, pts, s_deg=1.0, k=3))
     want = _knn_rows(knn_bruteforce(qs, pts, k=3))
     assert got == want
 
@@ -215,7 +218,7 @@ def test_knn_hex_sparse_forces_bruteforce_tail_and_stays_exact(spark):
 def test_knn_hex_candidates_broadcast(spark):
     """The exploded query-disk side must broadcast (query set is small
     by definition) — the points side must never build a hash table."""
-    from mapsplit_spark.operators.knn import knn_hex
+    from mapsplit_spark.operators.knn import _hex_assigned, _hex_probe
 
     pts = spark.range(500).selectExpr(
         "id AS point_id",
@@ -224,8 +227,9 @@ def test_knn_hex_candidates_broadcast(spark):
     )
     qs = spark.range(3).selectExpr(
         "id AS query_id", "CAST(id AS DOUBLE) AS q_lon", "CAST(id AS DOUBLE) AS q_lat")
-    plan = knn_hex(qs, pts, s_deg=2.0, k=3, escalate=False) \
-        ._jdf.queryExecution().executedPlan().toString()
+    pt = _hex_assigned(pts, "point_id", "p_lon", "p_lat", 2.0)
+    cands, _ = _hex_probe(qs, 1, pt, 2.0)
+    plan = cands._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
@@ -351,10 +355,9 @@ def test_trajectory_single_shuffle(spark):
 def test_knn_hex_rejects_zero_disk(spark):
     import pytest
 
-    from mapsplit_spark.operators.knn import knn_hex
+    from mapsplit_spark.operators.knn import _hex_assigned, _hex_coverage_km
 
-    pts = spark.range(5).selectExpr("id AS point_id", "CAST(id AS DOUBLE) AS p_lon",
-                                    "CAST(id AS DOUBLE) AS p_lat")
     qs = spark.range(1).selectExpr("id AS query_id", "0.0 AS q_lon", "0.0 AS q_lat")
-    with pytest.raises(ValueError, match="k0"):
-        knn_hex(qs, pts, s_deg=1.0, k=2, k0=0)
+    qt = _hex_assigned(qs, "query_id", "q_lon", "q_lat", 1.0)
+    with pytest.raises(ValueError, match="k >= 1"):
+        _hex_coverage_km(qt, 0, 1.0)

@@ -6,7 +6,20 @@ import numpy as np
 import pytest
 
 from mapsplit_spark import geo
-from mapsplit_spark.operators.knn import knn_bruteforce, knn_tiled
+from mapsplit_spark.operators.knn import (
+    _coarsen_tiles,
+    _tile_ring_probe,
+    _tiled_points,
+    knn_bruteforce,
+    knn_tiled,
+)
+
+
+def _base_probe(qs, pts, zoom, ring):
+    """The tiled ladder's first level alone: candidates of each query's
+    ring at the base zoom, with no escalation."""
+    pt = _tiled_points(pts, zoom)
+    return _tile_ring_probe(qs, zoom, zoom, ring, lambda _, d: _coarsen_tiles(pt, d))
 
 
 @pytest.fixture(scope="module")
@@ -62,8 +75,8 @@ def test_tiled_prunes_candidates(data):
 
 def test_escalation_recovers_exact_topk_on_sparse_density(spark):
     """At z10/ring1 the ring around each query is empty (points hundreds
-    of km apart) — without shortfall escalation the tiled path returns
-    nothing; with it the result equals exact brute force."""
+    of km apart) — the base-level probe alone finds fewer than k
+    candidates; the escalating ladder still equals exact brute force."""
     pts_rows = [(i, -40.0 + 3.0 * i, 10.0 + 2.0 * i) for i in range(12)]
     pts = spark.createDataFrame(pts_rows, "point_id long, p_lon double, p_lat double")
     qs = spark.createDataFrame(
@@ -71,8 +84,9 @@ def test_escalation_recovers_exact_topk_on_sparse_density(spark):
     )
     exact = {(r.query_id, r.rank, r.point_id)
              for r in knn_bruteforce(qs, pts, k=3).collect()}
-    no_esc = knn_tiled(qs, pts, zoom=10, ring=1, k=3, escalate=False).collect()
-    assert len(no_esc) < len(exact)  # the ring really is insufficient
+    cands, _ = _base_probe(qs, pts, zoom=10, ring=1)
+    per_query = {r.query_id: r["count"] for r in cands.groupBy("query_id").count().collect()}
+    assert all(per_query.get(q, 0) < 3 for q in (0, 1))  # the ring really is insufficient
     tiled = {(r.query_id, r.rank, r.point_id)
              for r in knn_tiled(qs, pts, zoom=10, ring=1, k=3).collect()}
     assert tiled == exact
@@ -88,8 +102,10 @@ def test_antimeridian_ring_wraps(spark):
     qs = spark.createDataFrame(
         [(0, 179.95, 0.0)], "query_id long, q_lon double, q_lat double"
     )
-    got = knn_tiled(qs, pts, zoom=6, ring=1, k=1, escalate=False).collect()
-    assert len(got) == 1 and got[0].point_id == 1  # 0.1° across the seam
+    cands, _ = _base_probe(qs, pts, zoom=6, ring=1)
+    assert 1 in {r.point_id for r in cands.collect()}  # 0.1° across the seam
+    got = knn_tiled(qs, pts, zoom=6, ring=1, k=1).collect()
+    assert len(got) == 1 and got[0].point_id == 1
 
 
 def test_bucketed_layout_prunes_partitions_and_matches(spark, data, tmp_path):
@@ -97,8 +113,10 @@ def test_bucketed_layout_prunes_partitions_and_matches(spark, data, tmp_path):
     (write_tiles layout); the kNN probe's bucket IN-filter must prune
     partition directories at planning time AND return the same result
     as the in-memory tiled path."""
+    from functools import partial
+
     from mapsplit_spark.operators.assign import assign_tiles
-    from mapsplit_spark.operators.knn import knn_tiled, knn_tiled_bucketed
+    from mapsplit_spark.operators.knn import _stored_points_at, knn_tiled_bucketed
     from mapsplit_spark.sinks.manifests import write_tiles
 
     qs, pts = data
@@ -110,12 +128,13 @@ def test_bucketed_layout_prunes_partitions_and_matches(spark, data, tmp_path):
     path = str(tmp_path / "pts_bucketed")
     write_tiles(stored, path, 4)
 
-    out = knn_tiled_bucketed(qs, path, zoom=4, ring=2, k=3, escalate=False)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    cands, _ = _tile_ring_probe(qs, 4, 4, 2, partial(_stored_points_at, path))
+    plan = cands._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "bucket" in plan
     expect = {(r.query_id, r.rank, r.point_id)
-              for r in knn_tiled(qs, pts, zoom=4, ring=2, k=3, escalate=False).collect()}
-    got = {(r.query_id, r.rank, r.point_id) for r in out.collect()}
+              for r in knn_tiled(qs, pts, zoom=4, ring=2, k=3).collect()}
+    got = {(r.query_id, r.rank, r.point_id)
+           for r in knn_tiled_bucketed(qs, path, zoom=4, ring=2, k=3).collect()}
     assert got == expect
 
 
@@ -163,10 +182,10 @@ def test_bucketed_escalation_exact_on_sparse_fixture(spark, tmp_path):
     # set for the query's coarse ring is a strict subset of directories
     qt = _query_tiles(qs, 6)
     ringed = _ring_tiles(qt, 6, 1, ["query_id"])
-    buckets = _probe_buckets(spark, ringed, d=2, n_buckets=TILE_BUCKETS)
+    buckets = _probe_buckets(ringed, d=2)
     assert buckets is not None and 0 < len(buckets) < TILE_BUCKETS
     # and the cutover to a full scan happens once enumeration can't pay
-    assert _probe_buckets(spark, ringed, d=5, n_buckets=TILE_BUCKETS) is None
+    assert _probe_buckets(ringed, d=5) is None
 
 
 def test_tiled_exactness_randomized_densities(spark):
@@ -194,3 +213,28 @@ def test_tiled_exactness_randomized_densities(spark):
         tiled = {(r.query_id, r.rank, r.point_id)
                  for r in knn_tiled(qs, pts, zoom=zoom, ring=ring, k=4).collect()}
         assert tiled == exact, f"trial {trial} z{zoom}/r{ring}"
+
+
+def test_knn_escalation_coarsens_by_shift_not_rescan(spark):
+    """kNN ladder: a coarser-zoom level adds ONLY a shiftright on the
+    base tile columns — zero additional tile-math (Mercator trig) and no
+    second projection of the points relation."""
+    from pyspark.sql import functions as F
+
+    from mapsplit_spark import sqlgen
+
+    pts = spark.range(1000).select(
+        F.col("id").alias("point_id"),
+        F.expr(sqlgen.derived_lon_sql("id")).alias("p_lon"),
+        F.expr(sqlgen.derived_lat_sql("id")).alias("p_lat"),
+    )
+    base = _tiled_points(pts, 13)
+    base_plan = base._jdf.queryExecution().executedPlan().toString()
+    coarse_plan = _coarsen_tiles(base, 4)._jdf.queryExecution().executedPlan().toString()
+    assert "shiftright" in coarse_plan.lower()
+    for marker in ("ATAN", "TAN(RADIANS", "LN("):
+        assert coarse_plan.count(marker) == base_plan.count(marker), (
+            f"coarsening re-projected tile math ({marker}) instead of shifting"
+        )
+    # exactly one scan of the points source in the coarse plan
+    assert coarse_plan.count("Range (0, 1000,") == 1

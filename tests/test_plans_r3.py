@@ -1,7 +1,6 @@
-"""Physical-plan invariants for the round-3 refinements — pins the two
-round-2 scale wins the judge asked to lock down (semi-naive fixed point
-joins the DELTA, knn escalation derives coarse tiles by bit-shift) plus
-the new sharded-export shuffle shape."""
+"""Physical-plan invariants for the round-3 refinements — pins the
+semi-naive fixed point joining the DELTA plus the sharded-export shuffle
+shape (the kNN bit-shift coarsening pin lives in tests/test_knn.py)."""
 
 from __future__ import annotations
 
@@ -36,30 +35,6 @@ def test_semi_naive_step_joins_delta_not_accumulated(spark):
     assert plan.count("Range (0, 9000,") == 1, \
         "accumulated relation may appear ONLY in the anti-join"
     assert "LeftAnti" in plan
-
-
-def test_knn_escalation_coarsens_by_shift_not_rescan(spark):
-    """kNN ladder: a coarser-zoom level adds ONLY a shiftright on the
-    base tile columns — zero additional tile-math (Mercator trig) and no
-    second projection of the points relation."""
-    from mapsplit_spark import sqlgen
-    from mapsplit_spark.operators.knn import _coarsen_tiles, _tiled_points
-
-    pts = spark.range(1000).select(
-        F.col("id").alias("point_id"),
-        F.expr(sqlgen.derived_lon_sql("id")).alias("p_lon"),
-        F.expr(sqlgen.derived_lat_sql("id")).alias("p_lat"),
-    )
-    base = _tiled_points(pts, 13)
-    base_plan = _plan(base)
-    coarse_plan = _plan(_coarsen_tiles(base, 4))
-    assert "shiftright" in coarse_plan.lower()
-    for marker in ("ATAN", "TAN(RADIANS", "LN("):
-        assert coarse_plan.count(marker) == base_plan.count(marker), (
-            f"coarsening re-projected tile math ({marker}) instead of shifting"
-        )
-    # exactly one scan of the points source in the coarse plan
-    assert coarse_plan.count("Range (0, 1000,") == 1
 
 
 def test_sharded_mbtiles_partitions_by_shard_key(spark):

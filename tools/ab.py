@@ -15,8 +15,8 @@ revision's committed files (``git archive``) and the working tree's
 tracked and unignored files, so neither side starts with cached inputs
 or build leftovers the other lacks.  Each run's parsed last stdout
 line goes to stderr as it finishes; stdout gets, per workload and
-end-to-end metric, the two medians, the base IQR, the head's pair wins
-and each side's ``failed`` total.
+end-to-end metric, the two medians, the base IQR, the head's pair wins,
+each side's ``failed`` total and a verdict (see ``summarize``).
 """
 
 from __future__ import annotations
@@ -59,7 +59,10 @@ def summarize(records: list[dict], metrics: list[dict]) -> list[dict]:
     of one workload → one row per end-to-end metric (``metrics`` as in
     ``BENCHMARK.json``).  ``worse`` is the head median's relative change
     in the metric's worse direction, to compare with its ``bound``;
-    ``wins`` counts pairs where the head is strictly better."""
+    ``wins`` counts pairs where the head is strictly better.  ``verdict``
+    is ``unresolved`` when the base runs spread wider than the bound
+    (IQR > bound × base median) unless every head run beats every base
+    run, else ``worse`` when ``worse`` is past the bound, else ``ok``."""
     by_side: dict[str, dict[int, dict]] = {"base": {}, "head": {}}
     for r in records:
         by_side[r["side"]][r["pair"]] = r["result"]
@@ -73,26 +76,33 @@ def summarize(records: list[dict], metrics: list[dict]) -> list[dict]:
                 for side, runs in by_side.items()}
         base, head = (statistics.median(vals[s]) if pairs else 0.0
                       for s in ("base", "head"))
+        base_iqr, bound = _iqr(vals["base"]), m["bound"]
+        worse = sign * (head - base) / base if base else 0.0
+        if (base_iqr > bound * abs(base)
+                and max(sign * h for h in vals["head"]) >= min(sign * b for b in vals["base"])):
+            verdict = "unresolved"
+        else:
+            verdict = "worse" if worse > bound else "ok"
         rows.append({
-            "metric": name, "base": base, "head": head,
-            "base_iqr": _iqr(vals["base"]),
-            "worse": sign * (head - base) / base if base else 0.0,
-            "bound": m["bound"],
+            "metric": name, "base": base, "head": head, "base_iqr": base_iqr,
+            "worse": worse, "bound": bound,
             "wins": sum(sign * (h - b) < 0 for b, h in zip(vals["base"], vals["head"])),
             "pairs": len(pairs),
             "failed_base": failed["base"], "failed_head": failed["head"],
+            "verdict": verdict,
         })
     return rows
 
 
 def format_rows(workload: str, rows: list[dict]) -> str:
     out = [f"{workload}: {'metric':<18}{'base':>11}{'head':>11}{'base IQR':>11}"
-           f"{'worse':>8}{'bound':>7}{'wins':>7}{'failed b/h':>12}"]
+           f"{'worse':>8}{'bound':>7}{'wins':>7}{'failed b/h':>12}  verdict"]
     for r in rows:
         out.append(
             f"{'':{len(workload) + 2}}{r['metric']:<18}{r['base']:>11.4g}{r['head']:>11.4g}"
             f"{r['base_iqr']:>11.4g}{r['worse']:>+8.1%}{r['bound']:>7.2f}"
-            f"{r['wins']:>4}/{r['pairs']:<2}{r['failed_base']:>6}/{r['failed_head']}")
+            f"{r['wins']:>4}/{r['pairs']:<2}{r['failed_base']:>6}/{r['failed_head']:<5}"
+            f"{r['verdict']}")
     return "\n".join(out)
 
 
