@@ -39,6 +39,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from mapsplit_spark.operators.assign import with_tile_id  # noqa: E402
 from mapsplit_spark.operators.clip import zone_assign  # noqa: E402
 from mapsplit_spark.pipeline import TilingPipeline  # noqa: E402
+from mapsplit_spark.sinks import read_back, write_parquet  # noqa: E402
 from mapsplit_spark.sinks.manifests import tile_manifests, write_tiles  # noqa: E402
 
 
@@ -222,55 +223,57 @@ def main(argv=None) -> None:
     if args.chunked_manifests:
         manifests = tile_manifests(tiled, args.zoom, assume_distinct=True,
                                    chunked=True)
-    manifests.write.mode("overwrite").parquet(os.path.join(args.output, "manifests"))
+    out = args.output
+    # the summary's tile and element counts ride the manifests write
+    written = write_parquet(manifests, f"{out}/manifests", elements=F.sum("n"))
 
     if args.pyramid is not None:
         from mapsplit_spark.operators.pyramid import pyramid_counts
 
-        pyramid_counts(
+        write_parquet(pyramid_counts(
             pairs.select("element_id", "tile_x", "tile_y"),
             args.zoom, args.pyramid,
-        ).write.mode("overwrite").parquet(os.path.join(args.output, "pyramid"))
+        ), f"{out}/pyramid")
 
     if args.focal_radius is not None:
         from mapsplit_spark.operators.focal import focal_sum
         from mapsplit_spark.sinks.manifests import tile_counts
 
-        focal_sum(
+        write_parquet(focal_sum(
             tile_counts(
                 pairs.select("element_id", "tile_x", "tile_y")
                 .dropDuplicates(["element_id", "tile_x", "tile_y"])
             ),
             args.zoom, radius=args.focal_radius,
-        ).write.mode("overwrite").parquet(os.path.join(args.output, "focal"))
+        ), f"{out}/focal")
 
     if args.geohash:
         from mapsplit_spark.cellid import geohash_col
 
-        src.select(
+        write_parquet(src.select(
             F.col(args.id_col).alias("element_id"),
             geohash_col(F.col(args.lon_col), F.col(args.lat_col),
                         args.geohash).alias("geohash"),
-        ).write.mode("overwrite").parquet(os.path.join(args.output, "geohash"))
+        ), f"{out}/geohash")
 
     if args.hexgrid:
         from mapsplit_spark.hexgrid import hex_cell_cols
 
         hq, hr = hex_cell_cols(F.col(args.lon_col), F.col(args.lat_col),
                                args.hexgrid)
-        src.select(
+        write_parquet(src.select(
             F.col(args.id_col).alias("element_id"),
             hq.alias("hq"), hr.alias("hr"),
-        ).write.mode("overwrite").parquet(os.path.join(args.output, "hexcells"))
+        ), f"{out}/hexcells")
 
     if args.zonal and args.poly:
-        zone_assign(
+        write_parquet(zone_assign(
             src.select(args.id_col, args.lon_col, args.lat_col),
             *pipe.rings, id_col=args.id_col,
             lon_col=args.lon_col, lat_col=args.lat_col,
         ).groupBy("zone").agg(
             F.count("*").cast("long").alias("n_points")
-        ).write.mode("overwrite").parquet(os.path.join(args.output, "zones"))
+        ), f"{out}/zones")
 
     if args.raster is not None and args.poly:
         import numpy as np
@@ -294,61 +297,59 @@ def main(argv=None) -> None:
             F.expr(sqlgen.tile2lat_sql("y + 0.5", args.raster)).alias("lat"),
         )
         za = zone_assign(centers, outers, inners, id_col="cell_id")
-        za.select(
+        write_parquet(za.select(
             "zone",
             (F.col("cell_id") / n).cast("long").alias("tile_x"),
             F.pmod(F.col("cell_id"), F.lit(n)).cast("long").alias("tile_y"),
-        ).write.mode("overwrite").parquet(os.path.join(args.output, "raster"))
+        ), f"{out}/raster")
 
     if args.snap:
         from mapsplit_spark.operators.snap import snap_to_segments
 
-        snap_to_segments(
+        write_parquet(snap_to_segments(
             src.select(F.col(args.id_col).alias("pid"),
                        F.col(args.lon_col).alias("lon"),
                        F.col(args.lat_col).alias("lat")),
             spark.read.parquet(args.snap), args.snap_km,
-        ).write.mode("overwrite").parquet(os.path.join(args.output, "snapped"))
+        ), f"{out}/snapped")
 
     if args.idw is not None:
         from mapsplit_spark.operators.interpolate import idw_grid
 
-        idw_grid(
+        write_parquet(idw_grid(
             src.select(args.id_col, args.lon_col, args.lat_col,
                        args.idw_value),
             args.id_col, args.lon_col, args.lat_col, args.idw_value,
             args.idw, radius=1,
-        ).write.mode("overwrite").parquet(os.path.join(args.output, "idw"))
+        ), f"{out}/idw")
 
     if args.transitions and args.poly:
         from mapsplit_spark.operators.geofence import zone_transitions
 
-        zone_transitions(
+        write_parquet(zone_transitions(
             src.select(args.transitions, args.ts_col, args.id_col,
                        args.lon_col, args.lat_col),
             args.transitions, args.ts_col, args.id_col,
             args.lon_col, args.lat_col, *pipe.rings,
-        ).write.mode("overwrite").parquet(
-            os.path.join(args.output, "transitions"))
+        ), f"{out}/transitions")
 
     if args.dwithin:
         from mapsplit_spark.operators.dwithin import dwithin_pairs
 
-        dwithin_pairs(
+        write_parquet(dwithin_pairs(
             src.select(args.id_col, args.lon_col, args.lat_col),
             args.id_col, args.lon_col, args.lat_col, args.dwithin,
-        ).write.mode("overwrite").parquet(
-            os.path.join(args.output, "dwithin_pairs"))
+        ), f"{out}/dwithin_pairs")
 
     if args.clusters:
         from mapsplit_spark.operators.clustering import grid_clusters
 
         cz = args.clusters_zoom if args.clusters_zoom is not None \
             else min(args.zoom, 8)
-        grid_clusters(
+        write_parquet(grid_clusters(
             src.select(args.id_col, args.lon_col, args.lat_col),
             args.id_col, args.lon_col, args.lat_col, cz, args.clusters,
-        ).write.mode("overwrite").parquet(os.path.join(args.output, "clusters"))
+        ), f"{out}/clusters")
 
     # A3 latestDate — deterministic metadata + --date-file write-back
     latest_ms = 0
@@ -362,7 +363,7 @@ def main(argv=None) -> None:
         payload = with_tile_id(tiled, args.zoom).join(
             src, tiled["element_id"] == src[args.id_col]
         ).drop(args.id_col)
-        write_tiles(payload, os.path.join(args.output, "tiles"), args.zoom)
+        write_tiles(payload, f"{out}/tiles", args.zoom)
 
     if args.tile_files:
         from mapsplit_spark.sinks.tilefiles import export_tile_files
@@ -407,12 +408,13 @@ def main(argv=None) -> None:
             print("[timing] per-stage detail requires --workdir "
                   "(stage metrics tables); total wall_sec is in the summary")
 
-    m = spark.read.parquet(os.path.join(args.output, "manifests"))
-    n_tiles = (m.select("zoom", "tile_x", "tile_y").distinct().count()
-               if args.chunked_manifests else m.count())
+    n_tiles = written["rows"]
+    if args.chunked_manifests:  # an observed metric cannot count distinct tiles
+        n_tiles = read_back(manifests, f"{out}/manifests") \
+            .select("zoom", "tile_x", "tile_y").distinct().count()
     print(json.dumps({
         "tiles": n_tiles,
-        "elements": m.agg(F.sum("n")).collect()[0][0],
+        "elements": written["elements"],
         "incremental": appointment_ms is not None,
         "chunked": bool(args.chunked_manifests),
         "pyramid_levels": (args.zoom - args.pyramid + 1

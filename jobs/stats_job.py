@@ -106,12 +106,14 @@ def main(argv: list[str] | None = None) -> None:
     from mapsplit_spark.operators.sampling import deterministic_split, weighted_sample
     from mapsplit_spark.operators.sketches import hll_distinct
     from mapsplit_spark.session import get_spark
+    from mapsplit_spark.sinks import read_back, write_parquet
 
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark("stats-job", cores=args.cores,
                       shuffle_partitions=2 * args.cores)
     t0 = time.time()
     group = [args.group_col]
+    out = args.output
     summary: dict = {"groups": None}
     try:
         df = spark.read.parquet(args.input)
@@ -120,8 +122,10 @@ def main(argv: list[str] | None = None) -> None:
             df, group, args.hll_elem or args.id_col,
             p=args.hll_p, salt=args.salt,
         )
-        hll.write.mode("overwrite").parquet(f"{args.output}/hll")
-        est = {r[0]: round(r.hll_estimate, 1) for r in hll.collect()}
+        write_parquet(hll, f"{out}/hll")
+        # read from the written table, so the sketch runs once
+        est = {r[0]: round(r.hll_estimate, 1)
+               for r in read_back(hll, f"{out}/hll").collect()}
         summary["groups"] = len(est)
         summary["hll_estimates"] = est
 
@@ -137,7 +141,7 @@ def main(argv: list[str] | None = None) -> None:
                 for q in qs
             ],
         )
-        qdf.write.mode("overwrite").parquet(f"{args.output}/quantiles")
+        write_parquet(qdf, f"{out}/quantiles")
         summary["quantile_mode"] = fn
 
         if args.sample_n:
@@ -145,8 +149,7 @@ def main(argv: list[str] | None = None) -> None:
                 df, args.id_col, args.sample_weight, args.sample_n,
                 strata_cols=group, salt=args.salt,
             )
-            samp.write.mode("overwrite").parquet(f"{args.output}/sample")
-            summary["sample_rows"] = samp.count()
+            summary["sample_rows"] = write_parquet(samp, f"{out}/sample")["rows"]
 
         if args.top_items:
             from mapsplit_spark.operators.sketches import exact_top_items
@@ -154,8 +157,7 @@ def main(argv: list[str] | None = None) -> None:
             items = df.select(
                 *group, F.expr(args.item_expr or args.id_col).alias("item"))
             ti = exact_top_items(items, group, "item", args.top_items)
-            ti.write.mode("overwrite").parquet(f"{args.output}/top_items")
-            summary["top_items_rows"] = ti.count()
+            summary["top_items_rows"] = write_parquet(ti, f"{out}/top_items")["rows"]
 
         if args.cms:
             from mapsplit_spark.operators.sketches import cms_query, cms_sketch
@@ -163,7 +165,7 @@ def main(argv: list[str] | None = None) -> None:
             items = df.select(F.expr(args.item_expr or args.id_col).alias("item"))
             sk = cms_sketch(items, "item", depth=args.cms_depth,
                             width=args.cms_width, salt=args.salt)
-            sk.write.mode("overwrite").parquet(f"{args.output}/cms_sketch")
+            summary["cms_sketch_rows"] = write_parquet(sk, f"{out}/cms_sketch")["rows"]
             # global top-K probes via TakeOrderedAndProject (no single-
             # partition window)
             top = (items.groupBy("item")
@@ -173,37 +175,32 @@ def main(argv: list[str] | None = None) -> None:
             est = cms_query(sk, top.select("item"), "item",
                             depth=args.cms_depth, width=args.cms_width,
                             salt=args.salt)
-            cms = est.join(top, "item")
-            cms.write.mode("overwrite").parquet(f"{args.output}/cms")
-            summary["cms_sketch_rows"] = sk.count()
-            summary["cms_probe_rows"] = cms.count()
+            summary["cms_probe_rows"] = write_parquet(est.join(top, "item"),
+                                                      f"{out}/cms")["rows"]
 
         if args.polyline:
             from mapsplit_spark.operators.geometry import polyline_stats
 
             way, seq, lon, lat = args.polyline.split(":")
             geo = polyline_stats(df, way, seq, lon, lat)
-            geo.write.mode("overwrite").parquet(f"{args.output}/polyline")
-            summary["polyline_ways"] = geo.count()
+            summary["polyline_ways"] = write_parquet(geo, f"{out}/polyline")["rows"]
 
         if args.tfidf_topk:
             from mapsplit_spark.operators.textstats import tfidf_topk
 
             tf = tfidf_topk(df, args.id_col, args.text_col, k=args.tfidf_topk)
-            tf.write.mode("overwrite").parquet(f"{args.output}/tfidf")
-            summary["tfidf_rows"] = tf.count()
+            summary["tfidf_rows"] = write_parquet(tf, f"{out}/tfidf")["rows"]
 
         if args.split:
             weights = {}
             for part in args.split.split(","):
                 name, w = part.split("=")
                 weights[name.strip()] = float(w)
-            out = deterministic_split(df, args.id_col, weights, salt=args.salt)
-            out.write.mode("overwrite").parquet(f"{args.output}/split")
-            summary["split_counts"] = {
-                r.split: r["count"]
-                for r in out.groupBy("split").count().collect()
-            }
+            split = deterministic_split(df, args.id_col, weights, salt=args.salt)
+            # per-split row counts ride the write; empty splits stay absent
+            n = write_parquet(split, f"{out}/split", **{
+                f"n_{name}": F.count(F.when(F.col("split") == name, 1)) for name in weights})
+            summary["split_counts"] = {k: n[f"n_{k}"] for k in weights if n[f"n_{k}"]}
 
         summary["wall_sec"] = round(time.time() - t0, 2)
         print(json.dumps(summary))

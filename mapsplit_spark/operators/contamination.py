@@ -81,17 +81,11 @@ def contamination_pairs(
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    test_ids: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **kwargs,
-) -> DataFrame:
-    """Corpus reduction: drop every TRAINING document flagged against
-    any test document (the conservative pre-training scrub).  Test rows
+def decontaminate(docs: DataFrame, pairs: DataFrame,
+                  id_col: str = "doc_id") -> DataFrame:
+    """Corpus reduction: drop every TRAINING document flagged in
+    ``pairs`` (as ``contamination_pairs`` returns them) against any
+    test document — the conservative pre-training scrub.  Test rows
     themselves are kept (they are not training data)."""
-    flagged = contamination_pairs(
-        docs, test_ids, id_col, text_col, **kwargs
-    ).select(F.col("train_id").alias(id_col)).distinct()
+    flagged = pairs.select(F.col("train_id").alias(id_col))
     return docs.join(flagged, id_col, "left_anti")

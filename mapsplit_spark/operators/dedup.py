@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import whitespace_tokens
+
 # 2^31-1: keeps a·h + b within int64 (a, b, h < 2^31 → product < 2^62)
 MERSENNE_P = (1 << 31) - 1
 
@@ -50,7 +52,7 @@ def with_shingle_hashes(docs: DataFrame, id_col: str = "doc_id",
     computed once per document, not once per shingle."""
     toked = docs.select(
         F.col(id_col),
-        F.split(F.trim(F.col(text_col)), r"\s+").alias("_toks"),
+        whitespace_tokens(text_col).alias("_toks"),
     )
     sh = _token_ngrams(F.col("_toks"), ngram)
     return toked.select(
@@ -474,7 +476,7 @@ def simhash_text(docs: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text", n_bits: int = 32) -> DataFrame:
     """Text SimHash: per-bit majority vote over token hashes — grouped
     per document with aggregate() (JVM-side).  → (id, simhash)."""
-    toks = F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))
+    toks = F.array_distinct(whitespace_tokens(text_col))
     # barrier projection: the hash array feeds n_bits aggregates below —
     # inlined, tokenize+hash would re-run once PER BIT (32×)
     hashed = docs.select(

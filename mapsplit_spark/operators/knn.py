@@ -212,14 +212,14 @@ def _tile_ring_probe(pending: DataFrame, z: int, zoom: int, ring: int,
     the pending queries' ring tiles (broadcast — the query side is small
     by definition) ⋈ ``points_at(ringed, zoom − z)``, the points with
     their tiles at zoom z.  → (query_id, q_lon, q_lat, point_id, p_lon,
-    p_lat) candidates, one row per (query, point), and the per-query
-    ``cov_km``."""
+    p_lat) candidates and the per-query ``cov_km``.  A (query, point)
+    pair joins at most once, with no dedup: ``_ring_tiles`` makes
+    (query, tile) distinct and each point has one tile at zoom z."""
     qt = _query_tiles(pending, z)
     ringed = _ring_tiles(qt, z, ring, ["query_id", "q_lon", "q_lat"])
     cands = F.broadcast(ringed).join(points_at(ringed, zoom - z), ["tile_x", "tile_y"])
     return (
-        cands.select("query_id", "q_lon", "q_lat", "point_id", "p_lon", "p_lat")
-        .dropDuplicates(["query_id", "point_id"]),
+        cands.select("query_id", "q_lon", "q_lat", "point_id", "p_lon", "p_lat"),
         _coverage_radius_km(qt, z, ring),
     )
 

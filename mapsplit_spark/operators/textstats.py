@@ -9,18 +9,28 @@ run the equivalent SQL.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # tiny stopword list shared with the SQL oracle (see __spark_entry__)
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]
 
 
+def whitespace_tokens(text_col: str) -> Column:
+    """Column: ``text_col`` trimmed and split on whitespace runs."""
+    return F.split(F.trim(F.col(text_col)), r"\s+")
+
+
+def squeezed_text(text_col: str) -> Column:
+    """Column: ``text_col`` trimmed, each whitespace run one space."""
+    return F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
+
+
 def token_stats(docs: DataFrame, id_col: str = "doc_id",
                 text_col: str = "text") -> DataFrame:
     """Per-document token/char statistics.  → (doc_id, n_tokens,
     n_chars2, avg_token_len)."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = whitespace_tokens(text_col)
     return docs.select(
         F.col(id_col),
         F.size(toks).cast("long").alias("n_tokens"),
@@ -58,7 +68,7 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id",
     """Stopword-profile language ID: the language whose profile scores
     the most hits wins (ties broken by profile order).  Built-ins only.
     → (doc_id, pred_lang, score)."""
-    padded = F.concat(F.lit(" "), F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "), F.lit(" "))
+    padded = F.concat(F.lit(" "), squeezed_text(text_col), F.lit(" "))
     scores = []
     for lang, words in LANG_PROFILES.items():
         s = None
@@ -78,8 +88,8 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
     """Cheap quality heuristics: stopword ratio + mean word length.
     → (doc_id, n_tokens, stopword_ratio, quality)."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    padded = F.concat(F.lit(" "), F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "), F.lit(" "))
+    toks = whitespace_tokens(text_col)
+    padded = F.concat(F.lit(" "), squeezed_text(text_col), F.lit(" "))
     n_stop = None
     for wrd in STOPWORDS:
         # occurrences of " w " counted by split — same trick in the SQL oracle.
@@ -164,7 +174,7 @@ def fingerprint(docs: DataFrame, id_col: str = "doc_id",
     """Order-insensitive document fingerprint: md5 of the sorted distinct
     token multiset — the exact-near-dup key (bag-of-words collision).
     → (doc_id, fp)."""
-    toks = F.array_sort(F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+")))
+    toks = F.array_sort(F.array_distinct(whitespace_tokens(text_col)))
     return docs.select(F.col(id_col), F.md5(F.concat_ws(" ", toks)).alias("fp"))
 
 
@@ -213,7 +223,7 @@ def _winnow_fps_md5_arrow(docs: DataFrame, k: int, w: int, id_col: str,
     Only (id, norm) columns cross the boundary."""
     import pyarrow as pa
 
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
+    norm = F.lower(squeezed_text(text_col))
     src = docs.select(F.col(id_col), norm.alias("_norm"))
     id_type = src.schema[id_col].dataType.simpleString()
 
@@ -248,7 +258,7 @@ def _winnow_fps_hof(docs: DataFrame, k: int, w: int, id_col: str,
                     text_col: str, gram_hash) -> DataFrame:
     """JVM higher-order-function winnow body (pre-r6 shape; the
     xxhash64 production path and the md5 differential-test mirror)."""
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
+    norm = F.lower(squeezed_text(text_col))
     n_grams = F.greatest(F.length(norm) - (k - 1), F.lit(1))
     gram_hashes = F.transform(
         F.sequence(F.lit(1), n_grams),

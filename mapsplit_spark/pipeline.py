@@ -31,11 +31,12 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.assign import assign_and_expand
 from .operators.optimize import merged_assignments
+from .sinks import write_parquet
 from .sinks.manifests import tile_manifests
 
 
@@ -73,12 +74,11 @@ def _write_stage(df: DataFrame, stage: str, stage_dir: str, cfg_hash: str,
     )
     # the marker's row count is the sum of the per-partition rows, read
     # on the metrics write's own job (no second scan)
-    total = Observation()
-    metrics.observe(total, F.sum("n_rows").alias("rows")) \
-        .write.mode("overwrite").parquet(os.path.join(stage_dir, "metrics"))
+    rows = write_parquet(metrics, os.path.join(stage_dir, "metrics"),
+                         total=F.sum("n_rows"))["total"]
     with open(_marker(stage_dir), "w") as fh:
         json.dump({
-            "cfg_hash": cfg_hash, "stage": stage, "rows": total.get["rows"] or 0,
+            "cfg_hash": cfg_hash, "stage": stage, "rows": rows,
             "wall_sec": round(time.time() - t0, 3), "lineage": lineage,
             "finished_at_epoch": time.time(),
         }, fh)

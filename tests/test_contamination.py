@@ -72,8 +72,9 @@ def test_ubiquitous_fingerprints_are_capped(spark):
 
 def test_decontaminate_drops_flagged_train_keeps_test(spark):
     docs = _corpus(spark)
-    kept = decontaminate(docs, _test_ids(spark, [0]),
-                         max_df=5, min_shared=1)
+    pairs = contamination_pairs(docs, _test_ids(spark, [0]),
+                                max_df=5, min_shared=1)
+    kept = decontaminate(docs, pairs)
     ids = {r.doc_id for r in kept.select("doc_id").collect()}
     assert 3 not in ids          # the contaminated train doc is gone
     assert 0 in ids              # the test doc itself survives

@@ -238,3 +238,16 @@ def test_knn_escalation_coarsens_by_shift_not_rescan(spark):
         )
     # exactly one scan of the points source in the coarse plan
     assert coarse_plan.count("Range (0, 1000,") == 1
+
+
+def test_ring_probe_joins_each_pair_once(data):
+    """A (query, point) pair joins the ring at most once (the ring is
+    distinct per query, a point has one tile), so the probe plans no
+    shuffle on (query_id, point_id) to dedup it."""
+    qs, pts = data
+    cands, _ = _base_probe(qs, pts, 6, 1)
+    plan = cands._jdf.queryExecution().executedPlan().toString()
+    assert not any("point_id" in ln for ln in plan.splitlines()
+                   if "Exchange hashpartitioning" in ln)
+    pairs = cands.select("query_id", "point_id")
+    assert pairs.count() == pairs.distinct().count()

@@ -7,12 +7,17 @@ import json
 import sqlite3
 
 import pytest
+from pyspark.sql import functions as F
 
 from mapsplit_spark import imaging
 from mapsplit_spark.operators.assign import assign_and_expand
 from mapsplit_spark.operators.multimodal import tile_mosaics
 from mapsplit_spark.sinks.manifests import tile_manifests
-from mapsplit_spark.sinks.mbtiles import export_mbtiles, export_raster_mbtiles
+from mapsplit_spark.sinks.mbtiles import (
+    export_mbtiles,
+    export_raster_mbtiles,
+    mbtiles_tile_rows,
+)
 
 ZOOM = 6
 
@@ -138,3 +143,20 @@ def test_sharded_export_union_equals_single_file(spark, pairs, tmp_path):
         assert -180.0 <= left < right <= 180.0
         c.close()
     assert got == expect
+
+
+def test_sharded_mbtiles_partitions_by_shard_key(spark):
+    """The sharded export repartitions by the shard hash (one shard never
+    splits across partitions) and nothing else — a single exchange above
+    the tile-row projection."""
+    pairs = spark.range(500).select(
+        F.col("id").alias("element_id"),
+        (F.col("id") % 50).alias("tile_x"),
+        (F.col("id") % 37).alias("tile_y"),
+    )
+    man = tile_manifests(pairs, 13, assume_distinct=True)
+    rows = mbtiles_tile_rows(man, 13).withColumn(
+        "shard", F.pmod(F.xxhash64("tile_column", "tile_row"), F.lit(8))
+    ).repartition(8, "shard")
+    plan = rows._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning(shard") == 1

@@ -434,3 +434,29 @@ def test_pyramid_counts_properties_and_plan(spark):
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 2  # ancestor dedupe + final agg, depth-free
     assert "EvalPython" not in plan and "Join" not in plan
+
+
+def test_semi_naive_step_joins_delta_not_accumulated(spark):
+    """J4: each fixed-point iteration's derive join consumes the DELTA
+    (small, shrinking) exactly once; the accumulated relation appears
+    only in the dedup anti-join.  A naive implementation would scan the
+    accumulated relation twice — the join input would grow every
+    iteration instead of shrinking."""
+    from mapsplit_spark.operators.propagate import _semi_naive_step
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(50)], "dst long, src long"
+    )
+    # distinguishable sources: delta = Range(0,7), resolved = Range(0,9000)
+    delta = spark.range(7).selectExpr(
+        "id AS element_id", "id AS tile_x", "id AS tile_y"
+    )
+    resolved = spark.range(9000).selectExpr(
+        "id AS element_id", "id AS tile_x", "id AS tile_y"
+    )
+    plan = _semi_naive_step(edges, delta, resolved) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Range (0, 7,") == 1, "delta must feed the derive join once"
+    assert plan.count("Range (0, 9000,") == 1, \
+        "accumulated relation may appear ONLY in the anti-join"
+    assert "LeftAnti" in plan

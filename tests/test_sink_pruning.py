@@ -1,9 +1,11 @@
 """Materialization-layer scale behavior: bucketed tile writes prune at
-read time, and null-coordinate rows are dropped at assignment."""
+read time, null-coordinate rows are dropped at assignment, and the
+batch CLIs' parquet write counts its output on its own job."""
 
 from __future__ import annotations
 
 import shutil
+import threading
 
 from pyspark.sql import functions as F
 
@@ -118,3 +120,33 @@ def test_chunked_manifest_union_equals_flat(spark):
                            chunked=True)
     plan = fresh._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
+
+
+def test_write_parquet_counts_ride_the_write_job(spark, tmp_path, job_count):
+    """``write_parquet`` runs one job: the row count and each named
+    aggregate are observed on the write itself (a count() or a read-back
+    would add jobs).  AQE is off here because it submits every shuffle
+    stage as a job of its own.  An empty output reads 0 rows and a sum
+    of 0, not None, and its observation does not block."""
+    from mapsplit_spark.sinks import write_parquet
+
+    df = spark.range(0, 1000, 1, 3)
+    got = {}
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        jobs = job_count(lambda: got.update(
+            write_parquet(df, str(tmp_path / "full"), total=F.sum("id"))))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert jobs == 1
+    assert got == {"rows": 1000, "total": 499500}
+    assert spark.read.parquet(str(tmp_path / "full")).count() == 1000
+
+    empty = {}
+    writer = threading.Thread(target=lambda: empty.update(write_parquet(
+        spark.range(0), str(tmp_path / "empty"), total=F.sum("id"))),
+        daemon=True)
+    writer.start()
+    writer.join(120)
+    assert empty == {"rows": 0, "total": 0}
