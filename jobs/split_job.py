@@ -226,6 +226,9 @@ def main(argv=None) -> None:
     out = args.output
     # the summary's tile and element counts ride the manifests write
     written = write_parquet(manifests, f"{out}/manifests", elements=F.sum("n"))
+    # the one-row-per-tile exports read the written manifests: the lazy
+    # frame would run the manifest aggregation again
+    stored = read_back(manifests, f"{out}/manifests")
 
     if args.pyramid is not None:
         from mapsplit_spark.operators.pyramid import pyramid_counts
@@ -368,12 +371,12 @@ def main(argv=None) -> None:
     if args.tile_files:
         from mapsplit_spark.sinks.tilefiles import export_tile_files
 
-        export_tile_files(manifests, args.tile_files, args.tile_template)
+        export_tile_files(stored, args.tile_files, args.tile_template)
 
     if args.mbtiles:
         from mapsplit_spark.sinks.mbtiles import export_mbtiles
 
-        export_mbtiles(spark, manifests, args.mbtiles, args.zoom,
+        export_mbtiles(spark, stored, args.mbtiles, args.zoom,
                        latest_date_ms=latest_ms)
 
     if args.raster_mbtiles:
@@ -410,8 +413,7 @@ def main(argv=None) -> None:
 
     n_tiles = written["rows"]
     if args.chunked_manifests:  # an observed metric cannot count distinct tiles
-        n_tiles = read_back(manifests, f"{out}/manifests") \
-            .select("zoom", "tile_x", "tile_y").distinct().count()
+        n_tiles = stored.select("zoom", "tile_x", "tile_y").distinct().count()
     print(json.dumps({
         "tiles": n_tiles,
         "elements": written["elements"],

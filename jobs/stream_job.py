@@ -133,7 +133,8 @@ def dedup_mode(spark, args):
     )
 
     def sink(df, batch_id):  # file sinks can't take update mode directly
-        df.dropDuplicates(["id_a", "id_b"]).write.mode("append") \
+        # a drain's pairs are few: one file per drain, not one per task
+        df.dropDuplicates(["id_a", "id_b"]).coalesce(1).write.mode("append") \
             .parquet(args.output)
 
     def summary():

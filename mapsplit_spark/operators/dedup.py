@@ -322,21 +322,42 @@ def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
     return jaccard_verify(cands, shingled, threshold, id_col)
 
 
-def _band_exprs(hash_col: str, n_bands: int, bits: int) -> list:
-    """Band value expressions: ``n_bands`` contiguous bit slices of the
-    hash (widths differ by ≤1 when bits % n_bands ≠ 0).
-    shiftrightunsigned + mask, so signed 64-bit hashes (real pHash
-    stored as int64) band correctly."""
+def _band_layout(n_bands: int, bits: int) -> list[tuple[int, int]]:
+    """(offset, width) of each band: ``n_bands`` contiguous bit slices
+    of the hash (widths differ by ≤1 when bits % n_bands ≠ 0)."""
     w, rem = divmod(bits, n_bands)
     out, off = [], 0
     for k in range(n_bands):
         width = w + (1 if k < rem else 0)
-        out.append(
-            F.shiftrightunsigned(F.col(hash_col), off)
-            .bitwiseAND(F.lit((1 << width) - 1))
-        )
+        out.append((off, width))
         off += width
     return out
+
+
+def _band_exprs(hash_col: str, n_bands: int, bits: int) -> list:
+    """Band value expressions of ``_band_layout``.  shiftrightunsigned +
+    mask, so signed 64-bit hashes (real pHash stored as int64) band
+    correctly."""
+    return [F.shiftrightunsigned(F.col(hash_col), off)
+            .bitwiseAND(F.lit((1 << width) - 1))
+            for off, width in _band_layout(n_bands, bits)]
+
+
+def _band_combos(n_bands: int, radius: int) -> list[tuple[int, ...]]:
+    """The (m − radius)-subsets of the m bands; ``hamming_banded``'s
+    ``band`` column is the index into this list."""
+    from itertools import combinations
+
+    return list(combinations(range(n_bands), n_bands - radius))
+
+
+def band_combo_masks(n_bands: int, bits: int, radius: int) -> list[int]:
+    """Bit mask of each ``hamming_banded`` band combination, indexed by
+    its ``band`` value: two hashes agree on combination ``band`` exactly
+    when they agree under its mask."""
+    layout = _band_layout(n_bands, bits)
+    return [sum(((1 << layout[k][1]) - 1) << layout[k][0] for k in combo)
+            for combo in _band_combos(n_bands, radius)]
 
 
 def hamming_banded(df: DataFrame, id_col: str, hash_col: str,
@@ -360,11 +381,8 @@ def hamming_banded(df: DataFrame, id_col: str, hash_col: str,
     m = 8 (40-bit keys, 56 combos) 326 s — correct but paying 2.8×
     replication for key entropy that 5 M rows don't need; m = 8 is the
     ~10^9-row setting."""
-    from itertools import combinations
-
-    m = n_bands
-    bands = _band_exprs(hash_col, m, bits)
-    combos = list(combinations(range(m), m - radius))
+    bands = _band_exprs(hash_col, n_bands, bits)
+    combos = _band_combos(n_bands, radius)
     return df.select(
         F.col(id_col),
         F.col(hash_col),

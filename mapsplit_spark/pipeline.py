@@ -14,7 +14,7 @@ tile): each stage writes
 * ``{workdir}/{stage}/metrics/``   — per-partition rows: (stage,
   partition_id, n_rows) + stage wall time, input fingerprint
 * ``{workdir}/{stage}/_STAGE_OK``  — completion marker carrying the
-  stage's config hash
+  stage's config hash and data schema
 
 ``run`` skips any stage whose marker matches the current config hash —
 kill-and-resume therefore recomputes only unfinished stages and yields
@@ -33,10 +33,11 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .operators.assign import assign_and_expand
 from .operators.optimize import merged_assignments
-from .sinks import write_parquet
+from .sinks import read_back, write_parquet
 from .sinks.manifests import tile_manifests
 
 
@@ -48,24 +49,27 @@ def _marker(path: str) -> str:
     return os.path.join(path, "_STAGE_OK")
 
 
-def _stage_done(stage_dir: str, cfg_hash: str) -> bool:
-    m = _marker(stage_dir)
-    if not os.path.exists(m):
-        return False
+def _stored_schema(stage_dir: str, cfg_hash: str) -> StructType | None:
+    """The data schema recorded in a stage's marker when the marker
+    matches ``cfg_hash``; None when the stage must be (re)built."""
     try:
-        with open(m) as fh:
-            return json.load(fh).get("cfg_hash") == cfg_hash
+        with open(_marker(stage_dir)) as fh:
+            marker = json.load(fh)
     except (OSError, json.JSONDecodeError):
-        return False
+        return None
+    if marker.get("cfg_hash") != cfg_hash or "schema" not in marker:
+        return None
+    return StructType.fromJson(marker["schema"])
 
 
 def _write_stage(df: DataFrame, stage: str, stage_dir: str, cfg_hash: str,
-                 lineage: dict) -> None:
+                 lineage: dict) -> DataFrame:
+    """Persist ``df`` as the stage's data + metrics + marker (which
+    records the data schema); → the data read back with that schema."""
     t0 = time.time()
     data = os.path.join(stage_dir, "data")
     df.write.mode("overwrite").parquet(data)
-    spark = df.sparkSession
-    out = spark.read.parquet(data)
+    out = read_back(df, data)
     metrics = (
         out.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(F.count("*").alias("n_rows"))
@@ -79,9 +83,11 @@ def _write_stage(df: DataFrame, stage: str, stage_dir: str, cfg_hash: str,
     with open(_marker(stage_dir), "w") as fh:
         json.dump({
             "cfg_hash": cfg_hash, "stage": stage, "rows": rows,
+            "schema": df.schema.jsonValue(),
             "wall_sec": round(time.time() - t0, 3), "lineage": lineage,
             "finished_at_epoch": time.time(),
         }, fh)
+    return out
 
 
 class TilingPipeline:
@@ -139,16 +145,19 @@ class TilingPipeline:
     def _stage(self, stage: str, upstream: str | None, build) -> DataFrame:
         """One stage of the chain: ``build()`` as is without a workdir;
         with one, written once (parquet + metrics + ``_STAGE_OK``) and
-        read back — a marker with this config's hash skips ``build``."""
+        read back with its schema — a marker with this config's hash
+        skips ``build`` and supplies the schema, so no read infers one."""
         if not self.workdir:
             return build()
         stage_dir = self._dir(stage)
-        if not _stage_done(stage_dir, self.cfg_hash):
-            lineage = {"input": self._input, "cfg": self.cfg}
-            if upstream:
-                lineage["upstream"] = self._dir(upstream)
-            _write_stage(build(), stage, stage_dir, self.cfg_hash, lineage)
-        return self.spark.read.parquet(os.path.join(stage_dir, "data"))
+        schema = _stored_schema(stage_dir, self.cfg_hash)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(
+                os.path.join(stage_dir, "data"))
+        lineage = {"input": self._input, "cfg": self.cfg}
+        if upstream:
+            lineage["upstream"] = self._dir(upstream)
+        return _write_stage(build(), stage, stage_dir, self.cfg_hash, lineage)
 
     def run(self, input_path: str) -> DataFrame:
         """Build (lazy) or execute/resume (workdir) the chain; sets

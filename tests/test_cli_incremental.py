@@ -186,6 +186,35 @@ def test_tile_files_template_output(spark, images_dir, outbase, capsys):
     assert n_files == len(man)  # exactly one file per tile, none extra
 
 
+def test_exports_read_the_written_manifests(spark, images_dir, outbase, capsys,
+                                           job_count, monkeypatch):
+    """--mbtiles and --tile-files export the manifests the run just
+    wrote: each export is the one job that reads them, not a second run
+    of the manifest aggregation."""
+    from mapsplit_spark.sinks import mbtiles, tilefiles
+
+    jobs = {}
+
+    def counted(name, export):
+        def run(*args, **kw):
+            jobs[name] = job_count(lambda: export(*args, **kw))
+        return run
+
+    monkeypatch.setattr(mbtiles, "export_mbtiles",
+                        counted("mbtiles", mbtiles.export_mbtiles))
+    monkeypatch.setattr(tilefiles, "export_tile_files",
+                        counted("tile_files", tilefiles.export_tile_files))
+    out = os.path.join(outbase, "exports")
+    summary = _run([
+        "--input", f"{images_dir}/images.parquet", "--output", out,
+        "--zoom", "13", "--border", "0.1",
+        "--mbtiles", os.path.join(outbase, "exports.mbtiles"),
+        "--tile-files", os.path.join(outbase, "exports_files"),
+    ], capsys)
+    assert jobs == {"mbtiles": 1, "tile_files": 1}
+    assert summary["tiles"] > 0
+
+
 def test_workdir_optimize_consumes_stage_outputs(spark, images_dir, outbase, capsys):
     """--workdir --optimize: the CLI consumes the pipeline's tiled +
     manifests stages (no recompute of the merge walk) and payload tile

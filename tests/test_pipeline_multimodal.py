@@ -97,11 +97,25 @@ def test_pipeline_resume_identical(spark, images_dir):
     assert {r.zoom for r in m3.select("zoom").distinct().collect()} == {12}
 
 
+def test_resumed_pipeline_runs_no_job(spark, images_dir, tmp_path, job_count):
+    """A fully persisted chain resumes from its markers alone: each
+    stage is read with the schema its marker stores, so building the
+    resumed chain infers no schema and runs no Spark job."""
+    src = f"{images_dir}/images.parquet"
+    work = str(tmp_path / "work")
+    want = TilingPipeline(spark, work, zoom=13, border=0.1).run(src)
+    want = sorted(want.collect())
+    pipe = TilingPipeline(spark, work, zoom=13, border=0.1)
+    assert job_count(lambda: pipe.run(src)) == 0
+    assert sorted(pipe.manifests.collect()) == want
+
+
 def test_write_stage_marker_rows_ride_metrics_job(spark, tmp_path, job_count):
-    """A persisted stage runs three jobs: the data write, the read-back's
-    schema job and the per-partition metrics write.  The marker's row
+    """A persisted stage runs two jobs: the data write and the
+    per-partition metrics write.  The data is read back with the
+    writer's schema, so no schema-inference job runs.  The marker's row
     count is the sum of those metrics rows, observed on the metrics
-    write (a separate count() would be a fourth job).  AQE is off here
+    write (a separate count() would be a third job).  AQE is off here
     because it submits every shuffle stage as a job of its own."""
     import json
 
@@ -115,9 +129,11 @@ def test_write_stage_marker_rows_ride_metrics_job(spark, tmp_path, job_count):
         jobs = job_count(lambda: _write_stage(df, "s", stage_dir, "h", {}))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert jobs == 3
+    assert jobs == 2
     with open(os.path.join(stage_dir, "_STAGE_OK")) as fh:
-        assert json.load(fh)["rows"] == 1000
+        marker = json.load(fh)
+    assert marker["rows"] == 1000
+    assert marker["schema"] == df.schema.jsonValue()
     met = spark.read.parquet(os.path.join(stage_dir, "metrics"))
     assert met.agg(F.sum("n_rows")).collect()[0][0] == 1000
 
