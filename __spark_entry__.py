@@ -1408,38 +1408,20 @@ def q_ring_raster(spark, sf_dir):
     """Vector→raster conversion (the north star's raster↔vector
     surface): rasterize the 40-ring zone fixture onto the z7 tile grid
     by center-in-polygon — the ENGINE runs the production PIP Arrow
-    kernel (clip.zone_assign) over a GENERATED tile-center grid
-    (16 k rows at z7; a higher-zoom raster would bbox-prune candidates
-    first), then joins the z13 event tile assignment (quadtree
-    bit-shift, never re-projected) against the covered cells.  → per
+    kernel (clip.zone_assign) over a GENERATED tile-center grid pruned
+    to the rings' bounding box (clip.rasterize), then joins the z13
+    event tile assignment (quadtree bit-shift, never re-projected)
+    against the covered cells.  → per
     zone: covered-tile count + events landing in covered cells.
     Oracle: 40 unrolled ring_pip_sql predicates over a generate_series
     grid — an INDEPENDENT even-odd formulation (the ring_zonal
     pattern), sharing only the tile-center arithmetic text."""
-    from mapsplit_spark.operators.clip import make_ring, zone_assign
+    from mapsplit_spark.operators.clip import make_ring, rasterize
 
-    n = 1 << RASTER_ZOOM
     d = ZOOM - RASTER_ZOOM
-
-    # coalesce the generated grid to a few fat partitions BEFORE the
-    # Arrow PIP kernel: spark.range defaults to one partition per core
-    # (4 rows each here), and every task pays the Python worker + ring
-    # index setup (~0.6 s × 32 tasks of fixed cost measured at sf0.1)
-    grid = spark.range(n).coalesce(4) \
-        .select(F.col("id").cast("int").alias("x")) \
-        .withColumn("y", F.explode(F.sequence(F.lit(0), F.lit(n - 1))))
-    centers = grid.select(
-        (F.col("x").cast("long") * n + F.col("y")).alias("cell_id"),
-        F.expr(sqlgen.tile2lon_sql("x + 0.5", RASTER_ZOOM)).alias("lon"),
-        F.expr(sqlgen.tile2lat_sql("y + 0.5", RASTER_ZOOM)).alias("lat"),
-    )
-    za = zone_assign(centers, [make_ring(v) for v in CLIP_MULTI_OUTERS], [],
-                     id_col="cell_id")
-    raster = za.select(
-        F.col("zone").cast("int").alias("zone"),
-        (F.col("cell_id") / n).cast("long").alias("x"),
-        F.pmod(F.col("cell_id"), F.lit(n)).cast("long").alias("y"),
-    )
+    raster = rasterize(spark, [make_ring(v) for v in CLIP_MULTI_OUTERS], [],
+                       RASTER_ZOOM).select(
+        "zone", F.col("tile_x").alias("x"), F.col("tile_y").alias("y"))
     ev = assign_tiles(_event_points(spark, sf_dir), "event_id", "lon", "lat",
                       ZOOM).select(
         F.shiftright("tile_x", d).cast("long").alias("x"),

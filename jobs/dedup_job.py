@@ -96,8 +96,16 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    p = build_parser()
+    args = p.parse_args(argv)
+    if args.contamination and not args.winnow:
+        p.error("--contamination requires --winnow DOCS")
+    return args
+
+
 def main(argv: list[str] | None = None) -> None:
-    args = build_parser().parse_args(argv)
+    args = parse_args(argv)
     from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
@@ -196,8 +204,6 @@ def main(argv: list[str] | None = None) -> None:
                 wdups, f"{out}/winnow_dups")["rows"]
 
         if args.contamination:
-            if not args.winnow:
-                raise SystemExit("--contamination requires --winnow DOCS")
             from mapsplit_spark.operators.contamination import (
                 contamination_pairs,
                 decontaminate,

@@ -279,32 +279,9 @@ def main(argv=None) -> None:
         ), f"{out}/zones")
 
     if args.raster is not None and args.poly:
-        import numpy as np
+        from mapsplit_spark.operators.clip import rasterize
 
-        from mapsplit_spark import sqlgen, tilemath
-
-        outers, inners = pipe.rings
-        # bbox-pruned candidate grid (the rings live on the driver)
-        bb = np.array([b for _, b in outers])
-        x0 = int(tilemath.lon2tx(bb[:, 0].min(), args.raster))
-        x1 = int(tilemath.lon2tx(bb[:, 1].max(), args.raster))
-        y0 = int(tilemath.lat2ty(bb[:, 3].max(), args.raster))
-        y1 = int(tilemath.lat2ty(bb[:, 2].min(), args.raster))
-        n = 1 << args.raster
-        grid = spark.range(x0, x1 + 1).select(
-            F.col("id").cast("int").alias("x")
-        ).withColumn("y", F.explode(F.sequence(F.lit(y0), F.lit(y1))))
-        centers = grid.select(
-            (F.col("x").cast("long") * n + F.col("y")).alias("cell_id"),
-            F.expr(sqlgen.tile2lon_sql("x + 0.5", args.raster)).alias("lon"),
-            F.expr(sqlgen.tile2lat_sql("y + 0.5", args.raster)).alias("lat"),
-        )
-        za = zone_assign(centers, outers, inners, id_col="cell_id")
-        write_parquet(za.select(
-            "zone",
-            (F.col("cell_id") / n).cast("long").alias("tile_x"),
-            F.pmod(F.col("cell_id"), F.lit(n)).cast("long").alias("tile_y"),
-        ), f"{out}/raster")
+        write_parquet(rasterize(spark, *pipe.rings, args.raster), f"{out}/raster")
 
     if args.snap:
         from mapsplit_spark.operators.snap import snap_to_segments

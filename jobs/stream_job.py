@@ -172,8 +172,16 @@ def counts_mode(spark, args):
 MODES = {"counts": counts_mode, "dedup": dedup_mode, "geofence": geofence_mode}
 
 
+def parse_args(argv=None) -> argparse.Namespace:
+    p = build_parser()
+    args = p.parse_args(argv)
+    if args.mode == "geofence" and not args.poly:
+        p.error("--mode geofence requires --poly RINGS")
+    return args
+
+
 def main(argv=None) -> None:
-    args = build_parser().parse_args(argv)
+    args = parse_args(argv)
     from pyspark.sql import SparkSession
 
     from mapsplit_spark.session import get_spark

@@ -10,8 +10,9 @@ quadtree — every slippy tile IS a quadtree cell):
 * ``morton(x, y)``   — bit-interleaved Z-order index (locality-preserving
   sort key for range scans / clustering the tile table on disk),
 * ``quadkey(z,x,y)`` — Bing-style base-4 string, prefix = ancestor cell,
-* ``k_ring(x,y,k)``  — the (2k+1)² neighbourhood used by the kNN
-  candidate generator (H3 k-ring analog, operators/knn.knn_tiled).
+* ``k_ring(x,y,k)``  — the grid-clamped (2k+1)² neighbourhood (H3
+  k-ring analog), the reference that ``assign.tile_window`` is tested
+  against.
 
 All vectorized numpy; ``morton_col`` provides the same as a JVM column
 expression for writers that cluster output by curve position.
@@ -78,7 +79,8 @@ def parse_quadkey(qk: str) -> tuple[int, int, int]:
 
 
 def k_ring(x: int, y: int, k: int, zoom: int) -> list[tuple[int, int]]:
-    """(2k+1)² neighbourhood clamped to the tile grid — H3 k-ring analog."""
+    """(2k+1)² neighbourhood clamped to the tile grid — H3 k-ring analog;
+    the Python reference of ``assign.tile_window``'s clamp rule."""
     n = 1 << zoom
     return [
         (x + dx, y + dy)

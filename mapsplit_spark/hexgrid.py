@@ -22,8 +22,9 @@ geometry; Amit Patel's cube-rounding algorithm — public knowledge):
   hexagon containment (hexagons are the Voronoi cells of the
   lattice), verified against a brute-force nearest-center search in
   tests/test_hexgrid.py;
-* ``hex_disk`` / ``hex_ring``: all cells within hex-distance k /
-  exactly at k (|ring k| = 6k, |disk k| = 3k(k+1)+1).
+* ``hex_disk_offsets`` / ``hex_ring_offsets``: all cells within
+  hex-distance k / exactly at k (|ring k| = 6k, |disk k| = 3k(k+1)+1);
+  ``hex_disk`` scatters a frame's cells to their k-disks in the JVM.
 
 Three formulations gate each other (the tile_cellid / geohash
 pattern): the numpy kernel here, the JVM column twin
@@ -51,7 +52,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Axial transform constants — Python floats, embedded as literals in
@@ -137,6 +138,27 @@ def hex_disk_offsets(k: int) -> list[tuple[int, int]]:
     ]
 
 
+def hex_disk(df: DataFrame, keep: list[str], k: int | Column) -> DataFrame:
+    """Scatter each row's cell (hq, hr) to its hex k-disk — the JVM twin
+    of ``hex_disk_offsets``, the one place the engine builds the disk.
+    ``k`` is an int or a per-row Column (lat-adaptive radii).
+    → (*keep, hq, hr), 3k(k+1)+1 distinct cells per row; map-side (two
+    explodes of ``sequence``, no UDF)."""
+    if isinstance(k, int):
+        if k < 0:
+            raise ValueError("k must be >= 0")
+        k = F.lit(k)
+    kc, dq, dr = F.col("_k"), F.col("_dq"), F.col("_dr")
+    return (
+        df.select(*keep, "hq", "hr", k.alias("_k"))
+        .withColumn("_dq", F.explode(F.sequence(-kc, kc)))
+        .withColumn("_dr", F.explode(F.sequence(
+            F.greatest(-kc, -dq - kc), F.least(kc, -dq + kc))))
+        .select(*keep, (F.col("hq") + dq).alias("hq"),
+                (F.col("hr") + dr).alias("hr"))
+    )
+
+
 def hex_ring_offsets(k: int) -> list[tuple[int, int]]:
     """Axial offsets at hex-distance exactly ``k`` — |ring| = 6k (k>0)."""
     if k == 0:
@@ -162,3 +184,10 @@ def scatter_k_for_radius(rho_deg: float, s: float) -> int:
     a point within degree-plane distance ``rho_deg``: invert
     ``covered_radius_deg`` — k = ceil(((rho + 2s) / (1.5 s)) − 1)."""
     return max(0, math.ceil((rho_deg + 2.0 * s) / (CENTER_SPACING_MIN * s) - 1.0))
+
+
+def scatter_k_col(rho_deg: Column, s: float) -> Column:
+    """``scatter_k_for_radius`` as an int Column, for per-row radii."""
+    return F.greatest(F.lit(0), F.ceil(
+        (rho_deg + F.lit(2.0 * s)) / F.lit(CENTER_SPACING_MIN * s) - F.lit(1.0)
+    )).cast("int")

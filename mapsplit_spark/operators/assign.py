@@ -98,6 +98,37 @@ def expand_tiles(assigned: DataFrame, keep_cols: list[str] | None = None) -> Dat
     )
 
 
+def tile_window(df: DataFrame, keep: list[str], radius: int, zoom: int,
+                wrap_x: bool = False) -> DataFrame:
+    """Scatter each row's (tile_x, tile_y) to its (2·radius+1)² window
+    (Chebyshev radius, the grid k-ring; ``cellid.k_ring`` is the Python
+    reference of the clamp rule) → (*keep, tile_x, tile_y).
+
+    The one place the square neighbourhood and its edge rule are built:
+    y always clamps to the zoom's grid; x clamps too, or with ``wrap_x``
+    wraps modulo 2^zoom (the antimeridian seam).  Cells outside the grid
+    are dropped here, before any shuffle, and a row's window cells are
+    distinct (a wrapped window wider than the world takes each column
+    once).  Map-side: one explode of literal offsets inside codegen."""
+    if radius < 0:
+        raise ValueError(f"radius must be ≥ 0, got {radius}")
+    n = 1 << zoom
+    span = range(-radius, radius + 1)
+    dxs = range(n) if wrap_x and len(span) > n else span
+    offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
+                     for dx in dxs for dy in span])
+    x = F.col("tile_x") + F.col("o.dx")
+    tx, ty = F.col("tile_x"), F.col("tile_y")
+    in_grid = (ty >= 0) & (ty < n)
+    if not wrap_x:
+        in_grid &= (tx >= 0) & (tx < n)
+    return df.select(*keep, "tile_x", "tile_y", F.explode(offs).alias("o")).select(
+        *keep,
+        (F.pmod(x, F.lit(n)) if wrap_x else x).alias("tile_x"),
+        (ty + F.col("o.dy")).alias("tile_y"),
+    ).filter(in_grid)
+
+
 def assign_and_expand(df: DataFrame, id_col: str, lon_col: str, lat_col: str,
                       zoom: int, border: float = 0.0) -> DataFrame:
     """Convenience: points → exploded (element_id, tile_x, tile_y)."""

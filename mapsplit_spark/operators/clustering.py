@@ -13,9 +13,9 @@ Spark-first shape (no per-point pairwise work, no theta join):
 
 1. assign + per-cell count — one partially-aggregated shuffle, exactly
    the A2 ``tile_counts`` shape;
-2. dense-cell adjacency by SCATTER: each dense cell map-side emits its
-   ≤ 8 clamped neighbour keys, then ONE equi-join against the dense
-   key set — candidate edges are bounded by 8·|dense|, never |dense|²
+2. dense-cell adjacency by SCATTER: each dense cell map-side emits the
+   ≤ 9 clamped keys of its 3×3 window, then ONE equi-join against the
+   dense key set — candidate edges are bounded by 9·|dense|, never |dense|²
    (the DuckDB oracle states the |dense|² theta join directly; the
    engine never plans one);
 3. cluster ids via ``connected_components`` (min-label + pointer
@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .assign import assign_tiles
+from .assign import assign_tiles, tile_window
 from .components import connected_components
 from .iterate import checkpoint_count
 
@@ -66,38 +66,15 @@ def dense_cells(points: DataFrame, id_col: str, lon_col: str, lat_col: str,
 
 def _dense_edges(dense: DataFrame, zoom: int) -> DataFrame:
     """Undirected adjacency (id_a < id_b) between 8-connected dense
-    cells: scatter each cell to its clamped neighbour keys, equi-join
-    back against the dense key set."""
-    side = 1 << zoom
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            if (dx, dy) != (0, 0)]
-    nbrs = dense.select(
-        "k",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    (F.col("tile_x") + dx).alias("nx"),
-                    (F.col("tile_y") + dy).alias("ny"),
-                )
-                for dx, dy in offs
-            ])
-        ).alias("o"),
-    ).select(
-        "k",
-        F.col("o.nx").alias("nx"),
-        F.col("o.ny").alias("ny"),
-    ).filter(
-        (F.col("nx") >= 0) & (F.col("nx") < side)
-        & (F.col("ny") >= 0) & (F.col("ny") < side)
-    ).withColumn("nk", cell_key("nx", "ny", zoom))
-    hit = nbrs.join(
-        dense.select(F.col("k").alias("nk")), "nk"
-    ).select("k", "nk")
-    return (
-        hit.filter(F.col("k") < F.col("nk"))
-        .select(F.col("k").alias("id_a"), F.col("nk").alias("id_b"))
-        .distinct()
-    )
+    cells: scatter each cell to its clamped 3×3 window
+    (``assign.tile_window``), equi-join back against the dense key set.
+    The window holds the cell itself; ``k < nk`` drops that self-edge,
+    and keeps each edge once (dense keys and window cells are distinct)."""
+    nbrs = tile_window(dense, ["k"], 1, zoom).select(
+        "k", cell_key("tile_x", "tile_y", zoom).alias("nk"))
+    hit = nbrs.join(dense.select(F.col("k").alias("nk")), "nk")
+    return hit.filter(F.col("k") < F.col("nk")).select(
+        F.col("k").alias("id_a"), F.col("nk").alias("id_b"))
 
 
 def grid_clusters(points: DataFrame, id_col: str, lon_col: str, lat_col: str,

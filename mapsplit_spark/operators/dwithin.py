@@ -50,9 +50,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import sqlgen
-from ..hexgrid import CENTER_SPACING_MIN, hex_cell_cols
-
-EARTH_R_KM = 6371.0088  # matches sqlgen.haversine_sql
+from ..hexgrid import hex_cell_cols, hex_disk, scatter_k_col
+from ..sqlgen import EARTH_R_KM
 
 
 def _max_dlambda_deg(d_km: float, cos_phi: float) -> float:
@@ -102,40 +101,28 @@ def dwithin_pairs(points: DataFrame, id_col: str, lon_col: str,
         F.max(F.abs(F.col("lat"))).alias("max_abs_lat"))
 
     # per-cell scatter radius k: ρ = √(Δφ² + Δλ(φm)²) degrees, with
-    # φm = min(lat_cap, cell max |lat| + Δφ); k = ceil((ρ+2s)/(1.5s) − 1)
+    # φm = min(lat_cap, cell max |lat| + Δφ)
     phi_m = F.least(F.lit(cap_rad),
                     F.radians(F.col("max_abs_lat") + F.lit(dphi_deg)))
     sin_half = F.lit(math.sin(d_km / (2.0 * EARTH_R_KM)))
     dlam_deg = F.degrees(F.lit(2.0) * F.asin(F.least(F.lit(1.0), sin_half / F.cos(phi_m))))
     rho = F.sqrt(F.lit(dphi_deg) * F.lit(dphi_deg) + dlam_deg * dlam_deg)
-    k_col = F.greatest(F.lit(0), F.ceil(
-        (rho + F.lit(2.0 * s)) / F.lit(CENTER_SPACING_MIN * s) - F.lit(1.0)
-    )).cast("int")
 
-    cellpairs = (
-        cells.withColumn("k", k_col)
-        .withColumn("dq", F.explode(F.sequence(-F.col("k"), F.col("k"))))
-        .withColumn("dr", F.explode(F.sequence(
-            F.greatest(-F.col("k"), -F.col("dq") - F.col("k")),
-            F.least(F.col("k"), -F.col("dq") + F.col("k")),
-        )))
-        .select("hq", "hr",
-                (F.col("hq") + F.col("dq")).alias("dst_q"),
-                (F.col("hr") + F.col("dr")).alias("dst_r"))
-        .join(cells.select(F.col("hq").alias("dst_q"),
-                           F.col("hr").alias("dst_r")),
-              ["dst_q", "dst_r"], "left_semi")
-    )
+    # (src cell → occupied dst cell) pairs; a semi-join drops empty targets
+    src = cells.select(F.col("hq").alias("src_q"), F.col("hr").alias("src_r"),
+                       "hq", "hr", "max_abs_lat")
+    cellpairs = hex_disk(src, ["src_q", "src_r"], scatter_k_col(rho, s)) \
+        .join(cells, ["hq", "hr"], "left_semi")
 
     a = pts.select(F.col("pid").alias("id_a"), F.col("lon").alias("lon_a"),
-                   F.col("lat").alias("lat_a"), "hq", "hr")
+                   F.col("lat").alias("lat_a"),
+                   F.col("hq").alias("src_q"), F.col("hr").alias("src_r"))
     b = pts.select(F.col("pid").alias("id_b"), F.col("lon").alias("lon_b"),
-                   F.col("lat").alias("lat_b"),
-                   F.col("hq").alias("dst_q"), F.col("hr").alias("dst_r"))
+                   F.col("lat").alias("lat_b"), "hq", "hr")
     dist = F.expr(sqlgen.haversine_sql("lat_a", "lon_a", "lat_b", "lon_b"))
     return (
-        a.join(cellpairs, ["hq", "hr"])
-        .join(b, ["dst_q", "dst_r"])
+        a.join(cellpairs, ["src_q", "src_r"])
+        .join(b, ["hq", "hr"])
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("dist_km", F.round(dist, 6))
         .filter(F.col("dist_km") <= F.lit(d_km))

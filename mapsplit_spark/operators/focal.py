@@ -5,8 +5,9 @@ surfaces, k-ring load estimation) as a Spark relational plan.
 A focal statistic at tile (x, y) aggregates the values of every tile
 within Chebyshev radius r — the (2r+1)² window GIS rasters call the
 focal neighborhood and the kNN candidate generator calls a k-ring
-(cellid.k_ring).  The reference has no raster algebra (its per-tile
-counts stop at the A2 histogram, MapSplit.java:867-883); this extends
+(assign.tile_window builds it for both).  The reference has no raster
+algebra (its per-tile counts stop at the A2 histogram,
+MapSplit.java:867-883); this extends
 the same histogram the way the pyramid rollup (operators/pyramid.py)
 extends it vertically.
 
@@ -33,47 +34,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .assign import tile_window
+
 
 def focal_sum(counts: DataFrame, zoom: int, radius: int = 1,
-              x_col: str = "tile_x", y_col: str = "tile_y",
-              val_col: str = "n",
               scatter_partitions: int | None = None) -> DataFrame:
-    """(tile_x, tile_y, value) → (tile_x, tile_y, focal_sum, n_contrib):
+    """(tile_x, tile_y, n) → (tile_x, tile_y, focal_sum, n_contrib):
     the box-kernel neighborhood sum at Chebyshev radius ``radius``,
-    grid-clamped at the zoom's edges.  One exchange; fan-out (2r+1)²
-    is map-side.
+    grid-clamped at the zoom's edges (``assign.tile_window``).  One
+    exchange; fan-out (2r+1)² is map-side.
 
     ``scatter_partitions``: explicit width for the scatter+partial-agg
     stage — when ``counts`` arrives from a small AQE-coalesced
     aggregation exchange the whole (2r+1)² fan-out otherwise runs as
     1-2 tasks (measured 1.6 s of the gate's 1.5 s single-task stage at
     sf0.1; r6 guide §2.5).  Leave None when the input is already wide."""
-    if radius < 0:
-        raise ValueError(f"radius must be ≥ 0, got {radius}")
     if scatter_partitions:
-        counts = counts.repartition(scatter_partitions, x_col, y_col)
-    n = 1 << zoom
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in range(-radius, radius + 1)
-        for dy in range(-radius, radius + 1)
-    ])
-    scattered = (
-        counts.select(
-            F.col(x_col), F.col(y_col), F.col(val_col),
-            F.explode(offs).alias("o"),
-        )
-        .select(
-            (F.col(x_col) + F.col("o.dx")).alias("tile_x"),
-            (F.col(y_col) + F.col("o.dy")).alias("tile_y"),
-            F.col(val_col),
-        )
-        .filter(
-            (F.col("tile_x") >= 0) & (F.col("tile_x") < n)
-            & (F.col("tile_y") >= 0) & (F.col("tile_y") < n)
-        )
-    )
-    return scattered.groupBy("tile_x", "tile_y").agg(
-        F.sum(val_col).cast("long").alias("focal_sum"),
+        counts = counts.repartition(scatter_partitions, "tile_x", "tile_y")
+    return tile_window(counts, ["n"], radius, zoom).groupBy("tile_x", "tile_y").agg(
+        F.sum("n").cast("long").alias("focal_sum"),
         F.count("*").cast("long").alias("n_contrib"),
     )

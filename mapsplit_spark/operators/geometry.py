@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import sqlgen
+from ..sqlgen import KM_PER_DEG
 
 
 def polyline_stats(nodes: DataFrame, way_col: str, seq_col: str,
@@ -214,9 +215,6 @@ SELECT {user_col}, n_pts, n_moves, path_mm, max_step_mm,
        END AS tortuosity_pct
 FROM a
 """
-
-
-KM_PER_DEG = 111.19492664455873  # radians(1)·6371.0088, = snap.KM_PER_DEG
 
 
 def ring_stats(nodes: DataFrame, way_col: str, seq_col: str,

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import sqlgen
-from .assign import assign_tiles
+from .assign import assign_tiles, tile_window
 
 
 def idw_weight_sql(d_km: str) -> str:
@@ -42,45 +42,27 @@ def idw_grid(points: DataFrame, id_col: str, lon_col: str, lat_col: str,
     having ≥1 sample within its (2·radius+1)² neighborhood.
     ``value_scale`` is the exact decimal quantizer for the value column
     (100 ⇒ 2 decimals survive exactly)."""
-    n = 1 << zoom
     # a NULL-valued sample would add weight to the denominator while the
     # SUM skips its numerator term — drop it before it can skew a cell
     pts = assign_tiles(points.filter(F.col(value_col).isNotNull()),
                        id_col, lon_col, lat_col, zoom,
                        keep_cols=[lon_col, lat_col, value_col])
-    offs = [(dx, dy) for dx in range(-radius, radius + 1)
-            for dy in range(-radius, radius + 1)]
-    scattered = pts.withColumn(
-        "o", F.explode(F.array(*[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in offs
-        ]))
-    ).select(
-        lon_col, lat_col, value_col,
-        (F.col("tile_x") + F.col("o.dx")).alias("tx"),
-        (F.col("tile_y") + F.col("o.dy")).alias("ty"),
-    ).filter(
-        (F.col("tx") >= 0) & (F.col("tx") < n)
-        & (F.col("ty") >= 0) & (F.col("ty") < n)
-    )
-    c_lon = sqlgen.tile2lon_sql("tx + 0.5", zoom)
-    c_lat = sqlgen.tile2lat_sql("ty + 0.5", zoom)
+    scattered = tile_window(pts, [lon_col, lat_col, value_col], radius, zoom)
+    c_lon = sqlgen.tile2lon_sql("tile_x + 0.5", zoom)
+    c_lat = sqlgen.tile2lat_sql("tile_y + 0.5", zoom)
     d = sqlgen.haversine_sql(lat_col, lon_col, f"({c_lat})", f"({c_lon})")
     weighted = scattered.select(
-        "tx", "ty",
+        "tile_x", "tile_y",
         F.expr(idw_weight_sql(d)).alias("_w"),
         (F.expr(idw_weight_sql(d))
          * F.expr(f"CAST(ROUND({value_col} * {value_scale}, 0) AS BIGINT)")
          ).alias("_wv"),
     )
-    return weighted.groupBy("tx", "ty").agg(
+    return weighted.groupBy("tile_x", "tile_y").agg(
         F.count("*").cast("long").alias("n_samples"),
         F.expr(
             f"ROUND(CAST(SUM(_wv) AS DOUBLE) / SUM(_w) / {value_scale}.0, 4)"
         ).alias("est_value"),
-    ).select(
-        F.col("tx").alias("tile_x"), F.col("ty").alias("tile_y"),
-        "n_samples", "est_value",
     )
 
 

@@ -45,11 +45,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import sqlgen
+from ..hexgrid import covered_radius_deg, hex_cell_cols, hex_disk
 from ..sinks.manifests import TILE_BUCKETS, tile_bucket
-from .assign import assign_tiles
+from ..sqlgen import EARTH_R_KM
+from .assign import assign_tiles, tile_window
 from .iterate import checkpoint_count, fixed_point
 
-EARTH_R_KM = 6371.0088  # matches sqlgen.haversine_sql
 _FAR_KM = 1.0e9  # "side fully covered" sentinel (wraps / poles)
 # knn_hex's disk ladder: radii K0·2^i up to K_MAX, then brute force
 K0 = 1
@@ -104,22 +105,10 @@ def _query_tiles(queries: DataFrame, zoom: int) -> DataFrame:
 
 def _ring_tiles(qt: DataFrame, zoom: int, ring: int,
                 keep: list[str]) -> DataFrame:
-    """Expand each query tile to its (2·ring+1)² ring: x wraps at the
-    antimeridian (pmod 2^zoom), y clamps to the Mercator domain.
-    → (*keep, tile_x, tile_y) distinct per query."""
-    n = 1 << zoom
-    offsets = [(dx, dy) for dx in range(-ring, ring + 1) for dy in range(-ring, ring + 1)]
-    return qt.withColumn(
-        "ring", F.explode(F.array(*[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in offsets
-        ]))
-    ).select(
-        *keep,
-        F.pmod(F.col("tile_x") + F.col("ring.dx"), F.lit(n)).alias("tile_x"),
-        (F.col("tile_y") + F.col("ring.dy")).alias("tile_y"),
-    ).filter((F.col("tile_y") >= 0) & (F.col("tile_y") < n)).dropDuplicates(
-        [*keep, "tile_x", "tile_y"]  # wrap can alias ring tiles at tiny zooms
-    )
+    """Each query tile's (2·ring+1)² ring (``assign.tile_window``): x
+    wraps at the antimeridian, y clamps to the Mercator domain.
+    → (*keep, tile_x, tile_y), distinct per query."""
+    return tile_window(qt, keep, ring, zoom, wrap_x=True)
 
 
 def _coverage_radius_km(qt: DataFrame, zoom: int, ring: int) -> DataFrame:
@@ -345,31 +334,10 @@ def knn_tiled_bucketed(queries: DataFrame, points_path: str, zoom: int,
 
 def _hex_assigned(df: DataFrame, id_out: str, lon: str, lat: str,
                   s_deg: float) -> DataFrame:
-    from ..hexgrid import hex_cell_cols
-
     q, r = hex_cell_cols(F.col(lon), F.col(lat), s_deg)
     return df.select(
         F.col(df.columns[0]).alias(id_out), lon, lat,
         q.alias("hq"), r.alias("hr"),
-    )
-
-
-def _hex_disk_cells(qt: DataFrame, k: int, keep: list[str]) -> DataFrame:
-    """Explode each query to its hex k-disk (3k(k+1)+1 cells — the H3
-    kRing analog).  Offsets are distinct and each point lives in exactly
-    one cell, so (query, point) candidates need no dedup."""
-    from ..hexgrid import hex_disk_offsets
-
-    offs = hex_disk_offsets(k)
-    return qt.withColumn(
-        "o", F.explode(F.array(*[
-            F.struct(F.lit(dq).alias("dq"), F.lit(dr).alias("dr"))
-            for dq, dr in offs
-        ]))
-    ).select(
-        *keep,
-        (F.col("hq") + F.col("o.dq")).alias("hq"),
-        (F.col("hr") + F.col("o.dr")).alias("hr"),
     )
 
 
@@ -392,8 +360,6 @@ def _hex_coverage_km(qt: DataFrame, k: int, s_deg: float) -> DataFrame:
       fraction); a square swallowing a pole has that side fully covered
       (no points beyond the pole).
     """
-    from ..hexgrid import covered_radius_deg
-
     rho = covered_radius_deg(k, s_deg)
     if rho <= 0:  # k=0 disks guarantee nothing — the bound below would
         raise ValueError("coverage proof needs disk radius k >= 1")
@@ -421,7 +387,7 @@ def _hex_probe(pending: DataFrame, kk: int, pt: DataFrame,
     ⋈ the hex-assigned points ``pt`` → (candidate pairs, per-query
     ``cov_km``)."""
     qt = _hex_assigned(pending, "query_id", "q_lon", "q_lat", s_deg)
-    cells = _hex_disk_cells(qt, kk, ["query_id", "q_lon", "q_lat"])
+    cells = hex_disk(qt, ["query_id", "q_lon", "q_lat"], kk)
     cands = F.broadcast(cells).join(pt, ["hq", "hr"]).select(
         "query_id", "q_lon", "q_lat", "point_id", "p_lon", "p_lat"
     )

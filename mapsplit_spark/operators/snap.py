@@ -43,10 +43,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..hexgrid import hex_cell_cols
-
-EARTH_R_KM = 6371.0088  # matches sqlgen.haversine_sql
-KM_PER_DEG = math.radians(1.0) * EARTH_R_KM
+from ..hexgrid import hex_cell_cols, hex_disk, scatter_k_col
+from ..sqlgen import KM_PER_DEG
 
 
 def snap_dist_sql(plon: str, plat: str, ax: str, ay: str,
@@ -114,10 +112,7 @@ def snap_to_segments(points: DataFrame, segments: DataFrame, d_km: float,
                   + len_deg + F.lit(d_deg)),
     )
     rho = F.lit(d_deg) / F.cos(phi_m) + len_deg / F.lit(2.0)
-    # k = ceil((ρ + 2s)/(1.5s) − 1), the scatter_k_for_radius formula
-    # as a column (per-segment radii differ)
-    k_raw = F.greatest(F.lit(0), F.ceil(
-        (rho + F.lit(2.0 * s)) / F.lit(1.5 * s) - F.lit(1.0))).cast("int")
+    k_raw = scatter_k_col(rho, s)  # per-segment radii differ
     k_col = F.when(
         k_raw > F.lit(max_k),
         F.raise_error(F.format_string(
@@ -136,16 +131,7 @@ def snap_to_segments(points: DataFrame, segments: DataFrame, d_km: float,
     )
     if scatter_partitions:
         seg = seg.repartition(scatter_partitions, "hq", "hr")
-    scattered = (
-        seg.withColumn("dq", F.explode(F.sequence(-F.col("k"), F.col("k"))))
-        .withColumn("dr", F.explode(F.sequence(
-            F.greatest(-F.col("k"), -F.col("dq") - F.col("k")),
-            F.least(F.col("k"), -F.col("dq") + F.col("k")),
-        )))
-        .select("way_id", "seq", "x1", "y1", "x2", "y2",
-                (F.col("hq") + F.col("dq")).alias("hq"),
-                (F.col("hr") + F.col("dr")).alias("hr"))
-    )
+    scattered = hex_disk(seg, ["way_id", "seq", "x1", "y1", "x2", "y2"], F.col("k"))
 
     pq, pr = hex_cell_cols(F.col("lon"), F.col("lat"), s)
     pts = points.select("pid", "lon", "lat", pq.alias("hq"), pr.alias("hr"))

@@ -19,6 +19,8 @@ Formulas re-derive the reference semantics:
 
 from __future__ import annotations
 
+import math
+
 
 def lon2tx_sql(lon: str, zoom: int) -> str:
     n = 1 << zoom
@@ -134,12 +136,16 @@ WITH a AS ({assign_sql})
 # the integer key so Spark and DuckDB agree exactly — integer math only)
 # ------------------------------------------------------------------
 
+EARTH_R_KM = 6371.0088  # mean Earth radius (IUGG), the haversine's R
+KM_PER_DEG = math.radians(1.0) * EARTH_R_KM  # great-circle km per degree
+
+
 def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
-    """Great-circle distance in km (mean Earth radius 6371.0088).
+    """Great-circle distance in km (mean Earth radius ``EARTH_R_KM``).
     Portable text — identical in Spark SQL and DuckDB, so both engines
     evaluate the same expression tree."""
     return (
-        "2.0 * 6371.0088 * ASIN(SQRT("
+        f"2.0 * {EARTH_R_KM!r} * ASIN(SQRT("
         f"POWER(SIN(RADIANS(({lat2}) - ({lat1})) / 2.0), 2) + "
         f"COS(RADIANS({lat1})) * COS(RADIANS({lat2})) * "
         f"POWER(SIN(RADIANS(({lon2}) - ({lon1})) / 2.0), 2)))"

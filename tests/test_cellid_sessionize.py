@@ -12,6 +12,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from mapsplit_spark import cellid
+from mapsplit_spark.streaming.drain import run_stream
 
 WORK = "/tmp/sessionize_test"
 
@@ -55,6 +56,51 @@ def test_k_ring_clamps_at_world_edge():
     assert len(ring) == 25
 
 
+def test_tile_window_clamps_like_k_ring_and_wraps_x(spark):
+    """assign.tile_window: the clamp rule equals cellid.k_ring cell for
+    cell; ``wrap_x`` wraps x modulo 2^zoom and still lists every window
+    cell once, also when the window is wider than the world."""
+    from mapsplit_spark.operators.assign import tile_window
+
+    tiles = [(0, 0, 0), (1, 7, 7), (2, 3, 0), (3, 4, 5)]
+    df = spark.createDataFrame(tiles, "id long, tile_x long, tile_y long")
+
+    def window(radius, zoom, wrap_x=False):
+        return sorted(tuple(r) for r in tile_window(
+            df, ["id"], radius, zoom, wrap_x=wrap_x).collect())
+
+    for radius in (0, 1, 2):
+        assert window(radius, 3) == sorted(
+            (i, *c) for i, x, y in tiles for c in cellid.k_ring(x, y, radius, 3))
+    n = 8
+    assert window(1, 3, wrap_x=True) == sorted({
+        (i, (x + dx) % n, y + dy) for i, x, y in tiles
+        for dx in (-1, 0, 1) for dy in (-1, 0, 1) if 0 <= y + dy < n})
+    wide = window(3, 1, wrap_x=True)  # 7 columns on a 2-column world
+    assert len(wide) == len(set(wide))
+    assert {(x, y) for i, x, y in wide if i == 0} == {
+        (x, y) for x in (0, 1) for y in (0, 1)}
+
+
+def test_hex_disk_matches_offsets_for_int_and_column_k(spark):
+    """hexgrid.hex_disk scatters each cell to exactly the cells of
+    hex_disk_offsets(k), for a constant k and for a per-row k column."""
+    from pyspark.sql import functions as F
+
+    from mapsplit_spark.hexgrid import hex_disk, hex_disk_offsets
+
+    cells = [(0, 0, 0, 0), (1, 5, -3, 1), (2, -2, 7, 3)]
+    df = spark.createDataFrame(cells, "id long, hq long, hr long, k int")
+
+    def disk(k):
+        return sorted(tuple(r) for r in hex_disk(df, ["id"], k).collect())
+
+    assert disk(2) == sorted((i, q + dq, r + dr) for i, q, r, _ in cells
+                             for dq, dr in hex_disk_offsets(2))
+    assert disk(F.col("k")) == sorted((i, q + dq, r + dr) for i, q, r, k in cells
+                                      for dq, dr in hex_disk_offsets(k))
+
+
 def test_sessionize_stream(spark):
     from mapsplit_spark.streaming.sessionize import sessionize
 
@@ -79,22 +125,12 @@ def test_sessionize_stream(spark):
     ).parquet(src)
     out = sessionize(stream, gap_ms=1)  # tiny gap → sessions close fast
 
-    q = (
-        out.writeStream.outputMode("update").format("memory")
-        .queryName("sessions_out")
-        .option("checkpointLocation", os.path.join(WORK, "ckpt"))
-        .trigger(processingTime="2 seconds")
-        .start()
-    )
-    import time
-
-    deadline = time.time() + 90
-    done = False
-    while time.time() < deadline and not done:
-        time.sleep(3)
-        done = spark.sql("SELECT count(*) c FROM sessions_out").collect()[0].c >= 2
-    q.stop()
-    res = {r.key: r for r in spark.sql("SELECT * FROM sessions_out").collect()}
+    # a tailing stream: the sessions close in a later no-data batch, once
+    # the processing-time gap has passed
+    got = []
+    run_stream(spark, out, lambda df, _: got.extend(df.collect()),
+               os.path.join(WORK, "ckpt"), interval="1 second", timeout_sec=12)
+    res = {r.key: r for r in got}
     assert set(res) == {1, 2}
     for k in (1, 2):
         assert res[k].n_events == 5

@@ -112,7 +112,7 @@ def test_minhash_recall_with_default_cap(docs):
 
 def test_hot_bucket_observation_reports_cap_hits(spark):
     """The Observation hook surfaces hot-bucket degradation in-flight
-    (piggybacked on the existing bucket-stats aggregate — no extra job):
+    (a bucket-size aggregate fired at call time, one job of its own):
     n_hot_buckets > 0 exactly when the star fallback engaged."""
     from pyspark.sql import Observation
 
@@ -136,6 +136,38 @@ def test_hot_bucket_observation_reports_cap_hits(spark):
                              observation=obs2)
     out2.count()
     assert obs2.get["n_hot_buckets"] == 0
+
+
+def test_hot_bucket_observation_matches_bucket_counts(spark):
+    """The Observation reports the metrics of a separate
+    ``groupBy(band, bval).count()`` over the same banded relation, leaves
+    the pair set unchanged, and is filled also when no pair survives.
+    (Observed inside the pair job instead, the metrics are lost when the
+    pair set is empty: adaptive execution replaces the empty distinct
+    with an empty relation, and the observed node goes with it.)"""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from mapsplit_spark.operators.dedup import hamming_banded, hamming_near_dups
+
+    cap = 16
+    dup = spark.range(60).select(F.col("id").alias("image_id"),
+                                 F.lit(123456789).alias("phash"))
+    rnd = spark.range(1000, 1400).select(
+        F.col("id").alias("image_id"), (F.col("id") * 982451653).alias("phash"))
+    kw = dict(radius=3, n_bands=4, bits=64, max_bucket=cap)
+
+    for df, n_pairs in ((dup.unionByName(rnd), 59), (rnd, 0)):
+        obs = Observation()
+        got = {tuple(r) for r in hamming_near_dups(df, observation=obs, **kw).collect()}
+        assert len(got) == n_pairs
+        assert got == {tuple(r) for r in hamming_near_dups(df, **kw).collect()}
+        sizes = [r["count"] for r in hamming_banded(
+            df, "image_id", "phash", 4, 64, 3).groupBy("band", "bval").count().collect()]
+        hot = [n for n in sizes if n > cap]
+        assert obs.get == {"n_hot_buckets": len(hot),
+                           "max_bucket_size": max(sizes),
+                           "n_star_docs": sum(hot)}
 
 
 # ---------------------------------------------------------------- pHash

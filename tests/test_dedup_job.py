@@ -12,6 +12,18 @@ import pytest
 from jobs.dedup_job import main as dedup_main
 
 
+def test_dedup_job_contamination_without_winnow_fails_in_parsing(capsys):
+    """--contamination needs --winnow: rejected while parsing arguments,
+    before any Spark work."""
+    from jobs.dedup_job import parse_args
+
+    with pytest.raises(SystemExit) as exc:
+        parse_args(["--input", "in", "--output", "out",
+                    "--contamination", "tids"])
+    assert exc.value.code == 2
+    assert "--winnow" in capsys.readouterr().err
+
+
 @pytest.fixture(scope="module")
 def dup_images(spark, images_dir, tmp_path_factory):
     """Images fixture plus planted exact-phash duplicates (same bytes →

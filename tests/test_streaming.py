@@ -92,6 +92,23 @@ def test_incremental_counts_accumulate(spark, dirs):
     assert total_modified >= 500  # every event counted at least once
 
 
+def test_stream_job_geofence_without_poly_fails_in_parsing(monkeypatch, capsys):
+    """--mode geofence needs --poly: rejected while parsing arguments,
+    before a Spark session is asked for."""
+    from jobs import stream_job
+    from mapsplit_spark import session
+
+    def no_session(*a, **kw):
+        raise AssertionError("a Spark session was requested")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        stream_job.main(["--mode", "geofence", "--once", "--input", "in",
+                         "--checkpoint", "ckpt", "--output", "out"])
+    assert exc.value.code == 2
+    assert "--poly" in capsys.readouterr().err
+
+
 def test_stream_job_cli_drains_and_resumes(spark, images_dir, tmp_path):
     """jobs/stream_job.py --once: drains the landing dir, writes per-tile
     modification counts, and a second invocation after new files arrive
