@@ -1231,8 +1231,8 @@ def q_doc_contamination(spark, sf_dir):
         spark.sparkContext.defaultParallelism
     )
     test_ids = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
-    return contamination_pairs(docs, test_ids, max_df=20, min_shared=2,
-                               portable=True)
+    return contamination_pairs(textstats.winnow_fps(docs, gram_hash=F.md5),
+                               test_ids, max_df=20, min_shared=2)
 
 
 def q_ring_zonal(spark, sf_dir):

@@ -68,7 +68,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--winnow", default=None, metavar="DOCS_PARQUET",
                    help="documents parquet (doc_id, text) — production "
                         "winnowing fingerprints (xxhash64 longs, "
-                        "textstats.winnow_fingerprints_fast); writes "
+                        "textstats.winnow_fps, one pass shared with "
+                        "--contamination); writes "
                         "<output>/winnow and <output>/winnow_dups (groups "
                         "of docs with identical fingerprint sets)")
     p.add_argument("--winnow-k", type=int, default=5,
@@ -184,11 +185,14 @@ def main(argv: list[str] | None = None) -> None:
         if args.winnow:
             from mapsplit_spark.operators.textstats import (
                 winnow_fingerprints_fast,
+                winnow_fps,
             )
 
             docs = spark.read.parquet(args.winnow)
-            wf = winnow_fingerprints_fast(docs, k=args.winnow_k,
-                                          w=args.winnow_w)
+            fps = winnow_fps(docs, k=args.winnow_k, w=args.winnow_w)
+            if args.contamination:  # the one winnow pass feeds both outputs
+                fps = fps.localCheckpoint(eager=True)
+            wf = winnow_fingerprints_fast(fps)
             summary["winnow_docs"] = write_parquet(wf, f"{out}/winnow")["rows"]
             wf = read_back(wf, f"{out}/winnow")
             # identical fingerprint SET = near-verbatim overlap candidate
@@ -210,10 +214,9 @@ def main(argv: list[str] | None = None) -> None:
             )
 
             cp = contamination_pairs(
-                docs, spark.read.parquet(args.contamination),
-                k=args.winnow_k, w=args.winnow_w,
+                fps, spark.read.parquet(args.contamination),
                 max_df=args.contamination_max_df,
-                min_shared=args.contamination_min_shared, portable=False,
+                min_shared=args.contamination_min_shared,
             )
             summary["contamination_pairs"] = write_parquet(
                 cp, f"{out}/contamination_pairs")["rows"]

@@ -40,14 +40,17 @@ from mapsplit_spark.operators.assign import with_tile_id  # noqa: E402
 from mapsplit_spark.operators.clip import zone_assign  # noqa: E402
 from mapsplit_spark.pipeline import TilingPipeline  # noqa: E402
 from mapsplit_spark.sinks import read_back, write_parquet  # noqa: E402
-from mapsplit_spark.sinks.manifests import tile_manifests, write_tiles  # noqa: E402
+from mapsplit_spark.sinks.manifests import tile_manifests  # noqa: E402
+from mapsplit_spark.sinks.zorder import write_tiles  # noqa: E402
+from mapsplit_spark.tilemath import MAX_ZOOM  # noqa: E402
 
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(description="PySpark tile splitter (mapsplit semantics)")
     p.add_argument("--input", required=True, help="images parquet (image_id, lon, lat, ...)")
     p.add_argument("--output", required=True, help="output dir for tiles + manifests")
-    p.add_argument("--zoom", type=int, default=13)
+    p.add_argument("--zoom", type=int, default=13, choices=range(MAX_ZOOM + 1),
+                   metavar="0..16")
     p.add_argument("--border", type=float, default=0.0)
     p.add_argument("--optimize", type=int, default=0, metavar="NODE_LIMIT")
     p.add_argument("--sessions", help="sessions parquet (session_id, kind, member_ids, tags)")

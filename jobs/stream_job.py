@@ -45,13 +45,16 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from mapsplit_spark.tilemath import MAX_ZOOM  # noqa: E402
+
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(description="streaming tile maintenance")
     p.add_argument("--input", required=True, help="directory tailed for new parquet")
     p.add_argument("--checkpoint", required=True)
     p.add_argument("--output", required=True)
-    p.add_argument("--zoom", type=int, default=13)
+    p.add_argument("--zoom", type=int, default=13, choices=range(MAX_ZOOM + 1),
+                   metavar="0..16")
     p.add_argument("--border", type=float, default=0.1)
     p.add_argument("--id-col", default="image_id")
     p.add_argument("--lon-col", default="lon")

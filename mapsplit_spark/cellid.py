@@ -176,12 +176,14 @@ def morton_col(x: Column, y: Column) -> Column:
     land in the same files (locality for k-ring reads)."""
 
     def spread(c: Column) -> Column:
-        # Column `|` is logical OR — bitwiseOR is required here
-        c = c.bitwiseAND(F.lit(0xFFFF))
+        # Column `|` is logical OR — bitwiseOR is required here.  Long
+        # from the start: on int inputs the y shift below overflows to a
+        # negative index once y >= 2^15
+        c = c.cast("long").bitwiseAND(F.lit(0xFFFF))
         c = c.bitwiseOR(F.shiftleft(c, 8)).bitwiseAND(F.lit(0x00FF00FF))
         c = c.bitwiseOR(F.shiftleft(c, 4)).bitwiseAND(F.lit(0x0F0F0F0F))
         c = c.bitwiseOR(F.shiftleft(c, 2)).bitwiseAND(F.lit(0x33333333))
         c = c.bitwiseOR(F.shiftleft(c, 1)).bitwiseAND(F.lit(0x55555555))
         return c
 
-    return spread(x).bitwiseOR(F.shiftleft(spread(y), 1)).cast("long")
+    return spread(x).bitwiseOR(F.shiftleft(spread(y), 1))

@@ -11,7 +11,8 @@ at least one common fingerprint, so a pair with real overlap cannot be
 missed, and pairs that share none are never materialized.
 
 Scale shape:
-- fingerprint pass: map-only over each split (built-in expressions);
+- fingerprint pass: map-only over the corpus (``textstats.winnow_fps``,
+  run by the caller);
 - ubiquitous-fingerprint filter (document frequency > ``max_df``):
   boilerplate grams (headers, licence text) would otherwise create hot
   join keys; dropping them bounds the per-fingerprint fan-out to
@@ -27,31 +28,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import _winnow_fps
-
 
 def contamination_pairs(
-    docs: DataFrame,
+    fps: DataFrame,
     test_ids: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    w: int = 4,
     max_df: int = 20,
     min_shared: int = 2,
-    portable: bool = True,
 ) -> DataFrame:
     """→ (test_id, train_id, n_shared): test documents sharing
-    ≥ ``min_shared`` winnow fingerprints (k-char grams, window w) with
-    a training document.  ``test_ids`` is a 1-column DataFrame of ids
-    in the held-out split; every other doc is the training side.
-
-    ``portable=True`` uses md5-string gram hashes (the oracle-checkable
-    variant); ``portable=False`` uses xxhash64 longs (8 B/gram — the
-    production choice, same guarantee)."""
-    hash_fn = F.md5 if portable else F.xxhash64
+    ≥ ``min_shared`` winnow fingerprints with a training document.
+    ``fps`` is the (id, fps) relation of ``textstats.winnow_fps`` over
+    the whole corpus, built by the caller (md5 gram hashes for the
+    oracle-checkable gate, xxhash64 longs in production — the same
+    guarantee either way), so a caller that also writes the winnow
+    summary fingerprints the docs once.  ``test_ids`` is a 1-column
+    DataFrame of ids in the held-out split; every other doc is the
+    training side."""
     # HARD barrier before the explode: Generate's input collapses with
-    # _winnow_fps's projections (each referenced once here), and an
+    # winnow_fps's projections (each referenced once here), and an
     # expression inlined into a transform() lambda re-evaluates PER
     # ELEMENT — the L²/L³ trap textstats.py's PROJECTION BARRIER note
     # documents (measured: the sf0.001 gate never finished — killed at
@@ -61,8 +56,7 @@ def contamination_pairs(
     # eager: the lazy variant re-entered the (now Arrow) winnow kernel on
     # its cold first consumer — measured 6.5 s vs 1.8 s first-run at
     # sf0.1 (r6 A/B); warm runs tie
-    fps = _winnow_fps(docs, k, w, id_col, text_col, hash_fn) \
-        .localCheckpoint(eager=True)
+    fps = fps.localCheckpoint(eager=True)
     ex = fps.select(F.col(id_col), F.explode("fps").alias("fp"))
     # fps are distinct per doc, so this doc-frequency is exact
     keep = (ex.groupBy("fp").agg(F.count("*").alias("fp_df"))

@@ -4,14 +4,15 @@
 * ``knn_bruteforce`` — exact: query-set × points cross join (query set
   broadcast — it is small by definition) + haversine + per-query top-k
   window.  The baseline and the oracle-checkable path.
-* ``knn_tiled`` / ``knn_tiled_bucketed`` — scale path: candidates
+* ``knn_tiled`` / ``knn_tiled_stored`` — scale path: candidates
   restricted to the query's tile k-ring (quadtree analog of an H3
   k-ring) before the exact haversine re-rank.  Turns the O(Q×N) cross
-  join into a partition-pruned join on tile_id: at 100 TB the points
-  side is bucketed by tile, so the ring join touches only (2r+1)² tiles
-  per query.  Both build candidates through one probe
-  (``_tile_ring_probe``); they differ only in where a level's points
-  come from (the in-memory frame or the stored bucketed layout).
+  join into a range-pruned join on the tile: at 100 TB the points side
+  is stored keyed on the z16 curve (``sinks.zorder``), so a level reads
+  only the key intervals of its (2r+1)² ring tiles per query.  Both
+  build candidates through one probe (``_tile_ring_probe``); they
+  differ only in where a level's points come from (the in-memory frame
+  or the stored layout).
 * ``knn_hex`` — the same contract on the hex lattice (k-disks).
 
 Scale-correctness details of the tiled path:
@@ -46,7 +47,7 @@ from pyspark.sql.window import Window
 
 from .. import sqlgen
 from ..hexgrid import covered_radius_deg, hex_cell_cols, hex_disk
-from ..sinks.manifests import TILE_BUCKETS, tile_bucket
+from ..sinks import zorder
 from ..sqlgen import EARTH_R_KM
 from .assign import assign_tiles, tile_window
 from .iterate import checkpoint_count, fixed_point
@@ -219,8 +220,9 @@ def knn_tiled(queries: DataFrame, points: DataFrame, zoom: int, ring: int = 1,
 
     Each query expands to its (2·ring+1)² surrounding tiles (H3 k-ring
     analog on the slippy quadtree); points carry their base tile; the
-    join hits only ring tiles.  With the points side bucketed/partitioned
-    by tile this is a partition-pruned join, not a cross join.
+    join hits only ring tiles.  With the points side stored keyed by
+    tile (``knn_tiled_stored``) this is a range-pruned join, not a cross
+    join.
 
     The result is EXACT at any density: each query's top-k is accepted
     only when provably covered by its ring (see ``_coverage_radius_km``);
@@ -243,85 +245,53 @@ def knn_tiled(queries: DataFrame, points: DataFrame, zoom: int, ring: int = 1,
     )
 
 
-def _probe_buckets(ringed: DataFrame, d: int) -> list[int] | None:
-    """Bucket set for a ring-tile relation at zoom z−d against a layout
-    bucketed at the BASE zoom: each coarse ring tile covers its 4^d
-    base-zoom descendants (quadtree nesting), and the bucket of every
-    descendant is what the partition filter needs.  The hash is computed
-    by the SAME JVM expression the writer used (``tile_bucket``), over
-    the exploded descendant relation — still a tiny query-side job.
-    Returns None when the descendant enumeration can no longer pay for
-    itself (≥ every bucket would be read anyway) — the caller then scans
-    unfiltered, which is exactly the brute-force coverage the deep
-    ladder ends in."""
-    side = 1 << d
-    n_desc_per = side * side
-    ring_tiles = ringed.select("tile_x", "tile_y").distinct()
-    n_ring = ring_tiles.count()
-    if n_ring * n_desc_per >= TILE_BUCKETS * 4:
-        # expected distinct buckets ≈ B·(1−e^{−desc/B}) for B buckets:
-        # at 4× oversampling the filter keeps <2% of directories out —
-        # not worth the enumeration
-        return None
-    desc = ring_tiles.select(
-        F.explode(F.sequence(F.lit(0), F.lit(n_desc_per - 1))).alias("i"),
-        (F.col("tile_x") * side).alias("bx"),
-        (F.col("tile_y") * side).alias("by"),
-    ).select(
-        (F.col("bx") + F.col("i") % side).alias("tile_x"),
-        (F.col("by") + F.floor(F.col("i") / side)).alias("tile_y"),
-    )
-    buckets = sorted({
-        r.bucket for r in desc.select(tile_bucket().alias("bucket")).distinct().collect()
-    })
-    return buckets if len(buckets) < TILE_BUCKETS else None
-
-
-def _stored_points_at(points_path: str, ringed: DataFrame, d: int) -> DataFrame:
-    """A ladder level's points from the stored bucketed layout: only the
-    bucket directories of the ring's base-zoom descendants
-    (``_probe_buckets``, a filter on the PARTITION column — pruned at
-    planning time), tiles coarsened by bit-shift to zoom z = base − d."""
-    pts = ringed.sparkSession.read.parquet(points_path)
-    buckets = _probe_buckets(ringed, d)
-    if buckets is not None:
-        pts = pts.filter(F.col("bucket").isin(buckets))
+def _stored_points_at(pts: DataFrame, zoom: int, ringed: DataFrame,
+                      d: int) -> DataFrame:
+    """A ladder level's points from the stored layout ``pts``
+    (``sinks.zorder.write_tiles``): the level's ring tiles at zoom
+    z = base − d are collected (the query side is small by definition),
+    each is one aligned key interval (``zorder.tile_key_range``), and
+    the merged, capped intervals filter the cell directories and the key
+    column (``zorder.key_range_filter``); tiles are coarsened by
+    bit-shift to zoom z for the ring join, which re-checks exact tiles."""
+    z = zoom - d
+    tiles = ringed.select("tile_x", "tile_y").distinct().collect()
+    ranges = zorder.merge_ranges(
+        [zorder.tile_key_range(r.tile_x, r.tile_y, z) for r in tiles])
     return _coarsen_tiles(
-        pts.select("point_id", "p_lon", "p_lat", "tile_x", "tile_y"), d
+        zorder.key_range_filter(pts, ranges)
+        .select("point_id", "p_lon", "p_lat", "tile_x", "tile_y"), d
     )
 
 
-def knn_tiled_bucketed(queries: DataFrame, points_path: str, zoom: int,
-                       ring: int = 1, k: int = 5) -> DataFrame:
-    """kNN over a tile-BUCKETED points layout (sinks.manifests.write_tiles:
-    parquet partitioned by bucket = pmod(xxhash64(tile_x, tile_y),
-    TILE_BUCKETS)) — the 100 TB read path: the query set's ring tiles map to
-    a small bucket set, the filter on the PARTITION column prunes every
-    other bucket directory at planning time, and only then does the ring
-    equi-join + exact re-rank run.
+def knn_tiled_stored(queries: DataFrame, points_path: str, zoom: int,
+                     ring: int = 1, k: int = 5) -> DataFrame:
+    """kNN over the stored tile layout (``sinks.zorder.write_tiles``:
+    parquet keyed on the z16 curve, one directory per z4 cell) — the
+    100 TB read path: each level reads only the key intervals of the
+    pending queries' ring tiles, pruned to their cell directories at
+    planning time and to their key ranges in the parquet scan, and only
+    then does the ring equi-join + exact re-rank run.
 
     The stored path walks the SAME coverage-proof ladder and the same
     probe as ``knn_tiled``: a query's top-k is accepted only when
     provably inside its probed ring; unproven queries re-probe at
-    coarser zooms, where each coarse ring tile's 4^d base-zoom
-    descendants define the (wider) bucket set to read — partition
-    pruning persists level by level until the enumeration would cover
-    every bucket anyway, at which point the level reads the full layout
-    (≡ the brute-force fallback of the in-memory ladder).  Exact at any
-    density, by the same argument, and eager like ``knn_tiled``.
+    coarser zooms, where a coarse ring tile's key interval holds all its
+    base-zoom descendants.  Exact at any density, by the same argument,
+    and eager like ``knn_tiled``.
 
     The stored layout must carry (point_id, p_lon, p_lat, tile_x,
     tile_y) at the BASE zoom; coarser levels derive tiles by bit-shift
     (quadtree nesting), never re-projecting the stored rows.
     """
+    pts = queries.sparkSession.read.parquet(points_path)
     probe = partial(_tile_ring_probe, zoom=zoom, ring=ring,
-                    points_at=partial(_stored_points_at, points_path))
-
-    def fallback(pending):
-        points = queries.sparkSession.read.parquet(points_path)
-        return knn_bruteforce(pending, points.select("point_id", "p_lon", "p_lat"), k)
-
-    return _coverage_ladder(queries, list(range(zoom, -1, -1)), probe, fallback, k)
+                    points_at=partial(_stored_points_at, pts, zoom))
+    return _coverage_ladder(
+        queries, list(range(zoom, -1, -1)), probe,
+        lambda pending: knn_bruteforce(
+            pending, pts.select("point_id", "p_lon", "p_lat"), k), k,
+    )
 
 
 # ---------------------------------------------------------------------------

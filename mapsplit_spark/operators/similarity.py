@@ -227,10 +227,11 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 3,
 def write_ivf_corpus(corpus: DataFrame, centroids: np.ndarray,
                      out_path: str) -> None:
     """Materialize the corpus partitioned by IVF cell — the 100 TB ANN
-    layout (write_tiles' analog for vector search): a probe query reads
-    only its n_probe cell directories; every other cell is pruned at
-    planning time.  Iceberg hidden partitioning replaces the explicit
-    partitionBy on a real cluster."""
+    layout (the vector-search analog of ``zorder.write_tiles``' cell
+    directories): a probe query reads only its n_probe cell
+    directories; every other cell is pruned at planning time.  Iceberg
+    hidden partitioning replaces the explicit partitionBy on a real
+    cluster."""
     (
         ivf_assign(corpus, "c_vec", centroids)
         .repartition("ivf_cell")

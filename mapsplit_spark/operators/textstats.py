@@ -188,9 +188,10 @@ def fingerprint_dup_groups(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _winnow_fps(docs: DataFrame, k: int, w: int, id_col: str,
-                text_col: str, gram_hash) -> DataFrame:
-    """Shared winnowing body (Schleimer-Wilkerson-Aiken 2003): hash
+def winnow_fps(docs: DataFrame, k: int = 5, w: int = 4, id_col: str = "doc_id",
+               text_col: str = "text", gram_hash=F.xxhash64) -> DataFrame:
+    """The winnowing pass (Schleimer-Wilkerson-Aiken 2003) behind both
+    fingerprint summaries and ``contamination_pairs``: hash
     every k-char gram of the normalized text with ``gram_hash``, slide
     a w-window over the gram-hash array, keep each window's minimum.
     → (id, fps) with fps = sorted distinct selected hashes.  The
@@ -296,7 +297,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4,
     For the corpus-scale pipeline use ``winnow_fingerprints_fast``
     (xxhash64 longs: 8 B per gram vs ~48 B per md5 hex string — the
     r3-verdict memory concern)."""
-    sel = _winnow_fps(docs, k, w, id_col, text_col, F.md5)
+    sel = winnow_fps(docs, k, w, id_col, text_col, F.md5)
     return sel.select(
         F.col(id_col),
         F.size("fps").cast("long").alias("n_fp"),
@@ -304,27 +305,23 @@ def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4,
     )
 
 
-def winnow_fingerprints_fast(docs: DataFrame, k: int = 5, w: int = 4,
-                             id_col: str = "doc_id", text_col: str = "text",
-                             with_fps: bool = False) -> DataFrame:
-    """Winnowing — PRODUCTION variant (VERDICT r3 #7): xxhash64 long
-    gram hashes.  Same construction and the same local-fingerprinting
-    guarantee; the per-gram intermediate drops from a 32-char hex
+def winnow_fingerprints_fast(fps: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Winnowing — PRODUCTION variant (VERDICT r3 #7): the per-doc
+    summary of an xxhash64 ``winnow_fps`` relation (id, fps), which the
+    caller builds once and may share with ``contamination_pairs``.
+    Same construction and the same local-fingerprinting guarantee as
+    the md5 variant; the per-gram intermediate drops from a 32-char hex
     string (~48 B with object overhead) to an 8 B long, and min/sort
     compare as integers instead of strings.  Differentially tested
     against an independent Python sliding-window recomputation over the
     same xxhash64 values (tests/test_operators.py).  NOT comparable to
     the md5 gate variant: window minima depend on the hash ordering.
 
-    → (doc_id, n_fp, fp_hash:long[, fps]) — fp_hash = xxhash64 over the
+    → (doc_id, n_fp, fp_hash:long) — fp_hash = xxhash64 over the
     comma-joined sorted selected set."""
-    sel = _winnow_fps(docs, k, w, id_col, text_col, F.xxhash64)
-    out = [
+    return fps.select(
         F.col(id_col),
         F.size("fps").cast("long").alias("n_fp"),
         F.xxhash64(F.concat_ws(",", F.transform(
             F.col("fps"), lambda v: v.cast("string")))).alias("fp_hash"),
-    ]
-    if with_fps:
-        out.append(F.col("fps"))
-    return sel.select(*out)
+    )

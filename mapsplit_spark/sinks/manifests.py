@@ -1,4 +1,5 @@
-"""S6 analog — per-tile manifest assembly + partitioned materialization.
+"""S6 analog — per-tile manifest assembly (the stored tile layout is
+``sinks.zorder.write_tiles``).
 
 The reference writes per-tile PBF files by re-scanning the whole input
 once per batch of ≤ maxFiles open tiles (MapSplit.java:1156-1409).  In
@@ -22,22 +23,8 @@ round 2).  Salting never changes output values (ids re-sort in phase 2).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# hash buckets of the stored tile layout (write_tiles); the bucketed kNN
-# read path (knn.knn_tiled_bucketed) recomputes a tile's bucket with
-# ``tile_bucket``, so writer and reader share one expression — a
-# mismatch filters the wrong directories and can miss a closer point
-TILE_BUCKETS = 256
-
-
-def tile_bucket() -> Column:
-    """The stored layout's bucket of a (tile_x, tile_y) row:
-    pmod(xxhash64(tile_x, tile_y), TILE_BUCKETS) — JVM-side, not
-    reproducible driver-side."""
-    return F.pmod(F.xxhash64("tile_x", "tile_y"), F.lit(TILE_BUCKETS))
-
 
 def tile_manifests(assignments: DataFrame, zoom: int, n_salts: int = 32,
                    id_col: str = "element_id",
@@ -105,21 +92,3 @@ def tile_counts(assignments: DataFrame) -> DataFrame:
     Pure partial-aggregating groupBy; feeds the optimize pass."""
     return assignments.groupBy("tile_x", "tile_y").agg(F.count("*").alias("n"))
 
-
-def write_tiles(df_with_payload: DataFrame, out_path: str, zoom: int) -> None:
-    """Materialize per-tile rows as parquet partitioned by tile.
-
-    For 100 TB: repartition by a bucketed tile key (not raw tile — a
-    planet at z13 has 67M tiles; raw partitionBy would create pathological
-    small-file counts), then partitionBy bucket dirs.  Iceberg hidden
-    partitioning replaces this on a real cluster.
-    """
-    (
-        df_with_payload
-        .withColumn("bucket", tile_bucket())
-        .repartition("bucket")
-        .sortWithinPartitions("tile_x", "tile_y")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(out_path)
-    )

@@ -12,8 +12,9 @@ clock).
 Ours stores each tile's manifest JSON (or a mosaic blob when provided) —
 SQLite is inherently single-writer, so this is a driver-side export for
 bounded outputs; at 100 TB the per-tile parquet/Iceberg table from
-``write_tiles`` is the real sink and MBTiles is a downstream packaging
-step (one file per region via foreachPartition if ever needed).
+``zorder.write_tiles`` (the one stored tile layout) is the real sink and
+MBTiles is a downstream packaging step (one file per region via
+foreachPartition if ever needed).
 ``mbtiles_tile_rows`` builds the tile rows (TMS flip + JSON blob) as a
 pure Column-expression DataFrame so the driver's DuckDB gate can verify
 it value-exactly.

@@ -2,10 +2,11 @@
 file per tile at a path built from a ``%x %y %z`` template
 (MapSplit.java:1211-1219; default layout ``base/z/x_y.osm.pbf``).
 
-At 100 TB the bucketed parquet layout (``manifests.write_tiles``) is the
-right sink — millions of tiny files are an object-store anti-pattern —
-but per-tile addressability is what reference users script against, so
-this sink writes each tile's manifest (JSON) to its templated path.
+At 100 TB the stored parquet layout (``zorder.write_tiles``: keyed on
+the z16 curve, one directory per z4 cell) is the right sink — millions
+of tiny files are an object-store anti-pattern — but per-tile
+addressability is what reference users script against, so this sink
+writes each tile's manifest (JSON) to its templated path.
 Distributed: the manifest relation is written via ``foreachPartition``
 (each executor writes only its own tiles; no driver collect) onto a
 shared filesystem — the same contract the reference's local-FS output

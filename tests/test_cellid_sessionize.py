@@ -37,6 +37,10 @@ def test_morton_col_matches_numpy(spark):
     df = spark.createDataFrame(list(zip(x, y)), "x long, y long")
     got = [r.m for r in df.select(cellid.morton_col(F.col("x"), F.col("y")).alias("m")).collect()]
     assert got == cellid.morton(x, y).tolist()
+    # int columns too: y >= 2^15 sets the sign bit of a 32-bit index
+    ints = df.select(F.col("x").cast("int"), F.col("y").cast("int"))
+    assert [r.m for r in ints.select(cellid.morton_col(
+        F.col("x"), F.col("y")).alias("m")).collect()] == got
 
 
 def test_quadkey_roundtrip_and_prefix():

@@ -25,6 +25,17 @@ def outbase(tmp_path_factory):
     return str(tmp_path_factory.mktemp("cli"))
 
 
+@pytest.mark.parametrize("zoom", ["17", "-1"])
+def test_zoom_outside_tile_domain_fails_in_parsing(zoom, capsys):
+    """--zoom is capped at 16 like the reference (Const.java MAX_ZOOM):
+    above it the packed tile id and the stored layout key alias across
+    zooms.  Rejected while parsing arguments, before any Spark work."""
+    with pytest.raises(SystemExit) as exc:
+        split_main(["--input", "in", "--output", "out", "--zoom", zoom])
+    assert exc.value.code == 2
+    assert "--zoom" in capsys.readouterr().err
+
+
 def test_sessions_mode_e2e(spark, images_dir, outbase, capsys):
     """--sessions --complete-sessions runs J1-J6 + hole fill in the
     production path; manifests contain point, session, and collection

@@ -165,11 +165,14 @@ def test_dedup_job_winnow_fast(spark, tmp_path, capsys):
     wd = spark.read.parquet(os.path.join(out, "winnow_dups")).collect()
     assert len(wd) == 1 and wd[0].n_docs == 2 and wd[0].keep_doc == "d0"
     # fingerprints match the operator run directly
-    from mapsplit_spark.operators.textstats import winnow_fingerprints_fast
+    from mapsplit_spark.operators.textstats import (
+        winnow_fingerprints_fast,
+        winnow_fps,
+    )
 
     direct = {r.doc_id: (r.n_fp, r.fp_hash)
               for r in winnow_fingerprints_fast(
-                  spark.read.parquet(dp)).collect()}
+                  winnow_fps(spark.read.parquet(dp))).collect()}
     stored = {r.doc_id: (r.n_fp, r.fp_hash)
               for r in spark.read.parquet(os.path.join(out, "winnow")).collect()}
     assert direct == stored
@@ -204,9 +207,26 @@ def test_dedup_job_audio_features(spark, tmp_path, capsys):
     assert af.filter("n_samples = 800").count() == 5
 
 
-def test_dedup_job_contamination_chain(spark, tmp_path, capsys):
+def test_dedup_job_contamination_chain(spark, tmp_path, capsys, monkeypatch):
     """--winnow + --contamination: the planted leaked doc is flagged
-    against its test twin and dropped from <out>/decontaminated."""
+    against its test twin and dropped from <out>/decontaminated.  The
+    run fingerprints the docs in ONE winnow pass: the winnow summary and
+    the contamination pairs share it (each fingerprinted doc ticks an
+    accumulator once per evaluation)."""
+    from pyspark.sql import functions as F
+
+    from mapsplit_spark.operators import textstats
+
+    ticks = spark.sparkContext.accumulator(0)
+
+    def tick(_):
+        ticks.add(1)
+        return True
+
+    counted = F.udf(tick, "boolean").asNondeterministic()
+    real = textstats.winnow_fps
+    monkeypatch.setattr(textstats, "winnow_fps",
+                        lambda *a, **kw: real(*a, **kw).filter(counted("fps")))
     leak = "the quick brown fox jumps over the lazy dog near the river"
     docs = spark.createDataFrame(
         [(0, f"benchmark item {leak} held out"),
@@ -237,3 +257,5 @@ def test_dedup_job_contamination_chain(spark, tmp_path, capsys):
             spark.read.parquet(f"{out}/decontaminated").collect()}
     assert kept == {0, 1, 3}
     assert summary["decontaminated_rows"] == 3
+    assert summary["winnow_docs"] == 4
+    assert ticks.value == 4  # one winnow pass over the 4 docs

@@ -108,53 +108,63 @@ def test_antimeridian_ring_wraps(spark):
     assert len(got) == 1 and got[0].point_id == 1
 
 
-def test_bucketed_layout_prunes_partitions_and_matches(spark, data, tmp_path):
-    """The 100TB read path: points stored bucketed by tile
-    (write_tiles layout); the kNN probe's bucket IN-filter must prune
-    partition directories at planning time AND return the same result
-    as the in-memory tiled path."""
-    from functools import partial
-
-    from mapsplit_spark.operators.assign import assign_tiles
-    from mapsplit_spark.operators.knn import _stored_points_at, knn_tiled_bucketed
-    from mapsplit_spark.sinks.manifests import write_tiles
-
-    qs, pts = data
+def _store_points(pts, zoom, path):
+    """The points in the stored tile layout at ``zoom``."""
     from pyspark.sql import functions as F
 
-    stored = assign_tiles(pts, "point_id", "p_lon", "p_lat", 4,
-                          keep_cols=["p_lon", "p_lat"]).select(
-        F.col("element_id").alias("point_id"), "p_lon", "p_lat", "tile_x", "tile_y")
-    path = str(tmp_path / "pts_bucketed")
-    write_tiles(stored, path, 4)
+    from mapsplit_spark.operators.assign import assign_tiles
+    from mapsplit_spark.sinks.zorder import write_tiles
 
-    cands, _ = _tile_ring_probe(qs, 4, 4, 2, partial(_stored_points_at, path))
+    stored = assign_tiles(pts, "point_id", "p_lon", "p_lat", zoom,
+                          keep_cols=["p_lon", "p_lat"]).select(
+        F.col("element_id").alias("point_id"), "p_lon", "p_lat",
+        "tile_x", "tile_y")
+    write_tiles(stored, path, zoom)
+
+
+def test_stored_layout_prunes_cells_and_matches(spark, data, tmp_path):
+    """The 100TB read path: points stored keyed on the z16 curve
+    (write_tiles layout); the kNN probe's key ranges must prune cell
+    directories at planning time and reach the parquet scan as pushed
+    key filters, AND return the same result as the in-memory tiled
+    path."""
+    from functools import partial
+
+    from mapsplit_spark.operators.knn import _stored_points_at, knn_tiled_stored
+
+    qs, pts = data
+    path = str(tmp_path / "pts_stored")
+    _store_points(pts, 4, path)
+
+    stored = spark.read.parquet(path)
+    cands, _ = _tile_ring_probe(qs, 4, 4, 2, partial(_stored_points_at, stored, 4))
     plan = cands._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan
+    assert "cell" in plan.split("PartitionFilters")[1][:200]
+    assert "key" in plan.split("PushedFilters")[1][:200]
     expect = {(r.query_id, r.rank, r.point_id)
               for r in knn_tiled(qs, pts, zoom=4, ring=2, k=3).collect()}
     got = {(r.query_id, r.rank, r.point_id)
-           for r in knn_tiled_bucketed(qs, path, zoom=4, ring=2, k=3).collect()}
+           for r in knn_tiled_stored(qs, path, zoom=4, ring=2, k=3).collect()}
     assert got == expect
 
 
-def test_bucketed_escalation_exact_on_sparse_fixture(spark, tmp_path):
+def test_stored_escalation_exact_on_sparse_fixture(spark, tmp_path, job_count):
     """VERDICT r3 missing #2: the stored read path must walk the SAME
     coverage-proof ladder as the in-memory path — a sparse fixture whose
     nearest neighbours sit far outside the base ring must still return
-    the exact brute-force top-k, with partition pruning surviving the
-    coarser levels (asserted via _probe_buckets on the escalated ring)."""
-    from pyspark.sql import functions as F
+    the exact brute-force top-k, with cell pruning surviving the
+    coarser levels (the d=2 level's scan reads a strict subset of the
+    written cell directories).  The whole ladder runs in at most 80
+    Spark jobs (the hash-bucket layout this replaced ran 99)."""
+    import glob
 
-    from mapsplit_spark.operators.assign import assign_tiles
     from mapsplit_spark.operators.knn import (
-        _probe_buckets,
         _query_tiles,
         _ring_tiles,
+        _stored_points_at,
         knn_bruteforce,
-        knn_tiled_bucketed,
+        knn_tiled_stored,
     )
-    from mapsplit_spark.sinks.manifests import TILE_BUCKETS, write_tiles
 
     # 3 points thousands of km apart: at z8/ring1 (~300 km ring) no
     # query proves coverage → the ladder must escalate several zooms
@@ -165,27 +175,28 @@ def test_bucketed_escalation_exact_on_sparse_fixture(spark, tmp_path):
     qs = spark.createDataFrame(
         [(0, 12.0, 11.0)], "query_id long, q_lon double, q_lat double"
     )
-    stored = assign_tiles(pts, "point_id", "p_lon", "p_lat", 8,
-                          keep_cols=["p_lon", "p_lat"]).select(
-        F.col("element_id").alias("point_id"), "p_lon", "p_lat",
-        "tile_x", "tile_y")
-    path = str(tmp_path / "sparse_bucketed")
-    write_tiles(stored, path, 8)
+    path = str(tmp_path / "sparse_stored")
+    _store_points(pts, 8, path)
 
-    got = {(r.query_id, r.rank, r.point_id)
-           for r in knn_tiled_bucketed(qs, path, zoom=8, ring=1, k=3).collect()}
+    got = set()
+    jobs = job_count(lambda: got.update(
+        (r.query_id, r.rank, r.point_id)
+        for r in knn_tiled_stored(qs, path, zoom=8, ring=1, k=3).collect()))
     expect = {(r.query_id, r.rank, r.point_id)
               for r in knn_bruteforce(qs, pts, k=3).collect()}
     assert got == expect
+    assert jobs <= 80, jobs
 
-    # pruning persists on escalated levels: the d=2 descendant bucket
-    # set for the query's coarse ring is a strict subset of directories
-    qt = _query_tiles(qs, 6)
-    ringed = _ring_tiles(qt, 6, 1, ["query_id"])
-    buckets = _probe_buckets(ringed, d=2)
-    assert buckets is not None and 0 < len(buckets) < TILE_BUCKETS
-    # and the cutover to a full scan happens once enumeration can't pay
-    assert _probe_buckets(ringed, d=5) is None
+    # pruning persists on escalated levels: the d=2 level's scan reads a
+    # strict subset of the written cell directories
+    ringed = _ring_tiles(_query_tiles(qs, 6), 6, 1, ["query_id"])
+    level = _stored_points_at(spark.read.parquet(path), 8, ringed, 2)
+    assert {r.point_id for r in level.collect()} == {1}
+    scans = level._jdf.queryExecution().executedPlan().collectLeaves()
+    read = sum(scans.apply(i).metrics().apply("numPartitions").value()
+               for i in range(scans.length()))
+    written = len(glob.glob(f"{path}/cell=*"))
+    assert 0 < read < written == 3
 
 
 def test_tiled_exactness_randomized_densities(spark):

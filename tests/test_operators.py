@@ -361,6 +361,7 @@ def test_winnow_fast_differential_and_guarantee(spark):
     from mapsplit_spark.operators.textstats import (
         winnow_fingerprints,
         winnow_fingerprints_fast,
+        winnow_fps,
     )
 
     shared = "the identical shared clause appears verbatim in both documents"
@@ -372,8 +373,9 @@ def test_winnow_fast_differential_and_guarantee(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     k, w = 5, 4
-    got = {r.doc_id: r for r in
-           winnow_fingerprints_fast(docs, k, w, with_fps=True).collect()}
+    fps = winnow_fps(docs, k, w)
+    got = {r.doc_id: r for r in fps.join(winnow_fingerprints_fast(fps), "doc_id")
+           .collect()}
 
     # (a) independent recomputation: xxhash64 of each k-gram via a
     # separate exploded query (different plan shape), window-min in

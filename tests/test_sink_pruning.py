@@ -1,41 +1,35 @@
-"""Materialization-layer scale behavior: bucketed tile writes prune at
-read time, null-coordinate rows are dropped at assignment, and the
-batch CLIs' parquet write counts its output on its own job."""
+"""Materialization-layer scale behavior: the stored tile layout prunes
+cell directories at read time, null-coordinate rows are dropped at
+assignment, and the batch CLIs' parquet write counts its output on its
+own job."""
 
 from __future__ import annotations
 
-import shutil
 import threading
 
 from pyspark.sql import functions as F
 
 from mapsplit_spark.operators.assign import assign_and_expand, with_tile_id
-from mapsplit_spark.sinks.manifests import write_tiles
-
-OUT = "/tmp/prune_test_tiles"
+from mapsplit_spark.sinks.zorder import key_range_filter, tile_key_range, write_tiles
 
 
-def test_bucketed_write_prunes_partitions(spark, images_dir):
-    shutil.rmtree(OUT, ignore_errors=True)
+def test_tile_layout_prunes_cell_directories(spark, images_dir, tmp_path):
+    out = str(tmp_path / "tiles")
     imgs = spark.read.parquet(f"{images_dir}/images.parquet")
     pairs = assign_and_expand(
         imgs.select("image_id", "lon", "lat"), "image_id", "lon", "lat", 13, 0.1
     )
-    write_tiles(with_tile_id(pairs, 13), OUT, 13)
-    back = spark.read.parquet(OUT)
-    one = back.filter(F.col("bucket") == 3)
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    # the bucket predicate must prune at the partition level, not scan+filter
-    assert "PartitionFilters: [isnotnull(bucket" in plan.replace("#", "").replace(")", "") or \
-           "PartitionFilters: [" in plan and "bucket" in plan.split("PartitionFilters")[1][:80]
-    assert one.count() > 0
-    # a tile's rows are findable through its bucket (the k-ring read path)
+    write_tiles(with_tile_id(pairs, 13), out, 13)
+    back = spark.read.parquet(out)
     r = back.first()
-    via_bucket = back.filter(
-        (F.col("bucket") == r.bucket) & (F.col("tile_x") == r.tile_x)
-        & (F.col("tile_y") == r.tile_y)
-    ).count()
-    assert via_bucket >= 1
+    one = back.filter(F.col("cell") == r.cell)
+    plan = one._jdf.queryExecution().executedPlan().toString()
+    # the cell predicate must prune at the partition level, not scan+filter
+    assert "cell" in plan.split("PartitionFilters")[1][:80]
+    assert one.count() > 0
+    # a tile's rows are findable through its key interval (the k-ring read path)
+    via_key = key_range_filter(back, [tile_key_range(r.tile_x, r.tile_y, 13)])
+    assert {(t.tile_x, t.tile_y) for t in via_key.collect()} == {(r.tile_x, r.tile_y)}
 
 
 def test_null_coordinates_dropped(spark):
@@ -47,7 +41,7 @@ def test_null_coordinates_dropped(spark):
     assert {r.element_id for r in out.collect()} == {"a"}
 
 
-def test_ivf_corpus_layout_prunes_cells_and_matches_in_memory(spark):
+def test_ivf_corpus_layout_prunes_cells_and_matches_in_memory(spark, tmp_path):
     """write_ivf_corpus + ivf_topk_bucketed (the 100 TB ANN read path):
     the probe-cell IN filter prunes cell directories at PLANNING time,
     and the result equals the in-memory ivf_topk with the same centroid
@@ -72,8 +66,7 @@ def test_ivf_corpus_layout_prunes_cells_and_matches_in_memory(spark):
         F.col("vid").alias("qid"), F.col("vec").alias("q_vec"))
 
     centroids = train_ivf_centroids(corpus, n_clusters=8, sample_rows=400)
-    out = "/tmp/prune_test_ivf"
-    shutil.rmtree(out, ignore_errors=True)
+    out = str(tmp_path / "ivf")
     write_ivf_corpus(corpus, centroids, out)
 
     bucketed = ivf_topk_bucketed(queries, out, centroids, dim, k=3, n_probe=2)

@@ -109,6 +109,19 @@ def test_stream_job_geofence_without_poly_fails_in_parsing(monkeypatch, capsys):
     assert "--poly" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("zoom", ["17", "-1"])
+def test_stream_job_zoom_outside_tile_domain_fails_in_parsing(zoom, capsys):
+    """--zoom outside [0, 16] is rejected while parsing arguments."""
+    from jobs import stream_job
+
+    with pytest.raises(SystemExit) as exc:
+        stream_job.parse_args(["--mode", "counts", "--once", "--input", "in",
+                               "--checkpoint", "ckpt", "--output", "out",
+                               "--zoom", zoom])
+    assert exc.value.code == 2
+    assert "--zoom" in capsys.readouterr().err
+
+
 def test_stream_job_cli_drains_and_resumes(spark, images_dir, tmp_path):
     """jobs/stream_job.py --once: drains the landing dir, writes per-tile
     modification counts, and a second invocation after new files arrive

@@ -1,6 +1,8 @@
-"""Z-order clustered layout: quadtree bbox decomposition correctness,
-scan equality vs naive filter, predicate pushdown, and the layout
-property that makes skipping effective (disjoint tight per-file stats)."""
+"""The stored tile layout (Z-order key on the z16 curve, cell
+directories): quadtree bbox decomposition correctness, scan equality vs
+naive filter, predicate pushdown, the layout property that makes
+skipping effective (disjoint tight per-file stats), and the write-time
+domain guards."""
 
 from __future__ import annotations
 
@@ -12,7 +14,8 @@ from mapsplit_spark.sinks.zorder import (
     _morton_int,
     bbox_morton_ranges,
     read_tiles_bbox,
-    write_tiles_zorder,
+    tile_key_range,
+    write_tiles,
 )
 
 
@@ -58,12 +61,12 @@ def zorder_path(spark, tmp_path_factory):
         "CAST(CAST(id / 160 AS INT) AS INT) AS tile_y",
         "id AS element_id",
     )
-    write_tiles_zorder(tiles, out, n_files=32)
+    write_tiles(tiles, out, 8)
     return out
 
 
 def test_bbox_scan_equals_naive(spark, zorder_path):
-    got = read_tiles_bbox(spark, zorder_path, 10, 20, 25, 40)
+    got = read_tiles_bbox(spark, zorder_path, 8, 10, 20, 25, 40)
     naive = (
         spark.read.parquet(zorder_path)
         .filter("tile_x BETWEEN 10 AND 25 AND tile_y BETWEEN 20 AND 40")
@@ -74,21 +77,22 @@ def test_bbox_scan_equals_naive(spark, zorder_path):
 
 
 def test_bbox_predicate_reaches_parquet_scan(spark, zorder_path):
-    plan = read_tiles_bbox(spark, zorder_path, 10, 20, 25, 40) \
+    plan = read_tiles_bbox(spark, zorder_path, 8, 10, 20, 25, 40) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "morton" in plan
+    assert "key" in plan.split("PushedFilters")[1][:200]
+    assert "cell" in plan.split("PartitionFilters")[1][:200]
 
 
 def test_layout_skips_most_files_for_small_bbox(zorder_path):
-    """The property that matters at 100 TB: per-file morton min-max
+    """The property that matters at 100 TB: per-file key min-max
     intervals are disjoint and tight (range layout), so a small bbox
     intersects few files.  Checked against the actual parquet footers."""
     import pyarrow.parquet as pq
 
     stats = []
-    for f in glob.glob(f"{zorder_path}/*.parquet"):
+    for f in glob.glob(f"{zorder_path}/cell=*/*.parquet"):
         md = pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}["morton"]
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}["key"]
         mins, maxs = [], []
         for rg in range(md.num_row_groups):
             s = md.row_group(rg).column(idx).statistics
@@ -96,11 +100,11 @@ def test_layout_skips_most_files_for_small_bbox(zorder_path):
             maxs.append(s.max)
         stats.append((min(mins), max(maxs)))
     assert len(stats) >= 16
-    # files form non-overlapping morton intervals
+    # files form non-overlapping key intervals
     stats.sort()
     assert all(stats[i][1] <= stats[i + 1][0] for i in range(len(stats) - 1))
     # a 4×4 bbox touches <= 25% of files
-    ranges = bbox_morton_ranges(40, 40, 43, 43)
+    ranges = bbox_morton_ranges(40, 40, 43, 43, zoom=8)
     hit = sum(
         1 for lo_f, hi_f in stats
         if any(not (hi < lo_f or lo > hi_f) for lo, hi in ranges)
@@ -109,7 +113,7 @@ def test_layout_skips_most_files_for_small_bbox(zorder_path):
 
 
 def test_write_raises_outside_morton_domain(spark, tmp_path):
-    """ADVICE r3: coords ≥ 2^16 would alias to wrong morton cells and be
+    """ADVICE r3: coords ≥ 2^zoom would alias to wrong keys and be
     silently DROPPED by the bbox range scan — the write must refuse them
     loudly (guard rides the write pass via raise_error, no extra scan)."""
     from pyspark.sql import functions as F
@@ -120,7 +124,7 @@ def test_write_raises_outside_morton_domain(spark, tmp_path):
         F.lit(5).alias("tile_y"),
     )
     with pytest.raises(Exception, match="morton domain"):
-        write_tiles_zorder(df, str(tmp_path / "zo"), n_files=2)
+        write_tiles(df, str(tmp_path / "zo"), 16)
 
 
 def test_write_raises_on_null_coord_with_literal_message(spark, tmp_path):
@@ -135,4 +139,36 @@ def test_write_raises_on_null_coord_with_literal_message(spark, tmp_path):
         F.lit(5).alias("tile_y"),
     )
     with pytest.raises(Exception, match="NULL tile coord"):
-        write_tiles_zorder(df, str(tmp_path / "zo"), n_files=2)
+        write_tiles(df, str(tmp_path / "zo"), 16)
+
+
+def test_key_interval_holds_descendants_and_zooms_share_one_curve():
+    """A tile's key interval is exactly its z16 descendants' keys, the
+    bbox decomposition at zoom z is the z16 decomposition of the same
+    area, and the cell (key >> 24) is the z4 ancestor."""
+    lo, hi = tile_key_range(5, 9, 14)
+    assert (lo, hi) == (_morton_int(20, 36), _morton_int(23, 39))
+    assert hi - lo + 1 == 16
+    assert bbox_morton_ranges(5, 9, 5, 9, zoom=14) == [(lo, hi)]
+    assert bbox_morton_ranges(3, 5, 7, 9, zoom=12) == \
+        bbox_morton_ranges(48, 80, 127, 159)
+    x, y = 40000, 1234
+    assert _morton_int(x, y) >> 24 == _morton_int(x >> 12, y >> 12)
+
+
+def test_write_keys_per_row_zoom(spark, tmp_path):
+    """A per-row ``zoom`` column places each tile on the z16 curve at its
+    own zoom: a z2 tile and its z4 descendant share the z4 cell, and
+    a zoom above 16 is refused."""
+    df = spark.createDataFrame([(2, 1, 3), (4, 5, 13)],
+                               "zoom int, tile_x int, tile_y int")
+    path = str(tmp_path / "multi")
+    write_tiles(df, path, 13)
+    got = {(r.zoom, r.key, r.cell) for r in spark.read.parquet(path).collect()}
+    k2, k4 = tile_key_range(1, 3, 2)[0], tile_key_range(5, 13, 4)[0]
+    assert got == {(2, k2, k2 >> 24), (4, k4, k4 >> 24)}
+    assert k2 <= k4 <= tile_key_range(1, 3, 2)[1]
+
+    bad = spark.createDataFrame([(17, 0, 0)], "zoom int, tile_x int, tile_y int")
+    with pytest.raises(Exception, match="morton domain"):
+        write_tiles(bad, str(tmp_path / "bad"), 13)
