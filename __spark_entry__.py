@@ -559,10 +559,10 @@ def q_session_holefill(spark, sf_dir):
     rows = [(gid, x, y) for gid, tiles in RING_GROUPS.items() for x, y in tiles]
     rings = spark.createDataFrame(rows, "group_id long, tile_x long, tile_y long")
     # the way_tiles subtree (join + collect_set aggregate + explode) is
-    # the expensive upstream and fill_holes consumes it three times
-    # (count gate, candidate join, output union) — checkpoint it ONCE
-    # (r6: the plan previously evaluated the ObjectHashAggregate subtree
-    # 3×, ~2/3 of this gate's executor time).
+    # the expensive upstream and fill_holes consumes it twice (grouped
+    # fill, output union) — checkpoint it ONCE (r6: the plan previously
+    # evaluated the ObjectHashAggregate subtree once per consumer, ~2/3
+    # of this gate's executor time).
     wt = q_session_tiles(spark, sf_dir).withColumnRenamed("way_id", "group_id") \
         .localCheckpoint(eager=True)
     # ring ids are disjoint from session ids, so the two fills compose by
@@ -2713,10 +2713,11 @@ WHERE {gd_ham} <= 3 AND ROUND({gd_hav}, 6) <= {GEODUP_KM!r}
     # tile_merge's oracle embeds a remap computed from the correctness
     # fixture itself (SPARK_GRAFT_CORRECTNESS_DIR, default sf0.01); when
     # that fixture is absent, omit this one key (the driver records a
-    # rows-only check) instead of breaking every oracle-backed gate
+    # rows-only check) instead of breaking every oracle-backed gate.
+    # Any other error is a broken oracle and must fail loudly.
     try:
         oracles["tile_merge"] = _tile_merge_oracle()
-    except Exception:  # noqa: BLE001 — missing fixture / duckdb quirk
+    except FileNotFoundError:
         pass
     return oracles
 

@@ -199,7 +199,7 @@ def _capped_bucket_pairs(banded: DataFrame, id_col: str, bucket_cols: list,
       buffer this replaces it with spills to disk.)
 
     The two branches read the SAME exchange (ReuseExchange — pinned in
-    tests/test_plans_r2.py) and the cold groupBy re-uses the window's
+    tests/test_dedup.py) and the cold groupBy re-uses the window's
     hash partitioning, so the big relation still shuffles once.
 
     ``observation`` (with a cap set) reports n_hot_buckets /

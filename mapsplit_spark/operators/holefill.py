@@ -6,12 +6,14 @@ must be added to the geometry's tile set (pad bbox by 2, flood-fill the
 outside from (1,1) with a 4-neighbourhood, unreached cells are holes).
 Trigger: tile-set size ≥ 8 (MapSplit.java:491-493).
 
-Spark-first: this is inherently per-group imperative logic, so it runs
-in the bucketed Python stage (``buckets.apply_in_buckets``), walking
-each bucket's groups via one numpy sort + split.  Groups below the
-≥ 8-tile trigger are filtered out before its shuffle (a map-side count
-aggregation), so at 100 TB the expensive path sees only the tiny
-fraction of large geometries.
+Spark-first: this is inherently per-group imperative logic.  Spark's
+``groupBy`` collects each geometry's tiles into two arrays in the JVM,
+the ≥ 8-tile trigger is a ``size(xs)`` filter on the grouped row, and
+one ``mapInPandas`` call per Arrow batch runs the kernel once per
+group: a grouped-map call per group paid the Arrow/pandas round trip
+(~1-4 ms) tens of thousands of times at sf0.1 (r6; *Accelerating
+Python UDFs in Vectorized Query Execution*, CIDR 2022), and only the
+tiny fraction of large geometries ever reaches Python.
 
 Per-group kernel (r6): the fill runs as RUN-LENGTH connected-component
 labelling on a COORDINATE-COMPRESSED grid (every member coordinate ±1
@@ -30,12 +32,12 @@ differential reference.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .buckets import apply_in_buckets
 
 
 def _compress(vals: np.ndarray, lo: int, hi: int) -> np.ndarray:
@@ -175,56 +177,54 @@ def fill_holes(group_tiles: DataFrame, group_col: str = "group_id",
                min_tiles: int = 8) -> DataFrame:
     """(group_id, tile_x, tile_y) → same relation + patched hole tiles.
 
-    Small groups (< min_tiles, MapSplit.java:491-493) bypass the Python
-    stage entirely via a pre-shuffle semi-join on a count aggregate.
+    Groups below ``min_tiles`` tiles (MapSplit.java:491-493) are dropped
+    by a ``size`` filter on the grouped row and never reach Python.
+
+    The kernel is Python-CPU-heavy but byte-light, so AQE's byte-sized
+    coalescing squeezed it into 1-3 tasks (6 s of 17 s CPU at sf0.1,
+    r6); the explicit ``repartition`` is exempt from coalescing, and the
+    ``groupBy`` reuses its partitioning.
 
     The output is the input rows plus the holes, with no dedupe
     shuffle: a patched hole is by construction a tile NOT in its
     group's member set and each hole is emitted once, so a distinct
     input (way_tiles / assign→expand outputs) gives a distinct output.
 
-    The input relation feeds three consumers (count gate, candidate
-    join, output union); callers with an expensive upstream checkpoint
-    it themselves (q_session_holefill does) — checkpointing here
-    measured SLOWER at sf0.1 for a cheap upstream.
+    The input relation feeds two consumers (the grouped fill and the
+    output union); callers with an expensive upstream checkpoint it
+    themselves (q_session_holefill does) — checkpointing here measured
+    SLOWER at sf0.1 for a cheap upstream.
     """
     src = group_tiles.select(
         F.col(group_col).alias("group_id"), "tile_x", "tile_y"
     )
-    big = (
-        src.groupBy("group_id").count()
-        .filter(F.col("count") >= min_tiles)
-        .select("group_id")
+    groups = (
+        src.repartition(src.sparkSession.sparkContext.defaultParallelism, "group_id")
+        .groupBy("group_id")
+        .agg(F.collect_list("tile_x").alias("xs"),
+             F.collect_list("tile_y").alias("ys"))
+        .filter(F.size("xs") >= min_tiles)
     )
-    candidates = src.join(big, "group_id")  # AQE picks broadcast when small
-
-    def patch_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        gids = pdf["group_id"].to_numpy()
-        xs = pdf["tile_x"].to_numpy(dtype=np.int64)
-        ys = pdf["tile_y"].to_numpy(dtype=np.int64)
-        order = np.argsort(gids, kind="stable")
-        gids, xs, ys = gids[order], xs[order], ys[order]
-        breaks = np.flatnonzero(
-            np.r_[True, gids[1:] != gids[:-1], True]
-        )
-        out_g: list = []
-        out_x: list = []
-        out_y: list = []
-        for s, e in zip(breaks[:-1], breaks[1:]):
-            holes = _fill_one(xs[s:e], ys[s:e])
-            for hx, hy in holes:
-                out_g.append(gids[s])
-                out_x.append(hx)
-                out_y.append(hy)
-        return pd.DataFrame({
-            "group_id": pd.Series(out_g, dtype=pdf["group_id"].dtype),
-            "tile_x": pd.Series(out_x, dtype="int64"),
-            "tile_y": pd.Series(out_y, dtype="int64"),
-        })
-
     gid_type = dict(src.dtypes)["group_id"]  # schema follows the caller's key type
-    holes = apply_in_buckets(
-        candidates, ["group_id"], patch_bucket,
-        f"group_id {gid_type}, tile_x long, tile_y long",
+
+    def patch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out_g: list = []
+            out_x: list = []
+            out_y: list = []
+            for gid, xs, ys in zip(pdf["group_id"], pdf["xs"], pdf["ys"]):
+                for hx, hy in _fill_one(np.asarray(xs, dtype=np.int64),
+                                        np.asarray(ys, dtype=np.int64)):
+                    out_g.append(gid)
+                    out_x.append(hx)
+                    out_y.append(hy)
+            yield pd.DataFrame({
+                "group_id": pd.Series(out_g, dtype=pdf["group_id"].dtype),
+                "tile_x": pd.Series(out_x, dtype="int64"),
+                "tile_y": pd.Series(out_y, dtype="int64"),
+            })
+
+    holes = groups.mapInPandas(
+        patch, f"group_id {gid_type}, tile_x long, tile_y long"
     )
     return src.unionByName(holes).withColumnRenamed("group_id", group_col)

@@ -51,6 +51,7 @@ from ..sinks import zorder
 from ..sqlgen import EARTH_R_KM
 from .assign import assign_tiles, tile_window
 from .iterate import checkpoint_count, fixed_point
+from .pyramid import ancestor_tiles
 
 _FAR_KM = 1.0e9  # "side fully covered" sentinel (wraps / poles)
 # knn_hex's disk ladder: radii K0·2^i up to K_MAX, then brute force
@@ -84,17 +85,12 @@ def _tiled_points(points: DataFrame, zoom: int) -> DataFrame:
 
 def _coarsen_tiles(pt_base: DataFrame, d: int) -> DataFrame:
     """Zoom z−d tiles derived from the base assignment by BIT-SHIFT
-    (quadtree nesting: floor(v·2^(z−d)) == floor(v·2^z) >> d, clamping
-    included) — escalation levels never re-scan or re-project the points
-    table; the only new expression is the shift itself (pinned by
-    tests/test_knn.py)."""
+    (``pyramid.ancestor_tiles``, clamping included) — escalation levels
+    never re-scan or re-project the points table; the only new
+    expression is the shift itself (pinned by tests/test_knn.py)."""
     if d == 0:
         return pt_base
-    return pt_base.select(
-        "point_id", "p_lon", "p_lat",
-        F.shiftright("tile_x", d).alias("tile_x"),
-        F.shiftright("tile_y", d).alias("tile_y"),
-    )
+    return pt_base.select("point_id", "p_lon", "p_lat", *ancestor_tiles(d))
 
 
 def _query_tiles(queries: DataFrame, zoom: int) -> DataFrame:

@@ -9,6 +9,9 @@ deterministic MSIM stub from ``mapsplit_spark.imaging`` because this
 container ships no libpng/libjpeg (swap ``imaging.encode/decode`` for
 PIL on a real cluster; every signature stays identical).
 
+Mosaics too: each tile's capped members arrive as one array, not as
+one Python call per tile.
+
 Scale: decode stages select ONLY the columns they need (bytes stays out
 of every earlier stage per SURVEY.md §7.4-5), and batch size is
 controlled by spark.sql.execution.arrow.maxRecordsPerBatch.
@@ -22,6 +25,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from .. import imaging
 
@@ -85,30 +89,46 @@ def tile_mosaics(tile_images: DataFrame, cell: int = 16, grid: int = 8) -> DataF
     tile_y, image_id, bytes); members are placed row-major in image_id
     order (deterministic manifests → deterministic mosaics), each
     nearest-neighbour-resized to ``cell``², at most ``grid``² members.
-    → (tile_x, tile_y, n_members, mosaic: binary png-stub)."""
+    → (tile_x, tile_y, n_members, mosaic: binary png-stub).
+
+    The ``grid``² cap applies in the JVM (``row_number`` over the tile
+    in image_id order) before each tile's payloads are collected into
+    one array, so a hot tile never ships its surplus members to Python;
+    one ``mapInPandas`` call per Arrow batch assembles every tile of it.
+    """
 
     with_zoom = "zoom" in tile_images.columns  # multi-zoom (optimized) runs
     keys = (["zoom"] if with_zoom else []) + ["tile_x", "tile_y"]
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        head = {k: [pdf[k].iloc[0]] for k in keys}
-        pdf = pdf.sort_values("image_id").head(grid * grid)
+    def mosaic(members) -> bytes:
         canvas = np.zeros((cell * grid, cell * grid, 3), dtype=np.uint8)
-        for i, r in enumerate(pdf.itertuples(index=False)):
-            px = imaging.decode_image(bytes(r.bytes))
+        for i, payload in enumerate(members):
+            px = imaging.decode_image(bytes(payload))
             sy = (np.arange(cell) * px.shape[0]) // cell
             sx = (np.arange(cell) * px.shape[1]) // cell
             ry, rx = divmod(i, grid)
             canvas[ry * cell:(ry + 1) * cell, rx * cell:(rx + 1) * cell] = px[sy][:, sx]
-        return pd.DataFrame({
-            **head,
-            "n_members": [len(pdf)],
-            "mosaic": [imaging.encode_image(canvas, "png")],
-        })
+        return imaging.encode_image(canvas, "png")
 
+    def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame({
+                **{k: pdf[k] for k in keys},
+                "n_members": pdf["members"].map(len),
+                "mosaic": pdf["members"].map(mosaic),
+            })
+
+    rank = F.row_number().over(Window.partitionBy(*keys).orderBy("image_id"))
+    members = (
+        tile_images.withColumn("rank", rank)
+        .filter(F.col("rank") <= grid * grid)
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(F.struct("rank", "bytes")))
+             .getField("bytes").alias("members"))
+    )
     schema = ("zoom int, " if with_zoom else "") + \
         "tile_x long, tile_y long, n_members long, mosaic binary"
-    return tile_images.groupBy(*keys).applyInPandas(assemble, schema)
+    return members.mapInPandas(assemble, schema)
 
 
 def validate_payload_metadata(images: DataFrame,

@@ -17,17 +17,21 @@ block sums at levels d ≤ 4 (all inside its own (x>>4, y>>4) block,
 getCounts :952-976) and marks only tiles inside that block, so tiles in
 different superblocks never interact and within-block ascending order
 equals global ascending order restricted to the block.  ``zoom_map_df``
-therefore runs the walk (``compute_zoom_map``, also the tests' driver
-mirror) per superblock in the bucketed Python stage — no full-histogram
-driver collect; only the (small) merged-tile remap is joined back.
+therefore groups each superblock's tiles into arrays in the JVM and runs
+the walk (``compute_zoom_map``, also the tests' driver mirror) once per
+superblock in one ``mapInPandas`` stage — no full-histogram driver
+collect; only the (small) merged-tile remap is joined back.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .buckets import apply_in_buckets
+from .pyramid import ancestor_tiles
 
 MAX_ZOOM_OUT_DIFF = 5  # MapSplit.java:80
 _SUPER_SHIFT = MAX_ZOOM_OUT_DIFF - 1  # deepest walk level ⇒ superblock side 2^4
@@ -36,8 +40,9 @@ _SUPER_SHIFT = MAX_ZOOM_OUT_DIFF - 1  # deepest walk level ⇒ superblock side 2
 def compute_zoom_map(counts: dict[tuple[int, int], int], zoom: int,
                      node_limit: int) -> dict[tuple[int, int], int]:
     """counts: {(x, y): n} at base zoom → {(x, y): new_zoom} for merged
-    tiles.  Pure-Python mirror of MapSplit.java:858-936; also used by
-    the pytest oracle and the tile_merge gate's DuckDB-side remap."""
+    tiles.  Pure-Python mirror of MapSplit.java:858-936; also the
+    pytest driver-walk reference (the tile_merge gate's oracle runs the
+    independent ``_oracle_zoom_walk``)."""
     if node_limit <= 0:
         return {}
     # r6: precompute per-level block membership + totals in O(n·levels)
@@ -95,43 +100,45 @@ def zoom_map_df(counts: DataFrame, zoom: int, node_limit: int) -> DataFrame:
     """Distributed merge walk: counts(tile_x, tile_y, n) →
     (mx, my, new_zoom) for merged tiles only.
 
-    Each Python call walks its bucket's superblocks ((x>>4, y>>4)
-    blocks) locally: singleton superblocks take a vectorized shortcut
-    (an under-limit tile alone in its level-4 block always merges at the
-    deepest level, zoom−4 — the walk never finds a sibling), the rest
-    run the identical pure-Python walk.  Bit-equal to the global driver
-    walk; no driver collect.
+    Each superblock ((x>>4, y>>4) block) arrives as one grouped row of
+    parallel arrays and runs the identical pure-Python walk.  The walk
+    is Python-CPU-heavy but byte-light, so AQE's byte-sized coalescing
+    squeezed it into 1-3 tasks at sf0.1 (r6); the explicit
+    ``repartition`` is exempt from coalescing, and the ``groupBy``
+    reuses its partitioning.  Bit-equal to the global driver walk; no
+    driver collect.
     """
-    import pandas as pd
 
-    deepest = zoom - (MAX_ZOOM_OUT_DIFF - 1)
-
-    def walk_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        sizes = pdf.groupby(["sbx", "sby"])["n"].transform("size")
-        single = pdf[sizes == 1]
-        merged = single[single["n"] < node_limit]
-        out_x = merged["tile_x"].tolist()
-        out_y = merged["tile_y"].tolist()
-        out_z = [deepest] * len(out_x)
-        multi = pdf[sizes > 1]
-        for _, g in multi.groupby(["sbx", "sby"], sort=False):
-            stats = dict(zip(zip(g["tile_x"], g["tile_y"]), g["n"]))
-            for (x, y), z in compute_zoom_map(stats, zoom, node_limit).items():
-                out_x.append(x)
-                out_y.append(y)
-                out_z.append(z)
-        return pd.DataFrame({
-            "mx": pd.Series(out_x, dtype="int64"),
-            "my": pd.Series(out_y, dtype="int64"),
-            "new_zoom": pd.Series(out_z, dtype="int32"),
-        })
+    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out_x: list = []
+            out_y: list = []
+            out_z: list = []
+            for xs, ys, ns in zip(pdf["xs"], pdf["ys"], pdf["ns"]):
+                stats = dict(zip(zip(xs.tolist(), ys.tolist()), ns.tolist()))
+                for (x, y), z in compute_zoom_map(stats, zoom, node_limit).items():
+                    out_x.append(x)
+                    out_y.append(y)
+                    out_z.append(z)
+            yield pd.DataFrame({
+                "mx": pd.Series(out_x, dtype="int64"),
+                "my": pd.Series(out_y, dtype="int64"),
+                "new_zoom": pd.Series(out_z, dtype="int32"),
+            })
 
     superblocks = counts.withColumns({
         "sbx": F.shiftright("tile_x", _SUPER_SHIFT),
         "sby": F.shiftright("tile_y", _SUPER_SHIFT),
     })
-    return apply_in_buckets(superblocks, ["sbx", "sby"], walk_bucket,
-                            "mx long, my long, new_zoom int")
+    n_part = counts.sparkSession.sparkContext.defaultParallelism
+    return (
+        superblocks.repartition(n_part, "sbx", "sby")
+        .groupBy("sbx", "sby")
+        .agg(F.collect_list("tile_x").alias("xs"),
+             F.collect_list("tile_y").alias("ys"),
+             F.collect_list("n").alias("ns"))
+        .mapInPandas(walk, "mx long, my long, new_zoom int")
+    )
 
 
 def merged_assignments(assignments: DataFrame, zoom: int,
@@ -159,24 +166,13 @@ def merged_assignments(assignments: DataFrame, zoom: int,
         (assignments.tile_x == zmap_df.mx) & (assignments.tile_y == zmap_df.my),
         "left",
     )
-    shift = F.lit(zoom) - F.col("new_zoom")
+    # mapToNewTile: an exact right shift by the zoom difference (0 for
+    # unmerged tiles)
     return (
         joined.select(
             "element_id",
             F.coalesce(F.col("new_zoom"), F.lit(zoom)).alias("zoom"),
-            F.when(
-                F.col("new_zoom").isNotNull(),
-                (F.col("tile_x") / F.pow(F.lit(2.0), shift)).cast("long"),
-            ).otherwise(F.col("tile_x")).alias("tile_x_new"),
-            F.when(
-                F.col("new_zoom").isNotNull(),
-                (F.col("tile_y") / F.pow(F.lit(2.0), shift)).cast("long"),
-            ).otherwise(F.col("tile_y")).alias("tile_y_new"),
-        )
-        .select(
-            "element_id", "zoom",
-            F.col("tile_x_new").alias("tile_x"),
-            F.col("tile_y_new").alias("tile_y"),
+            *ancestor_tiles(f"{zoom} - coalesce(new_zoom, {zoom})"),
         )
         .dropDuplicates(["element_id", "zoom", "tile_x", "tile_y"])
     )

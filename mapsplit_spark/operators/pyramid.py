@@ -4,8 +4,9 @@ from the base assignment up to a coarser min zoom.
 Slippy-map consumers (raster pyramids, heat maps, zoom-dependent
 styling) need the A2 per-tile histogram at EVERY zoom level, not just
 the base: an element occupying base tile (x, y) occupies ancestor
-(x >> d, y >> d) at zoom − d (quadtree nesting — the same shift
-identity knn's ``_coarsen_tiles`` and the §2.5 merge rely on).
+(x >> d, y >> d) at zoom − d (quadtree nesting — ``ancestor_tiles``,
+the one shift that knn's ``_coarsen_tiles`` and the §2.5 merge use
+too).
 
 Spark-first shape — ONE pass, TWO shuffles, independent of pyramid
 depth: the exploded (element, tile) relation fans out its D ancestor
@@ -26,8 +27,16 @@ distinct pair relation by construction (pinned in tests).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def ancestor_tiles(shift: int | str) -> list[Column]:
+    """(tile_x, tile_y) of the ancestor ``shift`` levels up: quadtree
+    nesting makes it the exact right shift (floor(v·2^(z−d)) ==
+    floor(v·2^z) >> d).  ``shift`` is an int or a per-row SQL
+    expression (``F.shiftright`` takes only an int)."""
+    return [F.expr(f"shiftright({c}, {shift})").alias(c) for c in ("tile_x", "tile_y")]
 
 
 def pyramid_counts(assignments: DataFrame, base_zoom: int, min_zoom: int,
@@ -44,11 +53,7 @@ def pyramid_counts(assignments: DataFrame, base_zoom: int, min_zoom: int,
         raise ValueError(f"need 0 ≤ min_zoom ≤ base_zoom, got {min_zoom}/{base_zoom}")
     depth = base_zoom - min_zoom
     levels = F.explode(F.array(*[
-        F.struct(
-            F.lit(base_zoom - d).alias("zoom"),
-            F.shiftright("tile_x", d).alias("tile_x"),
-            F.shiftright("tile_y", d).alias("tile_y"),
-        )
+        F.struct(F.lit(base_zoom - d).alias("zoom"), *ancestor_tiles(d))
         for d in range(depth + 1)
     ])).alias("lv")
     return (

@@ -58,8 +58,7 @@ def session_assignments(node_tiles: DataFrame, sessions: DataFrame,
     materializes.
 
     ``holefill_min=None`` disables hole patching ENTIRELY (skips the
-    count gate + Python stage + dedup shuffle, not just raises the
-    trigger) — for callers that run the fill as a separate stage or
+    grouped Python stage, not just raises the trigger) — for callers that run the fill as a separate stage or
     want raw reference-free propagation.
     """
     way_edges = session_edges(sessions, "session")

@@ -8,8 +8,8 @@ Semantics are a faithful re-derivation of the reference formulas
 as vectorized numpy.  This module has NO Spark dependency: it is used by
 
 * the synthetic-data generator (`datagen.py`),
-* the independent pure-Python oracle (`oracle.py`) that produces golden
-  manifests for pytest,
+* the independent pure-Python oracle (`tests/oracle.py`) that produces
+  golden manifests for pytest,
 * unit tests that cross-check the Spark Column-expression implementation
   (`sqlgen.py` / `operators/assign.py`) against it.
 

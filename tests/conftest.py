@@ -69,3 +69,20 @@ def images_dir():
     if not os.path.exists(os.path.join(FIXTURE_DIR, "images.parquet")):
         write_fixture_dir(FIXTURE_DIR, sf=0.02, with_bytes=True)
     return FIXTURE_DIR
+
+
+@pytest.fixture(scope="session")
+def derived_pairs(spark):
+    """(element_id, tile_x, tile_y) at z13, border 0.1, for 2,000 points
+    at the JVM-derived locations of ids 0..1999 (no input files)."""
+    from pyspark.sql import functions as F
+
+    from mapsplit_spark import sqlgen
+    from mapsplit_spark.operators.assign import assign_and_expand
+
+    pts = spark.range(2000).select(
+        F.col("id").alias("event_id"),
+        F.expr(sqlgen.derived_lon_sql("id")).alias("lon"),
+        F.expr(sqlgen.derived_lat_sql("id")).alias("lat"),
+    )
+    return assign_and_expand(pts, "event_id", "lon", "lat", 13, 0.1)

@@ -15,7 +15,7 @@ from collections import defaultdict
 
 import numpy as np
 
-from . import tilemath as tm
+from mapsplit_spark import tilemath as tm
 
 
 def assignment_pairs(ids, lon, lat, zoom: int, border: float = 0.0) -> set:

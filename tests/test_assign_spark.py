@@ -13,10 +13,10 @@ import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
-from mapsplit_spark import oracle
 from mapsplit_spark import tilemath as tm
 from mapsplit_spark.operators.assign import assign_and_expand, assign_tiles, with_tile_id
 from mapsplit_spark.sinks.manifests import tile_counts, tile_manifests
+from tests import oracle
 
 ZOOM, BORDER = 13, 0.1
 
@@ -96,3 +96,23 @@ def test_plan_is_codegen_no_udf(points):
     assert plan.lstrip().startswith("*(")  # '*' = whole-stage-codegen stage
     # column pruning reached the scan: only the 3 needed columns are read
     assert "ReadSchema: struct<image_id:string,lat:double,lon:double>" in plan
+
+
+def test_manifests_salted_two_phase_with_zoom_column(derived_pairs):
+    """Salted two-phase manifest aggregation must survive the per-row
+    zoom column path (optimized runs): two exchanges, salt in the first
+    grouping only."""
+    from pyspark.sql import functions as F
+
+    # a genuinely varying zoom column (constant zooms fold away)
+    tiled = derived_pairs.select(
+        "element_id",
+        F.when(F.col("tile_x") % 2 == 0, 12).otherwise(13).alias("zoom"),
+        "tile_x", "tile_y",
+    )
+    plan = tile_manifests(tiled, 12, assume_distinct=True)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("Exchange") == 2
+    assert "salt" in plan
+    # zoom participates in the shuffle partitioning keys
+    assert any("hashpartitioning(zoom" in ln for ln in plan.splitlines())

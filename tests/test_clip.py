@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import pytest
 
-from mapsplit_spark import oracle
 from mapsplit_spark import tilemath as tm
 from mapsplit_spark.operators.assign import assign_and_expand
 from mapsplit_spark.operators.clip import (
@@ -14,7 +13,9 @@ from mapsplit_spark.operators.clip import (
     clip_points,
     clip_tiles,
     load_rings,
+    make_ring,
 )
+from tests import oracle
 
 ZOOM = 13
 
@@ -66,3 +67,19 @@ def test_clip_points_and_assignments(spark, polys, images_dir):
     ring = outers[0][0]
     for r in pts[:50]:
         assert oracle.point_in_ring(r.lon, r.lat, ring)
+
+
+def test_clip_ring_python_only_on_distinct_tiles(spark, derived_pairs):
+    """P8/P9: the numpy PIP runs on DISTINCT tiles only and the kept set
+    broadcast-semi-joins back — the big pair relation never reshuffles
+    nor enters Python."""
+    outers = [make_ring([(-60.0, -50.0), (20.0, -55.3), (35.0, 55.7), (-55.2, 60.3)])]
+    kept = clip_tiles(derived_pairs.select("tile_x", "tile_y").distinct(), outers, [], 13)
+    plan = clip_assignments(derived_pairs, kept)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+    # Python consumes ONLY the deduplicated (tile_x, tile_y) side — the
+    # raw pair relation (element_id) never enters the Python stage
+    mip_line = next(ln for ln in plan.splitlines() if "MapInPandas" in ln)
+    assert "element_id" not in mip_line

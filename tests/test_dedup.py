@@ -444,3 +444,29 @@ def test_hamming_default_self_sizes(spark):
     explicit = hamming_near_dups(df, radius=3, n_bands=4)
     assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, explicit.collect()))
     assert auto.count() >= 30
+
+
+def test_lsh_bucket_cap_single_exchange_no_python(spark):
+    """Candidate generation (including the hot-bucket cap) is ONE
+    grouped exchange + map-side pair expansion — no Python, no join,
+    no cartesian (the round-3 single-shuffle formulation; the earlier
+    aggregate+semi-join shape cost 5 passes over the banded relation)."""
+    from mapsplit_spark.operators.dedup import lsh_candidate_pairs, minhash_signatures
+
+    docs = spark.createDataFrame(
+        [(f"d{i}", f"text body number {i} with several words") for i in range(20)],
+        "doc_id string, text string",
+    )
+    sigs = minhash_signatures(with_shingle_hashes(docs), 32,
+                              id_col="doc_id")
+    plan = lsh_candidate_pairs(sigs, bands=8, max_bucket=64)._jdf \
+        .queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan and "InPandas" not in plan
+    assert "CartesianProduct" not in plan
+    assert "Join" not in plan  # map-side expansion, not a self-join
+    # r4 memory-safe shape: window-annotated cold/hot Union — the banded
+    # exchange appears once per branch pre-AQE (runtime-reused: pinned in
+    # test_hot_bucket_exchange_reused_and_not_collected) plus the final
+    # distinct
+    assert plan.count("Exchange hashpartitioning(band") == 2
+    assert plan.count("Exchange") == 3

@@ -38,3 +38,18 @@ def test_gate_matches_oracle(spark, con, oracles, name):
     finally:
         spark.conf.set("spark.sql.codegen.wholeStage", whole_stage)
     assert r["ok"], r
+
+
+def test_broken_tile_merge_oracle_raises(monkeypatch):
+    """An error in the tile_merge oracle's walk fails ``oracle_sql()``;
+    swallowing it would drop the key and leave the gate a rows-only
+    check.  Only a missing correctness fixture omits the key."""
+    def broken_walk(counts, zoom, node_limit):
+        raise RuntimeError("broken walk")
+
+    monkeypatch.setenv("SPARK_GRAFT_CORRECTNESS_DIR", SF_DIR)
+    monkeypatch.setattr(entry, "_oracle_zoom_walk", broken_walk)
+    with pytest.raises(RuntimeError, match="broken walk"):
+        entry.oracle_sql()
+    monkeypatch.setenv("SPARK_GRAFT_CORRECTNESS_DIR", "/nonexistent/sf")
+    assert "tile_merge" not in entry.oracle_sql()

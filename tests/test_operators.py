@@ -11,7 +11,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mapsplit_spark import oracle
 from mapsplit_spark import tilemath as tm
 from mapsplit_spark.operators.holefill import fill_holes
 from mapsplit_spark.operators.optimize import compute_zoom_map, merged_assignments
@@ -21,6 +20,7 @@ from mapsplit_spark.operators.propagate import (
     relation_tiles_fixed_point,
     way_tiles,
 )
+from tests import oracle
 
 ZOOM = 13
 
@@ -161,6 +161,18 @@ def test_holefill_skips_small_groups(spark):
     assert got == {(10, 10), (12, 12)}  # < 8 tiles → untouched
 
 
+def test_holefill_python_gated_behind_min_tiles(derived_pairs):
+    """§2.6: one grouped Python stage (groupBy → arrays → mapInPandas),
+    and groups reach it only through the ≥ 8-tile ``size`` filter on the
+    grouped row — no grouped-map call, no count-aggregate gate."""
+    g = derived_pairs.withColumnRenamed("element_id", "group_id")
+    lines = fill_holes(g)._jdf.queryExecution().executedPlan().toString().splitlines()
+    mip = [i for i, ln in enumerate(lines) if "MapInPandas" in ln]
+    assert len(mip) == 1
+    assert not any("FlatMapGroupsInPandas" in ln for ln in lines)
+    assert any("Filter" in ln and "size(" in ln for ln in lines[mip[0] + 1:])
+
+
 def test_compute_zoom_map_hand_cases():
     limit = 100
     # case 1: 2x2 block total 110 ∈ (limit, 4·limit) → all merge to z-1
@@ -230,6 +242,19 @@ def test_merged_assignments_rekey_and_dedupe(spark):
     big = merged_assignments(df, ZOOM, node_limit=1)
     got2 = {(r.element_id, r.zoom, r.tile_x, r.tile_y) for r in big.collect()}
     assert got2 == {("e1", ZOOM, 10, 10), ("e1", ZOOM, 11, 10), ("e2", ZOOM, 10, 10)}
+
+
+def test_tile_merge_broadcasts_remap_and_groups_walk(derived_pairs):
+    """§2.5: the walk runs once per superblock in one grouped Python
+    stage (mapInPandas over grouped arrays, no grouped-map call) and the
+    remap joins back as a broadcast — the pair relation is never
+    shuffled for the remap."""
+    plan = merged_assignments(derived_pairs, 13, node_limit=5)._jdf \
+        .queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "BroadcastHashJoin" in plan
+    assert "LeftOuter" in plan
 
 
 def test_holefill_handles_scattered_groups_exactly(spark):

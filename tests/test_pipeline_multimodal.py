@@ -73,6 +73,24 @@ def test_tile_mosaics_deterministic(spark, images_dir):
     assert sum(n for n, _ in m1.values()) > 0
 
 
+def test_tile_mosaics_cap_keeps_smallest_image_ids(spark):
+    """A tile with more than grid² members keeps exactly the grid²
+    smallest image_ids: its mosaic equals the one built from those
+    members alone (which the cap leaves untouched)."""
+    grid = 2
+    rng = np.random.default_rng(5)
+    rows = [(3, 4, f"img{i:02d}",
+             imaging.encode_image(rng.integers(0, 256, (6, 6, 3), dtype=np.uint8), "png"))
+            for i in (7, 2, 9, 4, 0, 5, 8)]
+    df = spark.createDataFrame(rows, "tile_x long, tile_y long, image_id string, bytes binary")
+    got = tile_mosaics(df.repartition(3), cell=4, grid=grid).collect()
+    smallest = df.orderBy("image_id").limit(grid * grid)
+    want = tile_mosaics(smallest, cell=4, grid=grid).collect()
+    assert len(got) == len(want) == 1
+    assert got[0].n_members == want[0].n_members == grid * grid
+    assert bytes(got[0].mosaic) == bytes(want[0].mosaic)
+
+
 def test_pipeline_resume_identical(spark, images_dir):
     shutil.rmtree(WORK, ignore_errors=True)
     pipe = TilingPipeline(spark, WORK, zoom=13, border=0.1)

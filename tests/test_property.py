@@ -7,8 +7,8 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from mapsplit_spark import oracle
 from mapsplit_spark import tilemath as tm
+from tests import oracle
 
 lons = st.floats(min_value=-185.0, max_value=185.0, allow_nan=False)
 lats = st.floats(min_value=-89.0, max_value=89.0, allow_nan=False)
