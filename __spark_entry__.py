@@ -30,6 +30,7 @@ from mapsplit_spark.operators.assign import (  # noqa: E402
 from mapsplit_spark.operators.knn import knn_bruteforce, knn_tiled  # noqa: E402
 from mapsplit_spark.operators.propagate import (  # noqa: E402
     backfill_member_tiles,
+    hop,
     way_tiles,
 )
 from mapsplit_spark.operators.similarity import cosine_topk  # noqa: E402
@@ -90,7 +91,7 @@ def _li_members(spark, sf_dir, offset: int = 0) -> DataFrame:
     repartition: at real scale the input is many files and this is a
     no-op in spirit (r6)."""
     edges = _t(spark, sf_dir, "lineitem").select(
-        (F.col("l_orderkey") + offset).alias("way_id"),
+        (F.col("l_orderkey") + offset).alias("group_id"),
         F.expr(NID).alias("member_id"),
     )
     return edges.repartition(max(8, spark.sparkContext.defaultParallelism // 2))
@@ -168,8 +169,8 @@ def q_session_tiles(spark, sf_dir):
     """J1 + P5 — way tile-set union with drop-if-any-member-missing
     (MapSplit.java:452-511).  Ways ≡ lineitem groups per orderkey,
     member nodes ≡ events rows."""
-    members = _li_members(spark, sf_dir)
-    return way_tiles(members, _event_pairs(spark, sf_dir), "way_id", "member_id")
+    return way_tiles(_li_members(spark, sf_dir), _event_pairs(spark, sf_dir)) \
+        .withColumnRenamed("element_id", "way_id")
 
 
 def q_node_backfill(spark, sf_dir):
@@ -180,7 +181,7 @@ def q_node_backfill(spark, sf_dir):
     # and each would re-run the widening shuffle — A/B'd slower (3.1 vs
     # 2.7 s warm, measured with one more consumer)
     members = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("way_id"), F.expr(NID).alias("member_id")
+        F.col("l_orderkey").alias("group_id"), F.expr(NID).alias("member_id")
     )
     # reused subtrees are materialized once — Spark does not reuse
     # non-identical exchanges across branches, and at scale the
@@ -189,8 +190,8 @@ def q_node_backfill(spark, sf_dir):
     # instead of persist: blocks are context-cleaned on GC, so repeated
     # queries() use doesn't accumulate pinned cache entries.
     node_tiles = _event_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    wt = way_tiles(members, node_tiles, "way_id", "member_id").localCheckpoint(eager=True)
-    return backfill_member_tiles(members, wt, node_tiles, "way_id", "member_id")
+    wt = way_tiles(members, node_tiles).localCheckpoint(eager=True)
+    return backfill_member_tiles(members, wt, node_tiles)
 
 
 def _knn_inputs(spark, sf_dir):
@@ -312,15 +313,15 @@ def _relation_edges(spark, sf_dir):
     contain level-2 — J3 member lookups + the J4 fixed point resolve
     the chain (postProcessRelations, MapSplit.java:772-790)."""
     li = _t(spark, sf_dir, "lineitem").select(
-        (F.col("l_orderkey") + R1).alias("relation_id"),
+        (F.col("l_orderkey") + R1).alias("group_id"),
         F.expr(NID).alias("member_id"),
     )
     od = _t(spark, sf_dir, "orders").select(
-        (F.col("o_custkey") + R2).alias("relation_id"),
+        (F.col("o_custkey") + R2).alias("group_id"),
         (F.col("o_orderkey") + R1).alias("member_id"),
     )
     cu = _t(spark, sf_dir, "customer").select(
-        (F.col("c_nationkey") + R3).alias("relation_id"),
+        (F.col("c_nationkey") + R3).alias("group_id"),
         (F.col("c_custkey") + R2).alias("member_id"),
     )
     return li.unionByName(od).unionByName(cu)
@@ -342,30 +343,23 @@ def q_complete_rel(spark, sf_dir):
     inherit the relation's full tile set (MapSplit.java:641-661) and
     nodes of member ways inherit those ways' augmented sets in pass 2
     (addExtraWayToMap, MapSplit.java:519-527, 793-831)."""
-    from mapsplit_spark.operators.propagate import (
-        complete_relation_propagation,
-        way_tiles,
-    )
+    from mapsplit_spark.operators.propagate import complete_relation_propagation
 
     node_tiles = _event_pairs(spark, sf_dir)
     # plain members: consumed by way_tiles AND the pass-2 way_aug join
     # (the widening shuffle would run per consumer — the node_backfill
     # finding)
     way_members = _t(spark, sf_dir, "lineitem").select(
-        (F.col("l_orderkey") + R1).alias("way_id"), F.expr(NID).alias("member_id")
+        (F.col("l_orderkey") + R1).alias("group_id"), F.expr(NID).alias("member_id")
     )
-    wt = way_tiles(way_members, node_tiles, "way_id", "member_id")
+    wt = way_tiles(way_members, node_tiles)
     rel_members = _t(spark, sf_dir, "orders").filter(
         F.col("o_custkey") < REL_CUST_LIMIT
     ).select(
-        (F.col("o_custkey") + R2).alias("relation_id"),
+        (F.col("o_custkey") + R2).alias("group_id"),
         (F.col("o_orderkey") + R1).alias("member_id"),
     )
-    rel_tiles = (
-        rel_members.join(wt, rel_members.member_id == wt.way_id)
-        .select(F.col("relation_id").alias("element_id"), "tile_x", "tile_y")
-        .distinct()
-    )
+    rel_tiles = hop(rel_members, wt, to="group").distinct()
     return complete_relation_propagation(rel_members, rel_tiles, way_members, node_tiles)
 
 
@@ -557,20 +551,20 @@ def q_session_holefill(spark, sf_dir):
     from mapsplit_spark.operators.holefill import fill_holes
 
     rows = [(gid, x, y) for gid, tiles in RING_GROUPS.items() for x, y in tiles]
-    rings = spark.createDataFrame(rows, "group_id long, tile_x long, tile_y long")
+    rings = spark.createDataFrame(rows, "element_id long, tile_x long, tile_y long")
     # the way_tiles subtree (join + collect_set aggregate + explode) is
     # the expensive upstream and fill_holes consumes it twice (grouped
     # fill, output union) — checkpoint it ONCE (r6: the plan previously
     # evaluated the ObjectHashAggregate subtree once per consumer, ~2/3
     # of this gate's executor time).
-    wt = q_session_tiles(spark, sf_dir).withColumnRenamed("way_id", "group_id") \
+    wt = way_tiles(_li_members(spark, sf_dir), _event_pairs(spark, sf_dir)) \
         .localCheckpoint(eager=True)
     # ring ids are disjoint from session ids, so the two fills compose by
     # union — keeping the big session path's plan identical to the
     # fixture-free formulation (unioning BEFORE the fill inflated the
     # shuffle partitioning of all three src consumers, measured +60%)
     out = fill_holes(wt).unionByName(fill_holes(rings))
-    return out.withColumnRenamed("group_id", "way_id")
+    return out.withColumnRenamed("element_id", "way_id")
 
 
 def q_modified_tiles_sessions(spark, sf_dir):
@@ -584,7 +578,7 @@ def q_modified_tiles_sessions(spark, sf_dir):
     runs the production ``propagate_newer`` fixed point.  Disjoint id
     namespaces (R1/R2) keep group ids from colliding with event ids in
     the shared closure id space."""
-    from mapsplit_spark.operators.propagate import propagate_newer, way_tiles
+    from mapsplit_spark.operators.propagate import propagate_newer
 
     newer = _t(spark, sf_dir, "events").filter(
         F.col("ts") > F.lit(WATERMARK)
@@ -592,29 +586,19 @@ def q_modified_tiles_sessions(spark, sf_dir):
     # NOT _li_members: members feeds way_tiles AND the closure edge set —
     # the widening shuffle would run twice (A/B'd slower, 3.1 vs 2.5 s)
     members = _t(spark, sf_dir, "lineitem").select(
-        (F.col("l_orderkey") + R1).alias("way_id"), F.expr(NID).alias("member_id")
+        (F.col("l_orderkey") + R1).alias("group_id"), F.expr(NID).alias("member_id")
     )
-    node_tiles = _event_pairs(spark, sf_dir)
-    wt = way_tiles(members, node_tiles, "way_id", "member_id") \
+    wt = way_tiles(members, _event_pairs(spark, sf_dir)) \
         .localCheckpoint(eager=True)  # feeds collection tiles + output
     cols = _t(spark, sf_dir, "orders").filter(
         F.col("o_custkey") < REL_CUST_LIMIT
     ).select(
-        (F.col("o_custkey") + R2).alias("col_id"),
+        (F.col("o_custkey") + R2).alias("group_id"),
         (F.col("o_orderkey") + R1).alias("member_id"),
     )
-    col_tiles = (
-        cols.join(wt, cols.member_id == wt.way_id)
-        .select(F.col("col_id").alias("element_id"), "tile_x", "tile_y")
-        .distinct()
-    )
-    edges = members.select(
-        F.col("way_id").alias("group_id"), "member_id"
-    ).unionByName(cols.select(F.col("col_id").alias("group_id"), "member_id"))
-    closed = propagate_newer(edges, newer)
-    group_tiles = wt.select(
-        F.col("way_id").alias("element_id"), "tile_x", "tile_y"
-    ).unionByName(col_tiles)
+    col_tiles = hop(cols, wt, to="group").distinct()
+    closed = propagate_newer(members.unionByName(cols), newer)
+    group_tiles = wt.unionByName(col_tiles)
     # no broadcast hint: the newer-closure can be delta-sized or
     # corpus-sized depending on the watermark — let AQE decide
     return group_tiles.join(closed, "element_id", "left_semi")

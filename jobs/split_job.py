@@ -166,7 +166,12 @@ def _read_date_file(path: str) -> int | None:
 
 
 def main(argv=None) -> None:
-    args = build_parser().parse_args(argv)
+    p = build_parser()
+    args = p.parse_args(argv)
+    for flag, given in (("--zonal", args.zonal), ("--raster", args.raster is not None),
+                        ("--transitions", args.transitions)):
+        if given and not args.poly:
+            p.error(f"{flag} requires --poly")
     if args.chunked_manifests and (args.mbtiles or args.tile_files or args.workdir):
         raise SystemExit(
             "--chunked-manifests is incompatible with --mbtiles/--tile-files "
@@ -246,10 +251,7 @@ def main(argv=None) -> None:
         from mapsplit_spark.sinks.manifests import tile_counts
 
         write_parquet(focal_sum(
-            tile_counts(
-                pairs.select("element_id", "tile_x", "tile_y")
-                .dropDuplicates(["element_id", "tile_x", "tile_y"])
-            ),
+            tile_counts(pairs.select("element_id", "tile_x", "tile_y")),
             args.zoom, radius=args.focal_radius,
         ), f"{out}/focal")
 
@@ -272,7 +274,7 @@ def main(argv=None) -> None:
             hq.alias("hq"), hr.alias("hr"),
         ), f"{out}/hexcells")
 
-    if args.zonal and args.poly:
+    if args.zonal:
         write_parquet(zone_assign(
             src.select(args.id_col, args.lon_col, args.lat_col),
             *pipe.rings, id_col=args.id_col,
@@ -281,7 +283,7 @@ def main(argv=None) -> None:
             F.count("*").cast("long").alias("n_points")
         ), f"{out}/zones")
 
-    if args.raster is not None and args.poly:
+    if args.raster is not None:
         from mapsplit_spark.operators.clip import rasterize
 
         write_parquet(rasterize(spark, *pipe.rings, args.raster), f"{out}/raster")
@@ -306,7 +308,7 @@ def main(argv=None) -> None:
             args.idw, radius=1,
         ), f"{out}/idw")
 
-    if args.transitions and args.poly:
+    if args.transitions:
         from mapsplit_spark.operators.geofence import zone_transitions
 
         write_parquet(zone_transitions(

@@ -173,9 +173,9 @@ def _fill_one(xs: np.ndarray, ys: np.ndarray,
     return _expand_holes(hy, hx, cx, cy, sx, sy, max_holes)
 
 
-def fill_holes(group_tiles: DataFrame, group_col: str = "group_id",
-               min_tiles: int = 8) -> DataFrame:
-    """(group_id, tile_x, tile_y) → same relation + patched hole tiles.
+def fill_holes(group_tiles: DataFrame, min_tiles: int = 8) -> DataFrame:
+    """(element_id, tile_x, tile_y) tile rows of the groups → same
+    relation + patched hole tiles.
 
     Groups below ``min_tiles`` tiles (MapSplit.java:491-493) are dropped
     by a ``size`` filter on the grouped row and never reach Python.
@@ -195,36 +195,34 @@ def fill_holes(group_tiles: DataFrame, group_col: str = "group_id",
     themselves (q_session_holefill does) — checkpointing here measured
     SLOWER at sf0.1 for a cheap upstream.
     """
-    src = group_tiles.select(
-        F.col(group_col).alias("group_id"), "tile_x", "tile_y"
-    )
+    src = group_tiles.select("element_id", "tile_x", "tile_y")
     groups = (
-        src.repartition(src.sparkSession.sparkContext.defaultParallelism, "group_id")
-        .groupBy("group_id")
+        src.repartition(src.sparkSession.sparkContext.defaultParallelism, "element_id")
+        .groupBy("element_id")
         .agg(F.collect_list("tile_x").alias("xs"),
              F.collect_list("tile_y").alias("ys"))
         .filter(F.size("xs") >= min_tiles)
     )
-    gid_type = dict(src.dtypes)["group_id"]  # schema follows the caller's key type
+    gid_type = dict(src.dtypes)["element_id"]  # schema follows the caller's key type
 
     def patch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out_g: list = []
             out_x: list = []
             out_y: list = []
-            for gid, xs, ys in zip(pdf["group_id"], pdf["xs"], pdf["ys"]):
+            for gid, xs, ys in zip(pdf["element_id"], pdf["xs"], pdf["ys"]):
                 for hx, hy in _fill_one(np.asarray(xs, dtype=np.int64),
                                         np.asarray(ys, dtype=np.int64)):
                     out_g.append(gid)
                     out_x.append(hx)
                     out_y.append(hy)
             yield pd.DataFrame({
-                "group_id": pd.Series(out_g, dtype=pdf["group_id"].dtype),
+                "element_id": pd.Series(out_g, dtype=pdf["element_id"].dtype),
                 "tile_x": pd.Series(out_x, dtype="int64"),
                 "tile_y": pd.Series(out_y, dtype="int64"),
             })
 
     holes = groups.mapInPandas(
-        patch, f"group_id {gid_type}, tile_x long, tile_y long"
+        patch, f"element_id {gid_type}, tile_x long, tile_y long"
     )
-    return src.unionByName(holes).withColumnRenamed("group_id", group_col)
+    return src.unionByName(holes)

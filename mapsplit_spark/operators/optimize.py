@@ -145,15 +145,16 @@ def merged_assignments(assignments: DataFrame, zoom: int,
                        node_limit: int) -> DataFrame:
     """Re-key exploded (element_id, tile_x, tile_y) through the merge map.
 
-    → (element_id, zoom, tile_x, tile_y) distinct — merged tiles carry
-    their coarser zoom and right-shifted coordinates
-    (mapToNewTile, MapSplit.java:985-989); ``node_limit <= 0`` merges
-    nothing and keeps the base zoom.
+    → (element_id, zoom, tile_x, tile_y) — merged tiles carry their
+    coarser zoom and right-shifted coordinates (mapToNewTile,
+    MapSplit.java:985-989), deduped since several tiles merge into one;
+    ``node_limit <= 0`` merges nothing, keeps the base zoom and adds no
+    dedupe: a distinct input (the assign → sessions → clip chain is)
+    stays distinct.
     """
     if node_limit <= 0:
         return assignments.select(
-            "element_id", F.lit(zoom).alias("zoom"), "tile_x", "tile_y"
-        ).dropDuplicates(["element_id", "tile_x", "tile_y"])
+            "element_id", F.lit(zoom).alias("zoom"), "tile_x", "tile_y")
     counts = assignments.groupBy("tile_x", "tile_y").agg(F.count("*").alias("n"))
     # merged subset ≪ histogram; broadcast keeps the remap join
     # shuffle-free (falls back to shuffle join above the 8 GB broadcast

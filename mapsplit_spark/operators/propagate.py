@@ -3,16 +3,38 @@
 The reference resolves way→node and relation→member references by
 hash-map lookups against the in-memory OsmMaps (MapSplit.java:452-511,
 :534-662, :772-831).  Spark-first re-expression: membership is a
-DataFrame of (group_id, member_id) edges and every lookup becomes a
-join against the exploded (element_id, tile_x, tile_y) assignment
-relation; set-union is ``distinct`` on normalized rows (no packed
-bitmaps — Tungsten columnar rows replace AbstractOsmMap's 64-bit codec).
+DataFrame of ``(group_id, member_id)`` edges — the one edge shape every
+operator here takes, as ``sessions.session_edges`` produces it — and
+tile sets are ``(element_id, tile_x, tile_y)`` rows, the one tile-row
+shape every operator takes and returns.  Set-union is ``distinct`` on
+normalized rows (no packed bitmaps — Tungsten columnar rows replace
+AbstractOsmMap's 64-bit codec).
+
+Every lookup is one step, ``hop``: rows move one edge either up
+(member → group) or down (group → member).  J1's drop-if-missing union
+is the only propagation that is not a plain hop.
+
+Distinctness, stated once:
+
+- ``way_tiles`` is distinct by construction (one ``collect_set`` per
+  group), and ``holefill.fill_holes`` keeps a distinct input distinct
+  (it adds only tiles outside the group's set, each once);
+- ``backfill_member_tiles`` and ``complete_relation_propagation`` end
+  in a ``distinct``: their down-hops re-emit tiles members already have;
+- ``relation_tiles_fixed_point`` and ``propagate_newer`` are distinct:
+  the first level is deduped and every round's delta is deduped and
+  anti-joined against the accumulated rows;
+- ``hop`` itself is not distinct: a group reached from several members
+  (or a member of several groups) receives a tile once per edge;
+- relations over disjoint id namespaces union without a dedupe: point
+  ids, session ids and collection ids never collide (FIXTURES.md), so
+  ``session_assignments`` unions its distinct per-kind relations as is.
 
 Scale notes: node_tiles is the big side (≈ input cardinality × small
-fan-out); membership edges shuffle-join on member_id.  Both sides are
-key-partitioned by the join key only — no driver collection; the
-fixed-point loop (relations) iterates a bounded number of small joins
-on the relation subset only.
+fan-out); membership edges shuffle-join on the hop's source key.  Both
+sides are key-partitioned by the join key only — no driver collection;
+the fixed-point loop (relations) iterates a bounded number of small
+joins on the relation subset only.
 """
 
 from __future__ import annotations
@@ -22,12 +44,32 @@ from pyspark.sql import functions as F
 
 from .iterate import checkpoint_count, fixed_point
 
+# hop target → (edge column matched to element_id, edge column emitted)
+_HOP = {"group": ("member_id", "group_id"), "member": ("group_id", "member_id")}
 
-def way_tiles(members: DataFrame, node_tiles: DataFrame,
-              group_col: str = "way_id", member_col: str = "member_id") -> DataFrame:
+
+def hop(edges: DataFrame, rows: DataFrame, to: str) -> DataFrame:
+    """Move ``rows`` (element_id, *payload) one hop along ``edges``
+    (group_id, member_id): ``to="group"`` carries each member's rows up
+    to its groups, ``to="member"`` carries each group's rows down to its
+    members.  Inner join, so rows of elements without edges go nowhere.
+    → (element_id, *payload), not distinct.
+
+    The join is on a column name, so ``rows`` may derive from ``edges``
+    (a relation's tiles pushed back down its own edges) without an
+    ambiguous self-join."""
+    key, out = _HOP[to]
+    payload = [c for c in rows.columns if c != "element_id"]
+    return (
+        edges.join(rows.select(F.col("element_id").alias(key), *payload), key)
+        .select(F.col(out).alias("element_id"), *payload)
+    )
+
+
+def way_tiles(members: DataFrame, node_tiles: DataFrame) -> DataFrame:
     """J1 — way tile set = union of member node tile sets, dropping the
     whole way if ANY member is missing (MapSplit.java:462-502).
-    → distinct (group_col, tile_x, tile_y).
+    → distinct (element_id ≡ group_id, tile_x, tile_y).
 
     Single-pass plan: one left join + one groupBy(way) carrying both the
     missing-member flag and the tile set (collect_set skips the nulls
@@ -36,31 +78,28 @@ def way_tiles(members: DataFrame, node_tiles: DataFrame,
     is the expensive side and is scanned/shuffled exactly once.
     """
     nt = node_tiles.select("element_id", "tile_x", "tile_y")
-    j = members.join(nt, members[member_col] == nt["element_id"], "left")
-    agg = j.groupBy(group_col).agg(
+    j = members.join(nt, members["member_id"] == nt["element_id"], "left")
+    agg = j.groupBy("group_id").agg(
         F.max(F.when(F.col("tile_x").isNull(), 1).otherwise(0)).alias("n_missing"),
         F.collect_set(
             F.when(F.col("tile_x").isNotNull(), F.struct("tile_x", "tile_y"))
         ).alias("tiles"),
     ).filter("n_missing = 0")
-    return agg.select(group_col, F.explode("tiles").alias("t")).select(
-        group_col, F.col("t.tile_x").alias("tile_x"), F.col("t.tile_y").alias("tile_y")
-    )
+    return agg.select(
+        F.col("group_id").alias("element_id"), F.explode("tiles").alias("t")
+    ).select("element_id", F.col("t.tile_x").alias("tile_x"),
+             F.col("t.tile_y").alias("tile_y"))
 
 
 def backfill_member_tiles(members: DataFrame, group_tiles: DataFrame,
-                          node_tiles: DataFrame, group_col: str = "way_id",
-                          member_col: str = "member_id") -> DataFrame:
+                          node_tiles: DataFrame) -> DataFrame:
     """J2 — every member inherits its group's full tile set
     (MapSplit.java:506-510); result unioned with the nodes' own tiles.
     → distinct (element_id, tile_x, tile_y) superset of node_tiles.
-    The inner join on ``group_tiles`` gives members of groups it lacks
-    (ways dropped by ``way_tiles``) nothing, so ``members`` needs no
-    pre-filter."""
-    inherited = (
-        members.join(group_tiles, group_col)
-        .select(F.col(member_col).alias("element_id"), "tile_x", "tile_y")
-    )
+    The hop's inner join on ``group_tiles`` gives members of groups it
+    lacks (ways dropped by ``way_tiles``) nothing, so ``members`` needs
+    no pre-filter."""
+    inherited = hop(members, group_tiles, to="member")
     return node_tiles.select("element_id", "tile_x", "tile_y").union(inherited).distinct()
 
 
@@ -73,23 +112,13 @@ def complete_relation_propagation(rel_members: DataFrame, rel_tiles: DataFrame,
     those ways' augmented tile sets via the second pass
     (addExtraWayToMap, MapSplit.java:519-527, driver :793-831).
 
-    rel_members: (relation_id, member_id); rel_tiles: (element_id ≡
-    relation_id, tile_x, tile_y); way_members: (way_id, member_id ≡ node
-    id); node_tiles: the exploded base assignment.  → augmented distinct
-    (element_id, tile_x, tile_y).
+    rel_members: relation → member edges; rel_tiles: the relations'
+    tile rows; way_members: way → node edges; node_tiles: the exploded
+    base assignment.  → augmented distinct (element_id, tile_x, tile_y).
     """
-    rt = rel_tiles.select(
-        F.col("element_id").alias("relation_id"), "tile_x", "tile_y"
-    )
-    inherit = rel_members.join(rt, "relation_id").select(
-        F.col("member_id").alias("element_id"), "tile_x", "tile_y"
-    )
+    inherit = hop(rel_members, rel_tiles, to="member")
     # pass 2: member ways push their inherited tiles down to their nodes
-    way_aug = (
-        inherit.withColumnRenamed("element_id", "way_id")
-        .join(way_members, "way_id")
-        .select(F.col("member_id").alias("element_id"), "tile_x", "tile_y")
-    )
+    way_aug = hop(way_members, inherit, to="member")
     return (
         node_tiles.select("element_id", "tile_x", "tile_y")
         .union(inherit).union(way_aug).distinct()
@@ -101,22 +130,17 @@ def _semi_naive_step(edges: DataFrame, delta: DataFrame,
     """One semi-naive iteration: derive the next frontier from the DELTA
     only (classic datalog TC optimization — joining the accumulated
     relation instead would grow the join input every iteration), then
-    anti-join away rows already resolved.  ``edges``: (dst, src);
-    ``delta``/``resolved``: (element_id, *payload)."""
-    payload = [c for c in delta.columns if c != "element_id"]
-    derived = (
-        edges.join(delta, edges["src"] == delta["element_id"])
-        .select(F.col("dst").alias("element_id"), *payload)
-        .distinct()
-    )
+    anti-join away rows already resolved.  ``delta``/``resolved``:
+    (element_id, *payload)."""
+    derived = hop(edges, delta, to="group").distinct()
     return derived.join(resolved, delta.columns, "left_anti")
 
 
 def _closure(name: str, edges: DataFrame, base: DataFrame,
              max_iters: int) -> DataFrame:
-    """Semi-naive closure of ``base`` (element_id, *payload) up ``edges``
-    (dst, src): every dst inherits its srcs' payload rows, transitively.
-    A round's delta count rides the delta checkpoint."""
+    """Semi-naive closure of ``base`` (element_id, *payload) up ``edges``:
+    every group inherits its members' payload rows, transitively.  A
+    round's delta count rides the delta checkpoint."""
     def step(_, state):
         resolved, delta = state
         delta, n = checkpoint_count(_semi_naive_step(edges, delta, resolved))
@@ -129,18 +153,16 @@ def _closure(name: str, edges: DataFrame, base: DataFrame,
 
 
 def relation_tiles_fixed_point(rel_members: DataFrame, base_tiles: DataFrame,
-                               group_col: str = "relation_id",
-                               member_col: str = "member_id",
                                max_iters: int = 25) -> DataFrame:
     """J3/J4 — relations may reference relations (forward/cyclic refs);
     the reference retries unresolved ones until no progress
     (postProcessRelations, MapSplit.java:772-790).
 
-    ``rel_members``: (relation_id, member_id) where member_id may be a
-    relation_id itself.  ``base_tiles``: (element_id, tile_x, tile_y)
-    for non-relation members already resolved.  Missing members are
-    skipped (left-join semantics, MapSplit.java:552-581); a relation
-    whose tile set stays empty is dropped (:625-628).
+    ``rel_members``: relation → member edges, where a member may be a
+    relation itself.  ``base_tiles``: tile rows of the non-relation
+    members already resolved.  Missing members are skipped (the hop's
+    inner join, MapSplit.java:552-581); a relation whose tile set stays
+    empty is dropped (:625-628).
 
     Driver-side loop, bounded by nesting depth — each iteration is one
     shuffle join on the (small) relation edge set, evaluated semi-naively
@@ -152,19 +174,13 @@ def relation_tiles_fixed_point(rel_members: DataFrame, base_tiles: DataFrame,
     incomplete tile set.
     """
     # r6 A/B note: materializing the edge relation once (repartition on
-    # src + eager localCheckpoint, so iterations skip the per-round
+    # member_id + eager localCheckpoint, so iterations skip the per-round
     # re-scan/re-shuffle) measured SLOWER at sf0.1 for both gate callers
     # (+0.3-0.5 s — the checkpoint round-trip exceeds the cheap re-scan
     # of small fixture edges); callers with a genuinely expensive edge
     # subtree should checkpoint rel_members themselves before calling.
-    rel_edges = rel_members.select(
-        F.col(group_col).alias("dst"), F.col(member_col).alias("src")
-    )
-    base = (
-        rel_edges.join(base_tiles, rel_edges["src"] == base_tiles["element_id"])
-        .select(F.col("dst").alias("element_id"), "tile_x", "tile_y")
-        .distinct()
-    )
+    base = hop(rel_members, base_tiles.select("element_id", "tile_x", "tile_y"),
+               to="group").distinct()
     # r6 note: ``_closure`` re-checkpoints the accumulated relation every
     # round.  A checkpoint-deltas-only variant (anti-join against the
     # lazy union of materialized parts) was A/B'd same-session and
@@ -172,7 +188,7 @@ def relation_tiles_fixed_point(rel_members: DataFrame, base_tiles: DataFrame,
     # the accumulated checkpoint is what keeps the per-round anti-join
     # and every downstream consumer reading one compact materialized
     # relation.
-    return _closure("relation fixed point", rel_edges, base, max_iters)
+    return _closure("relation fixed point", rel_members, base, max_iters)
 
 
 def propagate_newer(edges: DataFrame, newer_ids: DataFrame,
@@ -184,13 +200,9 @@ def propagate_newer(edges: DataFrame, newer_ids: DataFrame,
     member row themselves) gets rewritten, matching the reference's
     entity-level modified marking (MapSplit.java:435-437).
 
-    ``edges``: (group_id, member_id) across all kinds; ``newer_ids``:
+    ``edges``: membership edges across all kinds; ``newer_ids``:
     single-column ``element_id``.  → distinct element_id superset.
     Raises RuntimeError past ``max_iters`` rounds.
     """
-    return _closure(
-        "newer-propagation",
-        edges.select(F.col("group_id").alias("dst"), F.col("member_id").alias("src")),
-        newer_ids.select("element_id").distinct(),
-        max_iters,
-    )
+    return _closure("newer-propagation", edges,
+                    newer_ids.select("element_id").distinct(), max_iters)

@@ -7,6 +7,11 @@ Table shape (datagen.make_sessions, FIXTURES.md): ``sessions(session_id,
 kind ∈ {'session','collection'}, member_ids: array<string>, tags:
 map<string,string>)`` — sessions ≡ ways (members are image/point ids),
 collections ≡ relations (members are sessions, collections, or points).
+``session_edges`` turns one kind into the ``(group_id, member_id)``
+edges every propagate operator takes, and every stage below passes
+``(element_id, tile_x, tile_y)`` tile rows straight from one operator
+to the next: no renames between them.  Which unions need a dedupe is
+stated once, in the propagate module docstring.
 
 Ordering parity with the reference:
 1. way tile set = union of member node tile sets, DROPPED whole if any
@@ -58,8 +63,9 @@ def session_assignments(node_tiles: DataFrame, sessions: DataFrame,
     materializes.
 
     ``holefill_min=None`` disables hole patching ENTIRELY (skips the
-    grouped Python stage, not just raises the trigger) — for callers that run the fill as a separate stage or
-    want raw reference-free propagation.
+    grouped Python stage, not just raises the trigger) — for callers
+    that run the fill as a separate stage or want raw reference-free
+    propagation.
     """
     way_edges = session_edges(sessions, "session")
     col_edges = session_edges(sessions, "collection")
@@ -68,37 +74,20 @@ def session_assignments(node_tiles: DataFrame, sessions: DataFrame,
     # wt and the post-way base feed several downstream branches each —
     # materialized once (Spark reuses no identical subtrees across
     # branches; the checkpointed pipeline materializes stages instead)
-    wt = way_tiles(way_edges, node_tiles, "group_id", "member_id")
+    wt = way_tiles(way_edges, node_tiles)
     if holefill_min is not None:
-        # way_tiles output is distinct by construction, and the fill
-        # only adds tiles NOT in the member set → still distinct (r6)
-        wt = fill_holes(wt, "group_id", min_tiles=holefill_min)
+        wt = fill_holes(wt, min_tiles=holefill_min)
     wt = wt.localCheckpoint(eager=True)
-    way_rel = wt.select(F.col("group_id").alias("element_id"), "tile_x", "tile_y")
 
     # J2: member nodes inherit the (hole-patched) way tile set; the
     # backfill's inner join with wt leaves members of dropped ways out
-    nodes_aug = backfill_member_tiles(way_edges, wt, node_tiles,
-                                      "group_id", "member_id")
+    nodes_aug = backfill_member_tiles(way_edges, wt, node_tiles)
 
     # J3/J4: collections against the post-way state, to fixed point.
-    # nodes_aug is distinct (backfill output) and way_rel is distinct
-    # (way_tiles/fill output); their element-id NAMESPACES are disjoint
-    # by the sessions-table contract (session/collection ids never
-    # collide with point ids — FIXTURES.md), so the union is already
-    # duplicate-free: no distinct shuffle here (r6, guide §2.4
-    # "a distinct on data that is already unique").
-    base = nodes_aug.union(way_rel).localCheckpoint(eager=True)
-    col_rel = relation_tiles_fixed_point(
-        col_edges.withColumnRenamed("group_id", "relation_id"),
-        base, "relation_id", "member_id",
-    )
-
-    # col_rel is internally distinct (fixpoint deltas are anti-joined
-    # against the accumulated set) and collection ids are disjoint from
-    # base's node/way ids — base ∪ col_rel needs no dedupe.  Only the
-    # complete-mode down-propagation (its inherited rows re-emit tiles
-    # already present in base) ends in a distinct.
+    # base and out union distinct relations over disjoint id
+    # namespaces, so neither dedupes (propagate module docstring).
+    base = nodes_aug.union(wt).localCheckpoint(eager=True)
+    col_rel = relation_tiles_fixed_point(col_edges, base)
     out = base.union(col_rel)
     if not complete:
         return out
@@ -108,7 +97,5 @@ def session_assignments(node_tiles: DataFrame, sessions: DataFrame,
     targets = (sessions.filter(F.col("tags")["type"] == "multipolygon")
                if multipolygon_only else sessions)
     return complete_relation_propagation(
-        session_edges(targets, "collection")
-        .withColumnRenamed("group_id", "relation_id"),
-        col_rel, way_edges.withColumnRenamed("group_id", "way_id"), out,
+        session_edges(targets, "collection"), col_rel, way_edges, out,
     )

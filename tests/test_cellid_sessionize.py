@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
 import numpy as np
 import pyarrow as pa
@@ -12,7 +13,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from mapsplit_spark import cellid
-from mapsplit_spark.streaming.drain import run_stream
+from mapsplit_spark.streaming.drain import start_stream
 
 WORK = "/tmp/sessionize_test"
 
@@ -130,10 +131,19 @@ def test_sessionize_stream(spark):
     out = sessionize(stream, gap_ms=1)  # tiny gap → sessions close fast
 
     # a tailing stream: the sessions close in a later no-data batch, once
-    # the processing-time gap has passed
+    # the processing-time gap has passed; it is stopped as soon as both
+    # are in, or after 12 s
     got = []
-    run_stream(spark, out, lambda df, _: got.extend(df.collect()),
-               os.path.join(WORK, "ckpt"), interval="1 second", timeout_sec=12)
+    q = start_stream(spark, out, lambda df, _: got.extend(df.collect()),
+                     os.path.join(WORK, "ckpt"), interval="1 second")
+    deadline = time.monotonic() + 12
+    try:
+        while (q.isActive and {r.key for r in got} != {1, 2}
+               and time.monotonic() < deadline):
+            time.sleep(0.2)
+    finally:
+        q.stop()
+        q.awaitTermination()  # re-raises the error of a failed query
     res = {r.key: r for r in got}
     assert set(res) == {1, 2}
     for k in (1, 2):

@@ -25,15 +25,21 @@ def outbase(tmp_path_factory):
     return str(tmp_path_factory.mktemp("cli"))
 
 
-@pytest.mark.parametrize("zoom", ["17", "-1"])
-def test_zoom_outside_tile_domain_fails_in_parsing(zoom, capsys):
+@pytest.mark.parametrize("args", [
+    ["--zoom", "17"], ["--zoom", "-1"],
+    ["--zonal"], ["--raster", "12"], ["--transitions", "user_id"],
+], ids=["17", "-1", "zonal", "raster", "transitions"])
+def test_zoom_outside_tile_domain_fails_in_parsing(args, capsys):
     """--zoom is capped at 16 like the reference (Const.java MAX_ZOOM):
     above it the packed tile id and the stored layout key alias across
-    zooms.  Rejected while parsing arguments, before any Spark work."""
+    zooms.  The outputs computed from the clip polygons (--zonal,
+    --raster, --transitions) need --poly and are refused without it,
+    not skipped.  Both are rejected while parsing arguments, before any
+    Spark work."""
     with pytest.raises(SystemExit) as exc:
-        split_main(["--input", "in", "--output", "out", "--zoom", zoom])
+        split_main(["--input", "in", "--output", "out", *args])
     assert exc.value.code == 2
-    assert "--zoom" in capsys.readouterr().err
+    assert args[0] in capsys.readouterr().err
 
 
 def test_sessions_mode_e2e(spark, images_dir, outbase, capsys):

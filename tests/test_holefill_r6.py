@@ -115,7 +115,7 @@ def test_bucketed_stage_matches_per_group(spark):
         rows += [(gid, x, y) for x, y in tiles]
         expected |= {(gid, x, y) for x, y in tiles}
         expected |= {(gid, x, y) for x, y in holes}
-    df = spark.createDataFrame(rows, "group_id long, tile_x long, tile_y long")
-    got = {(r.group_id, r.tile_x, r.tile_y)
+    df = spark.createDataFrame(rows, "element_id long, tile_x long, tile_y long")
+    got = {(r.element_id, r.tile_x, r.tile_y)
            for r in fill_holes(df).collect()}
     assert got == expected

@@ -45,10 +45,10 @@ def test_way_union_and_drop(spark, node_tiles):
         [("w0", "n0"), ("w0", "n1"), ("w0", "n5"),
          ("w1", "n2"), ("w1", "MISSING"),  # w1 must be dropped entirely
          ("w2", "n10"), ("w2", "n11")],
-        "way_id string, member_id string",
+        "group_id string, member_id string",
     )
-    got = way_tiles(members, tiles_df, "way_id", "member_id").collect()
-    ways = {r.way_id for r in got}
+    got = way_tiles(members, tiles_df).collect()
+    ways = {r.element_id for r in got}
     assert ways == {"w0", "w2"}
     # oracle comparison
     pairs = {(r.element_id, r.tile_x, r.tile_y) for r in tiles_df.collect()}
@@ -57,7 +57,7 @@ def test_way_union_and_drop(spark, node_tiles):
     )
     got_map = {}
     for r in got:
-        got_map.setdefault(r.way_id, set()).add((r.tile_x, r.tile_y))
+        got_map.setdefault(r.element_id, set()).add((r.tile_x, r.tile_y))
     assert {w: sorted(t) for w, t in got_map.items()} == expect_tiles
 
 
@@ -71,12 +71,12 @@ def test_way_union_and_drop(spark, node_tiles):
 def test_backfill_matches_oracle(spark, node_tiles, ways):
     tiles_df, _ = node_tiles
     members = spark.createDataFrame(
-        [(w, m) for w, ms in ways for m in ms], "way_id string, member_id string"
+        [(w, m) for w, ms in ways for m in ms], "group_id string, member_id string"
     )
-    wt = way_tiles(members, tiles_df, "way_id", "member_id")
+    wt = way_tiles(members, tiles_df)
     got = {
         (r.element_id, r.tile_x, r.tile_y)
-        for r in backfill_member_tiles(members, wt, tiles_df, "way_id", "member_id").collect()
+        for r in backfill_member_tiles(members, wt, tiles_df).collect()
     }
     pairs = {(r.element_id, r.tile_x, r.tile_y) for r in tiles_df.collect()}
     _, extra = oracle.session_tiles(pairs, ways)
@@ -88,7 +88,7 @@ def test_relation_fixed_point_with_cycle(spark, node_tiles):
     # r0 → n0; r1 → r0; r2 → r1 and r1 → r2 (cycle); r3 → missing only
     rel = spark.createDataFrame(
         [("r0", "n0"), ("r1", "r0"), ("r2", "r1"), ("r1", "r2"), ("r3", "nope")],
-        "relation_id string, member_id string",
+        "group_id string, member_id string",
     )
     got = relation_tiles_fixed_point(rel, tiles_df)
     rows = got.filter(F.col("element_id").startswith("r")).collect()
@@ -108,10 +108,10 @@ def test_complete_relations_down_propagation(spark, node_tiles):
     tiles_df, _ = node_tiles
     # relation rel0 spans tiles of n0 and n11; members: node n0 and way w0
     rel_members = spark.createDataFrame(
-        [("rel0", "n0"), ("rel0", "w0")], "relation_id string, member_id string"
+        [("rel0", "n0"), ("rel0", "w0")], "group_id string, member_id string"
     )
     way_members = spark.createDataFrame(
-        [("w0", "n5"), ("w0", "n6")], "way_id string, member_id string"
+        [("w0", "n5"), ("w0", "n6")], "group_id string, member_id string"
     )
     rel_tiles = (
         tiles_df.filter(F.col("element_id").isin("n0", "n11"))
@@ -145,7 +145,7 @@ def _ring_tiles():
 def test_holefill_matches_oracle(spark):
     ring = _ring_tiles()
     df = spark.createDataFrame(
-        [("g1", x, y) for x, y in ring], "group_id string, tile_x long, tile_y long"
+        [("g1", x, y) for x, y in ring], "element_id string, tile_x long, tile_y long"
     )
     got = {(r.tile_x, r.tile_y) for r in fill_holes(df).collect()}
     holes = oracle.hole_fill(set(ring))
@@ -155,7 +155,7 @@ def test_holefill_matches_oracle(spark):
 
 def test_holefill_skips_small_groups(spark):
     df = spark.createDataFrame(
-        [("g2", 10, 10), ("g2", 12, 12)], "group_id string, tile_x long, tile_y long"
+        [("g2", 10, 10), ("g2", 12, 12)], "element_id string, tile_x long, tile_y long"
     )
     got = {(r.tile_x, r.tile_y) for r in fill_holes(df).collect()}
     assert got == {(10, 10), (12, 12)}  # < 8 tiles → untouched
@@ -165,8 +165,7 @@ def test_holefill_python_gated_behind_min_tiles(derived_pairs):
     """§2.6: one grouped Python stage (groupBy → arrays → mapInPandas),
     and groups reach it only through the ≥ 8-tile ``size`` filter on the
     grouped row — no grouped-map call, no count-aggregate gate."""
-    g = derived_pairs.withColumnRenamed("element_id", "group_id")
-    lines = fill_holes(g)._jdf.queryExecution().executedPlan().toString().splitlines()
+    lines = fill_holes(derived_pairs)._jdf.queryExecution().executedPlan().toString().splitlines()
     mip = [i for i, ln in enumerate(lines) if "MapInPandas" in ln]
     assert len(mip) == 1
     assert not any("FlatMapGroupsInPandas" in ln for ln in lines)
@@ -269,11 +268,11 @@ def test_holefill_handles_scattered_groups_exactly(spark):
     scattered = [("far", 0, 0), ("far", 60000, 60000)] + \
                 [("far", i * 7919 % 60000, i * 104729 % 60000) for i in range(10)]
     rows = [("ring", x, y) for x, y in ring] + scattered
-    df = spark.createDataFrame(rows, "group_id string, tile_x long, tile_y long")
+    df = spark.createDataFrame(rows, "element_id string, tile_x long, tile_y long")
     got = fill_holes(df).collect()
-    far = {(r.tile_x, r.tile_y) for r in got if r.group_id == "far"}
+    far = {(r.tile_x, r.tile_y) for r in got if r.element_id == "far"}
     assert far == {(x, y) for _, x, y in scattered}  # nothing enclosed
-    ring_got = {(r.tile_x, r.tile_y) for r in got if r.group_id == "ring"}
+    ring_got = {(r.tile_x, r.tile_y) for r in got if r.element_id == "ring"}
     assert ring_got == set(ring) | oracle.hole_fill(set(ring))
 
 
@@ -282,7 +281,7 @@ def _chain_edges(spark, depth: int):
     rows = [("r1", "n0")] + [
         (f"r{i}", f"r{i - 1}") for i in range(2, depth + 1)
     ]
-    return spark.createDataFrame(rows, "relation_id string, member_id string")
+    return spark.createDataFrame(rows, "group_id string, member_id string")
 
 
 def test_relation_fixed_point_deep_chain_converges(spark, node_tiles):
@@ -472,7 +471,7 @@ def test_semi_naive_step_joins_delta_not_accumulated(spark):
     from mapsplit_spark.operators.propagate import _semi_naive_step
 
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(50)], "dst long, src long"
+        [(i, i + 1) for i in range(50)], "group_id long, member_id long"
     )
     # distinguishable sources: delta = Range(0,7), resolved = Range(0,9000)
     delta = spark.range(7).selectExpr(

@@ -115,6 +115,22 @@ def test_pipeline_resume_identical(spark, images_dir):
     assert {r.zoom for r in m3.select("zoom").distinct().collect()} == {12}
 
 
+@pytest.mark.parametrize("node_limit", [0, 5])
+@pytest.mark.parametrize("sessions", [False, True], ids=["points", "sessions"])
+def test_pipeline_relations_have_no_duplicate_rows(spark, images_dir,
+                                                   sessions, node_limit):
+    """The chain is duplicate-free by construction (assign → expand,
+    the sessions stage, clip's semi-join; a real merge dedupes), which
+    is what lets ``merged_assignments`` skip a dedupe at node_limit 0
+    and the manifests run with ``assume_distinct=True``."""
+    kw = ({"sessions_path": f"{images_dir}/sessions.parquet",
+           "complete_sessions": True} if sessions else {})
+    pipe = TilingPipeline(spark, zoom=13, border=0.1, node_limit=node_limit, **kw)
+    pipe.run(f"{images_dir}/images.parquet")
+    for rel in (pipe.pairs, pipe.tiled):
+        assert rel.count() == rel.distinct().count() > 0
+
+
 def test_resumed_pipeline_runs_no_job(spark, images_dir, tmp_path, job_count):
     """A fully persisted chain resumes from its markers alone: each
     stage is read with the schema its marker stores, so building the

@@ -52,11 +52,11 @@ def test_sessions_fixture_drop_and_tags(spark, images_dir):
     imgs = spark.read.parquet(f"{images_dir}/images.parquet").select("image_id", "lon", "lat")
     pairs = assign_and_expand(imgs, "image_id", "lon", "lat", ZOOM, 0.1)
     members = ses.select(
-        F.col("session_id").alias("way_id"),
+        F.col("session_id").alias("group_id"),
         F.explode("member_ids").alias("member_id"),
     )
-    wt = way_tiles(members, pairs, "way_id", "member_id")
-    surviving = {r.way_id for r in wt.select("way_id").distinct().collect()}
+    wt = way_tiles(members, pairs)
+    surviving = {r.element_id for r in wt.select("element_id").distinct().collect()}
     dropped = {r.session_id for r in ses.collect()} - surviving
     # exactly the s % 17 == 0 sessions carry a dangling ref (datagen)
     expected_dropped = {
