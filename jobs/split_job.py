@@ -88,6 +88,7 @@ def build_parser() -> argparse.ArgumentParser:
                         "--mbtiles/--tile-files, which contractually need one "
                         "row per tile")
     p.add_argument("--pyramid", type=int, default=None, metavar="MIN_ZOOM",
+                   choices=range(MAX_ZOOM + 1),
                    help="also write the tile-pyramid rollup (zoom, tile_x, "
                         "tile_y, n) for every level in [MIN_ZOOM, --zoom] "
                         "under <output>/pyramid (distinct-element counts "
@@ -108,6 +109,7 @@ def build_parser() -> argparse.ArgumentParser:
                         "axial hex cell (hq, hr) of the H3-analog lattice "
                         "with this circumradius in degrees (0 = skip)")
     p.add_argument("--raster", type=int, default=None, metavar="ZOOM",
+                   choices=range(MAX_ZOOM + 1),
                    help="with --poly: also write <output>/raster — the "
                         "polygon rasterized onto this zoom's tile grid by "
                         "tile-center containment (vector→raster)")
@@ -118,6 +120,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--snap-km", type=float, default=2.0,
                    help="snap radius in km for --snap (default 2)")
     p.add_argument("--idw", type=int, default=None, metavar="ZOOM",
+                   choices=range(MAX_ZOOM + 1),
                    help="also write <output>/idw: IDW-interpolated "
                         "--idw-value surface at this zoom's tile centers "
                         "(3x3 neighborhood)")
@@ -141,7 +144,8 @@ def build_parser() -> argparse.ArgumentParser:
                         "cells (≥ MIN_PTS points at --clusters-zoom) "
                         "labelled by 8-connected component (operators/"
                         "clustering); 0 = skip")
-    p.add_argument("--clusters-zoom", type=int, default=None,
+    p.add_argument("--clusters-zoom", type=int, default=None, metavar="ZOOM",
+                   choices=range(MAX_ZOOM + 1),
                    help="grid zoom for --clusters (default: min(--zoom, 8))")
     p.add_argument("--payload", action="store_true",
                    help="materialize payload columns per tile (join bytes last; "
@@ -172,6 +176,8 @@ def main(argv=None) -> None:
                         ("--transitions", args.transitions)):
         if given and not args.poly:
             p.error(f"{flag} requires --poly")
+    if args.pyramid is not None and args.pyramid > args.zoom:
+        p.error(f"--pyramid {args.pyramid} is above --zoom {args.zoom}")
     if args.chunked_manifests and (args.mbtiles or args.tile_files or args.workdir):
         raise SystemExit(
             "--chunked-manifests is incompatible with --mbtiles/--tile-files "
@@ -191,6 +197,8 @@ def main(argv=None) -> None:
         sessions_path=args.sessions, complete_sessions=args.complete_sessions,
         multipolygon_only=args.multipolygon_only,
     )
+    if args.poly:
+        pipe.rings  # an unknown --poly-id raises here, before any output
     src = pipe.read(args.input)
     if args.date_file and args.ts_col not in src.columns:
         raise SystemExit(

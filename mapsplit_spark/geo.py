@@ -2,7 +2,7 @@
 
 Each image row carries a synthetic (lat, lon) that is a pure function of
 its integer index: splitmix64(idx) drives a uniform world position, and a
-configurable fraction of rows is redirected into a small set of dense
+fixed fraction (``HOT_FRACTION``) of rows is redirected into a small set of dense
 "urban" clusters (Zipf-weighted cluster choice, tight Gaussian spread) to
 create hot tiles for the skew tests mandated by BASELINE.json.
 
@@ -43,9 +43,9 @@ def _u01(x, salt: int) -> np.ndarray:
     return (h >> np.uint64(11)).astype(np.float64) / float(1 << 53)
 
 
-def _cluster_centers(n_clusters: int = N_CLUSTERS):
+def _cluster_centers():
     """Deterministic cluster centers (lon, lat), Mercator-valid."""
-    ks = np.arange(n_clusters, dtype=np.uint64)
+    ks = np.arange(N_CLUSTERS, dtype=np.uint64)
     lon = _u01(ks, 101) * 360.0 - 180.0
     lat = _u01(ks, 202) * 160.0 - 80.0  # keep clusters away from poles
     return lon, lat
@@ -65,25 +65,24 @@ def _gauss_pair(idx, salt: int):
     return r * np.cos(2 * np.pi * u2), r * np.sin(2 * np.pi * u2)
 
 
-def geo(idx, hot_fraction: float = HOT_FRACTION, n_clusters: int = N_CLUSTERS,
-        sigma: float = CLUSTER_SIGMA_DEG):
+def geo(idx):
     """idx (int array) → (lat, lon) float64 arrays.
 
-    Deterministic: uniform world point, with ``hot_fraction`` of rows
+    Deterministic: uniform world point, with ``HOT_FRACTION`` of rows
     redirected to Zipf-weighted Gaussian clusters (skew / hot tiles).
     """
     idx = np.asarray(idx, dtype=np.uint64)
     lon = _u01(idx, 1) * 360.0 - 180.0
     lat = _u01(idx, 2) * (tm.MAX_LAT - tm.MIN_LAT) + tm.MIN_LAT
 
-    hot = _u01(idx, 3) < hot_fraction
-    cdf = _zipf_cdf(n_clusters)
+    hot = _u01(idx, 3) < HOT_FRACTION
+    cdf = _zipf_cdf(N_CLUSTERS)
     pick = np.searchsorted(cdf, _u01(idx, 4), side="right")
-    pick = np.minimum(pick, n_clusters - 1)
-    clon, clat = _cluster_centers(n_clusters)
+    pick = np.minimum(pick, N_CLUSTERS - 1)
+    clon, clat = _cluster_centers()
     g1, g2 = _gauss_pair(idx, 5)
-    hlon = clon[pick] + g1 * sigma
-    hlat = clat[pick] + g2 * sigma
+    hlon = clon[pick] + g1 * CLUSTER_SIGMA_DEG
+    hlat = clat[pick] + g2 * CLUSTER_SIGMA_DEG
 
     lon = np.where(hot, hlon, lon)
     lat = np.where(hot, hlat, lat)

@@ -55,6 +55,14 @@ def decode_image(data: bytes) -> np.ndarray:
     return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
 
 
+def resize_nearest(px: np.ndarray, w: int, h: int) -> np.ndarray:
+    """Nearest-neighbour resize of an (H, W, 3) array to (h, w, 3) by
+    index sampling (codec-independent)."""
+    sy = (np.arange(h) * px.shape[0]) // h
+    sx = (np.arange(w) * px.shape[1]) // w
+    return px[sy][:, sx]
+
+
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
     if mse == 0:
@@ -83,12 +91,12 @@ def phash64(pixels: np.ndarray) -> int:
 VMAGIC = b"MVID"  # fake video container: concatenated MSIM frames
 
 
-def encode_video(frames: list, fmt: str = "png") -> bytes:
+def encode_video(frames: list) -> bytes:
     """Deterministic stub VIDEO container (the moving-picture twin of
     MSIM — no ffmpeg/libav in this container): magic + frame count +
-    length-prefixed MSIM frames.  Swap for a real demuxer on a real
-    cluster; every operator signature stays identical."""
-    blobs = [encode_image(f, fmt) for f in frames]
+    length-prefixed lossless (png) MSIM frames.  Swap for a real
+    demuxer on a real cluster; every operator signature stays identical."""
+    blobs = [encode_image(f, "png") for f in frames]
     head = VMAGIC + struct.pack("<I", len(blobs))
     return head + b"".join(struct.pack("<I", len(b)) + b for b in blobs)
 

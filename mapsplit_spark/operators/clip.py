@@ -57,13 +57,17 @@ def make_ring(vertices) -> tuple[np.ndarray, tuple]:
 
 def load_rings(polys_df: DataFrame, poly_id: str | None = None):
     """clip_polygons table → (outers, inners): lists of ``make_ring``
-    rings.  Driver-side — the table is tiny (S4)."""
+    rings.  Driver-side — the table is tiny (S4).  Raises ``ValueError``
+    when ``poly_id`` selects no outer ring: every clip would keep
+    nothing."""
     rows = polys_df.filter(F.col("poly_id") == poly_id).collect() if poly_id \
         else polys_df.collect()
     outers, inners = [], []
     for r in rows:
         ring = make_ring([(c["lon"], c["lat"]) for c in r.coords])
         (inners if r.is_hole else outers).append(ring)
+    if not outers:
+        raise ValueError(f"load_rings: poly_id {poly_id!r} selects no outer ring")
     return outers, inners
 
 
@@ -200,10 +204,9 @@ def clip_tiles(tiles_df: DataFrame, outers, inners, zoom: int) -> DataFrame:
     return tiles_df.mapInPandas(run, tiles_df.schema)
 
 
-def clip_points(points_df: DataFrame, outers, inners,
-                lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
+def clip_points(points_df: DataFrame, outers, inners) -> DataFrame:
     """Exact point-level clip (engine precise mode): keep rows whose
-    point is inside ≥1 outer ring and no inner ring."""
+    point (``lon``, ``lat``) is inside ≥1 outer ring and no inner ring."""
     in_outer = _membership_of(outers)
     in_inner = _membership_of(inners)
 
@@ -212,8 +215,8 @@ def clip_points(points_df: DataFrame, outers, inners,
             if pdf.empty:
                 yield pdf
                 continue
-            px = pdf[lon_col].to_numpy(np.float64)
-            py = pdf[lat_col].to_numpy(np.float64)
+            px = pdf["lon"].to_numpy(np.float64)
+            py = pdf["lat"].to_numpy(np.float64)
             keep = in_outer(px, py)
             if inners:
                 keep &= ~in_inner(px, py)

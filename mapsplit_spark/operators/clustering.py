@@ -78,7 +78,7 @@ def _dense_edges(dense: DataFrame, zoom: int) -> DataFrame:
 
 
 def grid_clusters(points: DataFrame, id_col: str, lon_col: str, lat_col: str,
-                  zoom: int, min_pts: int, max_iters: int = 20) -> DataFrame:
+                  zoom: int, min_pts: int) -> DataFrame:
     """→ (tile_x, tile_y, n, cluster) for every dense cell; ``cluster``
     is the MIN cell key of the 8-connected dense component (stable
     across runs/partitionings — a pure function of the point set)."""
@@ -86,7 +86,7 @@ def grid_clusters(points: DataFrame, id_col: str, lon_col: str, lat_col: str,
     # the dense relation is consumed 3× (edges ×2 sides, final join);
     # it is tiny (≤ grid cells) but sits on top of the full point scan
     dense = dense.localCheckpoint(eager=False)
-    comp = connected_components(_dense_edges(dense, zoom), max_iters)
+    comp = connected_components(_dense_edges(dense, zoom))
     return (
         dense.join(comp, dense["k"] == comp["v"], "left")
         .select(
@@ -97,15 +97,13 @@ def grid_clusters(points: DataFrame, id_col: str, lon_col: str, lat_col: str,
 
 
 def cluster_points(points: DataFrame, id_col: str, lon_col: str,
-                   lat_col: str, zoom: int, min_pts: int,
-                   max_iters: int = 20) -> DataFrame:
+                   lat_col: str, zoom: int, min_pts: int) -> DataFrame:
     """Per-point cluster membership: (id, tile_x, tile_y, cluster) with
     cluster NULL for noise points (cell below min_pts) — the DBSCAN
     point labelling, one broadcastable dense-cell join away from
     ``grid_clusters``."""
     cells = assign_tiles(points, id_col, lon_col, lat_col, zoom)
-    labelled = grid_clusters(points, id_col, lon_col, lat_col,
-                             zoom, min_pts, max_iters)
+    labelled = grid_clusters(points, id_col, lon_col, lat_col, zoom, min_pts)
     # broadcast-size guard (r6, VERDICT r5 #6): dense-cell cardinality is
     # data-dependent (urban planet at fine zoom can reach 10⁷-10⁸ rows);
     # materialize the label relation once, broadcast only when it is

@@ -32,13 +32,12 @@ from pyspark.sql import functions as F
 def contamination_pairs(
     fps: DataFrame,
     test_ids: DataFrame,
-    id_col: str = "doc_id",
     max_df: int = 20,
     min_shared: int = 2,
 ) -> DataFrame:
     """→ (test_id, train_id, n_shared): test documents sharing
     ≥ ``min_shared`` winnow fingerprints with a training document.
-    ``fps`` is the (id, fps) relation of ``textstats.winnow_fps`` over
+    ``fps`` is the (doc_id, fps) relation of ``textstats.winnow_fps`` over
     the whole corpus, built by the caller (md5 gram hashes for the
     oracle-checkable gate, xxhash64 longs in production — the same
     guarantee either way), so a caller that also writes the winnow
@@ -57,16 +56,16 @@ def contamination_pairs(
     # its cold first consumer — measured 6.5 s vs 1.8 s first-run at
     # sf0.1 (r6 A/B); warm runs tie
     fps = fps.localCheckpoint(eager=True)
-    ex = fps.select(F.col(id_col), F.explode("fps").alias("fp"))
+    ex = fps.select("doc_id", F.explode("fps").alias("fp"))
     # fps are distinct per doc, so this doc-frequency is exact
     keep = (ex.groupBy("fp").agg(F.count("*").alias("fp_df"))
             .filter(F.col("fp_df") <= max_df).select("fp"))
     ex = ex.join(keep, "fp", "left_semi")
-    tids = test_ids.select(F.col(test_ids.columns[0]).alias(id_col)).distinct()
-    test = ex.join(tids, id_col, "left_semi") \
-        .select(F.col(id_col).alias("test_id"), "fp")
-    train = ex.join(tids, id_col, "left_anti") \
-        .select(F.col(id_col).alias("train_id"), "fp")
+    tids = test_ids.select(F.col(test_ids.columns[0]).alias("doc_id")).distinct()
+    test = ex.join(tids, "doc_id", "left_semi") \
+        .select(F.col("doc_id").alias("test_id"), "fp")
+    train = ex.join(tids, "doc_id", "left_anti") \
+        .select(F.col("doc_id").alias("train_id"), "fp")
     return (
         test.join(train, "fp")
         .groupBy("test_id", "train_id")
@@ -75,11 +74,10 @@ def contamination_pairs(
     )
 
 
-def decontaminate(docs: DataFrame, pairs: DataFrame,
-                  id_col: str = "doc_id") -> DataFrame:
+def decontaminate(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Corpus reduction: drop every TRAINING document flagged in
     ``pairs`` (as ``contamination_pairs`` returns them) against any
     test document — the conservative pre-training scrub.  Test rows
     themselves are kept (they are not training data)."""
-    flagged = pairs.select(F.col("train_id").alias(id_col))
-    return docs.join(flagged, id_col, "left_anti")
+    flagged = pairs.select(F.col("train_id").alias("doc_id"))
+    return docs.join(flagged, "doc_id", "left_anti")

@@ -22,13 +22,12 @@ from .textstats import whitespace_tokens
 MERSENNE_P = (1 << 31) - 1
 
 
-def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """Exact dedup: hash-groupBy on the raw text. → (text_hash, n_docs,
-    keep_doc) with n_docs ≥ 2 only."""
+def exact_dup_groups(docs: DataFrame) -> DataFrame:
+    """Exact dedup: hash-groupBy on the raw ``text``. → (text_hash,
+    n_docs, keep_doc) with n_docs ≥ 2 only."""
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("text_hash"))
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keep_doc"))
+        docs.groupBy(F.md5(F.col("text")).alias("text_hash"))
+        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_doc"))
         .filter(F.col("n_docs") >= 2)
     )
 
@@ -45,18 +44,17 @@ def _token_ngrams(toks, n: int):
     )).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def with_shingle_hashes(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", ngram: int = 3) -> DataFrame:
-    """→ (id, shingles: array<long>) — xxhash64 of each word n-gram.
-    Tokenization runs in its own projection (barrier) so the split is
-    computed once per document, not once per shingle."""
+def with_shingle_hashes(docs: DataFrame, ngram: int = 3) -> DataFrame:
+    """(doc_id, text) → (doc_id, shingles: array<long>) — xxhash64 of
+    each word n-gram.  Tokenization runs in its own projection (barrier)
+    so the split is computed once per document, not once per shingle."""
     toked = docs.select(
-        F.col(id_col),
-        whitespace_tokens(text_col).alias("_toks"),
+        F.col("doc_id"),
+        whitespace_tokens("text").alias("_toks"),
     )
     sh = _token_ngrams(F.col("_toks"), ngram)
     return toked.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.transform(sh, lambda s: F.xxhash64(s)).alias("shingles"),
     )
 
@@ -96,13 +94,13 @@ def minhash_signatures(shingled: DataFrame, num_hashes: int = 32,
     return shingled.select(F.col(id_col), F.array(*mins).alias("sig"))
 
 
-def _banded(signatures: DataFrame, bands: int, id_col: str) -> DataFrame:
-    """Signature → (id, band, bhash) rows — the single banding
+def _banded(signatures: DataFrame, bands: int) -> DataFrame:
+    """Signature → (doc_id, band, bhash) rows — the single banding
     construction; the hot-bucket cap and its observation both act on
     it."""
     rows_per_band = F.floor(F.size("sig") / bands).cast("int")
     return signatures.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -120,15 +118,14 @@ def _banded(signatures: DataFrame, bands: int, id_col: str) -> DataFrame:
                 ),
             )
         ).alias("bk"),
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.bhash").alias("bhash"))
+    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bhash").alias("bhash"))
 
 
 def lsh_candidate_pairs(signatures: DataFrame, bands: int = 8,
-                        id_col: str = "doc_id",
                         max_bucket: int | None = 1024,
                         observation=None) -> DataFrame:
     """Band the signature and bucket-join: docs sharing any band hash are
-    candidates.  → distinct (id_a, id_b) with id_a < id_b.
+    candidates.  (doc_id, sig) → distinct (id_a, id_b) with id_a < id_b.
 
     Hot-bucket guard: a degenerate band bucket of size B yields B²
     candidate rows in ONE join key — a scale-killer on real web text.
@@ -159,7 +156,7 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 8,
     so it is not checkpointed (dropping the checkpoint measured 1.59 →
     1.42 s at sf0.1)."""
     return _capped_bucket_pairs(
-        _banded(signatures, bands, id_col), id_col, ["band", "bhash"],
+        _banded(signatures, bands), "doc_id", ["band", "bhash"],
         max_bucket, observation,
     )
 
@@ -281,12 +278,13 @@ def _capped_bucket_pairs(banded: DataFrame, id_col: str, bucket_cols: list,
     return pairs.distinct()
 
 
-def jaccard_verify(pairs: DataFrame, shingled: DataFrame, threshold: float = 0.7,
-                   id_col: str = "doc_id") -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs only.
+def jaccard_verify(pairs: DataFrame, shingled: DataFrame,
+                   threshold: float = 0.7) -> DataFrame:
+    """Exact n-gram Jaccard on candidate pairs only (``shingled`` as
+    ``with_shingle_hashes`` returns it).
     → (id_a, id_b, jaccard) with jaccard ≥ threshold."""
-    a = shingled.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = shingled.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
+    a = shingled.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
+    b = shingled.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     return (
@@ -297,14 +295,14 @@ def jaccard_verify(pairs: DataFrame, shingled: DataFrame, threshold: float = 0.7
     )
 
 
-def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", ngram: int = 3,
+def minhash_near_dups(docs: DataFrame, ngram: int = 3,
                       num_hashes: int = 32, bands: int = 8,
                       threshold: float = 0.7,
                       max_bucket: int | None = 1024,
                       observation=None) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: shingle → minhash → band
-    bucket join (hot buckets capped) → exact Jaccard verification.
+    """Full MinHash-LSH near-dup pipeline over (doc_id, text): shingle →
+    minhash → band bucket join (hot buckets capped) → exact Jaccard
+    verification.
 
     The default ``max_bucket`` makes recall in >cap buckets approximate
     (star edges — see ``lsh_candidate_pairs``); pass an ``Observation``
@@ -315,11 +313,10 @@ def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
     sides); Spark reuses none of those subtrees, so it is materialized
     once (localCheckpoint — measured 1.7× on sf0.1; a real pipeline
     checkpoints it as a stage table, pipeline.py-style)."""
-    shingled = with_shingle_hashes(docs, id_col, text_col, ngram) \
-        .localCheckpoint(eager=True)
-    sigs = minhash_signatures(shingled, num_hashes, id_col)
-    cands = lsh_candidate_pairs(sigs, bands, id_col, max_bucket, observation)
-    return jaccard_verify(cands, shingled, threshold, id_col)
+    shingled = with_shingle_hashes(docs, ngram).localCheckpoint(eager=True)
+    sigs = minhash_signatures(shingled, num_hashes)
+    cands = lsh_candidate_pairs(sigs, bands, max_bucket, observation)
+    return jaccard_verify(cands, shingled, threshold)
 
 
 def _band_layout(n_bands: int, bits: int) -> list[tuple[int, int]]:
@@ -399,16 +396,15 @@ def hamming_banded(df: DataFrame, id_col: str, hash_col: str,
              F.col("bk.band").alias("band"), F.col("bk.bval").alias("bval"))
 
 
-def auto_bands(n_rows: int, radius: int, bits: int = 64,
-               max_pairs_per_row: float = 0.5) -> int:
+def auto_bands(n_rows: int, radius: int, bits: int = 64) -> int:
     """Self-sizing pigeonhole band count (VERDICT r3 #2): the smallest
     ``m ≥ radius+1`` whose combination-key width keeps the EXPECTED
-    random-collision candidate volume at or below
-    ``max_pairs_per_row · n_rows``.  Expected candidate pairs for
-    full-entropy hashes ≈ C(m, m−r) · N² / 2^((m−r)·bits/m), so the
-    criterion is 2^width ≥ C(m, m−r) · N / max_pairs_per_row.
+    random-collision candidate volume at or below ``0.5 · n_rows``.
+    Expected candidate pairs for full-entropy hashes
+    ≈ C(m, m−r) · N² / 2^((m−r)·bits/m), so the criterion is
+    2^width ≥ C(m, m−r) · N / 0.5.
 
-    The 0.5-pairs-per-row default is anchored to the measured 5 M-hash
+    The 0.5-pairs-per-row bound is anchored to the measured 5 M-hash
     ladder (BASELINE.md round 3): it reproduces m = radius+1 for small
     corpora, m = 6 at 5 M rows (measured 49 s; the m=4 default this
     replaces died >600 s there), m = 7-8 around 10⁹, and keeps climbing
@@ -425,7 +421,7 @@ def auto_bands(n_rows: int, radius: int, bits: int = 64,
     m = radius + 1
     while m < bits:
         width = (m - radius) * bits / m
-        if 2.0 ** width >= comb(m, m - radius) * n / max_pairs_per_row:
+        if 2.0 ** width >= comb(m, m - radius) * n / 0.5:
             return m
         m += 1
     return bits  # degenerate: 1-bit bands, key = all but r bits
@@ -490,15 +486,15 @@ def hamming_near_dups(df: DataFrame, id_col: str = "image_id",
     return pairs.select("id_a", "id_b", ham.alias("hamming"))
 
 
-def simhash_text(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", n_bits: int = 32) -> DataFrame:
+def simhash_text(docs: DataFrame, n_bits: int = 32) -> DataFrame:
     """Text SimHash: per-bit majority vote over token hashes — grouped
-    per document with aggregate() (JVM-side).  → (id, simhash)."""
-    toks = F.array_distinct(whitespace_tokens(text_col))
+    per document with aggregate() (JVM-side).  (doc_id, text) →
+    (doc_id, simhash)."""
+    toks = F.array_distinct(whitespace_tokens("text"))
     # barrier projection: the hash array feeds n_bits aggregates below —
     # inlined, tokenize+hash would re-run once PER BIT (32×)
     hashed = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.transform(toks, lambda t: F.xxhash64(t)).alias("_th"),
     )
 
@@ -511,9 +507,9 @@ def simhash_text(docs: DataFrame, id_col: str = "doc_id",
         )
 
     bit_sums = [bit_sum(b).alias(f"s{b}") for b in range(n_bits)]
-    tmp = hashed.select(F.col(id_col), F.size("_th").alias("ntok"), *bit_sums)
+    tmp = hashed.select(F.col("doc_id"), F.size("_th").alias("ntok"), *bit_sums)
     sim = None
     for b in range(n_bits):
         bit = F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         sim = bit if sim is None else (sim + bit)
-    return tmp.select(F.col(id_col), sim.cast("long").alias("simhash"))
+    return tmp.select(F.col("doc_id"), sim.cast("long").alias("simhash"))

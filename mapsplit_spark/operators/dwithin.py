@@ -36,7 +36,7 @@ Correctness bounds (hexgrid.py geometry, validated in
 tests/test_hexgrid.py): a pair at ground distance ≤ d has
 |Δφ| ≤ d/R and sin(Δλ/2) ≤ sin(d/2R)/cos(φ_max) (from the haversine
 identity, with φ_max the larger |lat| of the pair — bounded per cell
-by the cell's max |lat| + the Δφ span, capped at ``lat_cap``); the
+by the cell's max |lat| + the Δφ span, capped at 85.06°); the
 degree-plane pair distance is ≤ ρ = √(Δφ² + Δλ²), and
 hexgrid.scatter_k_for_radius(ρ, s) converts ρ to the covering disk
 radius.
@@ -63,21 +63,19 @@ def _max_dlambda_deg(d_km: float, cos_phi: float) -> float:
 
 
 def dwithin_pairs(points: DataFrame, id_col: str, lon_col: str,
-                  lat_col: str, d_km: float, s_deg: float | None = None,
-                  lat_cap: float = 85.06) -> DataFrame:
+                  lat_col: str, d_km: float) -> DataFrame:
     """points(id, lon, lat) → (id_a, id_b, dist_km) for every pair with
     haversine ≤ ``d_km``, id_a < id_b, dist rounded to 6 decimals
     (sqlgen.haversine_sql — the oracle's identical expression text).
 
-    ``s_deg`` is the lattice circumradius (default: twice the lat span
-    of d, so equator disks stay single-digit); ``lat_cap`` bounds the
-    1/cos(lat) lon-span blowup — it must be ≥ the data's max |lat|
-    (the Mercator-domain default covers every consumer in this engine;
-    a polar dataset needs a dedicated cap and pays the wider disks).
+    The lattice circumradius is twice the lat span of d, so equator
+    disks stay single-digit; the 85.06° cap bounds the 1/cos(lat)
+    lon-span blowup — it must be ≥ the data's max |lat| (the Mercator
+    domain covers every consumer in this engine).
     """
     dphi_deg = math.degrees(d_km / EARTH_R_KM)
-    s = s_deg if s_deg is not None else 2.0 * dphi_deg
-    cap_rad = math.radians(lat_cap)
+    s = 2.0 * dphi_deg
+    cap_rad = math.radians(85.06)
 
     hq, hr = hex_cell_cols(F.col(lon_col), F.col(lat_col), s)
     base = points.select(
@@ -101,7 +99,7 @@ def dwithin_pairs(points: DataFrame, id_col: str, lon_col: str,
         F.max(F.abs(F.col("lat"))).alias("max_abs_lat"))
 
     # per-cell scatter radius k: ρ = √(Δφ² + Δλ(φm)²) degrees, with
-    # φm = min(lat_cap, cell max |lat| + Δφ)
+    # φm = min(85.06°, cell max |lat| + Δφ)
     phi_m = F.least(F.lit(cap_rad),
                     F.radians(F.col("max_abs_lat") + F.lit(dphi_deg)))
     sin_half = F.lit(math.sin(d_km / (2.0 * EARTH_R_KM)))

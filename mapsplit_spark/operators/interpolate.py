@@ -26,6 +26,10 @@ from pyspark.sql import functions as F
 from .. import sqlgen
 from .assign import assign_tiles, tile_window
 
+# exact decimal quantizer of the sample value, shared by the engine and
+# its oracle twin (100 ⇒ 2 decimals survive exactly)
+VALUE_SCALE = 100
+
 
 def idw_weight_sql(d_km: str) -> str:
     """Integer-quantized IDW weight (power 2, +1 km² regularizer) —
@@ -35,13 +39,10 @@ def idw_weight_sql(d_km: str) -> str:
 
 
 def idw_grid(points: DataFrame, id_col: str, lon_col: str, lat_col: str,
-             value_col: str, zoom: int, radius: int = 1,
-             value_scale: int = 100) -> DataFrame:
+             value_col: str, zoom: int, radius: int = 1) -> DataFrame:
     """points(id, lon, lat, value) → (tile_x, tile_y, n_samples,
     est_value): the IDW estimate at every ``zoom``-level tile center
-    having ≥1 sample within its (2·radius+1)² neighborhood.
-    ``value_scale`` is the exact decimal quantizer for the value column
-    (100 ⇒ 2 decimals survive exactly)."""
+    having ≥1 sample within its (2·radius+1)² neighborhood."""
     # a NULL-valued sample would add weight to the denominator while the
     # SUM skips its numerator term — drop it before it can skew a cell
     pts = assign_tiles(points.filter(F.col(value_col).isNotNull()),
@@ -55,20 +56,19 @@ def idw_grid(points: DataFrame, id_col: str, lon_col: str, lat_col: str,
         "tile_x", "tile_y",
         F.expr(idw_weight_sql(d)).alias("_w"),
         (F.expr(idw_weight_sql(d))
-         * F.expr(f"CAST(ROUND({value_col} * {value_scale}, 0) AS BIGINT)")
+         * F.expr(f"CAST(ROUND({value_col} * {VALUE_SCALE}, 0) AS BIGINT)")
          ).alias("_wv"),
     )
     return weighted.groupBy("tile_x", "tile_y").agg(
         F.count("*").cast("long").alias("n_samples"),
         F.expr(
-            f"ROUND(CAST(SUM(_wv) AS DOUBLE) / SUM(_w) / {value_scale}.0, 4)"
+            f"ROUND(CAST(SUM(_wv) AS DOUBLE) / SUM(_w) / {VALUE_SCALE}.0, 4)"
         ).alias("est_value"),
     )
 
 
 def idw_grid_sql(src: str, id_col: str, lon_col: str, lat_col: str,
-                 value_col: str, zoom: int, radius: int = 1,
-                 value_scale: int = 100) -> str:
+                 value_col: str, zoom: int, radius: int = 1) -> str:
     """DuckDB-oracle twin — the GATHER formulation (assigned tiles ×
     offsets cross join, the focal-oracle pattern), independent of the
     engine's map-side scatter; weight/haversine/quantizer text shared."""
@@ -96,12 +96,12 @@ s AS (
 w AS (
   SELECT tx, ty, {idw_weight_sql(d)} AS _w,
          {idw_weight_sql(d)}
-           * CAST(ROUND({value_col} * {value_scale}, 0) AS BIGINT) AS _wv
+           * CAST(ROUND({value_col} * {VALUE_SCALE}, 0) AS BIGINT) AS _wv
   FROM s
 )
 SELECT tx AS tile_x, ty AS tile_y,
        CAST(COUNT(*) AS BIGINT) AS n_samples,
-       ROUND(CAST(SUM(_wv) AS DOUBLE) / SUM(_w) / {value_scale}.0, 4)
+       ROUND(CAST(SUM(_wv) AS DOUBLE) / SUM(_w) / {VALUE_SCALE}.0, 4)
          AS est_value
 FROM w GROUP BY tx, ty
 """

@@ -71,9 +71,7 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
             rows = []
             for r in pdf.itertuples(index=False):
                 px = imaging.decode_image(bytes(r.bytes))
-                sy = (np.arange(out_h) * px.shape[0]) // out_h
-                sx = (np.arange(out_w) * px.shape[1]) // out_w
-                resized = px[sy][:, sx]
+                resized = imaging.resize_nearest(px, out_w, out_h)
                 rows.append((r.image_id, imaging.encode_image(resized, "png"),
                              out_w, out_h, "png"))
             yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
@@ -104,10 +102,9 @@ def tile_mosaics(tile_images: DataFrame, cell: int = 16, grid: int = 8) -> DataF
         canvas = np.zeros((cell * grid, cell * grid, 3), dtype=np.uint8)
         for i, payload in enumerate(members):
             px = imaging.decode_image(bytes(payload))
-            sy = (np.arange(cell) * px.shape[0]) // cell
-            sx = (np.arange(cell) * px.shape[1]) // cell
             ry, rx = divmod(i, grid)
-            canvas[ry * cell:(ry + 1) * cell, rx * cell:(rx + 1) * cell] = px[sy][:, sx]
+            canvas[ry * cell:(ry + 1) * cell, rx * cell:(rx + 1) * cell] = \
+                imaging.resize_nearest(px, cell, cell)
         return imaging.encode_image(canvas, "png")
 
     def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -131,17 +128,15 @@ def tile_mosaics(tile_images: DataFrame, cell: int = 16, grid: int = 8) -> DataF
     return members.mapInPandas(assemble, schema)
 
 
-def validate_payload_metadata(images: DataFrame,
-                              required=("bytes", "w", "h", "fmt", "caption")) -> None:
+def validate_payload_metadata(images: DataFrame) -> None:
     """P4 fail-fast metadata validation (checkMetadata,
     MapSplit.java:700-704: abort the -m run when an entity carries no
     version/timestamp).  Our analog: a --payload run aborts when any
-    required payload column is NULL — one cheap aggregate, evaluated
-    before the expensive materialization stage."""
-    from pyspark.sql import functions as F
-
+    payload column (bytes, w, h, fmt, caption) is NULL — one cheap
+    aggregate, evaluated before the expensive materialization stage."""
     counts = images.agg(*[
-        F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in required
+        F.count(F.when(F.col(c).isNull(), 1)).alias(c)
+        for c in ("bytes", "w", "h", "fmt", "caption")
     ]).collect()[0].asDict()
     bad = {c: n for c, n in counts.items() if n > 0}
     if bad:
@@ -151,8 +146,7 @@ def validate_payload_metadata(images: DataFrame,
         )
 
 
-def sample_frames(videos: DataFrame, every_n: int = 10,
-                  id_col: str = "video_id") -> DataFrame:
+def sample_frames(videos: DataFrame, every_n: int = 10) -> DataFrame:
     """Video frame sampling (the training-data 'frame-sample' op): each
     opaque video payload → every ``every_n``-th frame as an image row
     (re-encoded lossless), ready for the image operators above
@@ -169,18 +163,18 @@ def sample_frames(videos: DataFrame, every_n: int = 10,
                 frames = imaging.decode_video(bytes(r.bytes))
                 for i in range(0, len(frames), every_n):
                     px = frames[i]
-                    rows.append((getattr(r, id_col), i,
+                    rows.append((r.video_id, i,
                                  imaging.encode_image(px, "png"),
                                  px.shape[1], px.shape[0], "png"))
             yield pd.DataFrame(rows, columns=[
-                id_col, "frame_idx", "bytes", "w", "h", "fmt"])
+                "video_id", "frame_idx", "bytes", "w", "h", "fmt"])
 
-    return videos.select(id_col, "bytes").mapInPandas(
-        run, f"{id_col} string, frame_idx int, bytes binary, w int, h int, fmt string"
+    return videos.select("video_id", "bytes").mapInPandas(
+        run, "video_id string, frame_idx int, bytes binary, w int, h int, fmt string"
     )
 
 
-def frame_phashes(frames: DataFrame, id_col: str = "video_id") -> DataFrame:
+def frame_phashes(frames: DataFrame) -> DataFrame:
     """Per-frame perceptual hash over ``sample_frames`` output — the
     glue of the frame-sample → pHash-dedup chain (r5, VERDICT r4 #5):
     decode each sampled frame, 64-bit pHash it, and append a
@@ -195,22 +189,21 @@ def frame_phashes(frames: DataFrame, id_col: str = "video_id") -> DataFrame:
             rows = []
             for r in pdf.itertuples(index=False):
                 px = imaging.decode_image(bytes(r.bytes))
-                rows.append((getattr(r, id_col), int(r.frame_idx),
+                rows.append((r.video_id, int(r.frame_idx),
                              imaging.phash64(px)))
-            yield pd.DataFrame(rows, columns=[id_col, "frame_idx", "phash"])
+            yield pd.DataFrame(rows, columns=["video_id", "frame_idx", "phash"])
 
-    return frames.select(id_col, "frame_idx", "bytes").mapInPandas(
-        run, f"{id_col} string, frame_idx int, phash long"
-    ).withColumn("frame_id", F.xxhash64(F.col(id_col), F.col("frame_idx")))
+    return frames.select("video_id", "frame_idx", "bytes").mapInPandas(
+        run, "video_id string, frame_idx int, phash long"
+    ).withColumn("frame_id", F.xxhash64(F.col("video_id"), F.col("frame_idx")))
 
 
-def audio_features(audio: DataFrame, id_col: str = "audio_id",
-                   sample_rate: int = 16_000) -> DataFrame:
+def audio_features(audio: DataFrame) -> DataFrame:
     """Audio feature extraction over opaque PCM payloads — REAL math, no
     stub needed: the bytes column is interpreted as little-endian int16
-    mono PCM (the input_hint opaque-binary convention) and reduced with
-    vectorized numpy per batch.  → (audio_id, n_samples, duration_sec,
-    rms, peak, zero_cross_rate)."""
+    mono PCM at 16 kHz (the input_hint opaque-binary convention) and
+    reduced with vectorized numpy per batch.  → (audio_id, n_samples,
+    duration_sec, rms, peak, zero_cross_rate)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -224,20 +217,20 @@ def audio_features(audio: DataFrame, id_col: str = "audio_id",
                                   dtype="<i2").astype(np.float64)
                 n = len(x)
                 if n == 0:
-                    rows.append((getattr(r, id_col), 0, 0.0, 0.0, 0.0, 0.0))
+                    rows.append((r.audio_id, 0, 0.0, 0.0, 0.0, 0.0))
                     continue
                 zc = float(np.count_nonzero(np.signbit(x[1:]) != np.signbit(x[:-1])))
                 rows.append((
-                    getattr(r, id_col), n, round(n / sample_rate, 6),
+                    r.audio_id, n, round(n / 16_000, 6),
                     round(float(np.sqrt(np.mean(x ** 2))), 4),
                     round(float(np.abs(x).max()), 1),
                     round(zc / max(n - 1, 1), 6),
                 ))
             yield pd.DataFrame(rows, columns=[
-                id_col, "n_samples", "duration_sec", "rms", "peak",
+                "audio_id", "n_samples", "duration_sec", "rms", "peak",
                 "zero_cross_rate"])
 
-    return audio.select(id_col, "bytes").mapInPandas(
-        run, f"{id_col} string, n_samples long, duration_sec double, "
+    return audio.select("audio_id", "bytes").mapInPandas(
+        run, "audio_id string, n_samples long, duration_sec double, "
              "rms double, peak double, zero_cross_rate double"
     )

@@ -39,8 +39,7 @@ def ancestor_tiles(shift: int | str) -> list[Column]:
     return [F.expr(f"shiftright({c}, {shift})").alias(c) for c in ("tile_x", "tile_y")]
 
 
-def pyramid_counts(assignments: DataFrame, base_zoom: int, min_zoom: int,
-                   id_col: str = "element_id") -> DataFrame:
+def pyramid_counts(assignments: DataFrame, base_zoom: int, min_zoom: int) -> DataFrame:
     """(element_id, tile_x, tile_y) at ``base_zoom`` →
     (zoom, tile_x, tile_y, n) for every level in [min_zoom, base_zoom];
     ``n`` counts DISTINCT elements per tile at that level.
@@ -57,9 +56,9 @@ def pyramid_counts(assignments: DataFrame, base_zoom: int, min_zoom: int,
         for d in range(depth + 1)
     ])).alias("lv")
     return (
-        assignments.select(F.col(id_col), levels)
-        .select(id_col, "lv.zoom", "lv.tile_x", "lv.tile_y")
-        .dropDuplicates([id_col, "zoom", "tile_x", "tile_y"])
+        assignments.select(F.col("element_id"), levels)
+        .select("element_id", "lv.zoom", "lv.tile_x", "lv.tile_y")
+        .dropDuplicates(["element_id", "zoom", "tile_x", "tile_y"])
         .groupBy("zoom", "tile_x", "tile_y")
         .agg(F.count("*").alias("n"))
     )

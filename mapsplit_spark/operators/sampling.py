@@ -56,9 +56,9 @@ def deterministic_split(
     id_col: str,
     weights: dict[str, float],
     salt: str = "",
-    split_col: str = "split",
 ) -> DataFrame:
-    """Assign every row to a named split ('train'/'val'/...) by
+    """Assign every row to a named split ('train'/'val'/...) in column
+    ``split`` by
     portable hash of its id — stable across runs, partitionings, and
     engines; weights need not sum to 1 (normalized).  Map-only."""
     total = sum(weights.values())
@@ -73,7 +73,7 @@ def deterministic_split(
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     last = F.lit(names[-1])
     out = last if expr is None else expr.otherwise(names[-1])
-    return df.withColumn(split_col, out)
+    return df.withColumn("split", out)
 
 
 def stratified_cap(

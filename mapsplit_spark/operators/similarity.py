@@ -121,12 +121,12 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, dim: int,
     return _cosine_ranked(F.broadcast(qn).crossJoin(cn), dim, k)
 
 
-def simhash_signature(df: DataFrame, vec_col: str, dim: int, n_bits: int = 16,
-                      seed: int = 7) -> DataFrame:
+def simhash_signature(df: DataFrame, vec_col: str, dim: int,
+                      n_bits: int = 16) -> DataFrame:
     """Append an LSH bucket id: sign pattern of ``n_bits`` fixed random
-    hyperplanes (deterministic seed).  Built-in-only: each bit is an
-    unrolled dot-product sign, packed with bit arithmetic."""
-    rng = np.random.default_rng(seed)
+    hyperplanes (seed 7).  Built-in-only: each bit is an unrolled
+    dot-product sign, packed with bit arithmetic."""
+    rng = np.random.default_rng(7)
     planes = rng.standard_normal((n_bits, dim))
     bucket = None
     for b in range(n_bits):

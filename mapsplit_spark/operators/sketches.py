@@ -156,9 +156,9 @@ def hll_distinct(
     return hll_estimate_from_registers(regs, group_cols, p=p, corrected=corrected)
 
 
-def hll_error_bound(p: int, n_sigma: float = 4.0) -> float:
-    """Relative error bound at n_sigma standard errors — test helper."""
-    return n_sigma * 1.04 / math.sqrt(1 << p)
+def hll_error_bound(p: int) -> float:
+    """Relative error bound at 4 standard errors — test helper."""
+    return 4.0 * 1.04 / math.sqrt(1 << p)
 
 
 # ----------------------------------------------------- Count-Min sketch

@@ -71,8 +71,7 @@ def snap_dist_sql(plon: str, plat: str, ax: str, ay: str,
 
 
 def snap_to_segments(points: DataFrame, segments: DataFrame, d_km: float,
-                     s_deg: float | None = None,
-                     lat_cap: float = 85.06, max_k: int = 64,
+                     max_k: int = 64,
                      scatter_partitions: int | None = None) -> DataFrame:
     """points(pid, lon, lat) × segments(way_id, seq, x1, y1, x2, y2) →
     (pid, way_id, seq, dist_km): each point's nearest segment with
@@ -80,9 +79,9 @@ def snap_to_segments(points: DataFrame, segments: DataFrame, d_km: float,
     absent); ties broken by (dist_km, way_id, seq); dist rounded to
     6 decimals BEFORE the threshold/tie-break, matching the oracle.
 
-    ``s_deg`` is the hex lattice size (default: the degree span of
-    2·d_km, so typical disks stay small); ``lat_cap`` bounds the
-    1/cos(lat) coverage blowup as in dwithin.  ``max_k`` is a LOUD cap
+    The hex lattice size is the degree span of 2·d_km, so typical disks
+    stay small; the 85.06° cap bounds the 1/cos(lat) coverage blowup as
+    in dwithin.  ``max_k`` is a LOUD cap
     on the per-segment scatter radius: a degenerate segment longer than
     ~max_k lattice cells would silently explode to a huge disk, so the
     job ABORTS (raise_error) instead — split such polylines upstream
@@ -98,8 +97,8 @@ def snap_to_segments(points: DataFrame, segments: DataFrame, d_km: float,
     (r6, guide §2.5).
     """
     d_deg = d_km / KM_PER_DEG
-    s = s_deg if s_deg is not None else 2.0 * d_deg
-    cap_rad = math.radians(lat_cap)
+    s = 2.0 * d_deg
+    cap_rad = math.radians(85.06)
 
     # per-segment coverage radius ρ in the raw degree plane
     len_deg = F.sqrt(

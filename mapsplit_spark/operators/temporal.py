@@ -61,16 +61,15 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str | list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_cols: list[str] | None = None,
     tolerance_s: float | None = None,
     matched_ts_col: str | None = None,
 ) -> DataFrame:
-    """Backward as-of LEFT join: for every left row, the single latest
-    right row with ``right_ts <= left_ts`` for the same key (ties at
-    equal timestamps match, like DuckDB/pandas ``ASOF``); left rows
-    with no prior right row keep NULL right columns.
+    """Backward as-of LEFT join on the event-time column ``ts`` of both
+    sides: for every left row, the single latest right row with
+    ``right.ts <= left.ts`` for the same key (ties at equal timestamps
+    match, like DuckDB/pandas ``ASOF``); left rows with no prior right
+    row keep NULL right columns.  The right payload is every right
+    column other than the keys and ``ts``.
 
     Plan shape: tag the two sides, union them, and take a running
     ``last(right_payload, ignorenulls=True)`` over a window partitioned
@@ -81,25 +80,24 @@ def asof_join(
     nothing blocks whole-stage codegen.
 
     Determinism: if the right side can hold several rows per
-    ``(key, right_ts)``, pre-aggregate it to one (callers own the
+    ``(key, ts)``, pre-aggregate it to one (callers own the
     tie-break; any choice is equally "the" as-of row).
 
-    ``tolerance_s`` nulls out matches older than ``left_ts -
+    ``tolerance_s`` nulls out matches older than ``left.ts -
     tolerance_s`` (pandas ``merge_asof(tolerance=...)`` semantics) —
     applied AFTER the window, so it costs a filter expression only.
     ``matched_ts_col`` additionally exposes the matched right row's
     event time under that name.
     """
     keys = [on] if isinstance(on, str) else list(on)
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in (*keys, right_ts)]
+    right_cols = [c for c in right.columns if c not in (*keys, "ts")]
     clash = set(right_cols) & set(left.columns)
     if clash:
         raise ValueError(f"asof_join: right payload collides with left: {clash}")
 
     rv_type = T.StructType(
         [T.StructField(c, right.schema[c].dataType) for c in right_cols]
-        + [T.StructField(_MATCH_TS, right.schema[right_ts].dataType)]
+        + [T.StructField(_MATCH_TS, right.schema["ts"].dataType)]
     )
     lrow_type = T.StructType(
         [T.StructField(c, left.schema[c].dataType) for c in left.columns]
@@ -107,19 +105,19 @@ def asof_join(
 
     l2 = left.select(
         *[F.col(k) for k in keys],
-        F.col(left_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"),
         F.struct(*[F.col(c) for c in left.columns]).alias("_lrow"),
         F.lit(None).cast(rv_type).alias("_rv"),
     )
     r2 = right.select(
         *[F.col(k) for k in keys],
-        F.col(right_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),
         F.lit(None).cast(lrow_type).alias("_lrow"),
         F.struct(
             *[F.col(c) for c in right_cols],
-            F.col(right_ts).alias(_MATCH_TS),
+            F.col("ts").alias(_MATCH_TS),
         ).alias("_rv"),
     )
 
@@ -135,9 +133,8 @@ def asof_join(
         .filter(F.col("_side") == 1)
     )
     if tolerance_s is not None:
-        ts_t = left.schema[left_ts].dataType
-        age = _micros(F.col("_ts"), ts_t) - _micros(
-            F.col("_rvm")[_MATCH_TS], right.schema[right_ts].dataType
+        age = _micros(F.col("_ts"), left.schema["ts"].dataType) - _micros(
+            F.col("_rvm")[_MATCH_TS], right.schema["ts"].dataType
         )
         out = out.withColumn(
             "_rvm",

@@ -26,18 +26,17 @@ def squeezed_text(text_col: str) -> Column:
     return F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
 
 
-def token_stats(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """Per-document token/char statistics.  → (doc_id, n_tokens,
-    n_chars2, avg_token_len)."""
-    toks = whitespace_tokens(text_col)
+def token_stats(docs: DataFrame) -> DataFrame:
+    """Per-document token/char statistics over (doc_id, text).
+    → (doc_id, n_tokens, n_chars2, avg_token_len)."""
+    toks = whitespace_tokens("text")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).cast("long").alias("n_tokens"),
-        bpe_token_count(text_col).cast("long").alias("n_tokens_bpe"),
-        F.length(text_col).cast("long").alias("n_chars2"),
+        bpe_token_count("text").cast("long").alias("n_tokens_bpe"),
+        F.length("text").cast("long").alias("n_chars2"),
         F.round(
-            (F.length(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", ""))
+            (F.length(F.regexp_replace(F.trim(F.col("text")), r"\s+", ""))
              / F.size(toks)).cast("double"), 4
         ).alias("avg_token_len"),
     )
@@ -63,12 +62,11 @@ def bpe_token_count(text_col: str):
     return F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_TOKEN_RE), F.lit(0)))
 
 
-def lang_id(docs: DataFrame, id_col: str = "doc_id",
-            text_col: str = "text") -> DataFrame:
-    """Stopword-profile language ID: the language whose profile scores
-    the most hits wins (ties broken by profile order).  Built-ins only.
-    → (doc_id, pred_lang, score)."""
-    padded = F.concat(F.lit(" "), squeezed_text(text_col), F.lit(" "))
+def lang_id(docs: DataFrame) -> DataFrame:
+    """Stopword-profile language ID over (doc_id, text): the language
+    whose profile scores the most hits wins (ties broken by profile
+    order).  Built-ins only.  → (doc_id, pred_lang, score)."""
+    padded = F.concat(F.lit(" "), squeezed_text("text"), F.lit(" "))
     scores = []
     for lang, words in LANG_PROFILES.items():
         s = None
@@ -78,18 +76,17 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id",
         scores.append(F.struct(s.alias("score"), F.lit(lang).alias("lang")))
     best = F.array_max(F.array(*scores))  # struct compare: score, then lang
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         best["lang"].alias("pred_lang"),
         best["score"].cast("long").alias("score"),
     )
 
 
-def quality_score(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """Cheap quality heuristics: stopword ratio + mean word length.
-    → (doc_id, n_tokens, stopword_ratio, quality)."""
-    toks = whitespace_tokens(text_col)
-    padded = F.concat(F.lit(" "), squeezed_text(text_col), F.lit(" "))
+def quality_score(docs: DataFrame) -> DataFrame:
+    """Cheap quality heuristics over (doc_id, text): stopword ratio +
+    mean word length.  → (doc_id, n_tokens, stopword_ratio, quality)."""
+    toks = whitespace_tokens("text")
+    padded = F.concat(F.lit(" "), squeezed_text("text"), F.lit(" "))
     n_stop = None
     for wrd in STOPWORDS:
         # occurrences of " w " counted by split — same trick in the SQL oracle.
@@ -100,7 +97,7 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id",
         n_stop = cnt if n_stop is None else (n_stop + cnt)
     ratio = F.round((n_stop / F.size(toks)).cast("double"), 4)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).cast("long").alias("n_tokens"),
         ratio.alias("stopword_ratio"),
         F.round(F.least(F.lit(1.0), F.size(toks) / F.lit(100.0)) * (1.0 - ratio), 4).alias("quality"),
@@ -169,36 +166,34 @@ def tfidf_topk(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def fingerprint(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """Order-insensitive document fingerprint: md5 of the sorted distinct
-    token multiset — the exact-near-dup key (bag-of-words collision).
-    → (doc_id, fp)."""
-    toks = F.array_sort(F.array_distinct(whitespace_tokens(text_col)))
-    return docs.select(F.col(id_col), F.md5(F.concat_ws(" ", toks)).alias("fp"))
+def fingerprint(docs: DataFrame) -> DataFrame:
+    """Order-insensitive document fingerprint over (doc_id, text): md5
+    of the sorted distinct token multiset — the exact-near-dup key
+    (bag-of-words collision).  → (doc_id, fp)."""
+    toks = F.array_sort(F.array_distinct(whitespace_tokens("text")))
+    return docs.select(F.col("doc_id"), F.md5(F.concat_ws(" ", toks)).alias("fp"))
 
 
-def fingerprint_dup_groups(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
+def fingerprint_dup_groups(docs: DataFrame) -> DataFrame:
     """Dedup groups by bag-of-words fingerprint. → (fp, n_docs, min_doc)."""
     return (
-        fingerprint(docs, id_col, text_col)
+        fingerprint(docs)
         .groupBy("fp")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("min_doc"))
+        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("min_doc"))
     )
 
 
-def winnow_fps(docs: DataFrame, k: int = 5, w: int = 4, id_col: str = "doc_id",
-               text_col: str = "text", gram_hash=F.xxhash64) -> DataFrame:
+def winnow_fps(docs: DataFrame, k: int = 5, w: int = 4,
+               gram_hash=F.xxhash64) -> DataFrame:
     """The winnowing pass (Schleimer-Wilkerson-Aiken 2003) behind both
     fingerprint summaries and ``contamination_pairs``: hash
     every k-char gram of the normalized text with ``gram_hash``, slide
     a w-window over the gram-hash array, keep each window's minimum.
-    → (id, fps) with fps = sorted distinct selected hashes.  The
-    winnowing guarantee (any shared substring of length ≥ w + k − 1
-    contributes ≥ 1 common fingerprint) holds for ANY hash function;
-    WHICH positions are selected depends on the hash's ordering, so the
-    md5 and xxhash64 variants are not cross-comparable.
+    (doc_id, text) → (doc_id, fps) with fps = sorted distinct selected
+    hashes.  The winnowing guarantee (any shared substring of length
+    ≥ w + k − 1 contributes ≥ 1 common fingerprint) holds for ANY hash
+    function; WHICH positions are selected depends on the hash's
+    ordering, so the md5 and xxhash64 variants are not cross-comparable.
 
     r6: the md5 (oracle-portable) variant routes through an Arrow
     kernel — see ``_winnow_fps_md5_arrow``.  Catalyst evaluates
@@ -209,8 +204,8 @@ def winnow_fps(docs: DataFrame, k: int = 5, w: int = 4, id_col: str = "doc_id",
     production variant stays on the JVM HOF path (cheap long hashes;
     no xxhash in the Python stdlib)."""
     if gram_hash is F.md5:
-        return _winnow_fps_md5_arrow(docs, k, w, id_col, text_col)
-    return _winnow_fps_hof(docs, k, w, id_col, text_col, gram_hash)
+        return _winnow_fps_md5_arrow(docs, k, w, "doc_id", "text")
+    return _winnow_fps_hof(docs, k, w, "doc_id", "text", gram_hash)
 
 
 def _winnow_fps_md5_arrow(docs: DataFrame, k: int, w: int, id_col: str,
@@ -284,9 +279,7 @@ def _winnow_fps_hof(docs: DataFrame, k: int, w: int, id_col: str,
     )
 
 
-def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints — ORACLE-PORTABLE variant.
 
     Hashes are md5 hex strings compared lexicographically — portable
@@ -297,17 +290,17 @@ def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4,
     For the corpus-scale pipeline use ``winnow_fingerprints_fast``
     (xxhash64 longs: 8 B per gram vs ~48 B per md5 hex string — the
     r3-verdict memory concern)."""
-    sel = winnow_fps(docs, k, w, id_col, text_col, F.md5)
+    sel = winnow_fps(docs, k, w, F.md5)
     return sel.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("fps").cast("long").alias("n_fp"),
         F.md5(F.concat_ws("", F.col("fps"))).alias("fp_hash"),
     )
 
 
-def winnow_fingerprints_fast(fps: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def winnow_fingerprints_fast(fps: DataFrame) -> DataFrame:
     """Winnowing — PRODUCTION variant (VERDICT r3 #7): the per-doc
-    summary of an xxhash64 ``winnow_fps`` relation (id, fps), which the
+    summary of an xxhash64 ``winnow_fps`` relation (doc_id, fps), which the
     caller builds once and may share with ``contamination_pairs``.
     Same construction and the same local-fingerprinting guarantee as
     the md5 variant; the per-gram intermediate drops from a 32-char hex
@@ -320,7 +313,7 @@ def winnow_fingerprints_fast(fps: DataFrame, id_col: str = "doc_id") -> DataFram
     → (doc_id, n_fp, fp_hash:long) — fp_hash = xxhash64 over the
     comma-joined sorted selected set."""
     return fps.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("fps").cast("long").alias("n_fp"),
         F.xxhash64(F.concat_ws(",", F.transform(
             F.col("fps"), lambda v: v.cast("string")))).alias("fp_hash"),

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 def tile_manifests(assignments: DataFrame, zoom: int, n_salts: int = 32,
-                   id_col: str = "element_id",
                    assume_distinct: bool = False,
                    chunked: bool = False) -> DataFrame:
     """(element_id, tile_x, tile_y) → (zoom, tile_x, tile_y, element_ids sorted, n).
@@ -58,12 +57,12 @@ def tile_manifests(assignments: DataFrame, zoom: int, n_salts: int = 32,
     # grouping keys; otherwise the single configured zoom is attached
     zoom_keys = ["zoom"] if "zoom" in assignments.columns else []
     distinct = assignments if assume_distinct else \
-        assignments.dropDuplicates([id_col, *zoom_keys, "tile_x", "tile_y"])
+        assignments.dropDuplicates(["element_id", *zoom_keys, "tile_x", "tile_y"])
     salted = distinct.withColumn(
-        "salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts))
+        "salt", F.pmod(F.xxhash64(F.col("element_id")), F.lit(n_salts))
     )
     partial = salted.groupBy(*zoom_keys, "tile_x", "tile_y", "salt").agg(
-        F.collect_list(id_col).alias("chunk")
+        F.collect_list("element_id").alias("chunk")
     )
     if chunked:
         return partial.select(

@@ -175,11 +175,10 @@ def key_range_filter(df: DataFrame, ranges) -> DataFrame:
 
 
 def read_tiles_bbox(spark: SparkSession, path: str, zoom: int,
-                    x0: int, y0: int, x1: int, y1: int,
-                    max_ranges: int = 64) -> DataFrame:
+                    x0: int, y0: int, x1: int, y1: int) -> DataFrame:
     """Bbox scan of zoom-``zoom`` tiles over the stored layout: the
     bbox's key ranges (``key_range_filter``) + the exact x/y re-filter."""
-    ranges = bbox_morton_ranges(x0, y0, x1, y1, max_ranges, zoom)
+    ranges = bbox_morton_ranges(x0, y0, x1, y1, zoom=zoom)
     return key_range_filter(spark.read.parquet(path), ranges).filter(
         F.col("tile_x").between(x0, x1) & F.col("tile_y").between(y0, y1)
     )

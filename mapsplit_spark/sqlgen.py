@@ -225,13 +225,13 @@ def ring_pip_sql(lon: str, lat: str, ring: list[tuple[float, float]]) -> str:
     return "((" + " + ".join(terms) + ") % 2 = 1)"
 
 
-def morton_sql(x: str, y: str, bits: int = 16) -> str:
-    """Z-order (Morton) index as pure ARITHMETIC (no bit operators —
-    dialect-portable): Σ bit_b(x)·4^b + 2·bit_b(y)·4^b with bit_b(v) =
-    FLOOR(v / 2^b) % 2.  Independent formulation of cellid.morton_col's
-    shift/mask spread — the two gate each other."""
+def morton_sql(x: str, y: str) -> str:
+    """Z-order (Morton) index of 16-bit coordinates as pure ARITHMETIC
+    (no bit operators — dialect-portable): Σ bit_b(x)·4^b + 2·bit_b(y)·4^b
+    with bit_b(v) = FLOOR(v / 2^b) % 2.  Independent formulation of
+    cellid.morton_col's shift/mask spread — the two gate each other."""
     terms = []
-    for b in range(bits):
+    for b in range(16):
         p = float(2 ** b)
         terms.append(f"(CAST(FLOOR(({x}) / {p!r}) AS BIGINT) % 2) * {4 ** b}")
         terms.append(f"(CAST(FLOOR(({y}) / {p!r}) AS BIGINT) % 2) * {2 * 4 ** b}")
@@ -345,13 +345,13 @@ def derived_phash_band_sql(key: str, k: int) -> str:
     return f"(CASE WHEN {m} = 4 THEN {alt} WHEN {cond} THEN {flipped} ELSE {base} END)"
 
 
-def phash_from_bands_sql(bands: list[str], band_bits: int = 15) -> str:
-    """Pack band values (each < 2^band_bits) into one BIGINT:
-    Σ band_k · 2^(band_bits·k).  Pure integer multiply-add — exact in
-    both engines (the operator's shiftright/mask decomposition is the
-    INDEPENDENT formulation gated against this packing)."""
+def phash_from_bands_sql(bands: list[str]) -> str:
+    """Pack band values (each < 2^15) into one BIGINT: Σ band_k · 2^(15·k).
+    Pure integer multiply-add — exact in both engines (the operator's
+    shiftright/mask decomposition is the INDEPENDENT formulation gated
+    against this packing)."""
     return "(" + " + ".join(
-        f"({b}) * {1 << (band_bits * i)}" for i, b in enumerate(bands)
+        f"({b}) * {1 << (15 * i)}" for i, b in enumerate(bands)
     ) + ")"
 
 
@@ -442,15 +442,15 @@ def hll_w_sql(s: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def hll_rho_sql(w: str, wbits: int = 24) -> str:
-    """rho(w) = position of the leftmost 1-bit of the wbits-wide word
-    (1-based), wbits+1 when w = 0 — as a pure integer-comparison CASE
-    chain (no bin()/log2(), whose widths and float rounding differ
-    between engines)."""
+def hll_rho_sql(w: str) -> str:
+    """rho(w) = position of the leftmost 1-bit of the 24-bit word
+    (1-based), 25 when w = 0 — as a pure integer-comparison CASE chain
+    (no bin()/log2(), whose widths and float rounding differ between
+    engines)."""
     cases = " ".join(
-        f"WHEN ({w}) >= {2 ** (wbits - k)} THEN {k}" for k in range(1, wbits + 1)
+        f"WHEN ({w}) >= {2 ** (24 - k)} THEN {k}" for k in range(1, 25)
     )
-    return f"(CASE {cases} ELSE {wbits + 1} END)"
+    return f"(CASE {cases} ELSE 25 END)"
 
 
 def hll_inv_pow2_sql(rho: str, max_rho: int = 25) -> str:

@@ -32,13 +32,13 @@ def stream_assign(stream_df: DataFrame, id_col: str, lon_col: str, lat_col: str,
     return expand_tiles(assigned, keep_cols=keep)
 
 
-def modified_tile_counts(pairs: DataFrame, watermark: str = "10 minutes",
-                         window: str = "1 hour") -> DataFrame:
-    """Per-tile modification counts over event-time windows with late-data
-    tolerance — the streaming modifiedTiles set (A4) with counts (A2)."""
+def modified_tile_counts(pairs: DataFrame) -> DataFrame:
+    """Per-tile modification counts over 1-hour event-time windows with
+    10 minutes of late-data tolerance — the streaming modifiedTiles set
+    (A4) with counts (A2)."""
     return (
-        pairs.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "tile_x", "tile_y")
+        pairs.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("win"), "tile_x", "tile_y")
         .agg(F.count("*").alias("n_modified"))
         .select(
             F.col("win.start").alias("win_start"),

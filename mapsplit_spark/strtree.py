@@ -13,9 +13,9 @@ expanded level by level with np.repeat arithmetic — no Python
 recursion per point, no per-point tree walk.
 
 Because packing is contiguous, child ranges are implicit: node ``i``
-of level ``k`` covers slots ``[i·F, (i+1)·F)`` of level ``k−1`` — the
-whole tree is just a list of bbox arrays plus the leaf→ring
-permutation.
+of level ``k`` covers slots ``[i·F, (i+1)·F)`` of level ``k−1``
+(F = ``FANOUT``) — the whole tree is just a list of bbox arrays plus
+the leaf→ring permutation.
 
 Everything here is driver-side build (rings are small) + executor-side
 batch query inside the existing Arrow ``mapInPandas`` kernels
@@ -32,12 +32,12 @@ import numpy as np
 FANOUT = 16
 
 
-def build_strtree(bboxes: np.ndarray, fanout: int = FANOUT):
+def build_strtree(bboxes: np.ndarray):
     """Pack ring bboxes (R, 4: x0, x1, y0, y1) into an STR tree.
 
-    Returns ``(leaf_order, level_boxes, fanout)``: ``leaf_order[s]`` is
-    the ring index at leaf slot ``s``; ``level_boxes[0]`` the ring
-    bboxes in slot order, ``level_boxes[-1]`` the ≤ fanout roots.
+    Returns ``(leaf_order, level_boxes)``: ``leaf_order[s]`` is the ring
+    index at leaf slot ``s``; ``level_boxes[0]`` the ring bboxes in slot
+    order, ``level_boxes[-1]`` the ≤ ``FANOUT`` roots.
     """
     bboxes = np.asarray(bboxes, dtype=np.float64).reshape(-1, 4)
     n = bboxes.shape[0]
@@ -45,9 +45,9 @@ def build_strtree(bboxes: np.ndarray, fanout: int = FANOUT):
         raise ValueError("build_strtree: no rings")
     cx = (bboxes[:, 0] + bboxes[:, 1]) * 0.5
     cy = (bboxes[:, 2] + bboxes[:, 3]) * 0.5
-    # STR: slice by x into ~sqrt(n/fanout) vertical strips, each strip
+    # STR: slice by x into ~sqrt(n/FANOUT) vertical strips, each strip
     # sorted by y — neighbours in slot order are spatial neighbours
-    n_slices = max(1, int(np.ceil(np.sqrt(np.ceil(n / fanout)))))
+    n_slices = max(1, int(np.ceil(np.sqrt(np.ceil(n / FANOUT)))))
     by_x = np.argsort(cx, kind="stable")
     slice_size = int(np.ceil(n / n_slices))
     leaf_order = np.empty(n, dtype=np.int64)
@@ -60,15 +60,15 @@ def build_strtree(bboxes: np.ndarray, fanout: int = FANOUT):
     # query's random gathers then read packed memory, not (m, 4) strides
     slot = bboxes[leaf_order]
     level_boxes = [tuple(np.ascontiguousarray(slot[:, c]) for c in range(4))]
-    while level_boxes[-1][0].shape[0] > fanout:
+    while level_boxes[-1][0].shape[0] > FANOUT:
         x0, x1, y0, y1 = level_boxes[-1]
         m = x0.shape[0]
-        lo = np.arange(0, m, fanout, dtype=np.int64)
+        lo = np.arange(0, m, FANOUT, dtype=np.int64)
         level_boxes.append((
             np.minimum.reduceat(x0, lo), np.maximum.reduceat(x1, lo),
             np.minimum.reduceat(y0, lo), np.maximum.reduceat(y1, lo),
         ))
-    return leaf_order, level_boxes, fanout
+    return leaf_order, level_boxes
 
 
 QUERY_CHUNK = 65536
@@ -95,7 +95,7 @@ def query_strtree(tree, px: np.ndarray, py: np.ndarray):
 
 
 def _query_chunk(tree, px: np.ndarray, py: np.ndarray):
-    leaf_order, level_boxes, fanout = tree
+    leaf_order, level_boxes = tree
     roots = level_boxes[-1]
     n_pts = px.shape[0]
     n_roots = roots[0].shape[0]
@@ -106,8 +106,8 @@ def _query_chunk(tree, px: np.ndarray, py: np.ndarray):
     for li in range(len(level_boxes) - 2, -1, -1):
         child_boxes = level_boxes[li]
         m_child = child_boxes[0].shape[0]
-        lo = nodes * fanout
-        counts = np.minimum(lo + fanout, m_child) - lo
+        lo = nodes * FANOUT
+        counts = np.minimum(lo + FANOUT, m_child) - lo
         pts = np.repeat(pts, counts)
         total = int(counts.sum())
         starts = np.repeat(np.cumsum(counts) - counts, counts)

@@ -28,7 +28,11 @@ def outbase(tmp_path_factory):
 @pytest.mark.parametrize("args", [
     ["--zoom", "17"], ["--zoom", "-1"],
     ["--zonal"], ["--raster", "12"], ["--transitions", "user_id"],
-], ids=["17", "-1", "zonal", "raster", "transitions"])
+    ["--pyramid", "14", "--zoom", "13"], ["--pyramid", "17", "--zoom", "16"],
+    ["--raster", "17", "--poly", "p"], ["--idw", "17"], ["--idw", "-1"],
+    ["--clusters-zoom", "17", "--clusters", "3"],
+], ids=["17", "-1", "zonal", "raster", "transitions", "pyramid_above_zoom",
+        "pyramid_17", "raster_17", "idw_17", "idw_-1", "clusters_zoom_17"])
 def test_zoom_outside_tile_domain_fails_in_parsing(args, capsys):
     """--zoom is capped at 16 like the reference (Const.java MAX_ZOOM):
     above it the packed tile id and the stored layout key alias across
@@ -40,6 +44,19 @@ def test_zoom_outside_tile_domain_fails_in_parsing(args, capsys):
         split_main(["--input", "in", "--output", "out", *args])
     assert exc.value.code == 2
     assert args[0] in capsys.readouterr().err
+
+
+def test_unknown_poly_id_fails_before_any_output(spark, images_dir, outbase):
+    """A --poly-id that selects no outer ring fails while the clip rings
+    load, before the manifests (or anything else) are written."""
+    out = os.path.join(outbase, "poly_typo")
+    with pytest.raises(ValueError, match="'typo'"):
+        split_main([
+            "--input", f"{images_dir}/images.parquet", "--output", out,
+            "--zoom", "13", "--poly", f"{images_dir}/clip_polygons.parquet",
+            "--poly-id", "typo", "--raster", "7",
+        ])
+    assert not os.path.exists(out)
 
 
 def test_sessions_mode_e2e(spark, images_dir, outbase, capsys):

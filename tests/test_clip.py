@@ -32,6 +32,13 @@ def test_load_rings(polys):
     assert len(outers) == 1 and not inners
 
 
+def test_load_rings_unknown_poly_id_raises(polys):
+    """A poly id that selects no outer ring would clip every tile away;
+    it fails instead, naming the id."""
+    with pytest.raises(ValueError, match="'typo'"):
+        load_rings(polys, "typo")
+
+
 def test_clip_tiles_matches_oracle(spark, polys):
     outers, inners = load_rings(polys, "donut")
     cx = float(outers[0][0][:, 0].mean())
