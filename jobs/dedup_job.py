@@ -93,7 +93,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "writes per-row features (n_samples/duration/rms/"
                         "peak/zero_cross_rate) to <output>/audio_features "
                         "(corpus-prep telemetry for filtering before dedup)")
-    p.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     return p
 
 
@@ -116,8 +115,7 @@ def main(argv: list[str] | None = None) -> None:
     from mapsplit_spark.sinks import read_back, write_parquet
 
     owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark("dedup-job", cores=args.cores,
-                      shuffle_partitions=2 * args.cores)
+    spark = get_spark("dedup-job")
     t0 = time.time()
     out = args.output
     summary = dict.fromkeys([

@@ -100,7 +100,8 @@ def build_parser() -> argparse.ArgumentParser:
                         "sum of the base-zoom per-tile counts at Chebyshev "
                         "radius R (raster focal statistics / heat-map "
                         "smoothing)")
-    p.add_argument("--geohash", type=int, default=0, metavar="PRECISION",
+    p.add_argument("--geohash", type=int, default=0, metavar="0..12",
+                   choices=range(13),
                    help="also write <output>/geohash: per input element the "
                         "base-32 geohash cell id at this precision (an "
                         "alternative spatial bucketing key; 0 = skip)")
@@ -178,6 +179,13 @@ def main(argv=None) -> None:
             p.error(f"{flag} requires --poly")
     if args.pyramid is not None and args.pyramid > args.zoom:
         p.error(f"--pyramid {args.pyramid} is above --zoom {args.zoom}")
+    for flag, ok, domain in (
+            ("--border", 0 <= args.border < 0.5, "in [0, 0.5)"),
+            ("--focal-radius", (args.focal_radius or 0) >= 0, "≥ 0"),
+            ("--hexgrid", args.hexgrid >= 0, "≥ 0"), ("--dwithin", args.dwithin >= 0, "≥ 0"),
+            ("--clusters", args.clusters >= 0, "≥ 0"), ("--snap-km", args.snap_km > 0, "> 0")):
+        if not ok:
+            p.error(f"{flag} must be {domain}")
     if args.chunked_manifests and (args.mbtiles or args.tile_files or args.workdir):
         raise SystemExit(
             "--chunked-manifests is incompatible with --mbtiles/--tile-files "

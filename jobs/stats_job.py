@@ -93,8 +93,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--text-col", default="text",
                    help="text column for --tfidf-topk")
     p.add_argument("--salt", default="")
-    p.add_argument("--cores", type=int,
-                   default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     return p
 
 
@@ -109,8 +107,7 @@ def main(argv: list[str] | None = None) -> None:
     from mapsplit_spark.sinks import read_back, write_parquet
 
     owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark("stats-job", cores=args.cores,
-                      shuffle_partitions=2 * args.cores)
+    spark = get_spark("stats-job")
     t0 = time.time()
     group = [args.group_col]
     out = args.output

@@ -180,6 +180,8 @@ def parse_args(argv=None) -> argparse.Namespace:
     args = p.parse_args(argv)
     if args.mode == "geofence" and not args.poly:
         p.error("--mode geofence requires --poly RINGS")
+    if not 0 <= args.border < 0.5:
+        p.error("--border must be in [0, 0.5)")
     return args
 
 

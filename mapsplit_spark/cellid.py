@@ -40,21 +40,6 @@ def morton(x, y) -> np.ndarray:
     return (_part1by1(np.asarray(x)) | (_part1by1(np.asarray(y)) << np.uint64(1))).astype(np.int64)
 
 
-def demorton(m) -> tuple[np.ndarray, np.ndarray]:
-    m = np.asarray(m, dtype=np.uint64)
-
-    def compact(v):
-        v = v.copy()  # &= would mutate the caller's array
-        v &= np.uint64(0x55555555)
-        v = (v | (v >> np.uint64(1))) & np.uint64(0x33333333)
-        v = (v | (v >> np.uint64(2))) & np.uint64(0x0F0F0F0F)
-        v = (v | (v >> np.uint64(4))) & np.uint64(0x00FF00FF)
-        v = (v | (v >> np.uint64(8))) & np.uint64(0x0000FFFF)
-        return v.astype(np.int64)
-
-    return compact(m), compact(m >> np.uint64(1))
-
-
 def quadkey(z: int, x, y):
     """Bing-maps quadkey strings; parent cell = string prefix."""
     x = np.asarray(x, dtype=np.int64)
@@ -67,15 +52,6 @@ def quadkey(z: int, x, y):
             digits.append(str(((x[i] & mask) > 0) + 2 * ((y[i] & mask) > 0)))
         out[i] = "".join(digits)
     return out
-
-
-def parse_quadkey(qk: str) -> tuple[int, int, int]:
-    x = y = 0
-    for c in qk:
-        d = int(c)
-        x = (x << 1) | (d & 1)
-        y = (y << 1) | (d >> 1)
-    return len(qk), x, y
 
 
 def k_ring(x: int, y: int, k: int, zoom: int) -> list[tuple[int, int]]:

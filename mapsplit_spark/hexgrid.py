@@ -60,7 +60,6 @@ from pyspark.sql import functions as F
 SQRT3_OVER_3 = math.sqrt(3.0) / 3.0
 ONE_THIRD = 1.0 / 3.0
 TWO_THIRDS = 2.0 / 3.0
-SQRT3 = math.sqrt(3.0)
 
 # centers of cells at hex-distance m are >= CENTER_SPACING_MIN * m * s
 # apart (lattice diagonal; tests/test_hexgrid.py validates numerically)
@@ -108,21 +107,6 @@ def hex_cell_cols(lon: Column, lat: Column, s: float) -> tuple[Column, Column]:
     q = F.when(fix_q, (F.lit(0) - rr) - rs).otherwise(rq)
     r = F.when(fix_r, (F.lit(0) - rq) - rs).otherwise(rr)
     return q.cast("long"), r.cast("long")
-
-
-def hex_center(q, r, s: float) -> tuple[np.ndarray, np.ndarray]:
-    """Cell → center (lon, lat) in degrees (inverse of the axial
-    transform at the lattice points)."""
-    q = np.asarray(q, dtype=np.float64)
-    r = np.asarray(r, dtype=np.float64)
-    return s * (SQRT3 * (q + r * 0.5)), s * 1.5 * r
-
-
-def hex_dist(q1, r1, q2, r2) -> np.ndarray:
-    """Hex (cube) distance between axial cells — the k of k-ring."""
-    dq = np.asarray(q1, dtype=np.int64) - np.asarray(q2, dtype=np.int64)
-    dr = np.asarray(r1, dtype=np.int64) - np.asarray(r2, dtype=np.int64)
-    return (np.abs(dq) + np.abs(dr) + np.abs(dq + dr)) // 2
 
 
 def hex_disk_offsets(k: int) -> list[tuple[int, int]]:

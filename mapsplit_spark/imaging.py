@@ -1,4 +1,4 @@
-"""Image payload handling — deterministic stand-in codec + pHash + PSNR.
+"""Image payload handling — deterministic stand-in codec + pHash.
 
 The container has no PIL/libjpeg, so real PNG/JPEG codecs are STUBBED by
 a clearly-marked deterministic fake with the same *semantics* the
@@ -63,13 +63,6 @@ def resize_nearest(px: np.ndarray, w: int, h: int) -> np.ndarray:
     return px[sy][:, sx]
 
 
-def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-    if mse == 0:
-        return float("inf")
-    return 10.0 * np.log10(255.0 ** 2 / mse)
-
-
 def phash64(pixels: np.ndarray) -> int:
     """64-bit mean-threshold perceptual hash: grayscale → 8×8 block means
     → bit per cell (≥ global mean).  Deterministic, numpy-only."""
@@ -91,17 +84,9 @@ def phash64(pixels: np.ndarray) -> int:
 VMAGIC = b"MVID"  # fake video container: concatenated MSIM frames
 
 
-def encode_video(frames: list) -> bytes:
-    """Deterministic stub VIDEO container (the moving-picture twin of
-    MSIM — no ffmpeg/libav in this container): magic + frame count +
-    length-prefixed lossless (png) MSIM frames.  Swap for a real
-    demuxer on a real cluster; every operator signature stays identical."""
-    blobs = [encode_image(f, "png") for f in frames]
-    head = VMAGIC + struct.pack("<I", len(blobs))
-    return head + b"".join(struct.pack("<I", len(b)) + b for b in blobs)
-
-
 def decode_video(data: bytes) -> list:
+    """Frames of the stub video container: magic + frame count +
+    length-prefixed MSIM frames (no ffmpeg/libav in this container)."""
     if data[:4] != VMAGIC:
         raise NotImplementedError(
             "real video demuxers (ffmpeg/libav) unavailable; expected MVID stub container")

@@ -40,6 +40,9 @@ from .iterate import checkpoint_count, fixed_point
 # bounded-collect class as the IVF probe-cell ids; larger graphs take
 # the distributed path, so the operator stays 100 TB-safe.
 CC_DRIVER_MAX_EDGES = 2_000_000
+# runaway cap of the distributed fixpoint: pointer jumping makes it
+# ~2^20 of effective diameter, unreachable for a dedup graph
+CC_MAX_ROUNDS = 20
 
 
 def _driver_components(spark, pdf, id_fields) -> DataFrame:
@@ -80,26 +83,24 @@ def _driver_components(spark, pdf, id_fields) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def connected_components(pairs: DataFrame, max_iters: int = 20,
-                         driver_max_edges: int = CC_DRIVER_MAX_EDGES) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """→ (v, component) for every vertex appearing in ``pairs``
     (columns id_a/id_b), component = MIN vertex id reachable.
 
     Size-adaptive (r6): the pair relation is materialized once, its edge
     count observed on that checkpoint job; at or below
-    ``driver_max_edges`` the graph resolves in one driver union-find —
+    ``CC_DRIVER_MAX_EDGES`` the graph resolves in one driver union-find —
     dedup-pair graphs after banding are tiny relative to the corpus, and
     the distributed fixpoint's per-round job latency dominated three
-    gates.  Above the cap (or with ``driver_max_edges=0``) the
-    distributed min-label/pointer-jumping fixpoint runs.
+    gates.  Above the cap (or with the cap at 0) the distributed
+    min-label/pointer-jumping fixpoint runs.
 
-    Raises RuntimeError if not converged within ``max_iters`` rounds
-    (pointer jumping makes that ~2^max_iters of effective diameter —
-    unreachable for any real dedup graph; a silent cap could split
-    groups, so like the relation fixed point the failure is loud)."""
-    if driver_max_edges > 0:
+    Raises RuntimeError if not converged within ``CC_MAX_ROUNDS`` rounds
+    (a silent cap could split groups, so like the relation fixed point
+    the failure is loud)."""
+    if CC_DRIVER_MAX_EDGES > 0:
         pairs, n_edges = checkpoint_count(pairs.select("id_a", "id_b"))
-        if n_edges <= driver_max_edges:
+        if n_edges <= CC_DRIVER_MAX_EDGES:
             id_type = pairs.schema["id_a"].dataType
             return _driver_components(
                 pairs.sparkSession, pairs.toPandas(), id_type)
@@ -143,7 +144,8 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
         )
         return checkpoint_count(jumped, F.col("lab") != F.col("old"))
 
-    labels = fixed_point("connected_components", step, labels, max_iters)
+    labels = fixed_point("connected_components", step, labels,
+                         CC_MAX_ROUNDS, "components.CC_MAX_ROUNDS")
     return labels.select("v", F.col("lab").alias("component"))
 
 

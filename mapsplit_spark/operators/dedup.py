@@ -68,9 +68,8 @@ def _affine_params(num_hashes: int, seed: int = 42):
     return a.tolist(), b.tolist()
 
 
-def minhash_signatures(shingled: DataFrame, num_hashes: int = 32,
-                       id_col: str = "doc_id") -> DataFrame:
-    """→ (id, sig: array<long>) — sig[i] = min over shingles of the i-th
+def minhash_signatures(shingled: DataFrame, num_hashes: int = 32) -> DataFrame:
+    """→ (doc_id, sig: array<long>) — sig[i] = min over shingles of the i-th
     affine permutation (a_i·h + b_i mod p).  pmod keeps values positive.
 
     r6 note: an explode + 32-way partial-agg-min rewrite was A/B'd
@@ -91,7 +90,7 @@ def minhash_signatures(shingled: DataFrame, num_hashes: int = 32,
         )
 
     mins = [perm_min(a[i], b[i]).alias(f"m{i}") for i in range(num_hashes)]
-    return shingled.select(F.col(id_col), F.array(*mins).alias("sig"))
+    return shingled.select(F.col("doc_id"), F.array(*mins).alias("sig"))
 
 
 def _banded(signatures: DataFrame, bands: int) -> DataFrame:
@@ -377,7 +376,13 @@ def hamming_banded(df: DataFrame, id_col: str, hash_col: str,
     (>600 s in the band join), m = 6 (32-bit keys, 20 combos) 49 s,
     m = 8 (40-bit keys, 56 combos) 326 s — correct but paying 2.8×
     replication for key entropy that 5 M rows don't need; m = 8 is the
-    ~10^9-row setting."""
+    ~10^9-row setting.  Raises if ``radius > n_bands − 1``: the
+    pigeonhole guarantee needs at least one untouched band."""
+    if radius > n_bands - 1:
+        raise ValueError(
+            f"radius={radius} needs n_bands ≥ {radius + 1} for exact recall "
+            f"(got {n_bands})"
+        )
     bands = _band_exprs(hash_col, n_bands, bits)
     combos = _band_combos(n_bands, radius)
     return df.select(
@@ -428,8 +433,8 @@ def auto_bands(n_rows: int, radius: int, bits: int = 64) -> int:
 
 
 def hamming_near_dups(df: DataFrame, id_col: str = "image_id",
-                      hash_col: str = "phash", radius: int = 3,
-                      n_bands: int | None = None, bits: int = 64,
+                      hash_col: str = "phash", radius: int = 3, *,
+                      n_bands: int, bits: int = 64,
                       max_bucket: int | None = 1024,
                       observation=None) -> DataFrame:
     """pHash-style near-dup detection over an integer hash column (the
@@ -453,24 +458,12 @@ def hamming_near_dups(df: DataFrame, id_col: str = "image_id",
     relation — see ``_capped_bucket_pairs``).
 
     → (id_a, id_b, hamming) with id_a < id_b and hamming ≤ radius.
-    Raises if ``radius > n_bands − 1`` (the pigeonhole guarantee needs
-    at least one untouched band; raise n_bands instead).  ``n_bands``
+    Raises if ``radius > n_bands − 1`` (``hamming_banded``).  ``n_bands``
     above radius+1 switches to combination keys (see hamming_banded) —
-    the knob that keeps candidate volume sane past ~10^5 rows.
-
-    ``n_bands=None`` (the default since r4) SELF-SIZES the knob from
-    the corpus row count via ``auto_bands`` — one cheap metadata count
-    up front; pass an explicit value to skip the count (required for
-    unbounded/streaming inputs)."""
-    if n_bands is None:
-        n_bands = auto_bands(df.select(id_col).count(), radius, bits)
-    if radius > n_bands - 1:
-        raise ValueError(
-            f"radius={radius} needs n_bands ≥ {radius + 1} for exact recall "
-            f"(got {n_bands})"
-        )
-    hashed = df.select(id_col, hash_col)
-    banded = hamming_banded(hashed, id_col, hash_col, n_bands, bits, radius)
+    the knob that keeps candidate volume sane past ~10^5 rows;
+    ``auto_bands`` sizes it from the corpus row count (``dedup_job``
+    does, so its choice lands in the run summary)."""
+    banded = hamming_banded(df, id_col, hash_col, n_bands, bits, radius)
     # hashes ride the banded rows (8 B each), so verification is an
     # INLINE xor+popcount on the join output — filtered BEFORE the
     # dedup distinct, which therefore shuffles only survivors (and no

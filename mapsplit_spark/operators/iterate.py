@@ -27,11 +27,11 @@ def checkpoint_count(df: DataFrame,
 
 
 def fixed_point(name: str, step: Callable[[int, S], tuple[S, int]], state: S,
-                max_iters: int) -> S:
+                max_iters: int, cap_name: str) -> S:
     """Run ``state, delta = step(i, state)`` for rounds i = 0, 1, … and
     return the state of the first round whose delta is 0.  After
     ``max_iters`` rounds with work left, raise RuntimeError naming the
-    loop and each round's delta: a capped result would be truncated."""
+    loop, each round's delta and the cap: a capped result is truncated."""
     deltas = []
     for i in range(max_iters):
         state, delta = step(i, state)
@@ -39,7 +39,7 @@ def fixed_point(name: str, step: Callable[[int, S], tuple[S, int]], state: S,
         if delta == 0:
             return state
     raise RuntimeError(
-        f"{name} did not converge within max_iters={max_iters} "
-        f"(per-round deltas: {deltas}); raise max_iters rather than "
+        f"{name} did not converge within {max_iters} rounds "
+        f"(per-round deltas: {deltas}); raise {cap_name} rather than "
         f"accept a truncated result"
     )

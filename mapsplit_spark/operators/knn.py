@@ -188,7 +188,7 @@ def _coverage_ladder(queries: DataFrame, levels: list, probe, fallback,
         return (pending, results + [ranked.join(proven, "query_id", "left_semi")]), n
 
     _, results = fixed_point("knn coverage ladder", level, (pending, []),
-                             len(levels) + 1)
+                             len(levels) + 1, "the ladder's level count")
     return reduce(DataFrame.unionByName, results)
 
 

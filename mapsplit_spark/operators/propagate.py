@@ -46,6 +46,7 @@ from .iterate import checkpoint_count, fixed_point
 
 # hop target → (edge column matched to element_id, edge column emitted)
 _HOP = {"group": ("member_id", "group_id"), "member": ("group_id", "member_id")}
+MAX_ROUNDS = 25  # runaway cap of both closures (rounds ≈ nesting depth)
 
 
 def hop(edges: DataFrame, rows: DataFrame, to: str) -> DataFrame:
@@ -136,8 +137,7 @@ def _semi_naive_step(edges: DataFrame, delta: DataFrame,
     return derived.join(resolved, delta.columns, "left_anti")
 
 
-def _closure(name: str, edges: DataFrame, base: DataFrame,
-             max_iters: int) -> DataFrame:
+def _closure(name: str, edges: DataFrame, base: DataFrame) -> DataFrame:
     """Semi-naive closure of ``base`` (element_id, *payload) up ``edges``:
     every group inherits its members' payload rows, transitively.  A
     round's delta count rides the delta checkpoint."""
@@ -149,11 +149,12 @@ def _closure(name: str, edges: DataFrame, base: DataFrame,
         return (resolved, delta), n
 
     resolved = base.localCheckpoint(eager=True)
-    return fixed_point(name, step, (resolved, resolved), max_iters)[0]
+    return fixed_point(name, step, (resolved, resolved), MAX_ROUNDS,
+                       "propagate.MAX_ROUNDS")[0]
 
 
-def relation_tiles_fixed_point(rel_members: DataFrame, base_tiles: DataFrame,
-                               max_iters: int = 25) -> DataFrame:
+def relation_tiles_fixed_point(rel_members: DataFrame,
+                               base_tiles: DataFrame) -> DataFrame:
     """J3/J4 — relations may reference relations (forward/cyclic refs);
     the reference retries unresolved ones until no progress
     (postProcessRelations, MapSplit.java:772-790).
@@ -168,7 +169,7 @@ def relation_tiles_fixed_point(rel_members: DataFrame, base_tiles: DataFrame,
     shuffle join on the (small) relation edge set, evaluated semi-naively
     (delta only, see ``_semi_naive_step``).  Converges monotonically
     (tile sets only grow) like the reference's ``while postSize <
-    preSize`` loop.  The reference iterates uncapped; ``max_iters`` is a
+    preSize`` loop.  The reference iterates uncapped; ``MAX_ROUNDS`` is a
     runaway guard for genuinely cyclic-and-growing inputs, and hitting
     it with work remaining raises instead of silently returning an
     incomplete tile set.
@@ -188,11 +189,10 @@ def relation_tiles_fixed_point(rel_members: DataFrame, base_tiles: DataFrame,
     # the accumulated checkpoint is what keeps the per-round anti-join
     # and every downstream consumer reading one compact materialized
     # relation.
-    return _closure("relation fixed point", rel_members, base, max_iters)
+    return _closure("relation fixed point", rel_members, base)
 
 
-def propagate_newer(edges: DataFrame, newer_ids: DataFrame,
-                    max_iters: int = 25) -> DataFrame:
+def propagate_newer(edges: DataFrame, newer_ids: DataFrame) -> DataFrame:
     """Incremental S5 support: close the 'newer than the appointment
     date' set over group membership — a session/collection is modified
     iff ANY member (transitively) is newer, so its WHOLE tile set
@@ -202,7 +202,7 @@ def propagate_newer(edges: DataFrame, newer_ids: DataFrame,
 
     ``edges``: membership edges across all kinds; ``newer_ids``:
     single-column ``element_id``.  → distinct element_id superset.
-    Raises RuntimeError past ``max_iters`` rounds.
+    Raises RuntimeError past ``MAX_ROUNDS`` rounds.
     """
     return _closure("newer-propagation", edges,
-                    newer_ids.select("element_id").distinct(), max_iters)
+                    newer_ids.select("element_id").distinct())

@@ -32,8 +32,6 @@ Two hash modes, mirroring the repo's winnow/SimHash portability split:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -154,11 +152,6 @@ def hll_distinct(
     Standard error ≈ 1.04/√(2^p) (~1.6% at p=12, 6.5% at p=8)."""
     regs = hll_registers(df, group_cols, elem, p=p, salt=salt, portable=portable)
     return hll_estimate_from_registers(regs, group_cols, p=p, corrected=corrected)
-
-
-def hll_error_bound(p: int) -> float:
-    """Relative error bound at 4 standard errors — test helper."""
-    return 4.0 * 1.04 / math.sqrt(1 << p)
 
 
 # ----------------------------------------------------- Count-Min sketch

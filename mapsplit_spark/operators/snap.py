@@ -46,6 +46,10 @@ from pyspark.sql import functions as F
 from ..hexgrid import hex_cell_cols, hex_disk, scatter_k_col
 from ..sqlgen import KM_PER_DEG
 
+# loud cap on a segment's scatter radius in lattice cells: road-scale
+# segments sit at k ≤ 2, so a longer one is a degenerate input
+MAX_K = 64
+
 
 def snap_dist_sql(plon: str, plat: str, ax: str, ay: str,
                   bx: str, by: str) -> str:
@@ -71,7 +75,6 @@ def snap_dist_sql(plon: str, plat: str, ax: str, ay: str,
 
 
 def snap_to_segments(points: DataFrame, segments: DataFrame, d_km: float,
-                     max_k: int = 64,
                      scatter_partitions: int | None = None) -> DataFrame:
     """points(pid, lon, lat) × segments(way_id, seq, x1, y1, x2, y2) →
     (pid, way_id, seq, dist_km): each point's nearest segment with
@@ -81,9 +84,9 @@ def snap_to_segments(points: DataFrame, segments: DataFrame, d_km: float,
 
     The hex lattice size is the degree span of 2·d_km, so typical disks
     stay small; the 85.06° cap bounds the 1/cos(lat) coverage blowup as
-    in dwithin.  ``max_k`` is a LOUD cap
+    in dwithin.  ``MAX_K`` is a LOUD cap
     on the per-segment scatter radius: a degenerate segment longer than
-    ~max_k lattice cells would silently explode to a huge disk, so the
+    ~MAX_K lattice cells would silently explode to a huge disk, so the
     job ABORTS (raise_error) instead — split such polylines upstream
     (road-scale segments sit at k ≤ 2 for the default lattice).
 
@@ -113,11 +116,11 @@ def snap_to_segments(points: DataFrame, segments: DataFrame, d_km: float,
     rho = F.lit(d_deg) / F.cos(phi_m) + len_deg / F.lit(2.0)
     k_raw = scatter_k_col(rho, s)  # per-segment radii differ
     k_col = F.when(
-        k_raw > F.lit(max_k),
+        k_raw > F.lit(MAX_K),
         F.raise_error(F.format_string(
             "snap_to_segments: segment way_id=%s seq=%s needs scatter "
-            f"radius %s > max_k={max_k} — split long segments upstream "
-            "or raise max_k", F.col("way_id"), F.col("seq"),
+            f"radius %s > snap.MAX_K={MAX_K} — split long segments "
+            "upstream or raise snap.MAX_K", F.col("way_id"), F.col("seq"),
             k_raw.cast("string"))),
     ).otherwise(k_raw)
 

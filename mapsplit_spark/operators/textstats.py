@@ -204,24 +204,23 @@ def winnow_fps(docs: DataFrame, k: int = 5, w: int = 4,
     production variant stays on the JVM HOF path (cheap long hashes;
     no xxhash in the Python stdlib)."""
     if gram_hash is F.md5:
-        return _winnow_fps_md5_arrow(docs, k, w, "doc_id", "text")
-    return _winnow_fps_hof(docs, k, w, "doc_id", "text", gram_hash)
+        return _winnow_fps_md5_arrow(docs, k, w)
+    return _winnow_fps_hof(docs, k, w, gram_hash)
 
 
-def _winnow_fps_md5_arrow(docs: DataFrame, k: int, w: int, id_col: str,
-                          text_col: str) -> DataFrame:
+def _winnow_fps_md5_arrow(docs: DataFrame, k: int, w: int) -> DataFrame:
     """Arrow fast path for the md5 winnow (guide §4.2): normalization
     stays a JVM expression (regex/lower semantics must match the
     oracle's text exactly); Python receives the normalized string and
     performs ONLY deterministic byte operations — utf-8 md5 per k-gram,
     sliding lexicographic min over lowercase-hex strings (ASCII, so
     Python str order ≡ Spark UTF8String binary order), sorted distinct.
-    Only (id, norm) columns cross the boundary."""
+    Only (doc_id, norm) columns cross the boundary."""
     import pyarrow as pa
 
-    norm = F.lower(squeezed_text(text_col))
-    src = docs.select(F.col(id_col), norm.alias("_norm"))
-    id_type = src.schema[id_col].dataType.simpleString()
+    norm = F.lower(squeezed_text("text"))
+    src = docs.select(F.col("doc_id"), norm.alias("_norm"))
+    id_type = src.schema["doc_id"].dataType.simpleString()
 
     def kernel(batches):
         import hashlib
@@ -244,17 +243,16 @@ def _winnow_fps_md5_arrow(docs: DataFrame, k: int, w: int, id_col: str,
                 fps_out.append(sorted(mins))
             yield pa.RecordBatch.from_arrays(
                 [ids, pa.array(fps_out, type=pa.list_(pa.string()))],
-                names=[id_col, "fps"],
+                names=["doc_id", "fps"],
             )
 
-    return src.mapInArrow(kernel, f"{id_col} {id_type}, fps array<string>")
+    return src.mapInArrow(kernel, f"doc_id {id_type}, fps array<string>")
 
 
-def _winnow_fps_hof(docs: DataFrame, k: int, w: int, id_col: str,
-                    text_col: str, gram_hash) -> DataFrame:
+def _winnow_fps_hof(docs: DataFrame, k: int, w: int, gram_hash) -> DataFrame:
     """JVM higher-order-function winnow body (pre-r6 shape; the
     xxhash64 production path and the md5 differential-test mirror)."""
-    norm = F.lower(squeezed_text(text_col))
+    norm = F.lower(squeezed_text("text"))
     n_grams = F.greatest(F.length(norm) - (k - 1), F.lit(1))
     gram_hashes = F.transform(
         F.sequence(F.lit(1), n_grams),
@@ -267,14 +265,14 @@ def _winnow_fps_hof(docs: DataFrame, k: int, w: int, id_col: str,
     # Materializing it as a column first keeps the hash pass O(L); Spark's
     # CollapseProject leaves the two projections split because the
     # producer expression is non-cheap and referenced more than once.
-    grams = docs.select(F.col(id_col), gram_hashes.alias("gh"))
+    grams = docs.select(F.col("doc_id"), gram_hashes.alias("gh"))
     n_windows = F.greatest(F.size("gh") - (w - 1), F.lit(1))
     window_mins = F.transform(
         F.sequence(F.lit(1), n_windows),
         lambda j: F.array_min(F.slice(F.col("gh"), j, w)),
     )
     return grams.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_sort(F.array_distinct(window_mins)).alias("fps"),
     )
 

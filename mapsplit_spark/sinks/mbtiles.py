@@ -35,6 +35,15 @@ VERSION = "0.2.0"  # Const.MBT_VERSION
 WORLD_BOUNDS = "-180.0,-85.0,180.0,85.0"  # fallback, MapSplit.java:1399
 
 
+def _tms_keys(tiles: DataFrame, zoom: int) -> list:
+    """(zoom_level, tile_column, tile_row TMS-flipped) of tile rows; a
+    per-row ``zoom`` column wins over ``zoom``."""
+    z = "zoom" if "zoom" in tiles.columns else str(zoom)
+    return [F.expr(z).cast("int").alias("zoom_level"),
+            F.col("tile_x").cast("long").alias("tile_column"),
+            (F.expr(f"CAST(POWER(2.0, {z}) AS BIGINT)") - F.col("tile_y") - 1).alias("tile_row")]
+
+
 def mbtiles_tile_rows(manifests: DataFrame, zoom: int) -> DataFrame:
     """Manifest table → MBTiles tile rows as Column expressions only:
     (zoom_level, tile_column, tile_row TMS-flipped, tile_data JSON).
@@ -43,18 +52,12 @@ def mbtiles_tile_rows(manifests: DataFrame, zoom: int) -> DataFrame:
     ``{"ids":[a,b,...],"n":N}`` — numeric ids bare, string ids quoted
     (ids are identifier tokens; no embedded quotes to escape).
     """
-    z = (F.col("zoom") if "zoom" in manifests.columns else F.lit(zoom)).cast("int")
     ids = F.col("element_ids")
     elem_type = manifests.schema["element_ids"].dataType.elementType.simpleString()
     if elem_type == "string":
         ids = F.transform(ids, lambda x: F.concat(F.lit('"'), x, F.lit('"')))
     return manifests.select(
-        z.alias("zoom_level"),
-        F.col("tile_x").cast("long").alias("tile_column"),
-        (
-            F.expr("CAST(POWER(2.0, " + ("zoom" if "zoom" in manifests.columns else str(zoom)) + ") AS BIGINT)")
-            - F.col("tile_y") - 1
-        ).alias("tile_row"),
+        *_tms_keys(manifests, zoom),
         F.concat(
             F.lit('{"ids":['),
             F.concat_ws(",", ids),
@@ -207,11 +210,8 @@ def export_raster_mbtiles(spark, mosaics: DataFrame, path: str, zoom: int,
     """Raster path: per-tile mosaic image blobs (operators/multimodal.
     tile_mosaics) — the raster side of the north star's raster↔vector
     tile rendering.  Same TMS flip + metadata layout."""
-    with_zoom = "zoom" in mosaics.columns  # multi-zoom (optimized) runs
-    rows = mosaics.collect()
-    out = []
-    for r in rows:
-        z = int(r.zoom) if with_zoom else zoom
-        out.append((z, r.tile_x, (1 << z) - r.tile_y - 1, bytes(r.mosaic)))
+    rows = mosaics.select(*_tms_keys(mosaics, zoom), "mosaic").collect()
+    out = [(r.zoom_level, r.tile_column, r.tile_row, bytes(r.mosaic))
+           for r in rows]
     _write_sqlite(path, out, RASTER_FORMAT, {o[0] for o in out} or {zoom},
                   zoom, latest_date_ms, "raster tile mosaics from mapsplit_spark")

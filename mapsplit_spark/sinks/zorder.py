@@ -20,8 +20,8 @@ against their key min-max stats.  Both readers use it: the bbox scan
 here and the stored kNN probe (``knn.knn_tiled_stored``).
 
 Correctness does not depend on the decomposition: ranges may be merged
-(``max_ranges`` caps predicate size, admitting supersets) because the
-readers re-check the exact tiles after the range scan.
+(``merge_ranges`` caps predicate size at 64 ranges, admitting supersets)
+because the readers re-check the exact tiles after the range scan.
 """
 
 from __future__ import annotations
@@ -125,14 +125,12 @@ def merge_ranges(ranges, max_ranges: int = 64) -> list[tuple[int, int]]:
 
 
 def bbox_morton_ranges(x0: int, y0: int, x1: int, y1: int,
-                       max_ranges: int = 64,
                        zoom: int = _BITS) -> list[tuple[int, int]]:
     """Decompose an inclusive bbox of zoom-``zoom`` tiles into aligned
     quadtree key intervals (sorted, non-overlapping).  Cells fully
     inside the box emit their whole interval; border cells recurse —
-    O(perimeter) ranges.  If more than ``max_ranges`` result,
-    nearest-gap ranges are merged (supersets are fine: callers
-    re-filter on x/y)."""
+    O(perimeter) ranges.  Past ``merge_ranges``' budget, nearest-gap
+    ranges are merged (supersets are fine: callers re-filter on x/y)."""
     if x1 < x0 or y1 < y0:
         return []
     s = _BITS - zoom  # the box on the z16 curve
@@ -155,7 +153,7 @@ def bbox_morton_ranges(x0: int, y0: int, x1: int, y1: int,
         rec(level + 1, 2 * cx + 1, 2 * cy + 1)
 
     rec(0, 0, 0)
-    return merge_ranges(out, max_ranges)
+    return merge_ranges(out)
 
 
 def _any_between(col: str, ranges) -> Column:

@@ -324,14 +324,12 @@ def rocksdb_state_conf() -> dict[str, str]:
 
 
 def streaming_hamming_dedup(stream: DataFrame, id_col: str = "image_id",
-                            hash_col: str = "phash", radius: int = 3,
-                            n_bands: int = 6, bits: int = 64,
+                            hash_col: str = "phash", radius: int = 3, *,
+                            n_bands: int, bits: int = 64,
                             max_bucket: int = 1024,
                             state_ttl_ms: int | None = None) -> DataFrame:
-    """(id, phash) stream → (id_a, id_b, hamming ≤ radius) pair stream.
-
-    ``n_bands`` must be explicit (a stream has no countable size for
-    ``auto_bands``); radius ≤ n_bands − 1 required, as in batch.
+    """(id, phash) stream → (id_a, id_b, hamming ≤ radius) pair stream;
+    radius ≤ n_bands − 1 required, as in batch (``hamming_banded``).
 
     ``state_ttl_ms`` bounds state for unbounded ingest: (band, bval)
     sub-buckets idle longer than the TTL are evicted, trading the online
@@ -342,11 +340,6 @@ def streaming_hamming_dedup(stream: DataFrame, id_col: str = "image_id",
     receiving data in the expiring batch is refreshed, not evicted.  A
     drain started by ``streaming.drain`` runs no empty batches, so
     there eviction waits for the next drain that brings data."""
-    if radius > n_bands - 1:
-        raise ValueError(
-            f"radius={radius} needs n_bands ≥ {radius + 1} for exact recall "
-            f"(got {n_bands})"
-        )
     banded = hamming_banded(
         stream.select(id_col, hash_col), id_col, hash_col, n_bands, bits, radius
     ).select(id_col, hash_col, "band",

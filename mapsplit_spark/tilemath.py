@@ -160,18 +160,8 @@ def expand(tx, ty, neigh):
 
 
 # --------------------------------------------------------------------------
-# packing (TileCoord.java:11-22; zoom-qualified variant is ours)
+# packing (zoom-qualified variant of TileCoord.java:11-22, ours)
 # --------------------------------------------------------------------------
-
-def pack_xy(x, y):
-    """Reference 32-bit packing x<<16 | y (TileCoord.java:11-22)."""
-    return (np.asarray(x, dtype=np.int64) << MAX_ZOOM) | np.asarray(y, dtype=np.int64)
-
-
-def unpack_xy(t):
-    t = np.asarray(t, dtype=np.int64)
-    return t >> MAX_ZOOM, t & ((1 << MAX_ZOOM) - 1)
-
 
 def pack_zxy(z, x, y):
     """Zoom-qualified 64-bit tile id: z<<32 | x<<16 | y (ours; the
@@ -181,11 +171,6 @@ def pack_zxy(z, x, y):
         | (np.asarray(x, dtype=np.int64) << MAX_ZOOM)
         | np.asarray(y, dtype=np.int64)
     )
-
-
-def unpack_zxy(t):
-    t = np.asarray(t, dtype=np.int64)
-    return t >> 32, (t >> MAX_ZOOM) & ((1 << MAX_ZOOM) - 1), t & ((1 << MAX_ZOOM) - 1)
 
 
 # --------------------------------------------------------------------------

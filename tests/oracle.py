@@ -11,11 +11,14 @@ in the Spark operators cannot self-validate.
 
 from __future__ import annotations
 
+import math
+import struct
 from collections import defaultdict
 
 import numpy as np
 
 from mapsplit_spark import tilemath as tm
+from mapsplit_spark.imaging import VMAGIC, encode_image
 
 
 def assignment_pairs(ids, lon, lat, zoom: int, border: float = 0.0) -> set:
@@ -119,3 +122,86 @@ def tile_in_polygon(tx: int, ty: int, zoom: int, outers, inners) -> bool:
     if not hit:
         return False
     return not any(point_in_ring(cx, cy, h) for h in inners for cx, cy in corners)
+
+
+# ------------------------------------------------------------------------
+# references of engine encodings that only tests read: inverses, metrics,
+# error bounds and fixture writers
+# ------------------------------------------------------------------------
+
+def pack_xy(x, y):
+    """Reference 32-bit packing x<<16 | y (TileCoord.java:11-22)."""
+    return (np.asarray(x, dtype=np.int64) << tm.MAX_ZOOM) | np.asarray(y, dtype=np.int64)
+
+
+def unpack_xy(t):
+    t = np.asarray(t, dtype=np.int64)
+    return t >> tm.MAX_ZOOM, t & ((1 << tm.MAX_ZOOM) - 1)
+
+
+def unpack_zxy(t):
+    """Inverse of ``tilemath.pack_zxy``."""
+    t = np.asarray(t, dtype=np.int64)
+    return (t >> 32, (t >> tm.MAX_ZOOM) & ((1 << tm.MAX_ZOOM) - 1),
+            t & ((1 << tm.MAX_ZOOM) - 1))
+
+
+def demorton(m) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse of ``cellid.morton``."""
+    m = np.asarray(m, dtype=np.uint64)
+
+    def compact(v):
+        v = v.copy()  # &= would mutate the caller's array
+        v &= np.uint64(0x55555555)
+        v = (v | (v >> np.uint64(1))) & np.uint64(0x33333333)
+        v = (v | (v >> np.uint64(2))) & np.uint64(0x0F0F0F0F)
+        v = (v | (v >> np.uint64(4))) & np.uint64(0x00FF00FF)
+        v = (v | (v >> np.uint64(8))) & np.uint64(0x0000FFFF)
+        return v.astype(np.int64)
+
+    return compact(m), compact(m >> np.uint64(1))
+
+
+def parse_quadkey(qk: str) -> tuple[int, int, int]:
+    """Inverse of ``cellid.quadkey``: → (z, x, y)."""
+    x = y = 0
+    for c in qk:
+        d = int(c)
+        x = (x << 1) | (d & 1)
+        y = (y << 1) | (d >> 1)
+    return len(qk), x, y
+
+
+def hex_center(q, r, s: float) -> tuple[np.ndarray, np.ndarray]:
+    """Cell → center (lon, lat) in degrees (inverse of the axial
+    transform at the lattice points)."""
+    q = np.asarray(q, dtype=np.float64)
+    r = np.asarray(r, dtype=np.float64)
+    return s * (math.sqrt(3.0) * (q + r * 0.5)), s * 1.5 * r
+
+
+def hex_dist(q1, r1, q2, r2) -> np.ndarray:
+    """Hex (cube) distance between axial cells — the k of k-ring."""
+    dq = np.asarray(q1, dtype=np.int64) - np.asarray(q2, dtype=np.int64)
+    dr = np.asarray(r1, dtype=np.int64) - np.asarray(r2, dtype=np.int64)
+    return (np.abs(dq) + np.abs(dr) + np.abs(dq + dr)) // 2
+
+
+def psnr(a: np.ndarray, b: np.ndarray) -> float:
+    mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
+    if mse == 0:
+        return float("inf")
+    return 10.0 * np.log10(255.0 ** 2 / mse)
+
+
+def encode_video(frames: list) -> bytes:
+    """The stub video container ``imaging.decode_video`` reads: magic +
+    frame count + length-prefixed lossless (png) MSIM frames."""
+    blobs = [encode_image(f, "png") for f in frames]
+    head = VMAGIC + struct.pack("<I", len(blobs))
+    return head + b"".join(struct.pack("<I", len(b)) + b for b in blobs)
+
+
+def hll_error_bound(p: int) -> float:
+    """HLL relative error bound at 4 standard errors (1.04/√2^p each)."""
+    return 4.0 * 1.04 / math.sqrt(1 << p)

@@ -13,7 +13,6 @@ import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
-from mapsplit_spark import tilemath as tm
 from mapsplit_spark.operators.assign import assign_and_expand, assign_tiles, with_tile_id
 from mapsplit_spark.sinks.manifests import tile_counts, tile_manifests
 from tests import oracle
@@ -84,7 +83,7 @@ def test_tile_id_packing_column(points):
         assign_and_expand(points, "image_id", "lon", "lat", ZOOM, BORDER), ZOOM
     )
     r = df.first()
-    z, x, y = tm.unpack_zxy(np.int64(r.tile_id))
+    z, x, y = oracle.unpack_zxy(np.int64(r.tile_id))
     assert (int(z), int(x), int(y)) == (ZOOM, r.tile_x, r.tile_y)
 
 

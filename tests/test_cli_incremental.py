@@ -31,15 +31,22 @@ def outbase(tmp_path_factory):
     ["--pyramid", "14", "--zoom", "13"], ["--pyramid", "17", "--zoom", "16"],
     ["--raster", "17", "--poly", "p"], ["--idw", "17"], ["--idw", "-1"],
     ["--clusters-zoom", "17", "--clusters", "3"],
+    ["--border", "-0.1"], ["--border", "0.5"], ["--geohash", "13"],
+    ["--focal-radius", "-1"], ["--clusters", "-1"], ["--hexgrid", "-0.5"],
+    ["--dwithin", "-1"], ["--snap-km", "0"],
 ], ids=["17", "-1", "zonal", "raster", "transitions", "pyramid_above_zoom",
-        "pyramid_17", "raster_17", "idw_17", "idw_-1", "clusters_zoom_17"])
+        "pyramid_17", "raster_17", "idw_17", "idw_-1", "clusters_zoom_17",
+        "border_-0.1", "border_0.5", "geohash_13", "focal_radius_-1",
+        "clusters_-1", "hexgrid_-0.5", "dwithin_-1", "snap_km_0"])
 def test_zoom_outside_tile_domain_fails_in_parsing(args, capsys):
     """--zoom is capped at 16 like the reference (Const.java MAX_ZOOM):
     above it the packed tile id and the stored layout key alias across
     zooms.  The outputs computed from the clip polygons (--zonal,
     --raster, --transitions) need --poly and are refused without it,
-    not skipped.  Both are rejected while parsing arguments, before any
-    Spark work."""
+    not skipped.  Numeric flags outside their domain (--border in
+    [0, 0.5) as in CommandLineParams.java:236-252, --geohash 0..12,
+    non-negative counts and sizes, --snap-km > 0) are refused too.  All
+    are rejected while parsing arguments, before any Spark work."""
     with pytest.raises(SystemExit) as exc:
         split_main(["--input", "in", "--output", "out", *args])
     assert exc.value.code == 2
@@ -549,7 +556,7 @@ def test_r5_spatial_flags_e2e(spark, images_dir, outbase, capsys):
     imgs = spark.read.parquet(f"{images_dir}/images.parquet") \
         .select("image_id", "lon", "lat")
     # short road segments anchored at one image position (continent-
-    # length segments would trip snap's loud max_k guard, by design —
+    # length segments would trip snap's loud MAX_K guard, by design —
     # see test_snap_long_segment_aborts_loudly)
     rows = imgs.orderBy("image_id").limit(1).collect()
     a_lon, a_lat = rows[0].lon, rows[0].lat

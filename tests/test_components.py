@@ -61,13 +61,15 @@ def test_cc_differential_vs_union_find(spark):
         assert got == exp, f"trial {trial}"
 
 
-def test_cc_pointer_jumping_handles_long_chain_fast(spark):
+def test_cc_pointer_jumping_handles_long_chain_fast(spark, monkeypatch):
     """A 40-vertex path converges within 8 rounds (O(log d), not O(d))."""
+    from mapsplit_spark.operators import components
     from mapsplit_spark.operators.components import connected_components
 
+    monkeypatch.setattr(components, "CC_MAX_ROUNDS", 8)
     chain = [(i, i + 1) for i in range(40)]
     got = {r.v: r.component for r in
-           connected_components(_pairs_df(spark, chain), max_iters=8).collect()}
+           connected_components(_pairs_df(spark, chain)).collect()}
     assert set(got.values()) == {0} and len(got) == 41
 
 
@@ -80,11 +82,14 @@ def test_cc_driver_path_runs_no_count_job(spark, job_count):
     assert job_count(lambda: connected_components(pairs)) == 2
 
 
-def test_cc_driver_path_matches_distributed(spark):
+def test_cc_driver_path_matches_distributed(spark, job_count, monkeypatch):
     """r6: the size-adaptive driver union-find must agree with the
-    distributed min-label fixpoint on the same graphs."""
+    distributed min-label fixpoint on the same graphs.  The driver cap
+    is read at call time: patched to 0, the call takes the distributed
+    arm, which runs more jobs than the driver arm's 2."""
     import numpy as np
 
+    from mapsplit_spark.operators import components
     from mapsplit_spark.operators.components import connected_components
 
     rng = np.random.default_rng(23)
@@ -95,9 +100,12 @@ def test_cc_driver_path_matches_distributed(spark):
     df = _pairs_df(spark, sorted(edges))
     fast = {(r.v, r.component)
             for r in connected_components(df).collect()}
-    dist = {(r.v, r.component)
-            for r in connected_components(df, driver_max_edges=0).collect()}
+    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
+    dist = set()
+    jobs = job_count(lambda: dist.update(
+        (r.v, r.component) for r in connected_components(df).collect()))
     assert fast == dist
+    assert jobs > 2
 
 
 def test_dedup_keep_reduces_corpus(spark):

@@ -421,12 +421,13 @@ def test_auto_bands_ladder():
 
 
 def test_hamming_default_self_sizes(spark):
-    """n_bands=None (the new default) must produce the same verified
-    pairs as an explicit radius+1 at small N — the sizing only changes
-    candidate generation, never the exact-recall output."""
+    """The self-sized band count (``auto_bands`` over the row count, as
+    dedup_job sizes it) must produce the same verified pairs as an
+    explicit radius+1 at small N — the sizing only changes candidate
+    generation, never the exact-recall output."""
     from pyspark.sql import functions as F
 
-    from mapsplit_spark.operators.dedup import hamming_near_dups
+    from mapsplit_spark.operators.dedup import auto_bands, hamming_near_dups
 
     base = spark.range(200).select(
         F.col("id").alias("image_id"),
@@ -440,7 +441,7 @@ def test_hamming_default_self_sizes(spark):
                  (F.col("id") * 77777 + 5).cast("long")
                  .bitwiseXOR(F.lit(0x0000000400000001)).alias("phash")))
     df = base.unionByName(planted)
-    auto = hamming_near_dups(df, radius=3)  # n_bands self-sized
+    auto = hamming_near_dups(df, radius=3, n_bands=auto_bands(df.count(), 3))
     explicit = hamming_near_dups(df, radius=3, n_bands=4)
     assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, explicit.collect()))
     assert auto.count() >= 30
@@ -457,8 +458,7 @@ def test_lsh_bucket_cap_single_exchange_no_python(spark):
         [(f"d{i}", f"text body number {i} with several words") for i in range(20)],
         "doc_id string, text string",
     )
-    sigs = minhash_signatures(with_shingle_hashes(docs), 32,
-                              id_col="doc_id")
+    sigs = minhash_signatures(with_shingle_hashes(docs), 32)
     plan = lsh_candidate_pairs(sigs, bands=8, max_bucket=64)._jdf \
         .queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "InPandas" not in plan

@@ -80,7 +80,6 @@ def test_dedup_job_auto_bands_and_ann_recall(spark, images_dir, tmp_path, capsys
         "--output", out,
         "--embeddings", "/root/testdata/sf0.001/embeddings.parquet",
         "--ann-queries", "10", "--ann-probe", "16", "--ann-clusters", "16",
-        "--cores", "8",
     ])
     summary = json.loads([ln for ln in capsys.readouterr().out.splitlines()
                           if ln.startswith("{")][-1])
@@ -97,13 +96,14 @@ def test_dedup_job_video_frame_chain(spark, tmp_path, capsys):
     → hamming near-dup e2e.  Two videos share identical frames (same
     synth seeds) → cross-video frame pairs at hamming 0."""
     from mapsplit_spark import imaging
+    from tests import oracle
 
     vids = []
     for v in range(3):
         # v0 and v1 share frame seeds (planted dups); v2 distinct
         seed0 = 0 if v < 2 else 900
         frames = [imaging.synth_pixels(seed0 + i, 16, 16) for i in range(6)]
-        vids.append((f"v{v}", imaging.encode_video(frames)))
+        vids.append((f"v{v}", oracle.encode_video(frames)))
     vp = str(tmp_path / "videos.parquet")
     spark.createDataFrame(vids, "video_id string, bytes binary") \
         .write.parquet(vp)

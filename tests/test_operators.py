@@ -301,11 +301,12 @@ def test_relation_fixed_point_deep_chain_converges(spark, node_tiles):
 
 
 @pytest.mark.parametrize("loop", ["relation", "newer", "components"])
-def test_fixed_point_cap_is_loud(spark, node_tiles, loop):
-    """Hitting max_iters with work left RAISES, naming the loop and each
-    round's delta size, instead of silently returning a truncated result
-    (the reference iterates to no-progress uncapped,
+def test_fixed_point_cap_is_loud(spark, node_tiles, loop, monkeypatch):
+    """Hitting the loop's round cap with work left RAISES, naming the
+    loop and each round's delta size, instead of silently returning a
+    truncated result (the reference iterates to no-progress uncapped,
     MapSplit.java:772-790)."""
+    from mapsplit_spark.operators import components, propagate
     from mapsplit_spark.operators.components import connected_components
     from mapsplit_spark.operators.propagate import propagate_newer
 
@@ -314,23 +315,26 @@ def test_fixed_point_cap_is_loud(spark, node_tiles, loop):
         # every round resolves one more chain level: a copy of n0's tiles
         n0 = tiles_df.filter("element_id = 'n0'").count()
         name, deltas = "relation fixed point", [n0] * 4
+        monkeypatch.setattr(propagate, "MAX_ROUNDS", 4)
         run = lambda: relation_tiles_fixed_point(  # noqa: E731
-            _chain_edges(spark, 8), tiles_df, max_iters=4)
+            _chain_edges(spark, 8), tiles_df)
     elif loop == "newer":
         edges = spark.createDataFrame(
             [(f"c{i}", f"c{i - 1}") for i in range(1, 9)],
             "group_id string, member_id string")
         newer = spark.createDataFrame([("c0",)], "element_id string")
         name, deltas = "newer-propagation", [1] * 4
-        run = lambda: propagate_newer(edges, newer, max_iters=4)  # noqa: E731
+        monkeypatch.setattr(propagate, "MAX_ROUNDS", 4)
+        run = lambda: propagate_newer(edges, newer)  # noqa: E731
     else:
-        # path 0-1-…-30, distributed fixpoint forced (driver_max_edges=0):
+        # path 0-1-…-30, distributed fixpoint forced (driver cap 0):
         # round one moves every label v-1 to max(v-4, 0), so v = 2..30 change
         pairs = spark.createDataFrame([(i, i + 1) for i in range(30)],
                                       "id_a long, id_b long")
         name, deltas = "connected_components", [29]
-        run = lambda: connected_components(  # noqa: E731
-            pairs, max_iters=1, driver_max_edges=0)
+        monkeypatch.setattr(components, "CC_MAX_ROUNDS", 1)
+        monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
+        run = lambda: connected_components(pairs)  # noqa: E731
     with pytest.raises(RuntimeError, match="did not converge") as err:
         run()
     assert str(err.value).startswith(name)

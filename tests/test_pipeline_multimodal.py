@@ -18,6 +18,7 @@ from mapsplit_spark import imaging
 from mapsplit_spark.operators.multimodal import decode_features, resize_images, tile_mosaics
 from mapsplit_spark.operators.assign import assign_and_expand
 from mapsplit_spark.pipeline import TilingPipeline
+from tests import oracle
 
 WORK = "/tmp/pipe_test"
 
@@ -31,7 +32,7 @@ def test_payload_invariants(spark, images_dir):
         if r.fmt == "png":
             assert np.array_equal(px, ref)
         else:
-            p = imaging.psnr(ref, px)
+            p = oracle.psnr(ref, px)
             assert p >= 40.0, f"{r.image_id}: PSNR {p}"
         assert imaging.phash64(ref) == r.phash
         assert r.caption.startswith(f"caption for {r.image_id}:")
@@ -182,7 +183,7 @@ def test_video_frame_sampling_roundtrip(spark):
     vids = []
     for v in range(3):
         frames = [imaging.synth_pixels(v * 100 + i, 12, 8) for i in range(7)]
-        vids.append((f"v{v}", imaging.encode_video(frames), len(frames)))
+        vids.append((f"v{v}", oracle.encode_video(frames), len(frames)))
     df = spark.createDataFrame(vids, "video_id string, bytes binary, n_frames int")
     out = sample_frames(df, every_n=3).collect()
     # 7 frames, every 3rd → indices 0, 3, 6 per video

@@ -79,17 +79,20 @@ def test_holefill_oracle_invariants(tiles):
             assert min(xs) < hx < max(xs) or min(ys) < hy < max(ys)
 
 
-def test_salted_manifest_handles_hot_tile(spark):
+def test_salted_manifest_handles_hot_tile(spark, monkeypatch):
     """Worst-case skew: every element in ONE tile; the salted two-phase
     aggregation must still produce one correct sorted manifest row."""
+    from mapsplit_spark.sinks import manifests
     from mapsplit_spark.sinks.manifests import tile_manifests
+
+    monkeypatch.setattr(manifests, "N_SALTS", 16)
 
     n = 20_000
     df = spark.range(n).selectExpr(
         "concat('e', lpad(cast(id as string), 8, '0')) AS element_id",
         "cast(500 as long) AS tile_x", "cast(600 as long) AS tile_y",
     )
-    rows = tile_manifests(df, 13, n_salts=16, assume_distinct=True).collect()
+    rows = tile_manifests(df, 13, assume_distinct=True).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r.n == n

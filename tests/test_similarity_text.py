@@ -186,7 +186,7 @@ def test_winnow_arrow_kernel_matches_hof_mirror(spark):
     rows += [(100 + i, f"document body {i} " * 17) for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     a = {r.doc_id: r.fps
-         for r in _winnow_fps_md5_arrow(df, 5, 4, "doc_id", "text").collect()}
+         for r in _winnow_fps_md5_arrow(df, 5, 4).collect()}
     b = {r.doc_id: r.fps
-         for r in _winnow_fps_hof(df, 5, 4, "doc_id", "text", F.md5).collect()}
+         for r in _winnow_fps_hof(df, 5, 4, F.md5).collect()}
     assert a == b

@@ -81,12 +81,15 @@ def test_ivf_corpus_layout_prunes_cells_and_matches_in_memory(spark, tmp_path):
     assert {tuple(r) for r in bucketed.collect()} == expect
 
 
-def test_chunked_manifest_union_equals_flat(spark):
+def test_chunked_manifest_union_equals_flat(spark, monkeypatch):
     """chunked=True chunk rows union to exactly the flat manifest, skip
-    the second exchange, and bound per-row id counts by ~ids/n_salts."""
+    the second exchange, and bound per-row id counts by ~ids/N_SALTS."""
     from pyspark.sql import functions as F
 
+    from mapsplit_spark.sinks import manifests
     from mapsplit_spark.sinks.manifests import tile_manifests
+
+    monkeypatch.setattr(manifests, "N_SALTS", 16)
 
     # one megatile (id%2==0 → tile (7,7)) + scattered tiles
     pairs = spark.range(40_000).select(
@@ -94,8 +97,8 @@ def test_chunked_manifest_union_equals_flat(spark):
         F.when(F.col("id") % 2 == 0, F.lit(7)).otherwise((F.col("id") % 50).cast("int")).alias("tile_x"),
         F.when(F.col("id") % 2 == 0, F.lit(7)).otherwise(((F.col("id") * 3) % 50).cast("int")).alias("tile_y"),
     )
-    flat = tile_manifests(pairs, 13, n_salts=16, assume_distinct=True)
-    chunked = tile_manifests(pairs, 13, n_salts=16, assume_distinct=True, chunked=True)
+    flat = tile_manifests(pairs, 13, assume_distinct=True)
+    chunked = tile_manifests(pairs, 13, assume_distinct=True, chunked=True)
 
     flat_ids = {(r.tile_x, r.tile_y): sorted(r.element_ids) for r in flat.collect()}
     got = {}
@@ -109,8 +112,7 @@ def test_chunked_manifest_union_equals_flat(spark):
     # one exchange only (no final flatten shuffle) — check a fresh plan:
     # the executed df's adaptive final plan prints each shuffle stage
     # twice (stage + reuse), inflating a string count
-    fresh = tile_manifests(pairs, 13, n_salts=16, assume_distinct=True,
-                           chunked=True)
+    fresh = tile_manifests(pairs, 13, assume_distinct=True, chunked=True)
     plan = fresh._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
 

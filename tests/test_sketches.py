@@ -16,12 +16,12 @@ from pyspark.sql import functions as F
 
 from mapsplit_spark.operators.sketches import (
     hll_distinct,
-    hll_error_bound,
     hll_estimate_from_registers,
     hll_merge,
     hll_registers,
 )
 from mapsplit_spark.operators.sampling import weighted_sample
+from tests.oracle import hll_error_bound
 
 SF = "/root/testdata/sf0.001"
 

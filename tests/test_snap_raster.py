@@ -142,15 +142,19 @@ def test_ring_stats_single_shuffle(spark):
     assert plan.count("Exchange") == 1
 
 
-def test_snap_long_segment_aborts_loudly(spark):
+def test_snap_long_segment_aborts_loudly(spark, monkeypatch):
     """A degenerate continent-length segment must ABORT (raise_error)
     rather than silently explode its scatter disk."""
     import pytest
+
+    from mapsplit_spark.operators import snap
+
+    monkeypatch.setattr(snap, "MAX_K", 8)
 
     segs = pd.DataFrame([(1, 1, -60.0, 0.0, 60.0, 0.0)],
                         columns=["way_id", "seq", "x1", "y1", "x2", "y2"])
     pts = pd.DataFrame({"pid": [1], "lon": [0.0], "lat": [0.1]})
     df = snap_to_segments(spark.createDataFrame(pts),
-                          spark.createDataFrame(segs), 2.0, max_k=8)
+                          spark.createDataFrame(segs), 2.0)
     with pytest.raises(Exception, match="split long segments"):
         df.collect()

@@ -29,8 +29,7 @@ def out(tmp_path_factory):
          "--split", "train=0.8,val=0.1,test=0.1", "--salt", "sj",
          "--tfidf-topk", "3", "--text-col", "text",
          "--top-items", "4", "--item-expr", "source",
-         "--cms", "10", "--cms-width", "1024",
-         "--cores", "8"],
+         "--cms", "10", "--cms-width", "1024"],
         capture_output=True, text=True, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
@@ -156,7 +155,7 @@ def test_polyline_flag_matches_direct_operator(tmp_path, spark):
          "--input", str(src), "--output", str(tmp_path / "out"),
          "--id-col", "way_id", "--group-col", "way_id",
          "--value-col", "lon",
-         "--polyline", "way_id:seq:lon:lat", "--cores", "4"],
+         "--polyline", "way_id:seq:lon:lat"],
         capture_output=True, text=True, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]

@@ -122,6 +122,20 @@ def test_stream_job_zoom_outside_tile_domain_fails_in_parsing(zoom, capsys):
     assert "--zoom" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("border", ["-0.1", "0.5"])
+def test_stream_job_border_outside_domain_fails_in_parsing(border, capsys):
+    """--border outside [0, 0.5) is rejected while parsing arguments, as
+    the reference requires (CommandLineParams.java:236-252)."""
+    from jobs import stream_job
+
+    with pytest.raises(SystemExit) as exc:
+        stream_job.parse_args(["--mode", "counts", "--once", "--input", "in",
+                               "--checkpoint", "ckpt", "--output", "out",
+                               "--border", border])
+    assert exc.value.code == 2
+    assert "--border" in capsys.readouterr().err
+
+
 def test_stream_job_cli_drains_and_resumes(spark, images_dir, tmp_path):
     """jobs/stream_job.py --once: drains the landing dir, writes per-tile
     modification counts, and a second invocation after new files arrive

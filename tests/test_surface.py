@@ -15,7 +15,7 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "mapsplit_spark"
 CALLER_DIRS = ("mapsplit_spark", "jobs", "perfbench", "tools", "tests")
 CALLER_FILES = ("bench.py", "__spark_entry__.py")
-MAX_DEFAULTED = 159
+MAX_DEFAULTED = 149
 
 
 def _public_functions():

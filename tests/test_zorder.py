@@ -13,6 +13,7 @@ import pytest
 from mapsplit_spark.sinks.zorder import (
     _morton_int,
     bbox_morton_ranges,
+    merge_ranges,
     read_tiles_bbox,
     tile_key_range,
     write_tiles,
@@ -20,7 +21,8 @@ from mapsplit_spark.sinks.zorder import (
 
 
 def test_bbox_ranges_cover_exactly(spark):
-    """With an uncapped range budget the decomposition covers EXACTLY
+    """Under the range budget (these boxes need at most 36 ranges, the
+    budget is 64, so nothing merges) the decomposition covers EXACTLY
     the bbox cells — random boxes, brute-force morton enumeration."""
     import numpy as np
 
@@ -28,8 +30,7 @@ def test_bbox_ranges_cover_exactly(spark):
     for _ in range(20):
         x0, y0 = rng.integers(0, 60, 2)
         x1, y1 = x0 + rng.integers(0, 20), y0 + rng.integers(0, 20)
-        ranges = bbox_morton_ranges(int(x0), int(y0), int(x1), int(y1),
-                                    max_ranges=10_000)
+        ranges = bbox_morton_ranges(int(x0), int(y0), int(x1), int(y1))
         covered = set()
         for lo, hi in ranges:
             covered.update(range(lo, hi + 1))
@@ -40,7 +41,7 @@ def test_bbox_ranges_cover_exactly(spark):
 
 
 def test_bbox_ranges_cap_is_superset(spark):
-    ranges = bbox_morton_ranges(3, 5, 40, 33, max_ranges=4)
+    ranges = merge_ranges(bbox_morton_ranges(3, 5, 40, 33), 4)
     assert len(ranges) <= 4
     exact = {_morton_int(x, y) for x in range(3, 41) for y in range(5, 34)}
     covered = set()
